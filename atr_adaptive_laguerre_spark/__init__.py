@@ -9,7 +9,8 @@ idiomatic Spark engine:
   plus the 43/169/121-column feature expansion) implemented twice:
   a transparent per-entity loop (the test oracle, ``kernel.reference_impl``)
   and a lockstep-batched vectorized NumPy implementation
-  (``kernel.batched``) that runs inside Arrow-batched pandas UDFs.
+  (``kernel.batched``, per-step loops compiled) that runs inside the
+  Spark jobs' Arrow workers.
 * **Layer S (Spark-native)** — ``engine/`` + ``operators/``: partitioning &
   skew handling, as-of joins, lag/lead, backfill, sessionization,
   resampling, dedup / similarity / text-analysis operators, manifests and

@@ -1,22 +1,32 @@
 """Feature-extraction jobs: doc-grain token table -> per-step features.
 
-Two physical strategies, one logical result:
+The production paths read doc-grain input (the ``input_hint`` shape: one
+row per entity holding its whole ``tokens`` array) with ``mapInArrow``:
 
-* :func:`core_features_long` — **zero-shuffle scan path** for doc-grain
-  input (the ``input_hint`` shape: one row per entity holding the whole
-  ``tokens`` array).  Each entity already arrives complete in one row, so
-  ``mapInPandas`` computes the sequential recurrence without any exchange;
-  parallelism and load balance come from Parquet file splits
-  (bytes ∝ tokens ∝ kernel work).  At 100 TB this is the plan you want:
-  scan -> Python/Arrow kernel -> write, no wide dependency at all.
+* :func:`features_long` (43 / 169 / 121 feature columns) and
+  :func:`core_features_long` (the 10 core outputs) emit long form, one
+  row per (entity, offset).  Each entity arrives complete in one row, so
+  the sequential recurrence runs without any exchange; parallelism and
+  load balance come from Parquet file splits (bytes ∝ tokens ∝ kernel
+  work).  Token values are read straight from the Arrow list buffers,
+  and output columns are wrapped zero-copy from the kernel's pooled
+  NumPy buffers, with kernel compute overlapped with the worker's
+  socket serialization (:func:`_overlap_chunks`).
+* :func:`features_doc` emits doc grain (one row per entity, features as
+  arrays); :func:`features_checksum` emits per-chunk integrity sums.
 
-* :func:`core_features_from_long` — **salted applyInPandas path** for
-  long-form input (one row per token: entity spread over rows).  Rows are
-  hash/range-partitioned by the salted entity key, grouped, sorted by
-  ``offset`` *inside* the kernel (Spark does not guarantee group order),
-  and run through the same batched kernel.  One intended shuffle.
+Long-form output declares ``offset``, ``token`` and every feature column
+NOT NULL, in the Spark schema and in the Arrow schema of each emitted
+batch: Spark's row projection then skips the per-value null test, and a
+stray null still fails the task (Arrow's null-checked ``get``) instead
+of being written.  ``source`` and ``doc_id`` pass through nullable.
 
-Both paths call the identical lockstep kernel
+Long-form *input* (one row per token) goes through the salted pandas
+paths :func:`core_features_from_long` (``applyInPandas``, one shuffle)
+and :func:`core_features_from_long_sorted` (range-partitioned
+``mapInPandas``).
+
+Every path calls the same lockstep kernel
 (:mod:`atr_adaptive_laguerre_spark.kernel.batched`), so their outputs are
 bit-identical to each other and to the local oracle.
 
@@ -32,6 +42,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    DoubleType, IntegerType, StringType, StructField, StructType,
+)
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
@@ -45,10 +58,20 @@ from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
 #: Python worker's peak memory independent of Arrow batch sizing.
 CELL_BUDGET = 262_144
 
-CORE_LONG_SCHEMA = (
-    "source string, doc_id string, offset int, token int, "
-    + ", ".join(f"{c} double" for c in CORE_OUTPUTS)
-)
+
+def _long_schema(value_cols) -> StructType:
+    """Long-form output schema: nullable pass-through keys, then NOT NULL
+    ``offset``, ``token`` and ``value_cols`` doubles (see the module
+    docstring; :func:`_long_batch` emits the matching Arrow schema)."""
+    return StructType(
+        [StructField("source", StringType()),
+         StructField("doc_id", StringType()),
+         StructField("offset", IntegerType(), nullable=False),
+         StructField("token", IntegerType(), nullable=False)]
+        + [StructField(c, DoubleType(), nullable=False) for c in value_cols])
+
+
+CORE_LONG_SCHEMA = _long_schema(CORE_OUTPUTS)
 
 CORE_DOC_SCHEMA = (
     "source string, doc_id string, n_tok int, tokens array<int>, "
@@ -201,19 +224,15 @@ def core_features_long(doc_df: DataFrame,
     straight from the Arrow list buffers, the kernel outputs are gathered
     into pooled buffers and wrapped zero-copy — no pandas block
     consolidation on either side of the boundary.  Values are the same
-    ``core_loop_batched`` outputs the previous mapInPandas path emitted
-    (identical chunking, identical kernel calls).
+    ``core_loop_batched`` outputs the pandas paths emit (identical
+    chunking, identical kernel calls).
     """
-    import pyarrow as pa
-
     cfg = cfg or FeatureConfig()
     if num_partitions:
         doc_df = doc_df.repartition(num_partitions)
 
     def run(batches):
         def produce(emit, acquire_pool):
-            import pyarrow.compute as pc
-
             j = 0
             for rb in batches:
                 src_col = rb.column(rb.schema.get_field_index("source"))
@@ -225,23 +244,12 @@ def core_features_long(doc_df: DataFrame,
                                             cfg.atr_period,
                                             cfg.adaptive_offset,
                                             copy_out=False)
-                    rep = pa.array(np.repeat(idx.astype(np.int64), lens))
-                    offsets = np.concatenate(
-                        [np.arange(n, dtype=np.int32) for n in lens])
-                    arrays = [
-                        pc.take(src_col, rep),
-                        pc.take(did_col, rep),
-                        pa.array(offsets),
-                        pa.array(chunk_flat.astype(np.int32, copy=False)),
-                    ]
+                    cols = {}
                     for k in CORE_OUTPUTS:
-                        buf = pool.get(f"core_{k}", len(fe))
+                        buf = cols[k] = pool.get(f"core_{k}", len(fe))
                         np.take(out[k].ravel(), fe, out=buf)
-                        arrays.append(pa.array(buf))
-                    emit(pa.RecordBatch.from_arrays(
-                        arrays,
-                        ["source", "doc_id", "offset", "token"]
-                        + list(CORE_OUTPUTS)))
+                    emit(_long_batch(src_col, did_col, idx, lens,
+                                     chunk_flat, cols, CORE_OUTPUTS))
                     j += 1
 
         yield from _overlap_chunks(produce)
@@ -308,9 +316,33 @@ def feature_columns_for(cfg: FeatureConfig) -> list[str]:
     return list(FEATURE_COLUMNS)
 
 
-def features_long_schema(cfg: FeatureConfig) -> str:
-    return ("source string, doc_id string, offset int, token int, "
-            + ", ".join(f"{c} double" for c in feature_columns_for(cfg)))
+def features_long_schema(cfg: FeatureConfig) -> StructType:
+    return _long_schema(feature_columns_for(cfg))
+
+
+def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
+    """One long-form RecordBatch for a kernel chunk: the doc keys repeated
+    per token, the offsets, the tokens passed through, then ``cols[c]``
+    for each of ``value_cols`` wrapped zero-copy.  Its Arrow schema
+    carries the same nullability as :func:`_long_schema`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rep = pa.array(np.repeat(idx.astype(np.int64), lens))
+    offsets = np.concatenate([np.arange(n, dtype=np.int32) for n in lens])
+    arrays = [
+        pc.take(src_col, rep),
+        pc.take(did_col, rep),
+        pa.array(offsets),
+        pa.array(chunk_flat.astype(np.int32, copy=False)),
+    ]
+    arrays += [pa.array(cols[c]) for c in value_cols]
+    schema = pa.schema(
+        [pa.field("source", src_col.type), pa.field("doc_id", did_col.type),
+         pa.field("offset", pa.int32(), nullable=False),
+         pa.field("token", pa.int32(), nullable=False)]
+        + [pa.field(c, pa.float64(), nullable=False) for c in value_cols])
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def _features_on_docs(pdf: pd.DataFrame, cfg: FeatureConfig,
@@ -512,8 +544,6 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     needed subset here keeps the kernel fused (it computes everything;
     compute is cheap) but ships only the requested features.
     """
-    import pyarrow as pa
-
     cfg = cfg or FeatureConfig()
     if num_partitions:
         doc_df = doc_df.repartition(num_partitions)
@@ -523,13 +553,9 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
         if unknown:
             raise ValueError(f"unknown feature columns: {unknown}")
         feat_cols = [c for c in feat_cols if c in set(columns)]
-    schema = ("source string, doc_id string, offset int, token int, "
-              + ", ".join(f"{c} double" for c in feat_cols))
 
     def run(batches):
         def produce(emit, acquire_pool):
-            import pyarrow.compute as pc
-
             j = 0
             for rb in batches:
                 src_col = rb.column(rb.schema.get_field_index("source"))
@@ -538,25 +564,13 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
                         rb, cell_budget):
                     pool = acquire_pool(j)
                     cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
-                    rep = pa.array(np.repeat(idx.astype(np.int64), lens))
-                    offsets = np.concatenate(
-                        [np.arange(n, dtype=np.int32) for n in lens])
-                    arrays = [
-                        pc.take(src_col, rep),
-                        pc.take(did_col, rep),
-                        pa.array(offsets),
-                        pa.array(chunk_flat.astype(np.int32, copy=False)),
-                    ]
-                    arrays += [pa.array(cols[c]) for c in feat_cols]
-                    emit(pa.RecordBatch.from_arrays(
-                        arrays,
-                        ["source", "doc_id", "offset", "token"]
-                        + feat_cols))
+                    emit(_long_batch(src_col, did_col, idx, lens,
+                                     chunk_flat, cols, feat_cols))
                     j += 1
 
         yield from _overlap_chunks(produce)
 
-    return doc_df.mapInArrow(run, schema=schema)
+    return doc_df.mapInArrow(run, schema=_long_schema(feat_cols))
 
 
 def features_doc_schema(cfg: FeatureConfig) -> str:
@@ -580,6 +594,12 @@ def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     ``columns`` worker-projects the output exactly like
     :func:`features_long` (Catalyst cannot prune through the Python map
     node; the kernel stays fused, only requested features ship).
+
+    Exploding this output on the JVM is no faster route to long form
+    when the sink consumes every column.  Measured with all 121 columns
+    consumed against :func:`features_long`: ``posexplode("tokens")``
+    beside the array columns ran 16x slower (every exploded row re-copies
+    every array), and ``posexplode(arrays_zip(...))`` 1.6x slower.
     """
     import pyarrow as pa
 

@@ -16,9 +16,14 @@ Scale rationale (100 TB / 1000-executor target; tested on local[N]):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+from atr_adaptive_laguerre_spark.native import BuildError, build_shared
+
+log = logging.getLogger(__name__)
 
 
 #: Allocator tuning for the driver JVM and the Python workers (both
@@ -54,6 +59,11 @@ MALLOC_ENV = {
 }
 
 
+#: the allocator shim's source and its build
+_NATIVE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))), "native")
+
+
 def _bigcache_preload() -> str | None:
     """Path to the ``native/bigcache.so`` retaining-allocator shim,
     compiling it on first use when a C toolchain is present.
@@ -65,27 +75,23 @@ def _bigcache_preload() -> str | None:
     reservation with power-of-two freelists that are never munmapped.
     Measured at sf0.1 (OPTIMIZATION_r06.md): steady-state driver-JVM
     faults 1.2 M -> ~15 k per run, worker median 7.  Returns None (and
-    the engine runs unchanged) when the library is unavailable;
-    BIGCACHE_DISABLE=1 turns the loaded shim into a no-op.
+    the engine runs unchanged) when the library is unavailable, with a
+    logged warning when its compile failed; BIGCACHE_DISABLE=1 turns the
+    loaded shim into a no-op.
     """
-    root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    so = os.path.join(root, "native", "bigcache.so")
-    src = os.path.join(root, "native", "bigcache.c")
-    if not os.path.exists(so) and os.path.exists(src):
-        import shutil
-        import subprocess
-        cc = shutil.which("gcc") or shutil.which("cc")
-        if cc is None:
-            return None
-        try:
-            subprocess.run(
-                [cc, "-O2", "-shared", "-fPIC", "-o", so, src,
-                 "-lpthread", "-ldl"],
-                check=True, capture_output=True, timeout=120)
-        except Exception:
-            return None
-    return so if os.path.exists(so) else None
+    so = os.path.join(_NATIVE_DIR, "bigcache.so")
+    src = os.path.join(_NATIVE_DIR, "bigcache.c")
+    if not os.path.exists(src):
+        return so if os.path.exists(so) else None
+    with open(src, "rb") as f:
+        source = f.read()
+    try:
+        return build_shared(source, so, ("-O2", "-shared", "-fPIC"),
+                            ("-lpthread", "-ldl"))
+    except BuildError as e:
+        log.warning("bigcache allocator shim unavailable (%s); the "
+                    "session runs without it", e)
+        return None
 
 
 def build_session(app: str = "atr-adaptive-laguerre-spark",

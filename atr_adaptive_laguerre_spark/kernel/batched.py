@@ -4,12 +4,15 @@ Computes the C1-C8 recurrence (see ``reference_impl``) for a *batch* of
 entities at once on padded ``(B, T)`` float64 matrices: vectorized across
 the batch axis everywhere, sequential only along the time axis where the
 math is irreducibly sequential (the incremental ATR sum and the Laguerre
-cascade).  This is the "no per-row Python" production kernel that runs
-inside Arrow-batched pandas UDFs (``mapInPandas`` / ``applyInPandas``).
+cascade).  Those two loops run compiled (``kernel.recurrences``), with
+NumPy loops as the fallback when the library cannot be built.  This is
+the production kernel the ``engine.features_job`` jobs call from their
+``mapInArrow`` workers (and the pandas paths from ``applyInPandas`` /
+``mapInPandas``).
 
 Bit-exactness: every float64 operation is applied in the same order as the
-per-entity oracle (``reference_impl.core_loop``), so results are identical
-to the last bit — verified by tests.
+per-entity oracle (``reference_impl.core_loop``), on either backend, so
+results are identical to the last bit — verified by tests.
 
 Memory discipline: fresh large allocations are ~15x slower than writes to
 already-mapped pages on virtualized hosts (page-fault bound), so all large
@@ -26,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from atr_adaptive_laguerre_spark.kernel import recurrences
 from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
 
 __all__ = ["core_loop_batched", "pad_sequences", "CORE_OUTPUTS", "Workspace"]
@@ -167,7 +171,13 @@ def _atr_incremental(tr, p, out, ws, b):
     adjacent-column writes reuse the same lines.  A transposed variant
     was measured 44% SLOWER (the two transpose passes cost more than the
     cached column writes); contrast `_laguerre_cascade`, whose 6-slab
-    16-op step profits from the (T, B) layout."""
+    16-op step profits from the (T, B) layout.  These layout notes
+    describe the NumPy fallback only: the compiled loop (see
+    ``kernel.recurrences``) runs row by row over the slab."""
+    rec = recurrences.compiled()
+    if rec is not None:
+        rec.atr_incremental(tr, p, out)
+        return out
     t = tr.shape[1]
     tr_sum = ws.vec(0, b)
     tr_sum[:] = 0.0
@@ -221,7 +231,14 @@ def _laguerre_cascade(close, gamma, ws, b, t):
     once, per-step reads/writes contiguous, outputs transposed back —
     cuts the loop's DRAM traffic ~8x for two extra transpose passes:
     26% faster single-proc, bit-identical (same float ops, same order).
+    That layout is the NumPy fallback's; the compiled loop (see
+    ``kernel.recurrences``) writes the (B, T) slabs row by row.
     """
+    L0, L1, L2, L3 = (ws.view(n, b, t) for n in ("L0", "L1", "L2", "L3"))
+    rec = recurrences.compiled()
+    if rec is not None:
+        rec.laguerre_cascade(close, gamma, L0, L1, L2, L3)
+        return L0, L1, L2, L3
     cT = ws.view("cascT_c", t, b)
     np.copyto(cT, close.T)
     gT = ws.view("cascT_g", t, b)
@@ -258,13 +275,9 @@ def _laguerre_cascade(close, gamma, ws, b, t):
         L1T[i] = l1
         L2T[i] = l2
         L3T[i] = l3
-    L0 = ws.view("L0", b, t)
     np.copyto(L0, L0T.T)
-    L1 = ws.view("L1", b, t)
     np.copyto(L1, L1T.T)
-    L2 = ws.view("L2", b, t)
     np.copyto(L2, L2T.T)
-    L3 = ws.view("L3", b, t)
     np.copyto(L3, L3T.T)
     return L0, L1, L2, L3
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
+from atr_adaptive_laguerre_spark.kernel import recurrences
 from atr_adaptive_laguerre_spark.kernel.batched import get_workspace
 from atr_adaptive_laguerre_spark.kernel.expander_ref import (
     FEATURE_COLUMNS, INT_COLUMNS,
@@ -219,8 +220,14 @@ def _ewm_mean(x, span, out, ws, b):
     """EWM recurrence.  Stays column-oriented (r6 note): 2 column
     touches per step keep the live line set L2-resident; the transposed
     variant measured 65% slower (transpose passes dominate) — unlike
-    the 6-slab Laguerre cascade, which does profit from (T, B)."""
+    the 6-slab Laguerre cascade, which does profit from (T, B).  That
+    note describes the NumPy fallback only; the compiled loop (see
+    ``kernel.recurrences``) runs row by row."""
     alpha = 2.0 / (span + 1.0)
+    rec = recurrences.compiled()
+    if rec is not None:
+        rec.ewm_mean(x, alpha, 1.0 - alpha, out)
+        return out
     t = x.shape[1]
     y = ws.vec(0, b)
     tmp = ws.vec(1, b)

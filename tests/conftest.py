@@ -9,6 +9,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 
 
+@pytest.fixture
+def numpy_backend(monkeypatch):
+    """Run the kernel on its NumPy fallback loops instead of the compiled
+    recurrences (the bit-identity tests run once on each)."""
+    from atr_adaptive_laguerre_spark.kernel import recurrences
+
+    monkeypatch.setattr(recurrences, "_compiled", False)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from atr_adaptive_laguerre_spark.engine.session import build_session

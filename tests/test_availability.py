@@ -103,3 +103,12 @@ def test_availability_no_leakage_prefix(seed, n):
             continue
         np.testing.assert_array_equal(full[col][:cut], pre[col],
                                       err_msg=col)
+
+
+@pytest.mark.usefixtures("numpy_backend")
+class TestNumpyFallback:
+    """The oracle tests above, on the NumPy fallback loops."""
+
+    test_matches_oracle = staticmethod(
+        test_availability_batched_matches_oracle)
+    test_strict_tie = staticmethod(test_strict_tie_exclusion_at_boundary)

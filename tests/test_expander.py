@@ -81,6 +81,13 @@ def test_expander_matches_oracle_tokens(doc, n):
     _check_entity(h, l, c)
 
 
+@pytest.mark.parametrize("n", [1, 5, 13, 8192])
+def test_expander_matches_oracle_short_and_long(n):
+    """A single bar, fewer bars than atr_period, and one long B=1 row."""
+    h, l, c = tokens_to_ohlcv(make_tokens(3, n))
+    _check_entity(h, l, c)
+
+
 def test_expander_flat_series():
     """Constant prices -> rsi flat 0, constant windows: exercises every
     std==0 / denominator guard (reference M10 degenerate constants)."""
@@ -156,3 +163,17 @@ def test_expander_non_anticipative_prefix(seed, n):
     for col in FEATURE_COLUMNS:
         np.testing.assert_array_equal(full[col][:cut], pre[col],
                                       err_msg=col)
+
+
+@pytest.mark.usefixtures("numpy_backend")
+class TestNumpyFallback:
+    """The oracle and consistency tests above, on the NumPy fallback
+    loops."""
+
+    test_tokens = staticmethod(test_expander_matches_oracle_tokens)
+    test_short_and_long = staticmethod(
+        test_expander_matches_oracle_short_and_long)
+    test_flat_series = staticmethod(test_expander_flat_series)
+    test_across_batch = staticmethod(
+        test_expander_batched_consistent_across_batch)
+    test_hypothesis = staticmethod(test_expander_matches_oracle_hypothesis)

@@ -49,6 +49,18 @@ def test_batched_matches_oracle_exact(atr_period, n):
                 got[k][b, :m], want[k], err_msg=f"{k} (entity {b})")
 
 
+@pytest.mark.parametrize("atr_period,n", [(14, 8192), (14, 1), (32, 13)])
+def test_batched_matches_oracle_single_row(atr_period, n):
+    """B=1 rows: a long document (every step of the per-step loops runs on
+    a one-element batch), a single bar, and fewer bars than atr_period."""
+    rng = np.random.default_rng(n)
+    h, l, c = _random_ohlcv(rng, n)
+    got = core_loop_batched(h[None, :], l[None, :], c[None, :], atr_period)
+    want = core_loop(h, l, c, atr_period)
+    for k in CORE_OUTPUTS:
+        np.testing.assert_array_equal(got[k][0], want[k], err_msg=k)
+
+
 def test_token_derivation_batched_matches_single():
     toks = [make_tokens(i, 50 + 13 * i) for i in range(6)]
     mat, lengths = pad_sequences(toks, dtype=np.int64)
@@ -149,3 +161,12 @@ def test_workspace_vec_grows_beyond_default():
     out = core_loop_batched(high, low, close, 14)
     assert out["rsi"].shape == (b, 1)
     assert np.isfinite(out["atr"]).all()
+
+
+@pytest.mark.usefixtures("numpy_backend")
+class TestNumpyFallback:
+    """The bit-identity tests above, on the NumPy fallback loops."""
+
+    test_exact = staticmethod(test_batched_matches_oracle_exact)
+    test_single_row = staticmethod(test_batched_matches_oracle_single_row)
+    test_hypothesis = staticmethod(test_batched_matches_oracle_hypothesis)

@@ -83,6 +83,14 @@ def test_multi_interval_matches_oracle(cfg):
     _check_docs(seqs, cfg)
 
 
+def test_multi_interval_long_and_short_docs():
+    """One B=1 row of 8192 tokens, then a batch with docs shorter than
+    atr_period (12 and 13 bars; the oracle needs >= multiplier_2)."""
+    _check_docs([tokens_to_ohlcv(make_tokens(9, 8192))], CFG121)
+    _check_docs([tokens_to_ohlcv(make_tokens(i, n))
+                 for i, n in enumerate([13, 200, 12])], CFG121)
+
+
 def test_multi_interval_short_doc_nan_mults():
     """Docs shorter than a multiplier get NaN mult features (deviation
     from the reference's hard lookback gate, documented in the kernel)."""
@@ -123,3 +131,13 @@ def test_multi_interval_config_space(atr_period, m1, dm, filt):
         filter_redundancy=filt)
     seqs = [tokens_to_ohlcv(make_tokens(3, 180))]
     _check_docs(seqs, cfg)
+
+
+@pytest.mark.usefixtures("numpy_backend")
+class TestNumpyFallback:
+    """The oracle tests above, on the NumPy fallback loops."""
+
+    test_matches_oracle = staticmethod(test_multi_interval_matches_oracle)
+    test_long_and_short = staticmethod(
+        test_multi_interval_long_and_short_docs)
+    test_hypothesis = staticmethod(test_multi_interval_hypothesis)

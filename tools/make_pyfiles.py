@@ -1,4 +1,8 @@
-"""Zip the library for spark-submit --py-files."""
+"""Zip the library for spark-submit --py-files.
+
+Packs the package's Python modules and its C sources: workers build the
+compiled kernel recurrences from ``kernel/recurrences.c`` on first use
+(outside the zip, in their temp directory)."""
 
 from __future__ import annotations
 
@@ -18,7 +22,7 @@ def main() -> str:
             if "__pycache__" in dirpath:
                 continue
             for f in files:
-                if f.endswith(".py"):
+                if f.endswith((".py", ".c")):
                     full = os.path.join(dirpath, f)
                     z.write(full, os.path.relpath(full, ROOT))
     print(out)
