@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship: tokenize sf0.001 documents Spark-natively and
-run the per-entity ATR-Adaptive Laguerre RSI kernel (zero-shuffle
-mapInPandas path).
+run the 121-column ATR-Adaptive Laguerre RSI feature pipeline (zero-shuffle
+mapInArrow path).
 
 ``queries()`` / ``oracle_sql()`` — operator catalog with DuckDB twins; see
 ``atr_adaptive_laguerre_spark/queries.py``.

@@ -1,17 +1,18 @@
 """Feature-extraction jobs: doc-grain token table -> per-step features.
 
-The production paths read doc-grain input (the ``input_hint`` shape: one
-row per entity holding its whole ``tokens`` array) with ``mapInArrow``:
+Every job is one ``mapInArrow`` over doc-grain input (the ``input_hint``
+shape: one row per entity holding its whole ``tokens`` array).  Each
+entity arrives complete in one row, so the sequential recurrence runs
+without any exchange; parallelism and load balance come from Parquet
+file splits (bytes ∝ tokens ∝ kernel work).  Token values are read
+straight from the Arrow list buffers (:func:`_arrow_doc_chunks`) and
+output columns are wrapped zero-copy from the kernel's pooled NumPy
+buffers.
 
 * :func:`features_long` (43 / 169 / 121 feature columns) and
   :func:`core_features_long` (the 10 core outputs) emit long form, one
-  row per (entity, offset).  Each entity arrives complete in one row, so
-  the sequential recurrence runs without any exchange; parallelism and
-  load balance come from Parquet file splits (bytes ∝ tokens ∝ kernel
-  work).  Token values are read straight from the Arrow list buffers,
-  and output columns are wrapped zero-copy from the kernel's pooled
-  NumPy buffers, with kernel compute overlapped with the worker's
-  socket serialization (:func:`_overlap_chunks`).
+  row per (entity, offset), with kernel compute overlapped with the
+  worker's socket serialization (:func:`_overlap_chunks`).
 * :func:`features_doc` emits doc grain (one row per entity, features as
   arrays); :func:`features_checksum` emits per-chunk integrity sums.
 
@@ -21,14 +22,10 @@ batch: Spark's row projection then skips the per-value null test, and a
 stray null still fails the task (Arrow's null-checked ``get``) instead
 of being written.  ``source`` and ``doc_id`` pass through nullable.
 
-Long-form *input* (one row per token) goes through the salted pandas
-paths :func:`core_features_from_long` (``applyInPandas``, one shuffle)
-and :func:`core_features_from_long_sorted` (range-partitioned
-``mapInPandas``).
-
-Every path calls the same lockstep kernel
-(:mod:`atr_adaptive_laguerre_spark.kernel.batched`), so their outputs are
-bit-identical to each other and to the local oracle.
+Every job calls the same lockstep kernel
+(:mod:`atr_adaptive_laguerre_spark.kernel.batched`) through the same
+chunker, so their outputs are bit-identical to each other and to the
+local oracle.
 
 Reference lifecycle being re-expressed: ``fit_transform`` ->
 ``_compute_core_loop`` (``/root/reference/src/atr_adaptive_laguerre/features/
@@ -37,10 +34,10 @@ atr_adaptive_rsi.py:300-453``).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType,
@@ -48,11 +45,10 @@ from pyspark.sql.types import (
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
-from atr_adaptive_laguerre_spark.engine.partitioning import repartition_by_entity
-from atr_adaptive_laguerre_spark.kernel.batched import (
-    core_loop_batched, pad_sequences,
-)
+from atr_adaptive_laguerre_spark.kernel.batched import core_loop_batched
 from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
+
+_log = logging.getLogger(__name__)
 
 #: cap on padded cells (docs x max_len) per kernel invocation; bounds the
 #: Python worker's peak memory independent of Arrow batch sizing.
@@ -72,11 +68,6 @@ def _long_schema(value_cols) -> StructType:
 
 
 CORE_LONG_SCHEMA = _long_schema(CORE_OUTPUTS)
-
-CORE_DOC_SCHEMA = (
-    "source string, doc_id string, n_tok int, tokens array<int>, "
-    "rsi array<double>"
-)
 
 
 def _length_chunks(lengths: np.ndarray, cell_budget: int) -> Iterator[np.ndarray]:
@@ -110,9 +101,8 @@ def _length_chunks(lengths: np.ndarray, cell_budget: int) -> Iterator[np.ndarray
 
 def _chunk_feature_cols(mat, lens, cfg: FeatureConfig, pool=None):
     """OHLCV derivation + kernel dispatch for one padded chunk — the ONE
-    definition every chunked path (pandas, mapInArrow long/doc/checksum)
-    shares, so availability gating and kernel dispatch cannot drift
-    between them."""
+    definition the feature jobs (long/doc/checksum) share, so
+    availability gating and kernel dispatch cannot drift between them."""
     from atr_adaptive_laguerre_spark.data.corpus import (
         tokens_to_availability_batched,
     )
@@ -129,86 +119,6 @@ def _chunk_feature_cols(mat, lens, cfg: FeatureConfig, pool=None):
     return single_interval_long(high, low, close, lens, cfg, pool=pool)
 
 
-def _require_no_null_tokens_pandas(pdf: pd.DataFrame) -> None:
-    """A NULL tokens array is a contract violation (empty docs must be
-    [], not NULL) — fail loud with the doc named instead of letting
-    numpy throw an opaque conversion error deep in the kernel."""
-    null_mask = pdf["tokens"].isna()
-    if null_mask.any():
-        bad = pdf["doc_id"][null_mask].iloc[0]
-        raise ValueError(
-            f"null tokens array for doc_id {bad!r} "
-            f"({int(null_mask.sum())} such rows in this batch); "
-            f"empty documents must carry [] not NULL")
-
-
-def _kernel_on_docs(pdf: pd.DataFrame, cfg: FeatureConfig,
-                    long_form: bool, cell_budget: int = CELL_BUDGET,
-                    ) -> Iterator[pd.DataFrame]:
-    """Run the batched kernel over a pandas batch of doc rows."""
-    if len(pdf) == 0:
-        return
-    _require_no_null_tokens_pandas(pdf)
-    toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
-    lengths = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                          count=len(toks))
-    for idx in _length_chunks(lengths, cell_budget):
-        chunk_toks = [toks[i] for i in idx]
-        mat, lens = pad_sequences(chunk_toks, dtype=np.int64)
-        high, low, close = tokens_to_ohlcv_batched(mat)
-        out = core_loop_batched(high, low, close,
-                                cfg.atr_period, cfg.adaptive_offset)
-        src = pdf["source"].to_numpy()[idx]
-        did = pdf["doc_id"].to_numpy()[idx]
-        if long_form:
-            # explode: one output row per (entity, offset)
-            reps = lens
-            flat_mask_cols = {}
-            for k in CORE_OUTPUTS:
-                m = out[k]
-                flat_mask_cols[k] = np.concatenate(
-                    [m[b, : reps[b]] for b in range(len(idx))])
-            offsets = np.concatenate(
-                [np.arange(n, dtype=np.int32) for n in reps])
-            yield pd.DataFrame({
-                "source": np.repeat(src, reps),
-                "doc_id": np.repeat(did, reps),
-                "offset": offsets,
-                # token pass-through straight from the input arrays
-                "token": np.concatenate(chunk_toks),
-                **flat_mask_cols,
-            })
-        else:
-            yield pd.DataFrame({
-                "source": src,
-                "doc_id": did,
-                "n_tok": lens.astype(np.int32),
-                # pass the original arrays through untouched
-                "tokens": pd.Series(chunk_toks, dtype=object),
-                "rsi": pd.Series(
-                    [out["rsi"][b, : lens[b]] for b in range(len(idx))],
-                    dtype=object),
-            })
-    if not long_form:
-        # the chunker skips n_tok==0 entities (no feature rows in long
-        # form by definition), but the doc grain contracts ONE row per
-        # entity — emit empty docs with empty arrays so they don't
-        # silently vanish from the output
-        empty = np.flatnonzero(lengths == 0)
-        if len(empty):
-            yield pd.DataFrame({
-                "source": pdf["source"].to_numpy()[empty],
-                "doc_id": pdf["doc_id"].to_numpy()[empty],
-                "n_tok": np.zeros(len(empty), dtype=np.int32),
-                "tokens": pd.Series(
-                    [np.empty(0, dtype=np.int32)] * len(empty),
-                    dtype=object),
-                "rsi": pd.Series(
-                    [np.empty(0, dtype=np.float64)] * len(empty),
-                    dtype=object),
-            })
-
-
 def core_features_long(doc_df: DataFrame,
                        cfg: FeatureConfig | None = None,
                        num_partitions: int | None = None) -> DataFrame:
@@ -223,9 +133,9 @@ def core_features_long(doc_df: DataFrame,
     Physical path mirrors :func:`features_long` (r6): tokens are read
     straight from the Arrow list buffers, the kernel outputs are gathered
     into pooled buffers and wrapped zero-copy — no pandas block
-    consolidation on either side of the boundary.  Values are the same
-    ``core_loop_batched`` outputs the pandas paths emit (identical
-    chunking, identical kernel calls).
+    consolidation on either side of the boundary.  Values are the
+    ``core_loop_batched`` outputs bit for bit (tested against the loop
+    oracle).
     """
     cfg = cfg or FeatureConfig()
     if num_partitions:
@@ -257,53 +167,6 @@ def core_features_long(doc_df: DataFrame,
     return doc_df.mapInArrow(run, schema=CORE_LONG_SCHEMA)
 
 
-def core_features_doc(doc_df: DataFrame,
-                      cfg: FeatureConfig | None = None) -> DataFrame:
-    """Doc-grain input -> doc-grain output with the original ``tokens``
-    array passed through bit-exactly plus a per-step ``rsi`` array."""
-    cfg = cfg or FeatureConfig()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield from _kernel_on_docs(pdf, cfg, long_form=False)
-
-    return doc_df.mapInPandas(run, schema=CORE_DOC_SCHEMA)
-
-
-def core_features_from_long(long_df: DataFrame,
-                            cfg: FeatureConfig | None = None,
-                            num_partitions: int | None = None) -> DataFrame:
-    """Long-form input (source, doc_id, offset, token) -> same long-form
-    output as :func:`core_features_long`.
-
-    One shuffle: salted repartition by entity, then grouped-map kernel.
-    The kernel sorts each group by ``offset`` (Spark gives no group-order
-    guarantee — SURVEY §4).
-    """
-    cfg = cfg or FeatureConfig()
-    if num_partitions:
-        long_df = repartition_by_entity(long_df, num_partitions)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset", kind="stable")
-        tokens = pdf["token"].to_numpy(dtype=np.int64)[None, :]
-        high, low, close = tokens_to_ohlcv_batched(tokens)
-        out = core_loop_batched(high, low, close,
-                                cfg.atr_period, cfg.adaptive_offset)
-        res = pd.DataFrame({
-            "source": pdf["source"].to_numpy(),
-            "doc_id": pdf["doc_id"].to_numpy(),
-            "offset": pdf["offset"].to_numpy(dtype=np.int32),
-            "token": pdf["token"].to_numpy(dtype=np.int32),
-        })
-        for k in CORE_OUTPUTS:
-            res[k] = out[k][0]
-        return res
-
-    return (long_df.groupBy("source", "doc_id")
-            .applyInPandas(run, schema=CORE_LONG_SCHEMA))
-
-
 def feature_columns_for(cfg: FeatureConfig) -> list[str]:
     """Output feature columns for a config (43 / 169 / 121)."""
     from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
@@ -318,6 +181,19 @@ def feature_columns_for(cfg: FeatureConfig) -> list[str]:
 
 def features_long_schema(cfg: FeatureConfig) -> StructType:
     return _long_schema(feature_columns_for(cfg))
+
+
+def _projected_columns(cfg: FeatureConfig,
+                       columns: list[str] | None) -> list[str]:
+    """The config's feature columns, narrowed to ``columns`` (in the
+    config's order) when given; an unknown name raises ``ValueError``."""
+    feat_cols = feature_columns_for(cfg)
+    if columns is None:
+        return feat_cols
+    unknown = sorted(set(columns) - set(feat_cols))
+    if unknown:
+        raise ValueError(f"unknown feature columns: {unknown}")
+    return [c for c in feat_cols if c in set(columns)]
 
 
 def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
@@ -345,33 +221,6 @@ def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _features_on_docs(pdf: pd.DataFrame, cfg: FeatureConfig,
-                      cell_budget: int = CELL_BUDGET,
-                      ) -> Iterator[pd.DataFrame]:
-    """Full feature pipeline (43 or 169/121 cols) over a doc batch."""
-    if len(pdf) == 0:
-        return
-    _require_no_null_tokens_pandas(pdf)
-    toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
-    lengths = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                          count=len(toks))
-    for idx in _length_chunks(lengths, cell_budget):
-        chunk_toks = [toks[i] for i in idx]
-        mat, lens = pad_sequences(chunk_toks, dtype=np.int64)
-        cols = _chunk_feature_cols(mat, lens, cfg)
-        src = pdf["source"].to_numpy()[idx]
-        did = pdf["doc_id"].to_numpy()[idx]
-        offsets = np.concatenate(
-            [np.arange(n, dtype=np.int32) for n in lens])
-        yield pd.DataFrame({
-            "source": np.repeat(src, lens),
-            "doc_id": np.repeat(did, lens),
-            "offset": offsets,
-            "token": np.concatenate(chunk_toks),
-            **cols,
-        })
-
-
 def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
     """Parse a doc-grain Arrow RecordBatch and yield padding-efficient
     chunks: (doc_row_idx, chunk_flat_tokens, lengths, padded_int64_matrix).
@@ -380,6 +229,10 @@ def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
     list buffer; the padded matrix is one vectorized scatter.
     """
     import pyarrow.compute as pc
+
+    from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
+        _flat_explode_idx,
+    )
 
     tokens = rb.column(rb.schema.get_field_index("tokens"))
     if tokens.null_count:
@@ -400,7 +253,7 @@ def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
         chunk_flat = flat[gidx]
         t_max = int(lens.max()) if len(lens) else 0
         mat = _padded_int_buffer(len(idx), t_max)
-        fe = _flat_explode_idx_local(lens, t_max)
+        fe = _flat_explode_idx(lens, t_max)
         mat.ravel()[fe] = chunk_flat
         yield idx, chunk_flat, lens, mat, fe
 
@@ -419,15 +272,10 @@ def _padded_int_buffer(b: int, t: int) -> np.ndarray:
     return buf[:need].reshape(b, t)
 
 
-def _flat_explode_idx_local(lengths: np.ndarray, t: int) -> np.ndarray:
-    from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
-        _flat_explode_idx,
-    )
-
-    return _flat_explode_idx(lengths, t)
-
-
 _OVERLAP_DONE = object()
+
+#: seconds :func:`_overlap_chunks` waits for its producer thread to exit
+_OVERLAP_JOIN_TIMEOUT_S = 60.0
 
 
 def _overlap_chunks(produce):
@@ -517,7 +365,12 @@ def _overlap_chunks(produce):
         # Workspace/_PAD_INT buffers.  Bounded wait: the producer
         # notices `stop` at its next emit/acquire poll (<= ~1 s past
         # the current chunk's compute).
-        t.join(timeout=60.0)
+        t.join(timeout=_OVERLAP_JOIN_TIMEOUT_S)
+        if t.is_alive():
+            _log.warning(
+                "producer thread %r still running %g s after stop; the "
+                "next task in this worker may race its shared buffers",
+                t.name, _OVERLAP_JOIN_TIMEOUT_S)
 
 
 def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
@@ -547,12 +400,7 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     cfg = cfg or FeatureConfig()
     if num_partitions:
         doc_df = doc_df.repartition(num_partitions)
-    feat_cols = feature_columns_for(cfg)
-    if columns is not None:
-        unknown = sorted(set(columns) - set(feat_cols))
-        if unknown:
-            raise ValueError(f"unknown feature columns: {unknown}")
-        feat_cols = [c for c in feat_cols if c in set(columns)]
+    feat_cols = _projected_columns(cfg, columns)
 
     def run(batches):
         def produce(emit, acquire_pool):
@@ -571,11 +419,6 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
         yield from _overlap_chunks(produce)
 
     return doc_df.mapInArrow(run, schema=_long_schema(feat_cols))
-
-
-def features_doc_schema(cfg: FeatureConfig) -> str:
-    return ("source string, doc_id string, n_tok int, tokens array<int>, "
-            + ", ".join(f"{c} array<double>" for c in feature_columns_for(cfg)))
 
 
 def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
@@ -606,12 +449,7 @@ def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     cfg = cfg or FeatureConfig()
     if num_partitions:
         doc_df = doc_df.repartition(num_partitions)
-    feat_cols = feature_columns_for(cfg)
-    if columns is not None:
-        unknown = sorted(set(columns) - set(feat_cols))
-        if unknown:
-            raise ValueError(f"unknown feature columns: {unknown}")
-        feat_cols = [c for c in feat_cols if c in set(columns)]
+    feat_cols = _projected_columns(cfg, columns)
     schema = ("source string, doc_id string, n_tok int, tokens array<int>, "
               + ", ".join(f"{c} array<double>" for c in feat_cols))
 
@@ -715,73 +553,3 @@ def features_checksum(doc_df: DataFrame, cfg: FeatureConfig | None = None,
                     ["n_rows", "n_nan"] + [f"{c}_sum" for c in feat_cols])
 
     return doc_df.mapInArrow(run, schema=schema)
-
-
-def core_features_from_long_sorted(long_df: DataFrame,
-                                   cfg: FeatureConfig | None = None,
-                                   num_partitions: int = 32) -> DataFrame:
-    """Long-form input -> long-form core features via the
-    **partition-sorted batched** path: salted ``repartitionByRange`` on
-    the entity key, ``sortWithinPartitions(entity, offset)``, then ONE
-    ``mapInPandas`` over each whole partition that slices consecutive
-    entities and runs them through the *batched* kernel together.
-
-    Compared to ``core_features_from_long`` (grouped applyInPandas, one
-    kernel call per entity), this amortizes the kernel across all
-    entities of a partition — the physical plan the north rule describes
-    (range-partition + salt, per-entity sequential math inside a
-    vectorized Arrow kernel).  Entities are never split: the sort makes
-    them contiguous, and rows of the partition's final entity are held
-    back until the batch iterator is exhausted.
-    """
-    from atr_adaptive_laguerre_spark.engine.partitioning import (
-        salted_entity_key,
-    )
-
-    cfg = cfg or FeatureConfig()
-    keyed = salted_entity_key(long_df)
-    part = (keyed.repartitionByRange(num_partitions, "_ekey")
-            .sortWithinPartitions("_ekey", "offset"))
-
-    def process_group(chunk: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        # chunk holds >=1 complete entities, sorted by (_ekey, offset)
-        ek = chunk["_ekey"].to_numpy()
-        bounds = np.flatnonzero(np.concatenate(([True], ek[1:] != ek[:-1])))
-        bounds = np.append(bounds, len(ek))
-        tok_all = chunk["token"].to_numpy(dtype=np.int32)  # ONE conversion
-        toks = [tok_all[bounds[i]:bounds[i + 1]]
-                for i in range(len(bounds) - 1)]
-        sub = chunk.iloc[bounds[:-1]]
-        pdf = pd.DataFrame({
-            "tokens": pd.Series(list(toks), dtype=object),
-            "source": sub["source"].to_numpy(),
-            "doc_id": sub["doc_id"].to_numpy(),
-        })
-        yield from _kernel_on_docs(pdf, cfg, long_form=True)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        held: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if held is not None:
-                pdf = pd.concat([held, pdf], ignore_index=True)
-            ek = pdf["_ekey"].to_numpy()
-            last_key = ek[-1]
-            cut = np.searchsorted(ek, last_key, side="left")
-            if cut > 0:
-                yield from process_group(pdf.iloc[:cut])
-            held = pdf.iloc[cut:]
-        if held is not None and len(held):
-            yield from process_group(held)
-
-    return part.mapInPandas(run, schema=CORE_LONG_SCHEMA)
-
-
-def explode_tokens(doc_df: DataFrame) -> DataFrame:
-    """Doc-grain -> long-form via posexplode (Spark-native, no Python)."""
-    from pyspark.sql import functions as F
-
-    return doc_df.select(
-        "source", "doc_id",
-        F.posexplode("tokens").alias("offset", "token"))

@@ -7,8 +7,7 @@ math is irreducibly sequential (the incremental ATR sum and the Laguerre
 cascade).  Those two loops run compiled (``kernel.recurrences``), with
 NumPy loops as the fallback when the library cannot be built.  This is
 the production kernel the ``engine.features_job`` jobs call from their
-``mapInArrow`` workers (and the pandas paths from ``applyInPandas`` /
-``mapInPandas``).
+``mapInArrow`` workers.
 
 Bit-exactness: every float64 operation is applied in the same order as the
 per-entity oracle (``reference_impl.core_loop``), on either backend, so

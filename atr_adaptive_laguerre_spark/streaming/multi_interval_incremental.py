@@ -1,12 +1,16 @@
 """Incremental streaming 121-column multi-interval pipeline
-(availability mode) with O(1) state — the UNBOUNDED-entity design.
+(availability mode) with O(1) state.
 
-``streaming/multi_interval.py`` streams the availability-mode 121
-pipeline by bounded-entity recompute: state carries the entity's full
-history and every micro-batch reruns the batch kernel — O(n) state and
-O(n) work per batch, fine for the input_hint's bounded token sequences,
-wrong for unbounded streams.  This module keeps state CONSTANT in
-stream length:
+Why availability mode and not the default: the reference's positional
+alignment maps base row i to resampled row min(i, n//m - 1)
+(`kernel/multi_interval_batched._align_gather_idx`), so emitting row i
+with batch parity would require m*(i+1) bars — a lag growing m-fold
+with stream length.  The strict point-in-time variant
+(`_align_gather_idx_avail`, reference
+``_fit_transform_features_with_availability``) is non-anticipative, so a
+row becomes final within a lag bounded by ``multiplier_2`` bars.
+
+State stays CONSTANT in stream length, so entities may be unbounded:
 
 * one :class:`~atr_adaptive_laguerre_spark.streaming.expanded.Entity43Stream`
   per grain (base, mult1, mult2) — the carried-window incremental
@@ -23,13 +27,17 @@ stream length:
   ``regime_changed_mult2`` values (rolling sums), and four integer
   counters (the cumulative unanimity trick's running state).
 
-Emission rule (identical to the recompute variant): base row i is final
-once every grain has a completed window with availability >= avail[i];
-its aligned grain vector is the last window with availability
-STRICTLY below avail[i] (clamped to window 0 — the A3 backfill), which
-at that point can never change again.  Emitted rows are bit-identical
-to the batch pipeline (tested), and the trailing not-yet-final rows of
-a finished stream remain unemitted exactly as in the recompute variant.
+Emission rule (strict-tie safe): base row i is final once every grain
+has a completed window with availability >= avail[i] — a later window's
+availability can never drop below an existing one (availability is
+monotone), and a tie is excluded by the strict rule on both sides, so
+>= settles it.  Its aligned grain vector is the last window with
+availability STRICTLY below avail[i] (clamped to window 0 — the A3
+backfill), which at that point can never change again.  Emitted rows
+are bit-identical to the batch pipeline (tested); the trailing
+not-yet-final rows of a finished stream remain unemitted.  Offsets of
+an entity must be gapless (history position == offset for the
+positional resample); a gap raises ``ValueError`` naming the entity.
 
 All interaction arithmetic is element-wise or exact-integer counters,
 so chunking cannot perturb a bit; the only float recurrences (kernel,
@@ -52,6 +60,9 @@ from atr_adaptive_laguerre_spark.streaming.expanded import (
 
 NF = len(FEATURE_COLUMNS)          # 43
 _CI = {c: i for i, c in enumerate(FEATURE_COLUMNS)}
+
+AVAIL_INPUT_SCHEMA = ("source string, doc_id string, offset long, "
+                      "high double, low double, close double, avail double")
 
 #: carried aligned-history depths (lag/rolling windows of _interactions_2d)
 _H_CS2, _H_RC2, _H_CO2 = 10, 5, 2
@@ -448,6 +459,15 @@ def state121_inc_schema() -> str:
             "i_reset2 double, last_offset long")
 
 
+def output121_schema(cfg: FeatureConfig) -> str:
+    from atr_adaptive_laguerre_spark.engine.features_job import (
+        feature_columns_for,
+    )
+
+    return ("source string, doc_id string, offset long, "
+            + ", ".join(f"{c} double" for c in feature_columns_for(cfg)))
+
+
 def make_update121_inc_fn(cfg: FeatureConfig):
     from atr_adaptive_laguerre_spark.engine.features_job import (
         feature_columns_for,
@@ -504,10 +524,6 @@ def stream_features121_incremental(spark, input_dir: str, output_dir: str,
     121-column pipeline with O(1) per-entity state, resuming from
     checkpointed state."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from atr_adaptive_laguerre_spark.streaming.multi_interval import (
-        AVAIL_INPUT_SCHEMA, output121_schema,
-    )
 
     out = (spark.readStream.schema(AVAIL_INPUT_SCHEMA).parquet(input_dir)
            .groupBy("source", "doc_id")

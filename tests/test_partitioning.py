@@ -9,10 +9,9 @@ from atr_adaptive_laguerre_spark.engine.partitioning import (
 
 
 def test_entities_never_split_across_partitions(spark, corpus_parquet):
-    from atr_adaptive_laguerre_spark.engine.features_job import explode_tokens
-
     doc = spark.read.parquet(corpus_parquet)
-    long_df = explode_tokens(doc)
+    long_df = doc.select("source", "doc_id",
+                         F.posexplode("tokens").alias("offset", "token"))
     parted = repartition_by_entity(long_df, 7)
     pid = parted.withColumn("pid", F.spark_partition_id())
     per_entity = (pid.groupBy("source", "doc_id")

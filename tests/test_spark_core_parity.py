@@ -1,10 +1,11 @@
-"""Spark pipeline == local oracle, token round-trip, and path equivalence.
+"""Spark pipeline == local oracle, token round-trip, and the single
+kernel boundary.
 
-This is the distributed-correctness gate for M1: the mapInPandas scan path,
-the salted applyInPandas shuffle path, and the local single-process oracle
-must all agree bit-for-bit at every entity x offset, and the ``tokens``
-array<int32> must survive the pipeline exactly (BASELINE.json input_hint
-per-row invariant).
+This is the distributed-correctness gate: the mapInArrow scan path must
+agree bit-for-bit with the local loop oracle at every entity x offset,
+the ``tokens`` array<int32> must survive the pipeline exactly
+(BASELINE.json input_hint per-row invariant), and every feature job must
+cross into Python through one ``mapInArrow`` with no exchange.
 """
 
 import numpy as np
@@ -14,8 +15,7 @@ import pytest
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import make_corpus, tokens_to_ohlcv
 from atr_adaptive_laguerre_spark.engine.features_job import (
-    core_features_doc, core_features_from_long, core_features_long,
-    explode_tokens,
+    core_features_long, features_checksum, features_doc, features_long,
 )
 from atr_adaptive_laguerre_spark.kernel.reference_impl import (
     CORE_OUTPUTS, core_loop,
@@ -82,20 +82,9 @@ def test_scan_path_matches_oracle(spark, small_rows):
             got[k].to_numpy(), want[k].to_numpy(), err_msg=k)
 
 
-def test_shuffle_path_matches_scan_path(spark, doc_df):
-    long_in = explode_tokens(doc_df)
-    got_shuffle = _collect_sorted(
-        core_features_from_long(long_in, CFG, num_partitions=8))
-    got_scan = _collect_sorted(core_features_long(doc_df, CFG))
-    assert len(got_shuffle) == len(got_scan) > 0
-    for k in ("token", *CORE_OUTPUTS):
-        np.testing.assert_array_equal(
-            got_shuffle[k].to_numpy(), got_scan[k].to_numpy(), err_msg=k)
-
-
 def test_token_array_round_trip_exact(spark, doc_df):
     """input_hint invariant: tokens array<int32> survives per row, exactly."""
-    out = core_features_doc(doc_df, CFG).toPandas().set_index("doc_id")
+    out = features_doc(doc_df, CFG).toPandas().set_index("doc_id")
     src = doc_df.select("doc_id", "tokens", "n_tok").toPandas().set_index("doc_id")
     assert set(out.index) == set(src.index)
     for doc_id, row in src.iterrows():
@@ -125,20 +114,18 @@ def test_long_form_reassembles_to_original_tokens(spark, doc_df):
 
 
 def test_scan_path_has_no_shuffle(spark, doc_df):
-    plan = core_features_long(doc_df, CFG)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, f"unexpected shuffle in scan path:\n{plan}"
-
-
-def test_partition_sorted_path_matches_scan_path(spark, doc_df):
-    from atr_adaptive_laguerre_spark.engine.features_job import (
-        core_features_from_long_sorted,
-    )
-
-    long_in = explode_tokens(doc_df)
-    got = _collect_sorted(
-        core_features_from_long_sorted(long_in, CFG, num_partitions=5))
-    want = _collect_sorted(core_features_long(doc_df, CFG))
-    assert len(got) == len(want) > 0
-    for k in ("token", *CORE_OUTPUTS):
-        np.testing.assert_array_equal(
-            got[k].to_numpy(), want[k].to_numpy(), err_msg=k)
+    """Every feature job is one mapInArrow over the scan: no exchange and
+    no pandas map or grouped-map node."""
+    problems = []
+    for job in (features_long, core_features_long, features_doc,
+                features_checksum):
+        plan = (job(doc_df, CFG)._jdf.queryExecution()
+                .executedPlan().toString())
+        if "Exchange" in plan:
+            problems.append(f"{job.__name__}: unexpected shuffle")
+        if "MapInArrow" not in plan:
+            problems.append(f"{job.__name__}: no MapInArrow")
+        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
+            if node in plan:
+                problems.append(f"{job.__name__}: {node}")
+    assert not problems, problems

@@ -20,12 +20,26 @@ def doc_df(spark, corpus_parquet):
 
 
 def _local_expected(doc_pdf, cfg):
-    from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
+    """Long-form reference built one document at a time (B=1 padded
+    matrix, no chunker), so it shares no batching code with the job."""
     from atr_adaptive_laguerre_spark.engine.features_job import (
-        _features_on_docs,
+        _chunk_feature_cols,
     )
+    from atr_adaptive_laguerre_spark.kernel.batched import pad_sequences
 
-    return (pd.concat(list(_features_on_docs(doc_pdf, cfg)))
+    frames = []
+    for r in doc_pdf.itertuples(index=False):
+        toks = np.asarray(r.tokens, dtype=np.int32)
+        if len(toks) == 0:
+            continue
+        mat, lens = pad_sequences([toks], dtype=np.int64)
+        frames.append(pd.DataFrame({
+            "source": r.source, "doc_id": r.doc_id,
+            "offset": np.arange(len(toks), dtype=np.int32),
+            "token": toks,
+            **_chunk_feature_cols(mat, lens, cfg),
+        }))
+    return (pd.concat(frames)
             .sort_values(["source", "doc_id", "offset"])
             .reset_index(drop=True))
 
@@ -284,7 +298,7 @@ def test_empty_token_docs_are_skipped(spark):
     assert set(out["doc_id"]) == {"r0", "r1", "r2"}
 
     from atr_adaptive_laguerre_spark.engine.features_job import (
-        core_features_doc, core_features_long,
+        core_features_long,
     )
 
     core = core_features_long(df, FeatureConfig(atr_period=14)).toPandas()
@@ -298,10 +312,6 @@ def test_empty_token_docs_are_skipped(spark):
     assert len(empties) == 40
     assert all(len(t) == 0 for t in empties["tokens"])
     assert all(len(v) == 0 for v in empties["rsi"])
-
-    core_doc = core_features_doc(df, FeatureConfig(atr_period=14)).toPandas()
-    assert len(core_doc) == 43
-    assert (core_doc["n_tok"] == 0).sum() == 40
 
 
 def test_null_tokens_fail_loud(spark):
@@ -368,3 +378,32 @@ def test_overlapped_kernel_paths_survive_partial_consumption(spark, tmp_path):
     ca = chk(core_features_long(df, num_partitions=4), "rsi")
     cb = chk(core_features_long(df, num_partitions=4), "rsi")
     assert ca == cb and ca[0] == a[0]
+
+
+def test_overlap_join_timeout_warns(monkeypatch, caplog):
+    """A producer that ignores `stop` outlives the bounded join in
+    _overlap_chunks; that must log one warning naming the thread instead
+    of passing silently."""
+    import logging
+    import threading
+
+    from atr_adaptive_laguerre_spark.engine import features_job
+
+    monkeypatch.setattr(features_job, "_OVERLAP_JOIN_TIMEOUT_S", 0.05)
+    caplog.set_level(logging.WARNING, logger=features_job.__name__)
+    release = threading.Event()
+
+    def produce(emit, acquire_pool):
+        emit("b0")
+        release.wait(timeout=30.0)      # never polls `stop`
+
+    gen = features_job._overlap_chunks(produce)
+    try:
+        assert next(gen) == "b0"
+        gen.close()                     # consumer abandons the task
+    finally:
+        release.set()
+    warnings = [r for r in caplog.records
+                if r.name == features_job.__name__]
+    assert len(warnings) == 1
+    assert "kernel-compute-overlap" in warnings[0].getMessage()

@@ -440,78 +440,6 @@ def test_stream_dedup_exact_bounded_state(spark, tmp_path):
             {r["chash"] for r in batch_groups.collect()})
 
 
-def test_stream_121_availability_matches_batch(spark, tmp_path):
-    """Streaming availability-mode 121: rows are emitted once final
-    (every grain has a completed window with availability >= the row's)
-    and must equal the batch kernel on the FULL series bit-for-bit —
-    across 3 file drops and a checkpoint restart, with replayed rows
-    deduped."""
-    from atr_adaptive_laguerre_spark.data.corpus import (
-        tokens_to_availability,
-    )
-    from atr_adaptive_laguerre_spark.engine.features_job import (
-        feature_columns_for,
-    )
-    from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
-        multi_interval_long,
-    )
-    from atr_adaptive_laguerre_spark.streaming.multi_interval import (
-        stream_features121_availability,
-    )
-
-    cfg = FeatureConfig.multi_interval(multiplier_1=3, multiplier_2=12,
-                                       atr_period=14, availability=True)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    N = 150
-    docs = {}
-    for i in range(3):
-        toks = make_tokens(40 + i, N)
-        h, l, c = tokens_to_ohlcv(toks)
-        docs[f"d{i}"] = (h, l, c, tokens_to_availability(toks))
-
-    def drop(lo, hi):
-        rows = []
-        for did, (h, l, c, av) in docs.items():
-            for j in range(lo, hi):
-                rows.append(("s0", did, j, float(h[j]), float(l[j]),
-                             float(c[j]), float(av[j])))
-        pdf = pd.DataFrame(rows, columns=["source", "doc_id", "offset",
-                                          "high", "low", "close", "avail"])
-        (spark.createDataFrame(pdf)
-         .coalesce(1).write.mode("append").parquet(in_dir))
-
-    drop(0, 40)
-    stream_features121_availability(spark, in_dir, out_dir, ckpt, cfg)
-    drop(40, 90)
-    drop(80, 150)        # overlap 80-90 replays -> must be ignored
-    stream_features121_availability(spark, in_dir, out_dir, ckpt, cfg)
-
-    got = (spark.read.parquet(out_dir).toPandas()
-           .sort_values(["doc_id", "offset"]).reset_index(drop=True))
-    assert got.groupby(["doc_id", "offset"]).size().max() == 1
-
-    feat_cols = feature_columns_for(cfg)
-    for did, (h, l, c, av) in docs.items():
-        want = multi_interval_long(h[None, :], l[None, :], c[None, :],
-                                   np.array([N], dtype=np.int64), cfg,
-                                   avail=av[None, :])
-        sub = got[got["doc_id"] == did].sort_values("offset")
-        # emit horizon: rows with avail <= newest mult2 window's avail
-        lm2 = N // 12
-        av_cap = min(av[(N // 3) * 3 - 1], av[lm2 * 12 - 1])
-        exp_hi = int(np.searchsorted(av, av_cap, side="right"))
-        assert sub["offset"].tolist() == list(range(exp_hi)), did
-        for col in feat_cols:
-            a = sub[col].to_numpy()
-            b = want[col][:exp_hi]
-            ok = (a == b) | (np.isnan(a) & np.isnan(b))
-            assert ok.all(), (did, col, int((~ok).sum()))
-
-
 def test_stream_121_short_entity_emits_nothing_then_catches_up(spark,
                                                                tmp_path):
     """An entity shorter than multiplier_2 has no complete mult2 window:
@@ -524,8 +452,8 @@ def test_stream_121_short_entity_emits_nothing_then_catches_up(spark,
     from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
         multi_interval_long,
     )
-    from atr_adaptive_laguerre_spark.streaming.multi_interval import (
-        stream_features121_availability,
+    from atr_adaptive_laguerre_spark.streaming.multi_interval_incremental import (
+        stream_features121_incremental,
     )
 
     cfg = FeatureConfig.multi_interval(multiplier_1=3, multiplier_2=12,
@@ -548,7 +476,7 @@ def test_stream_121_short_entity_emits_nothing_then_catches_up(spark,
          .coalesce(1).write.mode("append").parquet(in_dir))
 
     drop(0, 8)       # < multiplier_2: nothing final
-    stream_features121_availability(spark, in_dir, out_dir, ckpt, cfg)
+    stream_features121_incremental(spark, in_dir, out_dir, ckpt, cfg)
     import glob
     files = glob.glob(f"{out_dir}/*.parquet")
     n0 = (spark.read.parquet(out_dir).count()
@@ -556,7 +484,7 @@ def test_stream_121_short_entity_emits_nothing_then_catches_up(spark,
     assert n0 == 0, n0
 
     drop(8, 30)      # 2 complete mult2 windows now
-    stream_features121_availability(spark, in_dir, out_dir, ckpt, cfg)
+    stream_features121_incremental(spark, in_dir, out_dir, ckpt, cfg)
     got = (spark.read.parquet(out_dir).toPandas()
            .sort_values("offset").reset_index(drop=True))
     av_cap = min(av[(30 // 3) * 3 - 1], av[(30 // 12) * 12 - 1])
@@ -569,6 +497,43 @@ def test_stream_121_short_entity_emits_nothing_then_catches_up(spark,
     b = want["mean_rsi_across_intervals"][:exp_hi]
     ok = (a == b) | (np.isnan(a) & np.isnan(b))
     assert ok.all()
+
+
+def test_stream_121_offset_gap_raises():
+    """The availability-121 stepper resamples positionally (history
+    position == offset), so a missing offset must fail loud, naming the
+    entity, rather than emit misaligned windows."""
+    from atr_adaptive_laguerre_spark.data.corpus import (
+        tokens_to_availability,
+    )
+    from atr_adaptive_laguerre_spark.streaming.multi_interval_incremental import (
+        make_update121_inc_fn,
+    )
+
+    class FakeState:
+        exists = False
+        hasTimedOut = False
+
+        def update(self, tup):
+            self.saved = tup
+
+    cfg = FeatureConfig.multi_interval(multiplier_1=3, multiplier_2=12,
+                                       atr_period=14, availability=True)
+    toks = make_tokens(7, 21)
+    h, l, c = tokens_to_ohlcv(toks)
+    av = tokens_to_availability(toks)
+
+    def chunk(lo, hi):
+        return pd.DataFrame({
+            "source": "s0", "doc_id": "dgap",
+            "offset": np.arange(lo, hi, dtype=np.int64),
+            "high": h[lo:hi], "low": l[lo:hi], "close": c[lo:hi],
+            "avail": av[lo:hi]})
+
+    fn = make_update121_inc_fn(cfg)
+    with pytest.raises(ValueError, match="offset gap for entity 'dgap'"):
+        list(fn(("s0", "dgap"), iter([chunk(0, 10), chunk(11, 21)]),
+                FakeState()))
 
 
 def test_out_of_order_chunks_within_microbatch():

@@ -203,8 +203,7 @@ def test_entity121_pack_roundtrip_mid_stream():
 def test_stream_121_incremental_matches_batch_spark(spark, tmp_path):
     """End-to-end through applyInPandasWithState: 3 file drops, a
     checkpoint restart, replay overlap deduped; emitted rows equal the
-    batch kernel bit-for-bit (the incremental twin of
-    test_stream_121_availability_matches_batch)."""
+    batch kernel bit-for-bit."""
     from atr_adaptive_laguerre_spark.engine.features_job import (
         feature_columns_for,
     )
