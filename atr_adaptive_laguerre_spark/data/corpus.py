@@ -75,19 +75,6 @@ def make_corpus(n_docs: int, seed: int = 42, n_sources: int = 4,
     return rows
 
 
-def corpus_pandas(n_docs: int, seed: int = 42, **kw):
-    """Corpus as a pandas DataFrame (tokens column holds np.int32 arrays)."""
-    import pandas as pd
-
-    rows = make_corpus(n_docs, seed, **kw)
-    return pd.DataFrame({
-        "doc_id": [r["doc_id"] for r in rows],
-        "tokens": [r["tokens"] for r in rows],
-        "n_tok": pd.array([int(r["n_tok"]) for r in rows], dtype="int32"),
-        "source": [r["source"] for r in rows],
-    })
-
-
 def write_corpus_parquet(path: str, n_docs: int, seed: int = 42,
                          docs_per_row_group: int = 2500, **kw) -> str:
     """Write the corpus to a parquet file with an exact

@@ -36,7 +36,7 @@ from __future__ import annotations
 from atr_adaptive_laguerre_spark.data.corpus import VOCAB
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
 from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
-    INTERACTION_COLUMNS, multi_interval_columns,
+    multi_interval_columns,
 )
 
 # engine constants (FeatureConfig defaults used by the flagship queries);
@@ -48,7 +48,6 @@ ADAPTIVE_OFFSET = 0.75
 UP, DOWN = 0.85, 0.15
 SW = 20          # stats_window
 VSPAN = 5        # velocity_span
-ALPHA = 2.0 / (VSPAN + 1.0)
 
 
 def _d(x: float) -> str:

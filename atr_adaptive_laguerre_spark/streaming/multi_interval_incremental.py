@@ -22,10 +22,10 @@ State stays CONSTANT in stream length, so entities may be unbounded:
 * a pending-row buffer of base rows not yet final (bounded by the
   emission-lag guarantee: a row becomes final within ``multiplier_2``
   bars);
-* the cross-interval carried state: last-1/2 aligned crossing flags,
-  the last 10 aligned ``cross_above_oversold_mult2`` and last 5
-  ``regime_changed_mult2`` values (rolling sums), and four integer
-  counters (the cumulative unanimity trick's running state).
+* the cross-interval carried state: the last 10 aligned rows of the
+  21 interaction inputs (``INTERACTION_INPUTS`` of each grain) and the
+  two unbounded counters ``bars_since_alignment`` and
+  ``alignment_duration``.
 
 Emission rule (strict-tie safe): base row i is final once every grain
 has a completed window with availability >= avail[i] — a later window's
@@ -39,9 +39,15 @@ not-yet-final rows of a finished stream remain unemitted.  Offsets of
 an entity must be gapless (history position == offset for the
 positional resample); a gap raises ``ValueError`` naming the entity.
 
-All interaction arithmetic is element-wise or exact-integer counters,
-so chunking cannot perturb a bit; the only float recurrences (kernel,
+The interactions are not re-implemented here: each block runs the
+batch ``_interactions_2d`` over the carried rows plus the new rows (the
+``Entity43Stream`` pattern) and corrects only the two counters, so
+chunking cannot perturb a bit; the only float recurrences (kernel,
 EWM, expander windows) live inside the parity-pinned steppers.
+
+Checkpoint layout: the carried interaction state is ``i_k_hist``,
+``i_c_bsa`` and ``i_c_ad``; streaming checkpoints written before this
+layout cannot be resumed (no migration).
 """
 
 from __future__ import annotations
@@ -50,9 +56,13 @@ import numpy as np
 import pandas as pd
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
+from atr_adaptive_laguerre_spark.kernel.batched import get_workspace
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
+from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
+    INTERACTION_INPUTS, _interactions_2d,
+)
 from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
-    multi_interval_columns,
+    INTERACTION_COLUMNS, multi_interval_columns,
 )
 from atr_adaptive_laguerre_spark.streaming.expanded import (
     _SERIES, Entity43Stream,
@@ -64,8 +74,11 @@ _CI = {c: i for i, c in enumerate(FEATURE_COLUMNS)}
 AVAIL_INPUT_SCHEMA = ("source string, doc_id string, offset long, "
                       "high double, low double, close double, avail double")
 
-#: carried aligned-history depths (lag/rolling windows of _interactions_2d)
-_H_CS2, _H_RC2, _H_CO2 = 10, 5, 2
+#: carried aligned interaction-input rows: the deepest window of
+#: ``_interactions_2d`` (rolling-10 of ``cross_above_oversold_mult2``)
+_K_HIST = 10
+#: slab column order: INTERACTION_INPUTS of the base, mult1, mult2 grains
+_K_KEYS = tuple((g, col) for g in "b12" for col in INTERACTION_INPUTS)
 
 
 def _arr(x) -> np.ndarray:
@@ -166,158 +179,36 @@ GRAIN_N_FIELDS = 31
 
 
 def _block_interactions(Kb, K1, K2, istate) -> dict[str, np.ndarray]:
-    """The 40 cross-interval interactions for a block of FINAL rows,
-    mirroring ``multi_interval_batched._interactions_2d`` op for op,
-    with the lag/rolling/cumulative patterns continued from carried
-    state (exact-integer arithmetic — chunking cannot perturb them).
+    """The 40 cross-interval interactions for a block of FINAL rows.
+
+    One batch ``_interactions_2d`` call over a (1, h + n) slab: the
+    ``h <= 10`` carried aligned rows (``istate["k_hist"]``) stacked on
+    the block's n rows; the new rows' columns are kept.  Ten rows cover
+    the deepest window (the rolling-10 behind ``higher_crossed_first``),
+    so every shift/rolling input of a new row lies inside the slab.
+    The two unbounded counters are corrected where no reset event
+    occurred in the slab at or before the row (carried count − h).
     ``istate`` is mutated with the new carried values."""
-    out: dict[str, np.ndarray] = {}
-    n = len(Kb["regime"])
-    rb, r1, r2 = Kb["regime"], K1["regime"], K2["regime"]
-    ib, i1, i2 = Kb["rsi"], K1["rsi"], K2["rsi"]
+    new = np.column_stack([K[col] for K in (Kb, K1, K2)
+                           for col in INTERACTION_INPUTS])
+    slab = np.concatenate([istate["k_hist"], new])
+    h, t = len(istate["k_hist"]), len(slab)
+    K = {key: np.ascontiguousarray(slab[None, :, j])
+         for j, key in enumerate(_K_KEYS)}
+    inter = _interactions_2d(K, get_workspace(t), 1, t)
+    out = {col: inter[col][0, h:] for col in INTERACTION_COLUMNS}
 
-    out["all_intervals_bullish"] = ((rb == 2) & (r1 == 2) & (r2 == 2)).astype(np.float64)
-    out["all_intervals_bearish"] = ((rb == 0) & (r1 == 0) & (r2 == 0)).astype(np.float64)
-    out["all_intervals_neutral"] = ((rb == 1) & (r1 == 1) & (r2 == 1)).astype(np.float64)
-    bm1 = rb == r1
-    bm2 = rb == r2
-    m1m2 = r1 == r2
-    all_same = bm1 & bm2
-    any_pair = bm1 | bm2 | m1m2
-    out["regime_agreement_count"] = np.where(
-        all_same, 3.0, np.where(any_pair, 2.0, 1.0))
-    out["regime_majority"] = np.where(
-        bm1, rb, np.where(bm2, rb, np.where(
-            m1m2, r1, np.minimum(np.minimum(rb, r1), r2))))
-    out["regime_unanimity"] = all_same.astype(np.float64)
-
-    out["base_bull_higher_bear"] = ((rb == 2) & ((r1 == 0) | (r2 == 0))).astype(np.float64)
-    out["base_bear_higher_bull"] = ((rb == 0) & ((r1 == 2) | (r2 == 2))).astype(np.float64)
-    out["divergence_strength"] = (np.maximum(np.maximum(ib, i1), i2)
-                                  - np.minimum(np.minimum(ib, i1), i2))
-    out["divergence_direction"] = np.sign(ib - i2)
-    out["base_extreme_higher_neutral"] = (
-        ((rb == 0) | (rb == 2)) & (r2 == 1)).astype(np.float64)
-    out["base_neutral_higher_extreme"] = (
-        (rb == 1) & ((r2 == 0) | (r2 == 2))).astype(np.float64)
-    out["gradient_up"] = ((ib > i1) & (i1 > i2)).astype(np.float64)
-    out["gradient_down"] = ((ib < i1) & (i1 < i2)).astype(np.float64)
-
-    chb, ch1, ch2 = (Kb["rsi_change_1"], K1["rsi_change_1"],
-                     K2["rsi_change_1"])
-    out["rsi_spread_base_mult1"] = ib - i1
-    out["rsi_spread_base_mult2"] = ib - i2
-    out["rsi_spread_mult1_mult2"] = i1 - i2
-    out["momentum_direction"] = np.sign(ib - i2)
-    out["momentum_magnitude"] = np.abs(ib - i2)
-    out["momentum_consistency"] = (np.sign(chb) == np.sign(ch2)).astype(np.float64)
-
-    cob, co1, co2 = (Kb["cross_below_overbought"],
-                     K1["cross_below_overbought"],
-                     K2["cross_below_overbought"])
-    csb, cs1, cs2 = (Kb["cross_above_oversold"],
-                     K1["cross_above_oversold"],
-                     K2["cross_above_oversold"])
-    out["any_interval_crossed_overbought"] = (
-        (cob == 1) | (co1 == 1) | (co2 == 1)).astype(np.float64)
-    out["all_intervals_crossed_overbought"] = (
-        (cob == 1) & (co1 == 1) & (co2 == 1)).astype(np.float64)
-    out["any_interval_crossed_oversold"] = (
-        (csb == 1) | (cs1 == 1) | (cs2 == 1)).astype(np.float64)
-    out["all_intervals_crossed_oversold"] = (
-        (csb == 1) & (cs1 == 1) & (cs2 == 1)).astype(np.float64)
-    out["base_crossed_while_higher_extreme"] = (
-        (csb == 1) & ((r2 == 0) | (r2 == 2))).astype(np.float64)
-
-    # lagged aligned flags continued across blocks (defaults 0.0 at the
-    # stream head — the batch fillna(0))
-    ext_cs2 = np.concatenate([istate["h_cs2"], cs2])
-    ext_cs1 = np.concatenate([istate["h_cs1"], cs1])
-    ext_co2 = np.concatenate([istate["h_co2"], co2])
-    ext_co1 = np.concatenate([istate["h_co1"], co1])
-    hl2, hl1 = len(istate["h_cs2"]), len(istate["h_cs1"])
-
-    def shifted(ext, hlen, k):
-        s = np.zeros(n)
-        src = hlen + np.arange(n) - k
-        valid = src >= 0
-        s[valid] = ext[src[valid]]
-        return s
-
-    cs2s2 = shifted(ext_cs2, hl2, 2)
-    cs1s1 = shifted(ext_cs1, hl1, 1)
-    co2s2 = shifted(ext_co2, len(istate["h_co2"]), 2)
-    co1s1 = shifted(ext_co1, len(istate["h_co1"]), 1)
-    out["cascade_crossing_up"] = (
-        (cs2s2 == 1) & (cs1s1 == 1) & (csb == 1)).astype(np.float64)
-    out["cascade_crossing_down"] = (
-        (co2s2 == 1) & (co1s1 == 1) & (cob == 1)).astype(np.float64)
-
-    # rolling(w, min_periods=1).sum().shift(1).fillna(0) over the
-    # aligned series, continued across blocks via the carried window
-    def rec(ext, hlen, w):
-        csum = np.zeros(len(ext) + 1)
-        np.cumsum(ext, out=csum[1:])
-        j = np.arange(n)
-        hi = hlen + j                     # exclusive end: previous rows
-        lo = np.maximum(hi - w, 0)
-        return csum[hi] - csum[lo]
-
-    rec10 = rec(ext_cs2, hl2, 10)
-    out["higher_crossed_first"] = ((csb == 1) & (rec10 > 0)).astype(np.float64)
-
-    bib = Kb["bars_in_regime"]
-    bi2 = K2["bars_in_regime"]
-    rcb, rc1, rc2 = (Kb["regime_changed"], K1["regime_changed"],
-                     K2["regime_changed"])
-    bi2_safe = bi2.copy()
-    bi2_safe[bi2_safe == 0.0] = 1.0
-    out["regime_persistence_ratio"] = bib / bi2_safe
-    ext_rc2 = np.concatenate([istate["h_rc2"], rc2])
-    rec5 = rec(ext_rc2, len(istate["h_rc2"]), 5)
-    cascade = ((rcb == 1) & (rec5 > 0)).astype(np.float64)
-    out["regime_change_cascade"] = cascade
-    out["regime_stability_score"] = 1.0 - (rcb + rc1 + rc2) / 3.0
-
-    # cumulative unanimity counters continued from carried scalars
-    unanimity = bm1 & m1m2
-    cum_not = istate["cum_not"] + np.cumsum(~unanimity)
-    reset_u = np.maximum.accumulate(np.concatenate(
-        ([istate["reset_u"]], np.where(unanimity, cum_not, 0.0))))[1:]
-    out["bars_since_alignment"] = cum_not - reset_u
-    cum_u = istate["cum_u"] + np.cumsum(unanimity)
-    reset2 = np.maximum.accumulate(np.concatenate(
-        ([istate["reset2"]], np.where(~unanimity, cum_u, 0.0))))[1:]
-    out["alignment_duration"] = cum_u - reset2
-    out["higher_interval_leads"] = cascade
-    out["regime_transition_pattern"] = rcb * 4.0 + rc1 * 2.0 + rc2
-
-    mean_rsi = (ib + i1 + i2) / 3.0
-    db = ib - mean_rsi
-    d1 = i1 - mean_rsi
-    d2 = i2 - mean_rsi
-    var = (db * db + d1 * d1 + d2 * d2) / 2.0
-    std_rsi = np.sqrt(var)
-    out["mean_rsi_across_intervals"] = mean_rsi
-    out["std_rsi_across_intervals"] = std_rsi
-    out["rsi_range_across_intervals"] = (np.maximum(np.maximum(ib, i1), i2)
-                                         - np.minimum(np.minimum(ib, i1), i2))
-    std_safe = np.where(std_rsi == 0.0, 1.0, std_rsi)
-    out["rsi_skew_across_intervals"] = (ib - mean_rsi) / std_safe
-    out["interval_momentum_agreement"] = ((chb > 0).astype(np.float64)
-                                          + (ch1 > 0)
-                                          + (ch2 > 0))
-
-    # -- carry forward the aligned histories / counters --
-    istate["h_cs2"] = ext_cs2[-_H_CS2:].copy()
-    istate["h_cs1"] = ext_cs1[-1:].copy()
-    istate["h_co2"] = ext_co2[-_H_CO2:].copy()
-    istate["h_co1"] = ext_co1[-1:].copy()
-    istate["h_rc2"] = ext_rc2[-_H_RC2:].copy()
-    istate["cum_not"] = float(cum_not[-1])
-    istate["reset_u"] = float(reset_u[-1])
-    istate["cum_u"] = float(cum_u[-1])
-    istate["reset2"] = float(reset2[-1])
+    rb, r1, r2 = (K[(g, "regime")][0] for g in "b12")
+    unanimity = (rb == r1) & (r1 == r2)
+    for col, event, carried in (
+            ("bars_since_alignment", unanimity, "c_bsa"),
+            ("alignment_duration", ~unanimity, "c_ad")):
+        # an event AT slab position 0 leaves the batch reset at 0, so
+        # "seen an event" must come from the events, not the reset
+        seen = np.logical_or.accumulate(event)[h:]
+        out[col] = np.where(seen, out[col], out[col] + (istate[carried] - h))
+        istate[carried] = float(out[col][-1])
+    istate["k_hist"] = slab[-_K_HIST:].copy()
     return out
 
 
@@ -336,11 +227,8 @@ class Entity121Stream:
         self.p_off = np.empty(0, dtype=np.int64)
         self.p_avail = np.empty(0)
         self.p_base = np.empty((0, NF))
-        self.istate = {"h_cs2": np.empty(0), "h_cs1": np.empty(0),
-                       "h_co2": np.empty(0), "h_co1": np.empty(0),
-                       "h_rc2": np.empty(0),
-                       "cum_not": 0.0, "reset_u": 0.0,
-                       "cum_u": 0.0, "reset2": 0.0}
+        self.istate = {"k_hist": np.empty((0, len(_K_KEYS))),
+                       "c_bsa": 0.0, "c_ad": 0.0}
         self.out_cols = multi_interval_columns(cfg.filter_redundancy)
 
     def advance(self, offs, high, low, close, avail
@@ -398,11 +286,8 @@ class Entity121Stream:
                 *self.g1.to_tuple(), *self.g2.to_tuple(),
                 self.p_off.tolist(), self.p_avail.tolist(),
                 self.p_base.ravel().tolist(),
-                i["h_cs2"].tolist(), i["h_cs1"].tolist(),
-                i["h_co2"].tolist(), i["h_co1"].tolist(),
-                i["h_rc2"].tolist(),
-                float(i["cum_not"]), float(i["reset_u"]),
-                float(i["cum_u"]), float(i["reset2"]))
+                i["k_hist"].ravel().tolist(),
+                float(i["c_bsa"]), float(i["c_ad"]))
 
     @classmethod
     def from_tuple(cls, cfg: FeatureConfig, tup) -> "Entity121Stream":
@@ -418,13 +303,9 @@ class Entity121Stream:
         self.p_off = np.asarray(tup[p], dtype=np.int64)
         self.p_avail = _arr(tup[p + 1])
         self.p_base = _arr(tup[p + 2]).reshape(-1, NF)
-        self.istate = {"h_cs2": _arr(tup[p + 3]), "h_cs1": _arr(tup[p + 4]),
-                       "h_co2": _arr(tup[p + 5]), "h_co1": _arr(tup[p + 6]),
-                       "h_rc2": _arr(tup[p + 7]),
-                       "cum_not": float(tup[p + 8]),
-                       "reset_u": float(tup[p + 9]),
-                       "cum_u": float(tup[p + 10]),
-                       "reset2": float(tup[p + 11])}
+        self.istate = {"k_hist": _arr(tup[p + 3]).reshape(-1, len(_K_KEYS)),
+                       "c_bsa": float(tup[p + 4]),
+                       "c_ad": float(tup[p + 5])}
         return self
 
 
@@ -452,11 +333,8 @@ def state121_inc_schema() -> str:
             + ", " + _grain_state_fields("g1_")
             + ", " + _grain_state_fields("g2_")
             + ", p_off array<long>, p_avail array<double>, "
-            "p_base array<double>, i_cs2 array<double>, "
-            "i_cs1 array<double>, i_co2 array<double>, "
-            "i_co1 array<double>, i_rc2 array<double>, "
-            "i_cum_not double, i_reset_u double, i_cum_u double, "
-            "i_reset2 double, last_offset long")
+            "p_base array<double>, i_k_hist array<double>, "
+            "i_c_bsa double, i_c_ad double, last_offset long")
 
 
 def output121_schema(cfg: FeatureConfig) -> str:

@@ -294,85 +294,3 @@ def stream_windowed_stats(spark, input_dir: str, output_dir: str,
          .start())
     q.awaitTermination()
 
-
-def stream_rsi_tws(spark, input_dir: str, output_dir: str,
-                   checkpoint_dir: str, cfg: FeatureConfig | None = None,
-                   ttl_ms: int | None = None) -> None:
-    """``transformWithStateInPandas`` variant of :func:`stream_rsi`
-    (Spark 4 stateful API, RocksDB state store): same vectorized
-    resume-from-state kernel, state in a typed ValueState with optional
-    built-in TTL (state older than ``ttl_ms`` is evicted by the store
-    itself — the declarative form of the S3 eviction).
-
-    Requires an intact ``google.protobuf`` (the TWS state protocol);
-    environments without it should use :func:`stream_rsi`, which is
-    functionally equivalent (the parity test covers both where
-    available)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    cfg = cfg or FeatureConfig()
-    p = cfg.atr_period
-    off = cfg.adaptive_offset
-    cols = ["rsi", "adaptive_coeff", "gamma", "L0", "L1", "L2", "L3",
-            "min_atr", "max_atr", "atr"]
-
-    class RSIProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "core", STATE_SCHEMA, ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key, rows, timerValues):
-            from atr_adaptive_laguerre_spark.kernel.batched import (
-                core_loop_resumed,
-            )
-
-            source, doc_id = key
-            if self._state.exists():
-                tup = self._state.get()
-                st = unpack_core_state(tup, p)
-                last_offset = tup[10]
-            else:
-                st = new_core_state(p)
-                last_offset = -1
-
-            for pdf in gather_group_chunks(rows):
-                pdf = filter_new_bars(pdf, last_offset)
-                if len(pdf) == 0:
-                    continue
-                offs = pdf["offset"].to_numpy(dtype=np.int64)
-                out = core_loop_resumed(
-                    pdf["high"].to_numpy(dtype=np.float64),
-                    pdf["low"].to_numpy(dtype=np.float64),
-                    pdf["close"].to_numpy(dtype=np.float64), st, p, off)
-                last_offset = int(offs[-1])
-                yield pd.DataFrame({"source": source, "doc_id": doc_id,
-                                    "offset": offs,
-                                    **{c: out[c] for c in cols}})
-
-            self._state.update((
-                st["prev_close"], st["seen"], st["tr_buf"],
-                st["buf_head"], st["buf_len"], st["tr_sum"],
-                st["l0"], st["l1"], st["l2"], st["l3"],
-                int(last_offset)))
-
-        def close(self) -> None:
-            pass
-
-    sdf = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
-    # state TTL requires a running time mode — "None" + ttlDurationMs is
-    # rejected by the state store at query start
-    time_mode = "ProcessingTime" if ttl_ms is not None else "None"
-    out = (sdf.groupBy("source", "doc_id")
-           .transformWithStateInPandas(
-               statefulProcessor=RSIProcessor(),
-               outputStructType=OUTPUT_SCHEMA,
-               outputMode="Append",
-               timeMode=time_mode))
-    q = (out.writeStream.format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()

@@ -309,76 +309,6 @@ def test_stream_features43_matches_batch(spark, tmp_path):
                               int(np.argmax(~ok)))
 
 
-def _protobuf_available() -> bool:
-    """transformWithStateInPandas speaks a protobuf state protocol; the
-    sandbox ships a broken google.protobuf, so the TWS path can only be
-    exercised where the dependency is intact."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.slow
-@pytest.mark.skipif(not _protobuf_available(),
-                    reason="google.protobuf unavailable: "
-                           "transformWithStateInPandas state protocol "
-                           "cannot initialize in this environment")
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas variant: same bit-exact
-    batch parity + checkpoint resume as the applyInPandasWithState path
-    (requires the RocksDB state store)."""
-    from atr_adaptive_laguerre_spark.streaming.stateful import (
-        stream_rsi_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(in_dir)
-        docs = {f"d{i}": tokens_to_ohlcv(make_tokens(i, 90))
-                for i in range(3)}
-
-        def drop(lo, hi):
-            rows = []
-            for did, (h, l, c) in docs.items():
-                for i in range(lo, min(hi, 90)):
-                    rows.append(("s0", did, i, h[i], l[i], c[i]))
-            pdf = pd.DataFrame(rows, columns=["source", "doc_id", "offset",
-                                              "high", "low", "close"])
-            (spark.createDataFrame(pdf)
-             .coalesce(1).write.mode("append").parquet(in_dir))
-
-        drop(0, 40)
-        stream_rsi_tws(spark, in_dir, out_dir, ckpt, CFG)
-        drop(35, 90)         # replay overlap deduped
-        stream_rsi_tws(spark, in_dir, out_dir, ckpt, CFG)
-
-        got = (spark.read.parquet(out_dir).toPandas()
-               .sort_values(["doc_id", "offset"]).reset_index(drop=True))
-        assert len(got) == 3 * 90
-        for did, (h, l, c) in docs.items():
-            want = core_loop(h, l, c, CFG.atr_period, CFG.adaptive_offset)
-            sub = got[got["doc_id"] == did].sort_values("offset")
-            np.testing.assert_array_equal(sub["rsi"].to_numpy(),
-                                          want["rsi"], err_msg=did)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_stream_dedup_exact_bounded_state(spark, tmp_path):
     """Streaming exact dedup: exactly one survivor per content group
     within the watermark window, agreeing with the batch operator's

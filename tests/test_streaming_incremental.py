@@ -1,6 +1,7 @@
 """Incremental (O(1)-state) streaming 121 — bit parity vs batch, state
 boundedness, and checkpoint restart through Spark."""
 
+import dataclasses
 import os
 
 import numpy as np
@@ -39,15 +40,28 @@ def _batch(h, l, c, av, cfg=CFG):
                                avail=av[None, :])
 
 
-@pytest.mark.parametrize("chunks", [
+_CHUNKINGS = [
     [150],                       # one shot
     [1] * 150,                   # bar at a time (worst case)
     [7, 1, 40, 3, 99],           # ragged
     [36, 36, 36, 42],            # window-aligned-ish
+]
+
+
+@pytest.mark.parametrize("chunks, filter_redundancy", [
+    *(pytest.param(ch, True, id=f"chunks{i}")
+      for i, ch in enumerate(_CHUNKINGS)),
+    # the unfiltered 169 columns add the interactions that read carried
+    # shift(1)/shift(2)/rolling-10 history (cascade_crossing_up/down,
+    # higher_crossed_first, regime_change_cascade) and
+    # regime_persistence_ratio
+    *(pytest.param(ch, False, id=f"chunks{i}-169")
+      for i, ch in enumerate(_CHUNKINGS)),
 ])
-def test_entity121_stream_chunked_parity(chunks):
+def test_entity121_stream_chunked_parity(chunks, filter_redundancy):
     """Entity121Stream emits bit-identical rows to the batch kernel
-    under every chunking, including bar-at-a-time."""
+    under every chunking, including bar-at-a-time, with and without the
+    redundancy filter."""
     from atr_adaptive_laguerre_spark.engine.features_job import (
         feature_columns_for,
     )
@@ -55,12 +69,14 @@ def test_entity121_stream_chunked_parity(chunks):
         Entity121Stream,
     )
 
+    cfg = dataclasses.replace(CFG, filter_redundancy=filter_redundancy)
     n = sum(chunks)
     h, l, c, av = _series(11, n)
-    want = _batch(h, l, c, av)
-    feat_cols = feature_columns_for(CFG)
+    want = _batch(h, l, c, av, cfg)
+    feat_cols = feature_columns_for(cfg)
+    assert len(feat_cols) == (121 if filter_redundancy else 169)
 
-    ent = Entity121Stream(CFG)
+    ent = Entity121Stream(cfg)
     got_offs, got = [], {col: [] for col in feat_cols}
     pos = 0
     for k in chunks:
@@ -131,10 +147,81 @@ def test_entity121_stream_second_config_parity():
         assert ok.all(), (col, int((~ok).sum()))
 
 
+def _interaction_inputs(n: int, seed: int) -> dict[tuple[str, str], np.ndarray]:
+    """Synthetic interaction inputs per (grain, column): regimes in
+    {0, 1, 2}, 0/1 crossing and change flags at p=0.3, and scripted
+    unanimous / non-unanimous runs longer than the carried window so
+    both alignment counters run past it (random regimes keep unanimous
+    runs short)."""
+    rng = np.random.default_rng(seed)
+    K = {}
+    for g in "b12":
+        K[(g, "regime")] = rng.integers(0, 3, n).astype(np.float64)
+        K[(g, "rsi")] = rng.random(n)
+        K[(g, "rsi_change_1")] = rng.normal(0.0, 0.1, n)
+        K[(g, "bars_in_regime")] = rng.integers(0, 30, n).astype(np.float64)
+        for col in ("cross_below_overbought", "cross_above_oversold",
+                    "regime_changed"):
+            K[(g, col)] = (rng.random(n) < 0.3).astype(np.float64)
+    for lo, hi, regimes in ((0, 15, (1.0, 1.0, 1.0)),
+                            (100, 125, (2.0, 2.0, 2.0)),
+                            (200, 230, (0.0, 1.0, 2.0))):
+        for g, r in zip("b12", regimes):
+            K[(g, "regime")][lo:hi] = r
+    return K
+
+
+@pytest.mark.parametrize("blocks", [
+    [400],
+    [1] * 400,
+    # ragged; blocks start inside the scripted runs (rows 120, 215, 225)
+    [7, 1, 40, 3, 69, 95, 10, 11, 164],
+])
+def test_block_interactions_match_batch_kernel(blocks):
+    """The streaming tier's 40 interactions, fed block by block from a
+    fresh entity's carried state, equal one batch ``_interactions_2d``
+    call over the whole series on every column."""
+    from atr_adaptive_laguerre_spark.kernel.batched import get_workspace
+    from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
+        INTERACTION_INPUTS, _interactions_2d,
+    )
+    from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
+        INTERACTION_COLUMNS,
+    )
+    from atr_adaptive_laguerre_spark.streaming.multi_interval_incremental import (
+        Entity121Stream, _block_interactions,
+    )
+
+    n = sum(blocks)
+    K = _interaction_inputs(n, seed=7)
+    batch = _interactions_2d({k: v[None, :] for k, v in K.items()},
+                             get_workspace(n), 1, n)
+    want = {col: batch[col][0].copy() for col in INTERACTION_COLUMNS}
+    # the inputs reach every carried pattern
+    for col in ("cascade_crossing_up", "cascade_crossing_down",
+                "higher_crossed_first", "regime_change_cascade"):
+        assert want[col].sum() > 0, col
+    assert want["bars_since_alignment"].max() > 10
+    assert want["alignment_duration"].max() > 10
+
+    istate = Entity121Stream(CFG).istate
+    got = {col: [] for col in INTERACTION_COLUMNS}
+    pos = 0
+    for k in blocks:
+        Kb, K1, K2 = ({col: K[(g, col)][pos:pos + k]
+                       for col in INTERACTION_INPUTS} for g in "b12")
+        out = _block_interactions(Kb, K1, K2, istate)
+        for col in INTERACTION_COLUMNS:
+            got[col].append(out[col])
+        pos += k
+    for col in INTERACTION_COLUMNS:
+        np.testing.assert_array_equal(np.concatenate(got[col]), want[col],
+                                      err_msg=col)
+
+
 def test_entity121_stream_state_is_bounded():
-    """The whole point vs the recompute variant: packed state size must
-    NOT grow with stream length (O(1) in bars; the recompute variant's
-    grows linearly)."""
+    """The O(1)-in-bars contract: the packed per-entity state stays
+    flat as the stream grows, so entities may be unbounded."""
     from atr_adaptive_laguerre_spark.streaming.multi_interval_incremental import (
         Entity121Stream,
     )
