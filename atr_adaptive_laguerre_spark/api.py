@@ -37,15 +37,17 @@ from atr_adaptive_laguerre_spark.config import FeatureConfig
 class RSIUpdater:
     """O(1)-per-bar incremental RSI for ONE entity — the reference's
     ``update(row)``/``update_full(row)`` surface (atr_adaptive_rsi.py:
-    572-672), sharing the exact float-op order with the batch kernel
-    via ``streaming.stateful.step`` (bit-parity tested)."""
+    572-672).  Each bar is a 1-bar slab through the batch kernel's
+    resume-from-state entry (``kernel.batched.core_loop_resumed``), so
+    the float-op order is the batch kernel's (bit-parity tested)."""
 
     def __init__(self, cfg: FeatureConfig):
+        from atr_adaptive_laguerre_spark.streaming.stateful import (
+            new_core_state,
+        )
+
         self.cfg = cfg
-        p = cfg.atr_period
-        self._state = {"prev_close": 0.0, "seen": 0, "tr_buf": [0.0] * p,
-                       "buf_head": 0, "buf_len": 0, "tr_sum": 0.0,
-                       "l0": 0.0, "l1": 0.0, "l2": 0.0, "l3": 0.0}
+        self._state = new_core_state(cfg.atr_period)
 
     def update(self, high: float, low: float, close: float) -> float:
         """Advance one bar, return rsi (reference ``update``)."""
@@ -54,13 +56,14 @@ class RSIUpdater:
     def update_full(self, high: float, low: float, close: float) -> dict:
         """Advance one bar, return rsi + the 9 intermediates
         (reference ``update_full``)."""
-        from atr_adaptive_laguerre_spark.streaming.stateful import step
+        from atr_adaptive_laguerre_spark.kernel.batched import (
+            core_loop_resumed,
+        )
 
-        out = step(self._state, float(high), float(low), float(close),
-                   self.cfg.atr_period, self.cfg.adaptive_offset)
-        keys = ("rsi", "adaptive_coeff", "gamma", "L0", "L1", "L2", "L3",
-                "min_atr", "max_atr", "atr")
-        return dict(zip(keys, out))
+        out = core_loop_resumed([high], [low], [close], self._state,
+                                self.cfg.atr_period,
+                                self.cfg.adaptive_offset)
+        return {k: float(v[0]) for k, v in out.items()}
 
 
 class ATRAdaptiveLaguerreRSI:

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -94,6 +95,36 @@ def _bigcache_preload() -> str | None:
         return None
 
 
+def _mem_total_bytes() -> int | None:
+    """MemTotal from /proc/meminfo; None where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            return next(int(line.split()[1]) * 1024 for line in f
+                        if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return None
+
+
+#: JVM memory-string suffixes; a bare number is MiB for the driver heap
+_UNITS = {"": 1 << 20, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+          "t": 1 << 40}
+
+
+def _driver_memory(extra: dict[str, str] | None) -> str:
+    """The driver heap the session gets: the ``extra`` override, else
+    SPARK_DRIVER_MEMORY, else 16g.  Logs a warning when it is larger than
+    the host's RAM, as the default is on small hosts."""
+    value = ((extra or {}).get("spark.driver.memory")
+             or os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+    m = re.fullmatch(r"(\d+)([bkmgt]?)b?", value.strip().lower())
+    have = _mem_total_bytes()
+    if m and have is not None and int(m[1]) * _UNITS[m[2]] > have:
+        log.warning("spark.driver.memory=%s exceeds this host's RAM "
+                    "(MemTotal %d MiB); set SPARK_DRIVER_MEMORY lower",
+                    value, have >> 20)
+    return value
+
+
 def build_session(app: str = "atr-adaptive-laguerre-spark",
                   master: str | None = None,
                   shuffle_partitions: int | None = None,
@@ -120,8 +151,7 @@ def build_session(app: str = "atr-adaptive-laguerre-spark",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.execution.arrow.pyspark.selfDestruct.enabled",
                 "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", _driver_memory(extra))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

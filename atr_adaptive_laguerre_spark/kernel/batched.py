@@ -9,6 +9,10 @@ NumPy loops as the fallback when the library cannot be built.  This is
 the production kernel the ``engine.features_job`` jobs call from their
 ``mapInArrow`` workers.
 
+``core_loop_batched`` runs the stages (``_core_stages``) from zero state;
+``core_loop_resumed`` runs the same stages from one entity's carried
+streaming state.
+
 Bit-exactness: every float64 operation is applied in the same order as the
 per-entity oracle (``reference_impl.core_loop``), on either backend, so
 results are identical to the last bit — verified by tests.
@@ -145,25 +149,29 @@ def pad_sequences(seqs: list[np.ndarray], dtype=np.float64
     return out, lengths
 
 
-def _true_range(high, low, close, out):
-    """C1 — vectorized true range. First bar: high-low; later bars:
+def _true_range(high, low, close, out, prev_close=None):
+    """C1 — vectorized true range. First bar: high-low, or against
+    ``prev_close`` (a (b,) vector) when the series resumes; later bars:
     ``max(high, prev_close) - min(low, prev_close)``."""
-    np.subtract(high[:, 0], low[:, 0], out=out[:, 0])
+    if prev_close is None:
+        np.subtract(high[:, 0], low[:, 0], out=out[:, 0])
+    else:
+        np.subtract(np.maximum(high[:, 0], prev_close),
+                    np.minimum(low[:, 0], prev_close), out=out[:, 0])
     if high.shape[1] > 1:
         prev_c = close[:, :-1]
         hi = np.maximum(high[:, 1:], prev_c, out=out[:, 1:])
-        # need a second buffer for the low side: reuse via subtract trick
-        # lo_side computed into a strided temp is unavoidable without a
-        # second slab; use where on the fly:
         lo = np.minimum(low[:, 1:], prev_c)
         np.subtract(hi, lo, out=out[:, 1:])
     return out
 
 
-def _atr_incremental(tr, p, out, ws, b):
+def _atr_incremental(tr, p, out, ws, b, start=0, sums=None):
     """C2 — ATR as the reference's *incremental* ring-buffer sum
     (``tr_sum = (tr_sum + tr) - old_tr``), lockstep across the batch so
-    the float rounding matches the oracle exactly.
+    the float rounding matches the oracle exactly.  A resumed series
+    starts at column ``start`` (the columns before it are carried TRs)
+    from the (b,) ``sums``, which receive the final sums.
 
     Stays COLUMN-ORIENTED (r6 note): only 3 column touches per step, so
     the live cache-line set is ~3·B·64 B ≈ 80 KB — L2-resident, and the
@@ -175,12 +183,12 @@ def _atr_incremental(tr, p, out, ws, b):
     ``kernel.recurrences``) runs row by row over the slab."""
     rec = recurrences.compiled()
     if rec is not None:
-        rec.atr_incremental(tr, p, out)
+        rec.atr_incremental(tr, p, out, start, sums)
         return out
     t = tr.shape[1]
     tr_sum = ws.vec(0, b)
-    tr_sum[:] = 0.0
-    for i in range(t):
+    tr_sum[:] = 0.0 if sums is None else sums
+    for i in range(start, t):
         if i < p:
             tr_sum += tr[:, i]
             np.divide(tr_sum, i + 1, out=out[:, i])
@@ -188,6 +196,8 @@ def _atr_incremental(tr, p, out, ws, b):
             tr_sum += tr[:, i]
             tr_sum -= tr[:, i - p]
             np.divide(tr_sum, p, out=out[:, i])
+    if sums is not None:
+        sums[:] = tr_sum
     return out
 
 
@@ -219,10 +229,11 @@ def _atr_minmax(tr, p, ws, b, t):
     return min_atr, max_atr
 
 
-def _laguerre_cascade(close, gamma, ws, b, t):
-    """C6 — 4-stage cascade with time-varying gamma, zero-initialized state
-    (matches the production numba kernel, which never calls
-    ``initialize(price)``; see reference ``_numba_kernel.py:60-132``).
+def _laguerre_cascade(close, gamma, ws, b, t, init=None):
+    """C6 — 4-stage cascade with time-varying gamma.  The state starts at
+    zero (matches the production numba kernel, which never calls
+    ``initialize(price)``; see reference ``_numba_kernel.py:60-132``), or
+    at ``init``, the carried l0..l3 as a (b, 4) slab, when resuming.
 
     Memory layout (r6): the time loop reads/writes *columns* of (B, T)
     slabs, and a column touch costs a full cache line per element (64 B
@@ -236,7 +247,7 @@ def _laguerre_cascade(close, gamma, ws, b, t):
     L0, L1, L2, L3 = (ws.view(n, b, t) for n in ("L0", "L1", "L2", "L3"))
     rec = recurrences.compiled()
     if rec is not None:
-        rec.laguerre_cascade(close, gamma, L0, L1, L2, L3)
+        rec.laguerre_cascade(close, gamma, L0, L1, L2, L3, init)
         return L0, L1, L2, L3
     cT = ws.view("cascT_c", t, b)
     np.copyto(cT, close.T)
@@ -246,10 +257,9 @@ def _laguerre_cascade(close, gamma, ws, b, t):
     L1T = ws.view("cascT_L1", t, b)
     L2T = ws.view("cascT_L2", t, b)
     L3T = ws.view("cascT_L3", t, b)
-    l0 = ws.vec(0, b); l0[:] = 0.0
-    l1 = ws.vec(1, b); l1[:] = 0.0
-    l2 = ws.vec(2, b); l2[:] = 0.0
-    l3 = ws.vec(3, b); l3[:] = 0.0
+    l0, l1, l2, l3 = (ws.vec(j, b) for j in range(4))
+    for j, lj in enumerate((l0, l1, l2, l3)):
+        lj[:] = 0.0 if init is None else init[:, j]
     p0 = ws.vec(4, b)
     p1 = ws.vec(5, b)
     p2 = ws.vec(6, b)
@@ -281,38 +291,20 @@ def _laguerre_cascade(close, gamma, ws, b, t):
     return L0, L1, L2, L3
 
 
-def core_loop_batched(high: np.ndarray, low: np.ndarray, close: np.ndarray,
-                      atr_period: int, adaptive_offset: float = 0.75,
-                      copy_out: bool = True,
-                      ) -> dict[str, np.ndarray]:
-    """Batched C1-C8 over padded (B, T) matrices.
+def _adaptive_gamma(atr, min_atr, max_atr, p, adaptive_offset, ws, b, t):
+    """C4 adaptive coefficient and C5 gamma over (b, t) slabs; uses the
+    ``mean``, ``s`` and ``scratch`` slabs as temporaries (free after C3).
 
-    Values at columns beyond an entity's true length are garbage (callers
-    mask by length).  Returns a dict of (B, T) float64 arrays keyed by
-    :data:`CORE_OUTPUTS`.  With ``copy_out=False`` the returned arrays are
-    views into the shared workspace — valid only until the next call.
+    C4 (reference core/adaptive.py:4-44): _max = max(max_atr, atr);
+    _min = min(min_atr, atr); degenerate (_min == _max) -> 0.5 else
+    1 - (atr-_min)/(_max-_min).  C5: gamma = 1 - 10/(p*(coeff+offset) + 9).
     """
-    b, t = high.shape
-    p = int(atr_period)
-    ws = get_workspace(max(DEFAULT_CELLS, b * t))
-
-    hw = ws.view("high", b, t); np.copyto(hw, high, casting="unsafe")
-    lw = ws.view("low", b, t); np.copyto(lw, low, casting="unsafe")
-    cw = ws.view("close", b, t); np.copyto(cw, close, casting="unsafe")
-
-    tr = _true_range(hw, lw, cw, ws.view("tr", b, t))
-    atr = _atr_incremental(tr, p, ws.view("atr", b, t), ws, b)
-    min_atr, max_atr = _atr_minmax(tr, p, ws, b, t)
-
-    # C4 adaptive coefficient (reference core/adaptive.py:4-44):
-    # _max = max(max_atr, atr); _min = min(min_atr, atr);
-    # degenerate (_min == _max) -> 0.5 else 1 - (atr-_min)/(_max-_min)
     _max = ws.view("scratch", b, t)
     np.maximum(max_atr, atr, out=_max)
-    _min = ws.view("mean", b, t)               # mean slab free after C3
+    _min = ws.view("mean", b, t)
     np.minimum(min_atr, atr, out=_min)
     coeff = ws.view("coeff", b, t)
-    span = ws.view("s", b, t)                  # s slab free after C3
+    span = ws.view("s", b, t)
     np.subtract(_max, _min, out=span)
     degenerate = span == 0.0                   # small bool alloc (1 byte/cell)
     span[degenerate] = 1.0
@@ -321,19 +313,18 @@ def core_loop_batched(high: np.ndarray, low: np.ndarray, close: np.ndarray,
     np.subtract(1.0, coeff, out=coeff)
     coeff[degenerate] = 0.5
 
-    # C5 adaptive period & gamma: gamma = 1 - 10/(p*(coeff+offset) + 9)
     gamma = ws.view("gamma", b, t)
     np.add(coeff, adaptive_offset, out=gamma)
     gamma *= float(p)
     gamma += 9.0
     np.divide(10.0, gamma, out=gamma)
     np.subtract(1.0, gamma, out=gamma)
+    return coeff, gamma
 
-    # C6 cascade
-    L0, L1, L2, L3 = _laguerre_cascade(cw, gamma, ws, b, t)
 
-    # C7 RSI: additions in the oracle's order (L0/L1, then L1/L2, then
-    # L2/L3); cu += max(d,0) and cd += max(-d,0) reproduce the branch.
+def _laguerre_rsi(L0, L1, L2, L3, ws, b, t):
+    """C7 RSI: additions in the oracle's order (L0/L1, then L1/L2, then
+    L2/L3); cu += max(d,0) and cd += max(-d,0) reproduce the branch."""
     cu = ws.view("cu", b, t)
     cd = ws.view("cd", b, t)
     d = ws.view("scratch", b, t)
@@ -355,12 +346,50 @@ def core_loop_batched(high: np.ndarray, low: np.ndarray, close: np.ndarray,
     tot[flat] = 1.0
     np.divide(cu, tot, out=rsi)
     rsi[flat] = 0.0
+    return rsi
 
-    out = {
-        "rsi": rsi, "adaptive_coeff": coeff, "gamma": gamma,
+
+def _core_stages(hw, lw, cw, tr, p, adaptive_offset, ws, h=0, sums=None,
+                 init=None, prev_close=None) -> dict[str, np.ndarray]:
+    """C1-C7 over (b, t) input slabs into workspace views keyed by
+    :data:`CORE_OUTPUTS`.  ``tr`` is the (b, h + t) TR slab; a resumed
+    series carries its last ``h`` TRs, oldest first, in ``tr[:, :h]``."""
+    b, t = cw.shape
+    _true_range(hw, lw, cw, tr[:, h:], prev_close)
+    atr = _atr_incremental(tr, p, ws.view("atr", b, h + t), ws, b,
+                           h, sums)[:, h:]
+    min_atr, max_atr = (m[:, h:] for m in _atr_minmax(tr, p, ws, b, h + t))
+    coeff, gamma = _adaptive_gamma(atr, min_atr, max_atr, p,
+                                   adaptive_offset, ws, b, t)
+    L0, L1, L2, L3 = _laguerre_cascade(cw, gamma, ws, b, t, init)
+    return {
+        "rsi": _laguerre_rsi(L0, L1, L2, L3, ws, b, t),
+        "adaptive_coeff": coeff, "gamma": gamma,
         "L0": L0, "L1": L1, "L2": L2, "L3": L3,
         "min_atr": min_atr, "max_atr": max_atr, "atr": atr,
     }
+
+
+def core_loop_batched(high: np.ndarray, low: np.ndarray, close: np.ndarray,
+                      atr_period: int, adaptive_offset: float = 0.75,
+                      copy_out: bool = True,
+                      ) -> dict[str, np.ndarray]:
+    """Batched C1-C8 over padded (B, T) matrices.
+
+    Values at columns beyond an entity's true length are garbage (callers
+    mask by length).  Returns a dict of (B, T) float64 arrays keyed by
+    :data:`CORE_OUTPUTS`.  With ``copy_out=False`` the returned arrays are
+    views into the shared workspace — valid only until the next call.
+    """
+    b, t = high.shape
+    ws = get_workspace(max(DEFAULT_CELLS, b * t))
+
+    hw = ws.view("high", b, t); np.copyto(hw, high, casting="unsafe")
+    lw = ws.view("low", b, t); np.copyto(lw, low, casting="unsafe")
+    cw = ws.view("close", b, t); np.copyto(cw, close, casting="unsafe")
+
+    out = _core_stages(hw, lw, cw, ws.view("tr", b, t), int(atr_period),
+                       adaptive_offset, ws)
     if copy_out:
         out = {k: v.copy() for k, v in out.items()}
     return out
@@ -369,129 +398,46 @@ def core_loop_batched(high: np.ndarray, low: np.ndarray, close: np.ndarray,
 def core_loop_resumed(high: np.ndarray, low: np.ndarray, close: np.ndarray,
                       st: dict, atr_period: int,
                       adaptive_offset: float = 0.75) -> dict[str, np.ndarray]:
-    """Resume the C1-C8 recurrence for ONE entity from saved streaming
-    state and advance it over a micro-batch, vectorized.
+    """Advance ONE entity's saved streaming state over ``n`` new bars:
+    the batch stages on a (1, buf_len + n) slab of the ring's TRs, oldest
+    first, then the new bars, started from the carried ATR sum, Laguerre
+    state and previous close.  Returns fresh (n,) arrays keyed by
+    :data:`CORE_OUTPUTS`, bit-identical to the batch kernel over the
+    whole series (tested at every split, per bar included).
 
-    ``st`` is the streaming state dict (see ``streaming/stateful.py``):
-    {prev_close, seen, tr_buf (ring list of p), buf_head, buf_len, tr_sum,
-    l0..l3}; it is mutated in place to the post-batch state (ring buffer
-    normalized to oldest-first order with ``buf_head = buf_len % p``,
-    which preserves the ring invariants the scalar ``step()`` relies on).
-
-    Strategy: the O(p)-per-bar suffix-mean min/max and the element-wise
-    coeff/gamma math run as numpy slab ops over the whole micro-batch
-    (history TRs prepended so early bars see their full window), while
-    the two O(1)-per-bar sequential chains (incremental tr_sum, Laguerre
-    cascade + RSI) run as tight Python-float loops — bit-identical IEEE
-    ops either way, ~30x faster than per-row ``step()`` on 10k-bar
-    batches.  Used by the streaming path; parity vs ``step()`` is pinned
-    by tests.
+    ``st`` is the streaming state dict (``streaming.stateful``:
+    prev_close, seen, tr_buf (ring list of p), buf_head, buf_len, tr_sum,
+    l0..l3), updated in place; the ring is written back oldest first,
+    with ``buf_head = buf_len % p``.
     """
     p = int(atr_period)
     n = len(close)
     if n == 0:
-        return {k: np.empty(0) for k in
-                ("rsi", "adaptive_coeff", "gamma", "L0", "L1", "L2", "L3",
-                 "min_atr", "max_atr", "atr")}
-    high = np.asarray(high, dtype=np.float64)
-    low = np.asarray(low, dtype=np.float64)
-    close = np.asarray(close, dtype=np.float64)
+        return {k: np.empty(0) for k in CORE_OUTPUTS}
+    h = st["buf_len"]
+    ws = get_workspace(max(DEFAULT_CELLS, h + n))
+    hw = ws.view("high", 1, n); hw[0] = high
+    lw = ws.view("low", 1, n); lw[0] = low
+    cw = ws.view("close", 1, n); cw[0] = close
+    tr = ws.view("tr", 1, h + n)
+    ring = np.asarray(st["tr_buf"], dtype=np.float64)
+    tr[0, :h] = ring[(st["buf_head"] - np.arange(h, 0, -1)) % p]
+    sums = np.array([st["tr_sum"]], dtype=np.float64)
+    init = np.array([[st["l0"], st["l1"], st["l2"], st["l3"]]],
+                    dtype=np.float64)
+    prev_close = (np.array([st["prev_close"]], dtype=np.float64)
+                  if st["seen"] else None)
+    out = {k: v[0].copy() for k, v in _core_stages(
+        hw, lw, cw, tr, p, adaptive_offset, ws, h, sums, init,
+        prev_close).items()}
 
-    # C1 true range (vectorized; first bar needs state)
-    tr = np.empty(n)
-    if st["seen"]:
-        pc = st["prev_close"]
-        tr[0] = max(high[0], pc) - min(low[0], pc)
-    else:
-        tr[0] = high[0] - low[0]
-    if n > 1:
-        np.subtract(np.maximum(high[1:], close[:-1]),
-                    np.minimum(low[1:], close[:-1]), out=tr[1:])
-
-    # history TRs, oldest first (all TRs seen when < p, else last p)
-    buf, head, blen = st["tr_buf"], st["buf_head"], st["buf_len"]
-    hist = [float(buf[(head - k) % p]) for k in range(blen, 0, -1)]
-    h_n = len(hist)
-    combined = np.concatenate([np.asarray(hist), tr]) if h_n else tr
-
-    # C2 incremental ATR — sequential tr_sum chain on Python floats
-    # (same (tr_sum + tr) - old op order as step()/_atr_incremental);
-    # warm-up rows peeled off so the steady-state loop is a bare zip
-    comb_l = combined.tolist()
-    tr_sum = float(st["tr_sum"])
-    blen_c = blen
-    atr_l = []
-    append = atr_l.append
-    i = 0
-    while i < n and blen_c < p:          # warm-up: window still filling
-        tr_sum += comb_l[h_n + i]
-        blen_c += 1
-        append(tr_sum / blen_c)
-        i += 1
-    if i < n:
-        pf = float(p)
-        for tr_i, old in zip(comb_l[h_n + i:], comb_l[h_n + i - p: -p]):
-            tr_sum = (tr_sum + tr_i) - old
-            append(tr_sum / pf)
-    atr = np.asarray(atr_l)
-
-    # C3 suffix-mean min/max over the combined series, sliced to the new
-    # bars (same newest-to-oldest accumulation as _atr_minmax)
-    ws = get_workspace(max(DEFAULT_CELLS, len(combined)))
-    comb2 = combined[None, :]
-    mn2, mx2 = _atr_minmax(comb2, p, ws, 1, len(combined))
-    min_atr = mn2[0, h_n:].copy()
-    max_atr = mx2[0, h_n:].copy()
-
-    # C4/C5 coeff + gamma (element-wise, same ops as core_loop_batched)
-    _max = np.maximum(max_atr, atr)
-    _min = np.minimum(min_atr, atr)
-    span = _max - _min
-    degenerate = span == 0.0
-    span[degenerate] = 1.0
-    coeff = 1.0 - (atr - _min) / span
-    coeff[degenerate] = 0.5
-    gamma = 1.0 - 10.0 / ((coeff + adaptive_offset) * float(p) + 9.0)
-
-    # C6 cascade — the only irreducibly sequential chain; tight
-    # Python-float loop (zip + bound appends: ~2x over index writes)
-    l0, l1, l2, l3 = st["l0"], st["l1"], st["l2"], st["l3"]
-    L0 = []; L1 = []; L2 = []; L3 = []
-    a0 = L0.append; a1 = L1.append; a2 = L2.append; a3 = L3.append
-    for c, g in zip(close.tolist(), gamma.tolist()):
-        p0, p1, p2 = l0, l1, l2
-        l0 = c + g * (l0 - c)
-        l1 = p0 + g * (l1 - l0)
-        l2 = p1 + g * (l2 - l1)
-        l3 = p2 + g * (l3 - l2)
-        a0(l0); a1(l1); a2(l2); a3(l3)
-    L0 = np.asarray(L0); L1 = np.asarray(L1)
-    L2 = np.asarray(L2); L3 = np.asarray(L3)
-
-    # C7 RSI — vectorized, same addition order as core_loop_batched
-    # (cu += max(d,0), cd += max(-d,0) per stage pair)
-    d01 = L0 - L1
-    d12 = L1 - L2
-    d23 = L2 - L3
-    cu = np.maximum(d01, 0.0) + np.maximum(d12, 0.0) + np.maximum(d23, 0.0)
-    cd = np.maximum(-d01, 0.0) + np.maximum(-d12, 0.0) + np.maximum(-d23, 0.0)
-    tot = cu + cd
-    flat = tot == 0.0
-    tot[flat] = 1.0
-    rsi = cu / tot
-    rsi[flat] = 0.0
-
-    # write back normalized state (oldest-first ring)
-    tail = comb_l[-min(blen_c, p):]
-    st["tr_buf"] = tail + [0.0] * (p - len(tail))
-    st["buf_head"] = blen_c % p if blen_c < p else 0
-    st["buf_len"] = blen_c
-    st["tr_sum"] = tr_sum
-    st["prev_close"] = float(close[-1])
+    blen = min(h + n, p)
+    st["tr_buf"] = tr[0, h + n - blen:].tolist() + [0.0] * (p - blen)
+    st["buf_head"] = blen % p
+    st["buf_len"] = blen
+    st["tr_sum"] = float(sums[0])
+    st["prev_close"] = float(cw[0, -1])
     st["seen"] = 1
-    st["l0"], st["l1"], st["l2"], st["l3"] = l0, l1, l2, l3
-
-    return {"rsi": np.asarray(rsi), "adaptive_coeff": coeff, "gamma": gamma,
-            "L0": np.asarray(L0), "L1": np.asarray(L1),
-            "L2": np.asarray(L2), "L3": np.asarray(L3),
-            "min_atr": min_atr, "max_atr": max_atr, "atr": atr}
+    st["l0"], st["l1"], st["l2"], st["l3"] = (
+        float(out[k][-1]) for k in ("L0", "L1", "L2", "L3"))
+    return out

@@ -216,24 +216,31 @@ def _bars_since(event, ws, b, t, out):
     return out
 
 
-def _ewm_mean(x, span, out, ws, b):
-    """EWM recurrence.  Stays column-oriented (r6 note): 2 column
-    touches per step keep the live line set L2-resident; the transposed
-    variant measured 65% slower (transpose passes dominate) — unlike
-    the 6-slab Laguerre cascade, which does profit from (T, B).  That
-    note describes the NumPy fallback only; the compiled loop (see
-    ``kernel.recurrences``) runs row by row."""
+def _ewm_mean(x, span, out, ws, b, y0=None):
+    """EWM recurrence; with ``y0`` each row continues from its carried
+    mean ``y0[r]``, so column 0 also takes the recurrence form.  Stays
+    column-oriented (r6 note): 2 column touches per step keep the live
+    line set L2-resident; the transposed variant measured 65% slower
+    (transpose passes dominate) — unlike the 6-slab Laguerre cascade,
+    which does profit from (T, B).  That note describes the NumPy
+    fallback only; the compiled loop (see ``kernel.recurrences``) runs
+    row by row."""
     alpha = 2.0 / (span + 1.0)
     rec = recurrences.compiled()
     if rec is not None:
-        rec.ewm_mean(x, alpha, 1.0 - alpha, out)
+        rec.ewm_mean(x, alpha, 1.0 - alpha, out, y0)
         return out
     t = x.shape[1]
     y = ws.vec(0, b)
     tmp = ws.vec(1, b)
-    np.copyto(y, x[:, 0])
-    out[:, 0] = y
-    for i in range(1, t):
+    if y0 is None:
+        np.copyto(y, x[:, 0])
+        out[:, 0] = y
+        start = 1
+    else:
+        np.copyto(y, y0)
+        start = 0
+    for i in range(start, t):
         np.multiply(x[:, i], alpha, out=tmp)
         np.multiply(y, 1.0 - alpha, out=y)
         np.add(tmp, y, out=y)

@@ -4,9 +4,11 @@ The incremental ATR sum, the Laguerre cascade and the EWM mean are the
 kernel's only loops over time.  As NumPy loops they cost one ufunc call
 per step whatever the batch width, which dominates narrow batches (a
 lone long document runs as a B=1 row).  ``recurrences.c`` holds the same
-three loops in C.  Each process builds the library on its first kernel
-call (never at import, so jobs that run no kernel never pay the compile)
-and loads it through ctypes, which releases the GIL for the call.
+three loops in C.  Each loop starts from an optional carried state, which
+is how the streaming steppers resume it.  Each process builds the library
+on its first kernel call (never at import, so jobs that run no kernel
+never pay the compile) and loads it through ctypes, which releases the
+GIL for the call.
 
 Bit-identity: the C loops apply the NumPy loops' float ops in the same
 order and are compiled with ``-O2 -ffp-contract=off`` and no fast-math,
@@ -36,17 +38,20 @@ CFLAGS = ("-O2", "-ffp-contract=off", "-shared", "-fPIC")
 _f64p = ctypes.c_void_p
 _i64 = ctypes.c_int64
 _SIGNATURES = {
-    "atr_incremental": [_f64p, _f64p, _i64, _i64, _i64],
-    "laguerre_cascade": [_f64p] * 6 + [_i64, _i64],
+    "atr_incremental": [_f64p, _f64p, _i64, _i64, _i64, _i64, _f64p],
+    "laguerre_cascade": [_f64p] * 6 + [_i64, _i64, _f64p],
     "ewm_mean": [_f64p, _f64p, _i64, _i64, ctypes.c_double,
-                 ctypes.c_double],
+                 ctypes.c_double, _f64p],
 }
 
 
-def _ptr(a: np.ndarray, shape: tuple[int, ...]) -> int:
-    """Address of a C-contiguous float64 slab of the expected shape; the
-    kernel's call sites pass workspace slabs, so anything else is a bug
-    to report, not to copy around."""
+def _ptr(a: np.ndarray | None, shape: tuple[int, ...]) -> int | None:
+    """Address of a C-contiguous float64 slab of the expected shape (None
+    passes NULL: no carried state); the kernel's call sites pass
+    workspace slabs, so anything else is a bug to report, not to copy
+    around."""
+    if a is None:
+        return None
     if (a.dtype != np.float64 or not a.flags.c_contiguous
             or a.shape != shape):
         raise ValueError(
@@ -57,7 +62,9 @@ def _ptr(a: np.ndarray, shape: tuple[int, ...]) -> int:
 
 
 class Compiled:
-    """The loaded library, with argument checks in front of each call."""
+    """The loaded library, with argument checks in front of each call.
+    The optional carried state (``sums``, ``init``, ``y0``) is read and,
+    for ``sums``, written back in place."""
 
     def __init__(self, lib: ctypes.CDLL):
         for name, argtypes in _SIGNATURES.items():
@@ -66,24 +73,26 @@ class Compiled:
             fn.restype = None
         self._lib = lib
 
-    def atr_incremental(self, tr: np.ndarray, p: int, out: np.ndarray
+    def atr_incremental(self, tr: np.ndarray, p: int, out: np.ndarray,
+                        start: int = 0, sums: np.ndarray | None = None
                         ) -> None:
         b, t = tr.shape
         self._lib.atr_incremental(_ptr(tr, (b, t)), _ptr(out, (b, t)),
-                                  b, t, p)
+                                  b, t, p, start, _ptr(sums, (b,)))
 
     def laguerre_cascade(self, close: np.ndarray, gamma: np.ndarray,
-                         L0, L1, L2, L3) -> None:
+                         L0, L1, L2, L3,
+                         init: np.ndarray | None = None) -> None:
         b, t = close.shape
         self._lib.laguerre_cascade(
             *(_ptr(a, (b, t)) for a in (close, gamma, L0, L1, L2, L3)),
-            b, t)
+            b, t, _ptr(init, (b, 4)))
 
     def ewm_mean(self, x: np.ndarray, alpha: float, one_minus_alpha: float,
-                 out: np.ndarray) -> None:
+                 out: np.ndarray, y0: np.ndarray | None = None) -> None:
         b, t = x.shape
         self._lib.ewm_mean(_ptr(x, (b, t)), _ptr(out, (b, t)), b, t,
-                           alpha, one_minus_alpha)
+                           alpha, one_minus_alpha, _ptr(y0, (b,)))
 
 
 def _build_dir() -> str:

@@ -17,10 +17,11 @@ batch parity** (tested): per entity, the state carries
 
 Per micro-batch: ``core_loop_resumed`` advances the recurrence
 vectorized; the batched expander runs over (1, HIST + n) and the new
-tail is emitted after three carried-state overrides:
+tail is emitted after two carried-state overrides:
 
-* ``rsi_velocity`` — EWM continued from the carried accumulator (the
-  slab-local EWM would restart at the window edge);
+* ``rsi_velocity`` — the batch EWM (``_ewm_mean``) over the new rows,
+  continued from the carried accumulator (the slab-local EWM would
+  restart at the window edge);
 * ``bars_in_regime`` / ``bars_since_*`` (+ their dependents
   ``bars_since_extreme``, ``extreme_regime_persistence``,
   ``tail_risk_score``) — slab-local values are corrected by the carried
@@ -41,7 +42,17 @@ import numpy as np
 import pandas as pd
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
+from atr_adaptive_laguerre_spark.kernel.batched import (
+    core_loop_resumed, get_workspace,
+)
+from atr_adaptive_laguerre_spark.kernel.expander_batched import (
+    _ewm_mean, expand_batched,
+)
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
+from atr_adaptive_laguerre_spark.streaming.stateful import (
+    INPUT_SCHEMA, filter_new_bars, gather_group_chunks, new_core_state,
+    unpack_core_state,
+)
 
 #: trailing bars kept per entity: 99 (vol window) + 19 (rstd's rsi window)
 HIST = 118
@@ -74,19 +85,13 @@ class Entity43Stream:
     STATE43_SCHEMA minus ``last_offset`` (a 24-tuple; offset tracking
     belongs to the caller)."""
 
-    __slots__ = ("cfg", "p", "off", "alpha", "om_alpha", "down", "up",
-                 "st", "vel", "hist", "c_bars_in", "c_bs_os", "c_bs_ob")
+    __slots__ = ("cfg", "p", "off", "down", "up", "st", "vel", "hist",
+                 "c_bars_in", "c_bs_os", "c_bs_ob")
 
     def __init__(self, cfg: FeatureConfig):
-        from atr_adaptive_laguerre_spark.streaming.stateful import (
-            new_core_state,
-        )
-
         self.cfg = cfg
         self.p = cfg.atr_period
         self.off = cfg.adaptive_offset
-        self.alpha = 2.0 / (cfg.velocity_span + 1.0)
-        self.om_alpha = 1.0 - self.alpha
         self.down, self.up = cfg.level_down, cfg.level_up
         self.st = new_core_state(self.p)
         self.vel = 0.0
@@ -97,10 +102,6 @@ class Entity43Stream:
 
     @classmethod
     def from_tuple(cls, cfg: FeatureConfig, tup) -> "Entity43Stream":
-        from atr_adaptive_laguerre_spark.streaming.stateful import (
-            unpack_core_state,
-        )
-
         self = cls(cfg)
         self.st = unpack_core_state(tup, self.p)
         self.vel = tup[10]
@@ -127,13 +128,6 @@ class Entity43Stream:
         """Advance the entity by ``n`` bars; returns the 43 feature
         columns for exactly those bars (bit-identical to the batch
         expander on the full series)."""
-        from atr_adaptive_laguerre_spark.kernel.batched import (
-            core_loop_resumed,
-        )
-        from atr_adaptive_laguerre_spark.kernel.expander_batched import (
-            expand_batched,
-        )
-
         cfg, hist = self.cfg, self.hist
         n = len(close)
         close_new = np.asarray(close, dtype=np.float64)
@@ -147,9 +141,8 @@ class Entity43Stream:
         slab = {s: np.concatenate([hist[s], core[s]])[None, :]
                 for s in _SERIES}
         feats = expand_batched(slab, cfg)
-        overridden = {"rsi_velocity", "bars_in_regime",
-                      "bars_since_oversold", "bars_since_overbought",
-                      "bars_since_extreme",
+        overridden = {"bars_in_regime", "bars_since_oversold",
+                      "bars_since_overbought", "bars_since_extreme",
                       "extreme_regime_persistence", "tail_risk_score"}
         out = {c: feats[c][0, h:].copy() for c in FEATURE_COLUMNS
                if c not in overridden}
@@ -157,20 +150,12 @@ class Entity43Stream:
         rsi_all = slab["rsi"][0]
 
         # --- override 1: EWM velocity continued from carried state ---
-        v = self.vel
-        vel_out = np.empty(n)
-        prev_r = hist["rsi"][-1] if h else rsi_all[h]
-        for j in range(n):
-            r = rsi_all[h + j]
-            ch1 = r - prev_r
-            if h == 0 and j == 0:
-                v = 0.0          # batch: vel[0] = ch1[0] = 0
-            else:
-                v = (ch1 * self.alpha) + (v * self.om_alpha)
-            vel_out[j] = v
-            prev_r = r
-        self.vel = float(v)
-        out["rsi_velocity"] = vel_out
+        if h:
+            vel = np.empty((1, n))
+            _ewm_mean(feats["rsi_change_1"][:, h:], cfg.velocity_span, vel,
+                      get_workspace(), 1, y0=np.array([self.vel]))
+            out["rsi_velocity"] = vel[0]
+        self.vel = float(out["rsi_velocity"][-1])
 
         # --- override 2: unbounded counters (carry across slabs) ---
         regime_all = np.where(rsi_all < self.down, 0.0,
@@ -235,10 +220,6 @@ class Entity43Stream:
 def make_update43_fn(cfg: FeatureConfig):
     def fn(key, pdf_iter, state):
         source, doc_id = key
-        from atr_adaptive_laguerre_spark.streaming.stateful import (
-            filter_new_bars, gather_group_chunks,
-        )
-
         if state.exists:
             tup = state.get
             last_offset = tup[10]
@@ -273,8 +254,6 @@ def stream_features43(spark, input_dir: str, output_dir: str,
     """availableNow micro-batch pass emitting the full 43-column
     expansion per bar, resuming from checkpointed state."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from atr_adaptive_laguerre_spark.streaming.stateful import INPUT_SCHEMA
 
     cfg = cfg or FeatureConfig()
     sdf = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)

@@ -67,6 +67,9 @@ from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
 from atr_adaptive_laguerre_spark.streaming.expanded import (
     _SERIES, Entity43Stream,
 )
+from atr_adaptive_laguerre_spark.streaming.stateful import (
+    filter_new_bars, gather_group_chunks,
+)
 
 NF = len(FEATURE_COLUMNS)          # 43
 _CI = {c: i for i, c in enumerate(FEATURE_COLUMNS)}
@@ -355,10 +358,6 @@ def make_update121_inc_fn(cfg: FeatureConfig):
 
     def fn(key, pdf_iter, state):
         source, doc_id = key
-        from atr_adaptive_laguerre_spark.streaming.stateful import (
-            filter_new_bars, gather_group_chunks,
-        )
-
         if state.exists:
             tup = state.get
             ent = Entity121Stream.from_tuple(cfg, tup[:-1])

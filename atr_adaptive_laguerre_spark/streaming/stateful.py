@@ -3,7 +3,7 @@
 Streaming re-expression of the reference's ``update()`` path
 (``/root/reference/src/atr_adaptive_laguerre/features/atr_adaptive_rsi.py:
 542-672``): per-entity state = {prev_close, first_bar, TR ring buffer,
-tr_sum, L0..L3}, advanced one bar at a time, emitting rsi (+ the
+tr_sum, L0..L3}, advanced over each micro-batch, emitting rsi (+ the
 intermediates, the ``update_full`` variant).
 
 Spark mapping: ``applyInPandasWithState`` keyed by (source, doc_id);
@@ -13,9 +13,9 @@ across micro-batches are applied in ``offset`` order; already-seen
 offsets are dropped (idempotent replay guard — the streaming analogue of
 the reference's monotonic-input invariant).
 
-The per-bar math is the same operation sequence as the batch kernel
-(``kernel.reference_impl.core_loop``), so streaming output ==
-batch output exactly.
+The state is advanced by ``kernel.batched.core_loop_resumed``: the batch
+kernel's own stages, started from the carried state, so streaming output
+== batch output exactly.  This module holds no recurrence math.
 """
 
 from __future__ import annotations
@@ -81,86 +81,12 @@ def gather_group_chunks(pdf_iter):
     ``offset > last_offset`` filtering would misclassify out-of-order
     arrivals as replays and silently drop interior bars.  Returns a
     one-element list (or empty) so callers keep their loop shape."""
-    import pandas as _pd
-
     chunks = [p for p in pdf_iter if len(p)]
     if not chunks:
         return []
     if len(chunks) == 1:
         return [chunks[0]]
-    return [_pd.concat(chunks, ignore_index=True)]
-
-
-def step(state: dict, h: float, lo: float, c: float,
-         atr_period: int, adaptive_offset: float) -> tuple:
-    """Advance per-entity state by one bar; returns the output tuple.
-    Same float64 operation order as the batch kernel."""
-    if not state["seen"]:
-        tr = h - lo
-        state["seen"] = 1
-    else:
-        pc = state["prev_close"]
-        hv = h if h > pc else pc
-        lv = lo if lo < pc else pc
-        tr = hv - lv
-    state["prev_close"] = c
-
-    buf = state["tr_buf"]
-    p = atr_period
-    if state["buf_len"] == p:
-        old = buf[state["buf_head"]]
-        state["tr_sum"] = state["tr_sum"] + tr - old
-    else:
-        state["tr_sum"] += tr
-        state["buf_len"] += 1
-    buf[state["buf_head"]] = tr
-    state["buf_head"] = (state["buf_head"] + 1) % p
-    atr = state["tr_sum"] / state["buf_len"]
-
-    n = state["buf_len"]
-    if n < 2:
-        min_atr = max_atr = atr
-    else:
-        running = 0.0
-        min_atr, max_atr = np.inf, -np.inf
-        for k in range(1, n + 1):
-            idx = (state["buf_head"] - k) % p
-            running += buf[idx]
-            atr_k = running / k
-            if atr_k < min_atr:
-                min_atr = atr_k
-            if atr_k > max_atr:
-                max_atr = atr_k
-
-    _max = max_atr if max_atr > atr else atr
-    _min = min_atr if min_atr < atr else atr
-    coeff = 0.5 if _min == _max else 1.0 - (atr - _min) / (_max - _min)
-    period = float(p) * (coeff + adaptive_offset)
-    gamma = 1.0 - 10.0 / (period + 9.0)
-
-    p0, p1, p2 = state["l0"], state["l1"], state["l2"]
-    state["l0"] = c + gamma * (state["l0"] - c)
-    state["l1"] = p0 + gamma * (state["l1"] - state["l0"])
-    state["l2"] = p1 + gamma * (state["l2"] - state["l1"])
-    state["l3"] = p2 + gamma * (state["l3"] - state["l2"])
-    l0, l1, l2, l3 = state["l0"], state["l1"], state["l2"], state["l3"]
-
-    cu = cd = 0.0
-    if l0 >= l1:
-        cu += l0 - l1
-    else:
-        cd += l1 - l0
-    if l1 >= l2:
-        cu += l1 - l2
-    else:
-        cd += l2 - l1
-    if l2 >= l3:
-        cu += l2 - l3
-    else:
-        cd += l3 - l2
-    tot = cu + cd
-    rsi = 0.0 if tot == 0.0 else cu / tot
-    return (rsi, coeff, gamma, l0, l1, l2, l3, min_atr, max_atr, atr)
+    return [pd.concat(chunks, ignore_index=True)]
 
 
 def make_update_fn(cfg: FeatureConfig, ttl_ms: int | None = None):
@@ -175,16 +101,14 @@ def make_update_fn(cfg: FeatureConfig, ttl_ms: int | None = None):
 
     Each group's micro-batch is processed *vectorized* by the batched
     kernel's resume-from-state entry point
-    (``kernel.batched.core_loop_resumed``) — bit-identical to the scalar
-    ``step()`` path (tested), ~30x faster per bar.  ``step()`` remains
-    the per-bar oracle for tests and documentation.
+    (``kernel.batched.core_loop_resumed``), which runs the batch stages
+    from the carried state — bit-identical to the batch kernel over the
+    whole series (tested).
     """
     from atr_adaptive_laguerre_spark.kernel.batched import core_loop_resumed
 
     p = cfg.atr_period
     off = cfg.adaptive_offset
-    cols = ["rsi", "adaptive_coeff", "gamma", "L0", "L1", "L2", "L3",
-            "min_atr", "max_atr", "atr"]
 
     def fn(key, pdf_iter, state):
         source, doc_id = key
@@ -209,10 +133,8 @@ def make_update_fn(cfg: FeatureConfig, ttl_ms: int | None = None):
                 pdf["low"].to_numpy(dtype=np.float64),
                 pdf["close"].to_numpy(dtype=np.float64), st, p, off)
             last_offset = int(offs[-1])
-            res = pd.DataFrame({"source": source, "doc_id": doc_id,
-                                "offset": offs,
-                                **{c: out[c] for c in cols}})
-            yield res
+            yield pd.DataFrame({"source": source, "doc_id": doc_id,
+                                "offset": offs, **out})
 
         state.update((st["prev_close"], st["seen"], st["tr_buf"],
                       st["buf_head"], st["buf_len"], st["tr_sum"],

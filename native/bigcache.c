@@ -51,7 +51,7 @@ size_t malloc_usable_size(void *);
 
 #define HDR 64                  /* per-block header; keeps user ptr 64-aligned */
 #define MAGIC 0xb16cac4eULL
-#define NCLASS 20               /* 512K << 19 = 256 TiB max class, plenty */
+#define NCLASS 20               /* 512K << 19 = 256 GiB max class, plenty */
 
 typedef struct blk {
     struct blk *next;           /* freelist link (only while free) */
@@ -133,6 +133,7 @@ static int g_trace = -1;
 
 static void *bc_alloc(size_t size)
 {
+    if (size > SIZE_MAX - HDR) return NULL;     /* size + HDR would wrap */
     size_t cls = bc_class(size);
     size_t cap = bc_cap(cls);
     if (cap < size + HDR) return NULL;          /* absurdly large */

@@ -121,6 +121,36 @@ def test_realloc_and_calloc_semantics():
     assert "API-OK" in out
 
 
+def test_sizes_that_wrap_the_header_fail_cleanly():
+    """A request within the block header of SIZE_MAX must fail like
+    glibc's (NULL), not wrap ``size + HDR`` to a small class and hand
+    back a 512 KiB block."""
+    out = _run("""
+        import ctypes
+        libc = ctypes.CDLL(None)
+        libc.malloc.restype = ctypes.c_void_p
+        libc.malloc.argtypes = [ctypes.c_size_t]
+        libc.calloc.restype = ctypes.c_void_p
+        libc.calloc.argtypes = [ctypes.c_size_t, ctypes.c_size_t]
+        libc.realloc.restype = ctypes.c_void_p
+        libc.realloc.argtypes = [ctypes.c_void_p, ctypes.c_size_t]
+        libc.free.argtypes = [ctypes.c_void_p]
+        size_max = ctypes.c_size_t(-1).value
+
+        for size in (size_max, size_max - 1, size_max - 63):
+            assert libc.malloc(size) is None, size
+            assert libc.calloc(1, size) is None, size
+        # a failed realloc leaves the block (a cached one) intact
+        p = libc.malloc(1 << 20)
+        ctypes.memmove(p, b"kept", 4)
+        assert libc.realloc(p, size_max) is None
+        assert bytes((ctypes.c_char * 4).from_address(p)) == b"kept"
+        libc.free(p)
+        print("WRAP-OK")
+    """)
+    assert "WRAP-OK" in out
+
+
 def test_disable_env_is_a_noop():
     out = _run("""
         import numpy as np

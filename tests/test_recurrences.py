@@ -81,6 +81,15 @@ def test_compiled_rejects_non_contiguous_slabs():
         rec.atr_incremental(tr[:, ::2], 3, np.empty((4, 5)))
     with pytest.raises(ValueError, match="C-contiguous float64"):
         rec.ewm_mean(tr.astype(np.float32), 0.5, 0.5, np.empty((4, 10)))
+    # the carried initial state is checked like the slabs: one entry
+    # per row (four for the cascade)
+    out = np.empty((4, 10))
+    with pytest.raises(ValueError, match="C-contiguous float64"):
+        rec.atr_incremental(tr, 3, out, 2, np.zeros(3))
+    with pytest.raises(ValueError, match="C-contiguous float64"):
+        rec.laguerre_cascade(tr, tr, out, out, out, out, np.zeros((4, 3)))
+    with pytest.raises(ValueError, match="C-contiguous float64"):
+        rec.ewm_mean(tr, 0.5, 0.5, out, np.zeros((4, 1)))
 
 
 def _failing_compiler(monkeypatch) -> None:

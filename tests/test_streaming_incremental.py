@@ -102,6 +102,13 @@ def test_entity121_stream_chunked_parity(chunks, filter_redundancy):
         assert ok.all(), (col, int((~ok).sum()))
 
 
+@pytest.mark.usefixtures("numpy_backend")
+def test_entity121_stream_bar_at_a_time_numpy_backend():
+    """The bar-at-a-time chunking on the NumPy fallback loops, whose
+    carried-state entry points the compiled loops mirror."""
+    test_entity121_stream_chunked_parity([1] * 150, True)
+
+
 def test_entity121_stream_second_config_parity():
     """Chunked parity also at a non-default config (mults 2/8, atr 10,
     levels .8/.2 — no constant may hide in the streaming path)."""
