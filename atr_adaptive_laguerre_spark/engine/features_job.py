@@ -9,10 +9,17 @@ straight from the Arrow list buffers (:func:`_arrow_doc_chunks`) and
 output columns are wrapped zero-copy from the kernel's pooled NumPy
 buffers.
 
+Each job's function is a plain generator over the process's one output
+pool (``kernel.batched.get_out_pool``): the Python worker serializes a
+yielded batch to the JVM before it resumes the generator, so the next
+chunk may overwrite the buffers the previous batch wraps (pinned by a
+many-chunk test).  Compute and serialization therefore take turns on
+the worker's one thread.
+
 * :func:`features_long` (43 / 169 / 121 feature columns) and
   :func:`core_features_long` (the 10 core outputs) emit long form, one
-  row per (entity, offset), with kernel compute overlapped with the
-  worker's socket serialization (:func:`_overlap_chunks`).
+  row per (entity, offset), through one shared chunk loop
+  (:func:`_long_form_job`).
 * :func:`features_doc` emits doc grain (one row per entity, features as
   arrays); :func:`features_checksum` emits per-chunk integrity sums.
 
@@ -34,7 +41,6 @@ atr_adaptive_rsi.py:300-453``).
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Iterator
 
 import numpy as np
@@ -47,8 +53,6 @@ from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
 from atr_adaptive_laguerre_spark.kernel.batched import core_loop_batched
 from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
-
-_log = logging.getLogger(__name__)
 
 #: cap on padded cells (docs x max_len) per kernel invocation; bounds the
 #: Python worker's peak memory independent of Arrow batch sizing.
@@ -130,7 +134,7 @@ def core_features_long(doc_df: DataFrame,
     when the input is a few small files (e.g. local benches) whose splits
     underuse the cluster; at real scale leave it unset.
 
-    Physical path mirrors :func:`features_long` (r6): tokens are read
+    Physical path is :func:`features_long`'s chunk loop: tokens are read
     straight from the Arrow list buffers, the kernel outputs are gathered
     into pooled buffers and wrapped zero-copy — no pandas block
     consolidation on either side of the boundary.  Values are the
@@ -138,33 +142,18 @@ def core_features_long(doc_df: DataFrame,
     oracle).
     """
     cfg = cfg or FeatureConfig()
-    if num_partitions:
-        doc_df = doc_df.repartition(num_partitions)
 
-    def run(batches):
-        def produce(emit, acquire_pool):
-            j = 0
-            for rb in batches:
-                src_col = rb.column(rb.schema.get_field_index("source"))
-                did_col = rb.column(rb.schema.get_field_index("doc_id"))
-                for idx, chunk_flat, lens, mat, fe in _arrow_doc_chunks(rb):
-                    pool = acquire_pool(j)
-                    high, low, close = tokens_to_ohlcv_batched(mat)
-                    out = core_loop_batched(high, low, close,
-                                            cfg.atr_period,
-                                            cfg.adaptive_offset,
-                                            copy_out=False)
-                    cols = {}
-                    for k in CORE_OUTPUTS:
-                        buf = cols[k] = pool.get(f"core_{k}", len(fe))
-                        np.take(out[k].ravel(), fe, out=buf)
-                    emit(_long_batch(src_col, did_col, idx, lens,
-                                     chunk_flat, cols, CORE_OUTPUTS))
-                    j += 1
+    def core_cols(mat, lens, fe, pool):
+        high, low, close = tokens_to_ohlcv_batched(mat)
+        out = core_loop_batched(high, low, close, cfg.atr_period,
+                                cfg.adaptive_offset, copy_out=False)
+        cols = {}
+        for k in CORE_OUTPUTS:
+            buf = cols[k] = pool.get(f"core_{k}", len(fe))
+            np.take(out[k].ravel(), fe, out=buf)
+        return cols
 
-        yield from _overlap_chunks(produce)
-
-    return doc_df.mapInArrow(run, schema=CORE_LONG_SCHEMA)
+    return _long_form_job(doc_df, core_cols, CORE_OUTPUTS, num_partitions)
 
 
 def feature_columns_for(cfg: FeatureConfig) -> list[str]:
@@ -272,105 +261,31 @@ def _padded_int_buffer(b: int, t: int) -> np.ndarray:
     return buf[:need].reshape(b, t)
 
 
-_OVERLAP_DONE = object()
+def _long_form_job(doc_df: DataFrame, chunk_cols, value_cols,
+                   num_partitions: int | None,
+                   cell_budget: int = CELL_BUDGET) -> DataFrame:
+    """The long-form ``mapInArrow`` shared by :func:`features_long` and
+    :func:`core_features_long`: one batch per kernel chunk, with
+    ``chunk_cols(mat, lens, flat_idx, pool)`` returning the chunk's
+    ``value_cols`` written into the process's one output pool (reused
+    chunk after chunk; see the module docstring for why that is safe)."""
+    if num_partitions:
+        doc_df = doc_df.repartition(num_partitions)
 
-#: seconds :func:`_overlap_chunks` waits for its producer thread to exit
-_OVERLAP_JOIN_TIMEOUT_S = 60.0
+    def run(batches):
+        from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
 
+        pool = get_out_pool()
+        for rb in batches:
+            src_col = rb.column(rb.schema.get_field_index("source"))
+            did_col = rb.column(rb.schema.get_field_index("doc_id"))
+            for idx, chunk_flat, lens, mat, fe in _arrow_doc_chunks(
+                    rb, cell_budget):
+                cols = chunk_cols(mat, lens, fe, pool)
+                yield _long_batch(src_col, did_col, idx, lens, chunk_flat,
+                                  cols, value_cols)
 
-def _overlap_chunks(produce):
-    """Overlap kernel compute with the worker's socket serialization.
-
-    The Python worker is single-threaded: while it serializes a yielded
-    RecordBatch to the JVM socket, the generator is suspended — so
-    compute time and funnel time ADD.  With the r6 kernel ~2x faster,
-    the 121-column job became funnel-bound (measured at sf1: checksum
-    consumption 8.6 s vs full materialization 15.9 s), and the two
-    phases are each GIL-releasing (NumPy slab ops / Arrow+socket C
-    writes), so running compute on a helper thread overlaps them.
-
-    ``produce(emit, acquire_pool)`` runs on the helper thread; it calls
-    ``acquire_pool(j)`` before computing chunk ``j`` (returns one of the
-    TWO persistent OutPools and, for j >= 2, blocks until chunk j-2 —
-    same pool parity — has been fully serialized) and ``emit(batch)``
-    per finished RecordBatch.  The ack protocol is what makes the
-    zero-copy pooled buffers safe: the worker serializes a yielded
-    batch BEFORE resuming the generator, so the consumer's post-yield
-    ack certifies "this chunk's buffers may be overwritten".  Errors
-    propagate; generator close (task kill) stops the thread promptly.
-    """
-    import queue
-    import threading
-
-    from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
-
-    out_q: queue.Queue = queue.Queue(maxsize=2)
-    ack_q: queue.Queue = queue.Queue()
-    stop = threading.Event()
-
-    class _Stopped(Exception):
-        pass
-
-    def acquire_pool(j: int):
-        if j >= 2:
-            while True:
-                if stop.is_set():
-                    raise _Stopped
-                try:
-                    ack_q.get(timeout=1.0)
-                    break
-                except queue.Empty:
-                    continue
-        return get_out_pool(j % 2)
-
-    def emit(batch) -> None:
-        while True:
-            if stop.is_set():
-                raise _Stopped
-            try:
-                out_q.put(batch, timeout=1.0)
-                return
-            except queue.Full:
-                continue
-
-    def runner():
-        try:
-            produce(emit, acquire_pool)
-            out_q.put(_OVERLAP_DONE)
-        except _Stopped:
-            pass
-        except BaseException as e:  # noqa: BLE001 — must cross threads
-            try:
-                out_q.put(e, timeout=10.0)
-            except queue.Full:
-                pass
-
-    t = threading.Thread(target=runner, daemon=True,
-                         name="kernel-compute-overlap")
-    t.start()
-    try:
-        while True:
-            item = out_q.get()
-            if item is _OVERLAP_DONE:
-                return
-            if isinstance(item, BaseException):
-                raise item
-            yield item          # worker serializes before next()
-            ack_q.put(1)
-    finally:
-        stop.set()
-        # Block until the producer actually exits: Spark reuses this
-        # worker process for the NEXT task, and a producer still inside
-        # a kernel chunk would race that task's use of the shared
-        # Workspace/_PAD_INT buffers.  Bounded wait: the producer
-        # notices `stop` at its next emit/acquire poll (<= ~1 s past
-        # the current chunk's compute).
-        t.join(timeout=_OVERLAP_JOIN_TIMEOUT_S)
-        if t.is_alive():
-            _log.warning(
-                "producer thread %r still running %g s after stop; the "
-                "next task in this worker may race its shared buffers",
-                t.name, _OVERLAP_JOIN_TIMEOUT_S)
+    return doc_df.mapInArrow(run, schema=_long_schema(value_cols))
 
 
 def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
@@ -386,8 +301,10 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
 
     Physical path: ``mapInArrow`` — token values are read straight from
     the Arrow list buffers and every output column is built zero-copy
-    from the kernel's NumPy arrays (no pandas block consolidation, which
-    would copy the whole 121-column matrix once more).
+    from the kernel's pooled NumPy arrays (no pandas block consolidation,
+    which would copy the whole 121-column matrix once more).  The task's
+    generator computes a chunk, yields its batch and computes the next
+    only after the worker has serialized it, reusing one output pool.
 
     ``columns`` projects the OUTPUT at the worker: Catalyst cannot push
     a projection through a Python map node, so a downstream select still
@@ -398,27 +315,13 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     compute is cheap) but ships only the requested features.
     """
     cfg = cfg or FeatureConfig()
-    if num_partitions:
-        doc_df = doc_df.repartition(num_partitions)
     feat_cols = _projected_columns(cfg, columns)
 
-    def run(batches):
-        def produce(emit, acquire_pool):
-            j = 0
-            for rb in batches:
-                src_col = rb.column(rb.schema.get_field_index("source"))
-                did_col = rb.column(rb.schema.get_field_index("doc_id"))
-                for idx, chunk_flat, lens, mat, _fe in _arrow_doc_chunks(
-                        rb, cell_budget):
-                    pool = acquire_pool(j)
-                    cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
-                    emit(_long_batch(src_col, did_col, idx, lens,
-                                     chunk_flat, cols, feat_cols))
-                    j += 1
+    def feature_cols(mat, lens, _fe, pool):
+        return _chunk_feature_cols(mat, lens, cfg, pool=pool)
 
-        yield from _overlap_chunks(produce)
-
-    return doc_df.mapInArrow(run, schema=_long_schema(feat_cols))
+    return _long_form_job(doc_df, feature_cols, feat_cols, num_partitions,
+                          cell_budget)
 
 
 def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,

@@ -102,9 +102,11 @@ class OutPool:
 
     Fresh page-faulting allocations collapse under many-core concurrency
     on virtualized hosts, so per-chunk *output* columns are also written
-    into reusable buffers.  Safe in ``mapInArrow``: the worker serializes
-    each yielded RecordBatch to the socket before the generator resumes,
-    so a buffer may be reused for the next chunk.
+    into reusable buffers.  Safe in ``mapInArrow`` because its functions
+    are plain generators: the worker serializes each yielded RecordBatch
+    to the socket before the generator resumes, so a buffer may be
+    reused for the next chunk.  Nothing else may fill a pool while a
+    batch that wraps its buffers is still unsent.
     """
 
     def __init__(self) -> None:
@@ -118,20 +120,16 @@ class OutPool:
         return buf[:n]
 
 
-_OUT_POOLS: dict[int, OutPool] = {}
+_OUT_POOL: OutPool | None = None
 
 
-def get_out_pool(which: int = 0) -> OutPool:
-    """Persistent per-process output pool.  ``which`` selects one of a
-    small set of independent pools — the pipelined mapInArrow paths
-    (r6) double-buffer chunk outputs across two pools so the producer
-    thread can compute chunk k+2 while the worker thread is still
-    serializing chunk k's zero-copy buffers (see
-    ``features_job._overlap_chunks``)."""
-    pool = _OUT_POOLS.get(which)
-    if pool is None:
-        pool = _OUT_POOLS[which] = OutPool()
-    return pool
+def get_out_pool() -> OutPool:
+    """The process's one output pool, shared by every feature job a
+    Python worker runs (one task at a time, one chunk at a time)."""
+    global _OUT_POOL
+    if _OUT_POOL is None:
+        _OUT_POOL = OutPool()
+    return _OUT_POOL
 
 
 def pad_sequences(seqs: list[np.ndarray], dtype=np.float64

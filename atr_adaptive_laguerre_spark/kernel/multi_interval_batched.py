@@ -102,15 +102,13 @@ def _align_gather_idx_avail(avail: np.ndarray, lengths: np.ndarray,
     return gidx, nomatch
 
 
-def _align_gather_idx(lengths: np.ndarray, lengths_m: np.ndarray,
+def _align_gather_idx(flat_idx: np.ndarray, lengths_m: np.ndarray,
                       t: int, tm: int) -> tuple[np.ndarray, np.ndarray]:
-    """Flat gather indices mapping each valid base cell (b, i) to the
-    resampled cell (b, min(i, lengths_m[b]-1)); plus a mask of base cells
-    whose doc has no complete window (lengths_m == 0)."""
-    reps = lengths.astype(np.int64)
-    doc = np.repeat(np.arange(len(lengths), dtype=np.int64), reps)
-    offs = np.concatenate([np.arange(n, dtype=np.int64) for n in reps]) \
-        if len(reps) else np.empty(0, dtype=np.int64)
+    """Flat gather indices mapping each valid base cell (b, i) — given as
+    the chunk's ``flat_idx`` into (B, t) — to the resampled cell
+    (b, min(i, lengths_m[b]-1)); plus a mask of base cells whose doc has
+    no complete window (lengths_m == 0)."""
+    doc, offs = np.divmod(flat_idx, t)
     lm = lengths_m.astype(np.int64)[doc]
     src = np.minimum(offs, np.maximum(lm - 1, 0))
     return doc * tm + src, lm == 0
@@ -264,7 +262,8 @@ def _interactions_2d(K, ws, b, t) -> dict[str, np.ndarray]:
 def _gather(mat: np.ndarray, idx: np.ndarray, name: str,
             pool: OutPool | None) -> np.ndarray:
     """Flat gather into a pooled (reusable) output buffer when a pool is
-    given (the Arrow path), else a fresh array (the pandas/test path)."""
+    given (the Spark jobs), else into a fresh array (in-process callers
+    such as the oracle tests)."""
     flat = mat.ravel()
     if pool is None:
         return flat[idx]
@@ -350,7 +349,7 @@ def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
         core_m["close"] = ws.view("close", b, tm)
         feats_m = expand_batched(core_m, cfg)
         if avail is None:
-            gidx, nomatch = _align_gather_idx(lengths, lengths_m, t, tm)
+            gidx, nomatch = _align_gather_idx(flat_idx, lengths_m, t, tm)
         else:
             gidx, nomatch = _align_gather_idx_avail(avail, lengths,
                                                     lengths_m, m, tm)

@@ -27,7 +27,8 @@
  * usable in forked children (pyspark daemon -> worker forks).
  *
  * Env knobs: BIGCACHE_RESERVE_BYTES (default 64 GiB), BIGCACHE_MIN
- * (default 524288), BIGCACHE_DISABLE=1 to become a transparent no-op.
+ * (default 524288; rounded up to a power of two), BIGCACHE_DISABLE=1 to
+ * become a transparent no-op.
  *
  * Build: gcc -O2 -shared -fPIC -o bigcache.so bigcache.c -lpthread
  */
@@ -81,7 +82,13 @@ static void bc_init(void)
     e = getenv("BIGCACHE_MIN");
     if (e) {
         unsigned long long v = strtoull(e, NULL, 10);
-        if (v >= 65536) g_min = v;
+        if (v >= 65536 && v <= (1ULL << 40)) {
+            /* class caps are g_min << cls and blocks are carved back to
+               back from a page-aligned base, so only a power of two
+               keeps every block (and its user pointer) 64-aligned */
+            g_min = 65536;
+            while (g_min < v) g_min <<= 1;
+        }
     }
     void *p = mmap(NULL, reserve, PROT_READ | PROT_WRITE,
                    MAP_PRIVATE | MAP_ANONYMOUS | MAP_NORESERVE, -1, 0);
@@ -253,9 +260,10 @@ void *realloc(void *p, size_t size)
         return q;
     }
     if (!g_disabled && size >= g_min) {
-        /* migrate a growing glibc block into the cache */
+        /* migrate a growing glibc block into the cache; a usable size
+           of 0 means it is unknown (dlsym failed), so glibc copies */
         size_t old = malloc_usable_size(p);
-        void *q = bc_alloc(size);
+        void *q = old > 0 ? bc_alloc(size) : NULL;
         if (q != NULL) {
             memcpy(q, p, old < size ? old : size);
             __libc_free(p);

@@ -121,6 +121,35 @@ def test_realloc_and_calloc_semantics():
     assert "API-OK" in out
 
 
+def test_non_power_of_two_min_keeps_64_byte_alignment():
+    """An env-supplied ``BIGCACHE_MIN`` is rounded up to a power of two.
+    Blocks are carved back to back in ``min << cls`` capacities, so a
+    minimum that is not a multiple of 32 would step every later block
+    off the 64-byte alignment that ``malloc`` and ``posix_memalign``'s
+    in-cache path promise."""
+    out = _run("""
+        import ctypes
+        libc = ctypes.CDLL(None)
+        libc.malloc.restype = ctypes.c_void_p
+        libc.malloc.argtypes = [ctypes.c_size_t]
+        libc.posix_memalign.argtypes = [ctypes.POINTER(ctypes.c_void_p),
+                                        ctypes.c_size_t, ctypes.c_size_t]
+        libc.free.argtypes = [ctypes.c_void_p]
+        ptrs = []
+        for size in (140_000, 199_000, 300_000, 600_000) * 4:
+            ptrs.append(libc.malloc(size))
+            out_p = ctypes.c_void_p()
+            assert libc.posix_memalign(ctypes.byref(out_p), 64, size) == 0
+            ptrs.append(out_p.value)
+        assert all(p is not None and p % 64 == 0 for p in ptrs), \
+            [p % 64 for p in ptrs]
+        for p in ptrs:
+            libc.free(p)
+        print("ALIGN-OK")
+    """, BIGCACHE_MIN="100001")
+    assert "ALIGN-OK" in out
+
+
 def test_sizes_that_wrap_the_header_fail_cleanly():
     """A request within the block header of SIZE_MAX must fail like
     glibc's (NULL), not wrap ``size + HDR`` to a small class and hand

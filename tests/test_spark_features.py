@@ -335,14 +335,13 @@ def test_null_tokens_fail_loud(spark):
 
 
 def test_overlapped_kernel_paths_survive_partial_consumption(spark, tmp_path):
-    """r6: features_long/core_features_long run the kernel on a helper
-    thread overlapping the worker's socket serialization
-    (features_job._overlap_chunks).  Contract under test: (1) values
-    identical across repeated full passes (the double-buffered OutPool
-    ack protocol never lets a pooled buffer be overwritten before its
-    batch is serialized), (2) an abandoned generator (limit/early
-    termination) neither hangs nor corrupts a SUBSEQUENT full pass in
-    the same session (producer joined before the worker is reused)."""
+    """features_long/core_features_long are plain generators that reuse
+    one per-process OutPool for every chunk.  Contract under test: (1)
+    repeated full passes give identical values (a pooled buffer is never
+    overwritten before the batch wrapping it is serialized), (2) a task
+    abandoned mid-generator (limit/early termination) neither hangs nor
+    changes the values of a SUBSEQUENT full pass in the same session,
+    which reuses the same workers and pool."""
     import os
 
     from pyspark.sql import functions as F
@@ -359,7 +358,7 @@ def test_overlapped_kernel_paths_survive_partial_consumption(spark, tmp_path):
     cfg = FeatureConfig.multi_interval(multiplier_1=3, multiplier_2=12,
                                        atr_period=14)
 
-    # partial consumption first — exercises the stop/join teardown
+    # partial consumption first — abandons generators mid-task
     assert len(features_long(df, cfg, num_partitions=4)
                .limit(5).collect()) == 5
     assert len(core_features_long(df, num_partitions=4)
@@ -378,32 +377,3 @@ def test_overlapped_kernel_paths_survive_partial_consumption(spark, tmp_path):
     ca = chk(core_features_long(df, num_partitions=4), "rsi")
     cb = chk(core_features_long(df, num_partitions=4), "rsi")
     assert ca == cb and ca[0] == a[0]
-
-
-def test_overlap_join_timeout_warns(monkeypatch, caplog):
-    """A producer that ignores `stop` outlives the bounded join in
-    _overlap_chunks; that must log one warning naming the thread instead
-    of passing silently."""
-    import logging
-    import threading
-
-    from atr_adaptive_laguerre_spark.engine import features_job
-
-    monkeypatch.setattr(features_job, "_OVERLAP_JOIN_TIMEOUT_S", 0.05)
-    caplog.set_level(logging.WARNING, logger=features_job.__name__)
-    release = threading.Event()
-
-    def produce(emit, acquire_pool):
-        emit("b0")
-        release.wait(timeout=30.0)      # never polls `stop`
-
-    gen = features_job._overlap_chunks(produce)
-    try:
-        assert next(gen) == "b0"
-        gen.close()                     # consumer abandons the task
-    finally:
-        release.set()
-    warnings = [r for r in caplog.records
-                if r.name == features_job.__name__]
-    assert len(warnings) == 1
-    assert "kernel-compute-overlap" in warnings[0].getMessage()
