@@ -5,16 +5,14 @@ shape: one row per entity holding its whole ``tokens`` array).  Each
 entity arrives complete in one row, so the sequential recurrence runs
 without any exchange; parallelism and load balance come from Parquet
 file splits (bytes ∝ tokens ∝ kernel work).  Token values are read
-straight from the Arrow list buffers (:func:`_arrow_doc_chunks`) and
-output columns are wrapped zero-copy from the kernel's pooled NumPy
-buffers.
+straight from the Arrow list buffers (:func:`_arrow_doc_chunks`), and
+each output column is a fresh gather of the kernel's workspace slab
+that the emitted Arrow batch wraps zero-copy and then owns.
 
-Each job's function is a plain generator over the process's one output
-pool (``kernel.batched.get_out_pool``): the Python worker serializes a
-yielded batch to the JVM before it resumes the generator, so the next
-chunk may overwrite the buffers the previous batch wraps (pinned by a
-many-chunk test).  Compute and serialization therefore take turns on
-the worker's one thread.
+Each job's function is a plain generator: compute a chunk, yield its
+batch, compute the next.  No yielded batch shares a buffer with a later
+chunk, so batches stay valid however long the consumer holds them
+(pinned by a many-chunk test).
 
 * :func:`features_long` (43 / 169 / 121 feature columns) and
   :func:`core_features_long` (the 10 core outputs) emit long form, one
@@ -52,6 +50,9 @@ from pyspark.sql.types import (
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
 from atr_adaptive_laguerre_spark.kernel.batched import core_loop_batched
+from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
+    _flat_explode_idx,
+)
 from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
 
 #: cap on padded cells (docs x max_len) per kernel invocation; bounds the
@@ -103,7 +104,7 @@ def _length_chunks(lengths: np.ndarray, cell_budget: int) -> Iterator[np.ndarray
         start = end
 
 
-def _chunk_feature_cols(mat, lens, cfg: FeatureConfig, pool=None):
+def _chunk_feature_cols(mat, lens, cfg: FeatureConfig):
     """OHLCV derivation + kernel dispatch for one padded chunk — the ONE
     definition the feature jobs (long/doc/checksum) share, so
     availability gating and kernel dispatch cannot drift between them."""
@@ -118,9 +119,8 @@ def _chunk_feature_cols(mat, lens, cfg: FeatureConfig, pool=None):
     if cfg.is_multi_interval:
         avail = (tokens_to_availability_batched(mat)
                  if cfg.availability else None)
-        return multi_interval_long(high, low, close, lens, cfg,
-                                   avail=avail, pool=pool)
-    return single_interval_long(high, low, close, lens, cfg, pool=pool)
+        return multi_interval_long(high, low, close, lens, cfg, avail=avail)
+    return single_interval_long(high, low, close, lens, cfg)
 
 
 def core_features_long(doc_df: DataFrame,
@@ -135,23 +135,19 @@ def core_features_long(doc_df: DataFrame,
     underuse the cluster; at real scale leave it unset.
 
     Physical path is :func:`features_long`'s chunk loop: tokens are read
-    straight from the Arrow list buffers, the kernel outputs are gathered
-    into pooled buffers and wrapped zero-copy — no pandas block
-    consolidation on either side of the boundary.  Values are the
+    straight from the Arrow list buffers, each kernel output is gathered
+    into a fresh array that its Arrow batch wraps zero-copy — no pandas
+    block consolidation on either side of the boundary.  Values are the
     ``core_loop_batched`` outputs bit for bit (tested against the loop
     oracle).
     """
     cfg = cfg or FeatureConfig()
 
-    def core_cols(mat, lens, fe, pool):
+    def core_cols(mat, lens, fe):
         high, low, close = tokens_to_ohlcv_batched(mat)
         out = core_loop_batched(high, low, close, cfg.atr_period,
                                 cfg.adaptive_offset, copy_out=False)
-        cols = {}
-        for k in CORE_OUTPUTS:
-            buf = cols[k] = pool.get(f"core_{k}", len(fe))
-            np.take(out[k].ravel(), fe, out=buf)
-        return cols
+        return {k: out[k].ravel()[fe] for k in CORE_OUTPUTS}
 
     return _long_form_job(doc_df, core_cols, CORE_OUTPUTS, num_partitions)
 
@@ -194,11 +190,10 @@ def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
     import pyarrow.compute as pc
 
     rep = pa.array(np.repeat(idx.astype(np.int64), lens))
-    offsets = np.concatenate([np.arange(n, dtype=np.int32) for n in lens])
     arrays = [
         pc.take(src_col, rep),
         pc.take(did_col, rep),
-        pa.array(offsets),
+        pa.array(_flat_explode_idx(lens, 0).astype(np.int32)),
         pa.array(chunk_flat.astype(np.int32, copy=False)),
     ]
     arrays += [pa.array(cols[c]) for c in value_cols]
@@ -212,16 +207,13 @@ def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
 
 def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
     """Parse a doc-grain Arrow RecordBatch and yield padding-efficient
-    chunks: (doc_row_idx, chunk_flat_tokens, lengths, padded_int64_matrix).
+    chunks: (doc_row_idx, chunk_flat_tokens, lengths, padded_int64_matrix,
+    flat_idx), where ``flat_idx`` selects the real cells of the matrix.
 
     Zero pandas involvement: token values come straight out of the Arrow
     list buffer; the padded matrix is one vectorized scatter.
     """
     import pyarrow.compute as pc
-
-    from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
-        _flat_explode_idx,
-    )
 
     tokens = rb.column(rb.schema.get_field_index("tokens"))
     if tokens.null_count:
@@ -237,28 +229,14 @@ def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
     np.cumsum(lengths, out=starts[1:])
     for idx in _length_chunks(lengths, cell_budget):
         lens = lengths[idx]
-        gidx = np.concatenate(
-            [np.arange(starts[i], starts[i] + lengths[i]) for i in idx])
-        chunk_flat = flat[gidx]
-        t_max = int(lens.max()) if len(lens) else 0
-        mat = _padded_int_buffer(len(idx), t_max)
+        t_max = int(lens.max())
         fe = _flat_explode_idx(lens, t_max)
+        # doc i's token j sits at fe = i*t_max + j and at starts[idx[i]] + j
+        chunk_flat = flat[fe + np.repeat(
+            starts[idx] - np.arange(len(idx), dtype=np.int64) * t_max, lens)]
+        mat = np.empty((len(idx), t_max), np.int64)
         mat.ravel()[fe] = chunk_flat
         yield idx, chunk_flat, lens, mat, fe
-
-
-_PAD_INT: dict[str, np.ndarray | None] = {"buf": None}
-
-
-def _padded_int_buffer(b: int, t: int) -> np.ndarray:
-    """Reusable int64 padded-token buffer (fresh big allocations are
-    page-fault bound on virtualized hosts; see kernel.batched)."""
-    need = b * t
-    buf = _PAD_INT["buf"]
-    if buf is None or buf.size < need:
-        buf = _PAD_INT["buf"] = np.empty(max(need, CELL_BUDGET),
-                                         dtype=np.int64)
-    return buf[:need].reshape(b, t)
 
 
 def _long_form_job(doc_df: DataFrame, chunk_cols, value_cols,
@@ -266,22 +244,18 @@ def _long_form_job(doc_df: DataFrame, chunk_cols, value_cols,
                    cell_budget: int = CELL_BUDGET) -> DataFrame:
     """The long-form ``mapInArrow`` shared by :func:`features_long` and
     :func:`core_features_long`: one batch per kernel chunk, with
-    ``chunk_cols(mat, lens, flat_idx, pool)`` returning the chunk's
-    ``value_cols`` written into the process's one output pool (reused
-    chunk after chunk; see the module docstring for why that is safe)."""
+    ``chunk_cols(mat, lens, flat_idx)`` returning the chunk's
+    ``value_cols`` as fresh 1-D arrays that the batch then owns."""
     if num_partitions:
         doc_df = doc_df.repartition(num_partitions)
 
     def run(batches):
-        from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
-
-        pool = get_out_pool()
         for rb in batches:
             src_col = rb.column(rb.schema.get_field_index("source"))
             did_col = rb.column(rb.schema.get_field_index("doc_id"))
             for idx, chunk_flat, lens, mat, fe in _arrow_doc_chunks(
                     rb, cell_budget):
-                cols = chunk_cols(mat, lens, fe, pool)
+                cols = chunk_cols(mat, lens, fe)
                 yield _long_batch(src_col, did_col, idx, lens, chunk_flat,
                                   cols, value_cols)
 
@@ -300,11 +274,11 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     shuffle unless ``num_partitions`` forces a spread.
 
     Physical path: ``mapInArrow`` — token values are read straight from
-    the Arrow list buffers and every output column is built zero-copy
-    from the kernel's pooled NumPy arrays (no pandas block consolidation,
-    which would copy the whole 121-column matrix once more).  The task's
-    generator computes a chunk, yields its batch and computes the next
-    only after the worker has serialized it, reusing one output pool.
+    the Arrow list buffers and every output column is a fresh NumPy
+    gather that its Arrow batch wraps zero-copy and owns (no pandas block
+    consolidation, which would copy the whole 121-column matrix once
+    more).  The task's generator computes a chunk, yields its batch and
+    computes the next.
 
     ``columns`` projects the OUTPUT at the worker: Catalyst cannot push
     a projection through a Python map node, so a downstream select still
@@ -317,8 +291,8 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     cfg = cfg or FeatureConfig()
     feat_cols = _projected_columns(cfg, columns)
 
-    def feature_cols(mat, lens, _fe, pool):
-        return _chunk_feature_cols(mat, lens, cfg, pool=pool)
+    def feature_cols(mat, lens, _fe):
+        return _chunk_feature_cols(mat, lens, cfg)
 
     return _long_form_job(doc_df, feature_cols, feat_cols, num_partitions,
                           cell_budget)
@@ -335,7 +309,8 @@ def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     the per-row JVM ingest cost (columnar->row conversion, row accounting)
     collapses, which matters when the 121-column matrix is the dominant
     byte stream.  List columns are assembled zero-copy from the kernel's
-    pooled 1-D outputs (ListArray.from_arrays over the chunk offsets).
+    freshly gathered 1-D outputs (ListArray.from_arrays over the chunk
+    offsets).
 
     ``columns`` worker-projects the output exactly like
     :func:`features_long` (Catalyst cannot prune through the Python map
@@ -359,14 +334,11 @@ def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     def run(batches):
         import pyarrow.compute as pc
 
-        from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
-
-        pool = get_out_pool()
         for rb in batches:
             src_col = rb.column(rb.schema.get_field_index("source"))
             did_col = rb.column(rb.schema.get_field_index("doc_id"))
             for idx, chunk_flat, lens, mat, _fe in _arrow_doc_chunks(rb):
-                cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
+                cols = _chunk_feature_cols(mat, lens, cfg)
                 offs = np.zeros(len(lens) + 1, dtype=np.int32)
                 np.cumsum(lens, out=offs[1:])
                 pa_offs = pa.array(offs)
@@ -439,12 +411,9 @@ def features_checksum(doc_df: DataFrame, cfg: FeatureConfig | None = None,
               ", ".join(f"{c}_sum double" for c in feat_cols))
 
     def run(batches):
-        from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
-
-        pool = get_out_pool()
         for rb in batches:
             for idx, chunk_flat, lens, mat, _fe in _arrow_doc_chunks(rb):
-                cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
+                cols = _chunk_feature_cols(mat, lens, cfg)
                 n_nan = sum(int(np.isnan(cols[c]).sum())
                             for c in feat_cols)
                 arrays = [pa.array([int(lens.sum())], pa.int64()),

@@ -16,6 +16,7 @@ Scale rationale (100 TB / 1000-executor target; tested on local[N]):
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
 import re
@@ -31,8 +32,9 @@ log = logging.getLogger(__name__)
 #: inherit this environment in local mode; ``spark.executorEnv.*``
 #: propagates it to cluster executors).  Page-fault handling collapses
 #: under many-core concurrency on virtualized hosts, so freed buffers
-#: must STAY MAPPED — the per-process analogue of the kernel-side
-#: Workspace/OutPool discipline:
+#: must STAY MAPPED — the per-process analogue of the kernel's
+#: ``Workspace`` slabs, and what lets the feature jobs allocate a fresh
+#: output column per chunk without re-faulting it:
 #:
 #: * ``MALLOC_TRIM_THRESHOLD_=-1`` — never give the main-arena heap
 #:   back to the OS.
@@ -66,8 +68,10 @@ _NATIVE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
 
 
 def _bigcache_preload() -> str | None:
-    """Path to the ``native/bigcache.so`` retaining-allocator shim,
-    compiling it on first use when a C toolchain is present.
+    """Path to the ``native/bigcache-<hash>.so`` retaining-allocator shim,
+    compiling it on first use when a C toolchain is present.  The name
+    pins source and flags, so an edit to ``bigcache.c`` never preloads a
+    stale build.
 
     glibc cannot retain EVERY large block (the mmap threshold is capped
     at 32 MiB and one-arena mode fragments under 32 interleaved JVM
@@ -80,15 +84,17 @@ def _bigcache_preload() -> str | None:
     logged warning when its compile failed; BIGCACHE_DISABLE=1 turns the
     loaded shim into a no-op.
     """
-    so = os.path.join(_NATIVE_DIR, "bigcache.so")
     src = os.path.join(_NATIVE_DIR, "bigcache.c")
     if not os.path.exists(src):
+        so = os.path.join(_NATIVE_DIR, "bigcache.so")
         return so if os.path.exists(so) else None
     with open(src, "rb") as f:
         source = f.read()
+    flags = ("-O2", "-shared", "-fPIC")
+    tag = hashlib.sha256(source + " ".join(flags).encode()).hexdigest()
+    so = os.path.join(_NATIVE_DIR, f"bigcache-{tag[:12]}.so")
     try:
-        return build_shared(source, so, ("-O2", "-shared", "-fPIC"),
-                            ("-lpthread", "-ldl"))
+        return build_shared(source, so, flags, ("-lpthread", "-ldl"))
     except BuildError as e:
         log.warning("bigcache allocator shim unavailable (%s); the "
                     "session runs without it", e)

@@ -97,41 +97,6 @@ def get_workspace(cells: int = DEFAULT_CELLS) -> Workspace:
     return _WS
 
 
-class OutPool:
-    """Persistent, named 1-D float64 output buffers.
-
-    Fresh page-faulting allocations collapse under many-core concurrency
-    on virtualized hosts, so per-chunk *output* columns are also written
-    into reusable buffers.  Safe in ``mapInArrow`` because its functions
-    are plain generators: the worker serializes each yielded RecordBatch
-    to the socket before the generator resumes, so a buffer may be
-    reused for the next chunk.  Nothing else may fill a pool while a
-    batch that wraps its buffers is still unsent.
-    """
-
-    def __init__(self) -> None:
-        self._bufs: dict[str, np.ndarray] = {}
-
-    def get(self, name: str, n: int, dtype=np.float64) -> np.ndarray:
-        buf = self._bufs.get(name)
-        if buf is None or buf.size < n or buf.dtype != dtype:
-            buf = self._bufs[name] = np.empty(
-                max(n, DEFAULT_CELLS), dtype=dtype)
-        return buf[:n]
-
-
-_OUT_POOL: OutPool | None = None
-
-
-def get_out_pool() -> OutPool:
-    """The process's one output pool, shared by every feature job a
-    Python worker runs (one task at a time, one chunk at a time)."""
-    global _OUT_POOL
-    if _OUT_POOL is None:
-        _OUT_POOL = OutPool()
-    return _OUT_POOL
-
-
 def pad_sequences(seqs: list[np.ndarray], dtype=np.float64
                   ) -> tuple[np.ndarray, np.ndarray]:
     """Stack variable-length 1-D arrays into a zero-padded (B, T) matrix.

@@ -28,7 +28,7 @@ import numpy as np
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.kernel.batched import (
-    OutPool, core_loop_batched, get_workspace,
+    core_loop_batched, get_workspace,
 )
 from atr_adaptive_laguerre_spark.kernel.expander_batched import expand_batched
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
@@ -45,13 +45,14 @@ INTERACTION_INPUTS = (
 
 
 def _flat_explode_idx(lengths: np.ndarray, t: int) -> np.ndarray:
-    """Flat indices selecting the valid cells of a (B, T) matrix in doc
-    order: [b*T + i for b in docs for i in range(lengths[b])]."""
+    """Flat int64 indices selecting the valid cells of a (B, T) matrix in
+    doc order: [b*T + i for b in docs for i in range(lengths[b])].  With
+    ``t=0`` they are each token's offset within its doc."""
     reps = lengths.astype(np.int64)
-    row_base = np.repeat(np.arange(len(lengths), dtype=np.int64) * t, reps)
-    offs = np.concatenate([np.arange(n, dtype=np.int64) for n in reps]) \
-        if len(reps) else np.empty(0, dtype=np.int64)
-    return row_base + offs
+    starts = np.cumsum(reps) - reps
+    return (np.arange(int(reps.sum()), dtype=np.int64)
+            + np.repeat(np.arange(len(reps), dtype=np.int64) * t - starts,
+                        reps))
 
 
 def _resample_hlc(high, low, close, lengths, m, ws):
@@ -259,23 +260,9 @@ def _interactions_2d(K, ws, b, t) -> dict[str, np.ndarray]:
     return out
 
 
-def _gather(mat: np.ndarray, idx: np.ndarray, name: str,
-            pool: OutPool | None) -> np.ndarray:
-    """Flat gather into a pooled (reusable) output buffer when a pool is
-    given (the Spark jobs), else into a fresh array (in-process callers
-    such as the oracle tests)."""
-    flat = mat.ravel()
-    if pool is None:
-        return flat[idx]
-    out = pool.get(name, len(idx))
-    np.take(flat, idx, out=out)
-    return out
-
-
 def single_interval_long(high: np.ndarray, low: np.ndarray,
                          close: np.ndarray, lengths: np.ndarray,
-                         cfg: FeatureConfig,
-                         pool: OutPool | None = None) -> dict[str, np.ndarray]:
+                         cfg: FeatureConfig) -> dict[str, np.ndarray]:
     """43-column single-interval pipeline on padded (B, T) inputs,
     returning long-form 1-D float64 arrays (reference
     ``fit_transform_features`` single-interval branch,
@@ -287,14 +274,12 @@ def single_interval_long(high: np.ndarray, low: np.ndarray,
                              cfg.adaptive_offset, copy_out=False)
     core["close"] = ws.view("close", b, t)
     feats = expand_batched(core, cfg)
-    return {col: _gather(feats[col], flat_idx, col, pool)
-            for col in FEATURE_COLUMNS}
+    return {col: feats[col].ravel()[flat_idx] for col in FEATURE_COLUMNS}
 
 
 def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
                         lengths: np.ndarray, cfg: FeatureConfig,
                         avail: np.ndarray | None = None,
-                        pool: OutPool | None = None,
                         ) -> dict[str, np.ndarray]:
     """Full multi-interval pipeline on padded (B, T) inputs, returning
     long-form 1-D float64 arrays (total real tokens, docs in order).
@@ -316,8 +301,7 @@ def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
     feats = expand_batched(core, cfg)
     K: dict[tuple[str, str], np.ndarray] = {}
     for col in FEATURE_COLUMNS:
-        out[f"{col}_base"] = _gather(feats[col], flat_idx,
-                                     f"{col}_base", pool)
+        out[f"{col}_base"] = feats[col].ravel()[flat_idx]
     for col in INTERACTION_INPUTS:
         slab = ws.view(f"mi_kb_{col}", b, t)
         np.copyto(slab, feats[col])
@@ -329,10 +313,7 @@ def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
         res, lengths_m = _resample_hlc(high, low, close, lengths, m, ws)
         if res is None:
             for col in FEATURE_COLUMNS:
-                buf = (pool.get(f"{col}_{tag}", len(flat_idx))
-                       if pool is not None else np.empty(len(flat_idx)))
-                buf[:] = np.nan
-                out[f"{col}_{tag}"] = buf
+                out[f"{col}_{tag}"] = np.full(len(flat_idx), np.nan)
             for col in INTERACTION_INPUTS:
                 slab = ws.view(f"mi_k{g}_{col}", b, t)
                 slab[:] = np.nan
@@ -354,7 +335,7 @@ def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
             gidx, nomatch = _align_gather_idx_avail(avail, lengths,
                                                     lengths_m, m, tm)
         for col in FEATURE_COLUMNS:
-            vals = _gather(feats_m[col], gidx, f"{col}_{tag}", pool)
+            vals = feats_m[col].ravel()[gidx]
             if nomatch.any():
                 vals[nomatch] = np.nan
             out[f"{col}_{tag}"] = vals
@@ -370,7 +351,7 @@ def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
     # output cell is real.
     inter = _interactions_2d(K, ws, b, t)
     for col in INTERACTION_COLUMNS:
-        out[col] = _gather(inter[col], flat_idx, col, pool)
+        out[col] = inter[col].ravel()[flat_idx]
 
     if cfg.filter_redundancy:
         for col in REDUNDANT_FEATURES:

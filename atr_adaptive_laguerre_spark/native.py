@@ -2,11 +2,11 @@
 
 Two libraries compile from C source on first use when a C toolchain is
 present: the per-step kernel recurrences (``kernel/recurrences.c``) and
-the ``native/bigcache.so`` allocator shim.  Several Python workers can
-import the kernel and build at once, so a build compiles into a
-temporary file in the target directory and ``os.replace``-s it into
-place: a reader sees either no library or a complete one, never a
-half-written file.
+the ``native/bigcache.c`` allocator shim, each named by a hash of its
+source and flags.  Several Python workers can import the kernel and
+build at once, so a build compiles into a temporary file in the target
+directory and ``os.replace``-s it into place: a reader sees either no
+library or a complete one, never a half-written file.
 """
 
 from __future__ import annotations

@@ -9,7 +9,7 @@ from atr_adaptive_laguerre_spark.data.corpus import make_tokens, tokens_to_ohlcv
 from atr_adaptive_laguerre_spark.kernel.batched import pad_sequences
 from atr_adaptive_laguerre_spark.kernel.expander_ref import INT_COLUMNS
 from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
-    multi_interval_long,
+    _flat_explode_idx, multi_interval_long,
 )
 from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
     multi_interval_columns, multi_interval_features,
@@ -141,3 +141,16 @@ class TestNumpyFallback:
     test_long_and_short = staticmethod(
         test_multi_interval_long_and_short_docs)
     test_hypothesis = staticmethod(test_multi_interval_hypothesis)
+
+
+@given(st.lists(st.integers(0, 40), max_size=30), st.integers(0, 3))
+@settings(max_examples=200, deadline=None)
+def test_flat_explode_idx_matches_loop(lengths, pad):
+    """The explode index equals its per-doc loop definition, for a padded
+    (B, T) stride and for t=0 (each token's offset within its doc)."""
+    lens = np.array(lengths, dtype=np.int64)
+    for t in (0, max(lengths, default=0) + pad):
+        want = [b * t + i for b, n in enumerate(lengths) for i in range(n)]
+        got = _flat_explode_idx(lens, t)
+        assert got.dtype == np.int64
+        np.testing.assert_array_equal(got, np.array(want, dtype=np.int64))

@@ -137,6 +137,23 @@ def test_bigcache_compile_failure_warns(monkeypatch, tmp_path, caplog):
     assert sorted(os.listdir(tmp_path)) == ["bigcache.c"]
 
 
+def test_bigcache_rebuilds_after_source_edit(monkeypatch, tmp_path):
+    """An edit to the shim's source builds and preloads a new library
+    instead of reusing the one built from the old source."""
+    if native.compiler() is None:
+        pytest.skip("no C toolchain to build the shim")
+    src = tmp_path / "bigcache.c"
+    shutil.copy(os.path.join(session._NATIVE_DIR, "bigcache.c"), src)
+    monkeypatch.setattr(session, "_NATIVE_DIR", str(tmp_path))
+
+    before = session._bigcache_preload()
+    assert before is not None and os.path.exists(before)
+    src.write_bytes(src.read_bytes() + b"\nint bigcache_edited = 1;\n")
+    after = session._bigcache_preload()
+    assert after is not None and after != before
+    assert os.path.exists(after)
+
+
 def test_concurrent_builds_install_atomically(tmp_path):
     """More builders than cores race on one target: every one returns the
     installed library, it loads, and no temporary file is left."""

@@ -164,12 +164,11 @@ def test_checksum_nan_count_on_short_docs(spark, tmp_path):
 
 
 def test_zero_copy_arrow_yield_across_chunks(spark, doc_df):
-    """ADVICE r1: the mapInArrow path yields RecordBatches built
-    zero-copy over pooled (reused) output buffers; this pins the
-    assumption that PySpark's serializer writes each yielded batch before
-    the generator resumes (buffer reuse would otherwise corrupt earlier
-    batches).  A tiny cell budget forces MANY chunks per task, so any
-    buffering serializer would mangle all but the last chunk."""
+    """ADVICE r1: the mapInArrow path yields RecordBatches that wrap the
+    kernel's output columns zero-copy.  A tiny cell budget forces MANY
+    chunks per task; the values must equal a run with the default budget,
+    so no chunk's batch may be changed by the chunks computed after it,
+    whenever the serializer writes it."""
     small = (features_long(doc_df, CFG121, cell_budget=2048).toPandas()
              .sort_values(["source", "doc_id", "offset"])
              .reset_index(drop=True))
@@ -183,6 +182,32 @@ def test_zero_copy_arrow_yield_across_chunks(spark, doc_df):
         b = normal[c].to_numpy()
         ok = (a == b) | (np.isnan(a) & np.isnan(b))
         assert ok.all(), (c, int((~ok).sum()))
+
+
+def test_yielded_batches_own_their_columns(corpus_parquet):
+    """Every batch the long-form generator yields owns its columns: with
+    all batches held at once (no serializer between chunks), every value
+    still equals the per-document reference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    class _Stub:
+        def mapInArrow(self, fn, schema):
+            return fn
+
+    table = pq.read_table(corpus_parquet).combine_chunks()
+    rb, = table.to_batches()
+    run = features_long(_Stub(), CFG121, cell_budget=2048)
+    batches = list(run(iter([rb])))
+    assert len(batches) > 1
+    got = (pa.Table.from_batches(batches).to_pandas()
+           .sort_values(["source", "doc_id", "offset"])
+           .reset_index(drop=True))
+    want = _local_expected(table.to_pandas(), CFG121)
+    assert len(got) == len(want)
+    for c in ["offset", "token"] + feature_columns_for(CFG121):
+        np.testing.assert_array_equal(got[c].to_numpy(), want[c].to_numpy(),
+                                      err_msg=c)
 
 
 def test_features_long_column_projection(spark, doc_df):
@@ -335,13 +360,12 @@ def test_null_tokens_fail_loud(spark):
 
 
 def test_overlapped_kernel_paths_survive_partial_consumption(spark, tmp_path):
-    """features_long/core_features_long are plain generators that reuse
-    one per-process OutPool for every chunk.  Contract under test: (1)
-    repeated full passes give identical values (a pooled buffer is never
-    overwritten before the batch wrapping it is serialized), (2) a task
-    abandoned mid-generator (limit/early termination) neither hangs nor
-    changes the values of a SUBSEQUENT full pass in the same session,
-    which reuses the same workers and pool."""
+    """features_long/core_features_long are plain generators whose
+    batches own freshly gathered columns.  Contract under test: (1)
+    repeated full passes give identical values, (2) a task abandoned
+    mid-generator (limit/early termination) neither hangs nor changes the
+    values of a SUBSEQUENT full pass in the same session, which reuses
+    the same workers and their kernel workspaces."""
     import os
 
     from pyspark.sql import functions as F
