@@ -118,16 +118,16 @@ def enrich_rangebars(docs: DataFrame, cfg: FeatureConfig | None = None,
                      ) -> DataFrame:
     """Rangebar-plugin analog over the doc-grain token table: append the
     curated 6-column ``laguerre_*`` subset of the 43-feature expansion
-    (projection + rename over ``features_long`` — M3 machinery).
-    Idempotent like the reference: returns the input unchanged when the
-    first output column already exists."""
+    (projection + rename over ``features_long``, which ships only those
+    6 columns from the worker).  Idempotent like the reference: returns
+    the input unchanged when the first output column already exists."""
     from atr_adaptive_laguerre_spark.engine.features_job import features_long
 
     first = next(iter(RANGEBAR_FEATURE_MAP.values()))
     if first in docs.columns:
         return docs
     cfg = cfg or FeatureConfig()
-    feats = features_long(docs, cfg)
+    feats = features_long(docs, cfg, columns=list(RANGEBAR_FEATURE_MAP))
     return feats.select(
         "source", "doc_id", "offset", "token",
         *[F.col(src).alias(dst) for src, dst in RANGEBAR_FEATURE_MAP.items()])

@@ -152,8 +152,11 @@ def tokens_to_availability_batched(tok_mat: np.ndarray) -> np.ndarray:
 
 def tokens_to_ohlcv_batched(tok_mat: np.ndarray
                             ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batched variant over a zero-padded (B, T) int matrix; same math as
-    :func:`tokens_to_ohlcv` applied along axis 1."""
+    """Batched variant over a padded (B, T) int matrix; same math as
+    :func:`tokens_to_ohlcv` applied along axis 1.  The padding may hold
+    any value (the feature jobs leave it uninitialized): each row's
+    cumulative sum runs left to right, so padding only reaches padding
+    cells, which the jobs' gather discards."""
     t = np.asarray(tok_mat, dtype=np.int64)
     step = ((t % 997) - 498).astype(np.float64) / 100.0
     close = 100.0 + np.cumsum(step, axis=1)

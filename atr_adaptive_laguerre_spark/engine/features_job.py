@@ -6,8 +6,8 @@ entity arrives complete in one row, so the sequential recurrence runs
 without any exchange; parallelism and load balance come from Parquet
 file splits (bytes ∝ tokens ∝ kernel work).  Token values are read
 straight from the Arrow list buffers (:func:`_arrow_doc_chunks`), and
-each output column is a fresh gather of the kernel's workspace slab
-that the emitted Arrow batch wraps zero-copy and then owns.
+each output column is a fresh gather of the kernel's (B, T) result that
+the emitted Arrow batch wraps zero-copy and then owns.
 
 Each job's function is a plain generator: compute a chunk, yield its
 batch, compute the next.  No yielded batch shares a buffer with a later

@@ -32,9 +32,9 @@ log = logging.getLogger(__name__)
 #: inherit this environment in local mode; ``spark.executorEnv.*``
 #: propagates it to cluster executors).  Page-fault handling collapses
 #: under many-core concurrency on virtualized hosts, so freed buffers
-#: must STAY MAPPED — the per-process analogue of the kernel's
-#: ``Workspace`` slabs, and what lets the feature jobs allocate a fresh
-#: output column per chunk without re-faulting it:
+#: must STAY MAPPED — that is what lets the kernel's expander,
+#: interactions and feature jobs allocate fresh arrays per chunk
+#: without re-faulting them:
 #:
 #: * ``MALLOC_TRIM_THRESHOLD_=-1`` — never give the main-arena heap
 #:   back to the OS.

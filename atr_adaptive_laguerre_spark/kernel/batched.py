@@ -17,13 +17,10 @@ Bit-exactness: every float64 operation is applied in the same order as the
 per-entity oracle (``reference_impl.core_loop``), on either backend, so
 results are identical to the last bit — verified by tests.
 
-Memory discipline: fresh large allocations are ~15x slower than writes to
-already-mapped pages on virtualized hosts (page-fault bound), so all large
-intermediates live in a per-process :class:`Workspace` that is allocated
-once and reused across kernel calls (Spark reuses Python workers across
-tasks, so the cost amortizes to zero).  Every elementwise step uses
-``out=`` into workspace views; the only fresh allocations are the returned
-output arrays themselves.
+Memory: the core stages write into a per-process :class:`Workspace` of
+the fixed slabs named in :data:`_SLABS` (Spark reuses Python workers, so
+they are mapped once); every later stage (expander, resample,
+interactions) allocates the arrays it returns.
 
 Reference semantics: ``/root/reference/src/atr_adaptive_laguerre/core/_numba_kernel.py:14-166``.
 """
@@ -48,12 +45,8 @@ _SLABS = (
 
 
 class Workspace:
-    """Preallocated flat buffers reshaped per chunk; one per process.
-
-    Slabs are created on first use by name and kept for the life of the
-    process (Spark reuses Python workers, so the page-fault cost of the
-    first allocation amortizes across all subsequent tasks).
-    """
+    """The core kernel's flat buffers, one per :data:`_SLABS` name plus the
+    per-batch state vectors, reshaped per chunk; one per process."""
 
     def __init__(self, cells: int = DEFAULT_CELLS):
         self.cells = cells
@@ -67,14 +60,11 @@ class Workspace:
     def grow(self, cells: int) -> None:
         if cells > self.cells:
             self.cells = cells
-            for n in list(self._flat):
+            for n in _SLABS:
                 self._flat[n] = np.empty(cells, dtype=np.float64)
 
     def view(self, name: str, b: int, t: int) -> np.ndarray:
-        buf = self._flat.get(name)
-        if buf is None:
-            buf = self._flat[name] = np.empty(self.cells, dtype=np.float64)
-        return buf[: b * t].reshape(b, t)
+        return self._flat[name][: b * t].reshape(b, t)
 
     def vec(self, i: int, b: int) -> np.ndarray:
         # NOTE: growth is safe mid-kernel only because every caller asks
@@ -212,14 +202,9 @@ def _laguerre_cascade(close, gamma, ws, b, t, init=None):
     if rec is not None:
         rec.laguerre_cascade(close, gamma, L0, L1, L2, L3, init)
         return L0, L1, L2, L3
-    cT = ws.view("cascT_c", t, b)
-    np.copyto(cT, close.T)
-    gT = ws.view("cascT_g", t, b)
-    np.copyto(gT, gamma.T)
-    L0T = ws.view("cascT_L0", t, b)
-    L1T = ws.view("cascT_L1", t, b)
-    L2T = ws.view("cascT_L2", t, b)
-    L3T = ws.view("cascT_L3", t, b)
+    cT = np.ascontiguousarray(close.T)
+    gT = np.ascontiguousarray(gamma.T)
+    L0T, L1T, L2T, L3T = (np.empty((t, b)) for _ in range(4))
     l0, l1, l2, l3 = (ws.vec(j, b) for j in range(4))
     for j, lj in enumerate((l0, l1, l2, l3)):
         lj[:] = 0.0 if init is None else init[:, j]
@@ -342,7 +327,8 @@ def core_loop_batched(high: np.ndarray, low: np.ndarray, close: np.ndarray,
     Values at columns beyond an entity's true length are garbage (callers
     mask by length).  Returns a dict of (B, T) float64 arrays keyed by
     :data:`CORE_OUTPUTS`.  With ``copy_out=False`` the returned arrays are
-    views into the shared workspace — valid only until the next call.
+    views into the shared workspace — valid only until the next core
+    call.
     """
     b, t = high.shape
     ws = get_workspace(max(DEFAULT_CELLS, b * t))

@@ -12,10 +12,9 @@ Batched equivalent of ``multi_interval_ref.multi_interval_features``
 * 40 cross-interval interactions on (B, T) slabs
   (``cross_interval.py:35-441``), then materialized.
 
-Only the 7 interaction-input columns per grain are retained as 2-D slabs;
-all other feature columns stream straight to 1-D output — bounding the
-workspace footprint at ~30 persistent slabs regardless of the 169-column
-output width.
+Each grain's 43 columns are gathered to 1-D as soon as the grain is
+expanded; only its 7 interaction inputs go back onto the base (B, T)
+grid, scattered into zeroed arrays, for the interactions.
 
 Docs with no complete resampled window (n_tok < multiplier) get NaN mult
 features (documented deviation: the reference's lookback gate rejects such
@@ -27,9 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
-from atr_adaptive_laguerre_spark.kernel.batched import (
-    core_loop_batched, get_workspace,
-)
+from atr_adaptive_laguerre_spark.kernel.batched import core_loop_batched
 from atr_adaptive_laguerre_spark.kernel.expander_batched import expand_batched
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
 from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
@@ -55,9 +52,10 @@ def _flat_explode_idx(lengths: np.ndarray, t: int) -> np.ndarray:
                         reps))
 
 
-def _resample_hlc(high, low, close, lengths, m, ws):
+def _resample_hlc(high, low, close, lengths, m):
     """Positional tumbling resample on (B, T): high=max, low=min,
-    close=last over windows of exactly m bars; trailing partials dropped."""
+    close=last over windows of exactly m bars; trailing partials dropped.
+    Returns fresh (B, T//m) arrays."""
     b, t = high.shape
     tm = t // m
     lengths_m = lengths // m
@@ -66,12 +64,9 @@ def _resample_hlc(high, low, close, lengths, m, ws):
     hv = high[:, : tm * m].reshape(b, tm, m)
     lv = low[:, : tm * m].reshape(b, tm, m)
     cv = close[:, : tm * m].reshape(b, tm, m)
-    hm = ws.view("mi_rs_h", b, tm)
-    lm = ws.view("mi_rs_l", b, tm)
-    cm = ws.view("mi_rs_c", b, tm)
-    np.max(hv, axis=2, out=hm)
-    np.min(lv, axis=2, out=lm)
-    cm[:] = cv[:, :, m - 1]
+    hm = np.max(hv, axis=2)
+    lm = np.min(lv, axis=2)
+    cm = cv[:, :, m - 1].copy()
     return (hm, lm, cm), lengths_m
 
 
@@ -115,11 +110,11 @@ def _align_gather_idx(flat_idx: np.ndarray, lengths_m: np.ndarray,
     return doc * tm + src, lm == 0
 
 
-def _rolling_sum_shift1(x, w, out):
+def _rolling_sum_shift1(x, w):
     """rolling(w, min_periods=1).sum().shift(1).fillna(0) — the
     "recent events, excluding now" pattern (cross_interval.py:318,376)."""
     t = x.shape[1]
-    out[:] = 0.0
+    out = np.zeros(x.shape)
     # sum over offsets 1..w (previous w rows)
     for j in range(1, min(w + 1, t + 1)):
         if j >= t:
@@ -128,10 +123,18 @@ def _rolling_sum_shift1(x, w, out):
     return out
 
 
-def _interactions_2d(K, ws, b, t) -> dict[str, np.ndarray]:
+def _shifted(x, k):
+    """x shifted right by k columns, zero-filled (pandas shift(k) with
+    NaN->0 after the boolean; leading rows are 0)."""
+    out = np.zeros(x.shape)
+    out[:, k:] = x[:, :-k]
+    return out
+
+
+def _interactions_2d(K) -> dict[str, np.ndarray]:
     """40 interactions on 2-D slabs.  ``K[(grain, col)]`` -> (B, T) slab,
-    grain in {'b','1','2'}.  Mirrors multi_interval_ref.extract_interactions."""
-    V = lambda name: ws.view(name, b, t)  # noqa: E731
+    grain in {'b','1','2'}.  Mirrors multi_interval_ref.extract_interactions.
+    Returns fresh (B, T) arrays."""
     out: dict[str, np.ndarray] = {}
     rb, r1, r2 = K[("b", "regime")], K[("1", "regime")], K[("2", "regime")]
     ib, i1, i2 = K[("b", "rsi")], K[("1", "rsi")], K[("2", "rsi")]
@@ -189,25 +192,14 @@ def _interactions_2d(K, ws, b, t) -> dict[str, np.ndarray]:
         (csb == 1) & (cs1 == 1) & (cs2 == 1)).astype(np.float64)
     out["base_crossed_while_higher_extreme"] = (
         (csb == 1) & ((r2 == 0) | (r2 == 2))).astype(np.float64)
-    # cascades: shift(2)/shift(1) with NaN->0 (pandas fillna(0) after the
-    # boolean; leading rows are 0)
-    cs2s2 = V("mi_s2"); cs2s2[:] = 0.0
-    if t > 2:
-        cs2s2[:, 2:] = cs2[:, :-2]
-    cs1s1 = V("mi_s1"); cs1s1[:] = 0.0
-    if t > 1:
-        cs1s1[:, 1:] = cs1[:, :-1]
+    # cascades: shift(2)/shift(1)
     out["cascade_crossing_up"] = (
-        (cs2s2 == 1) & (cs1s1 == 1) & (csb == 1)).astype(np.float64)
-    co2s2 = V("mi_s2b"); co2s2[:] = 0.0
-    if t > 2:
-        co2s2[:, 2:] = co2[:, :-2]
-    co1s1 = V("mi_s1b"); co1s1[:] = 0.0
-    if t > 1:
-        co1s1[:, 1:] = co1[:, :-1]
+        (_shifted(cs2, 2) == 1) & (_shifted(cs1, 1) == 1)
+        & (csb == 1)).astype(np.float64)
     out["cascade_crossing_down"] = (
-        (co2s2 == 1) & (co1s1 == 1) & (cob == 1)).astype(np.float64)
-    rec10 = _rolling_sum_shift1(cs2, 10, V("mi_rec10"))
+        (_shifted(co2, 2) == 1) & (_shifted(co1, 1) == 1)
+        & (cob == 1)).astype(np.float64)
+    rec10 = _rolling_sum_shift1(cs2, 10)
     out["higher_crossed_first"] = ((csb == 1) & (rec10 > 0)).astype(np.float64)
 
     bib = K[("b", "bars_in_regime")]
@@ -215,26 +207,23 @@ def _interactions_2d(K, ws, b, t) -> dict[str, np.ndarray]:
     rcb = K[("b", "regime_changed")]
     rc1 = K[("1", "regime_changed")]
     rc2 = K[("2", "regime_changed")]
-    bi2_safe = V("mi_bi2")
-    np.copyto(bi2_safe, bi2)
+    bi2_safe = bi2.copy()
     bi2_safe[bi2_safe == 0.0] = 1.0
     out["regime_persistence_ratio"] = bib / bi2_safe
-    rec5 = _rolling_sum_shift1(rc2, 5, V("mi_rec5"))
+    rec5 = _rolling_sum_shift1(rc2, 5)
     cascade = ((rcb == 1) & (rec5 > 0)).astype(np.float64)
     out["regime_change_cascade"] = cascade
     out["regime_stability_score"] = 1.0 - (rcb + rc1 + rc2) / 3.0
     unanimity = bm1 & m1m2
     # bars since / duration via the cumulative-max index trick
-    cum_not = V("mi_cumnot")
+    cum_not = np.empty(unanimity.shape)
     np.cumsum(~unanimity, axis=1, out=cum_not)
-    reset = V("mi_reset")
-    np.multiply(cum_not, unanimity, out=reset)
+    reset = np.multiply(cum_not, unanimity)
     np.maximum.accumulate(reset, axis=1, out=reset)
     out["bars_since_alignment"] = cum_not - reset
-    cum_u = V("mi_cumu")
+    cum_u = np.empty(unanimity.shape)
     np.cumsum(unanimity, axis=1, out=cum_u)
-    reset2 = V("mi_reset2")
-    np.multiply(cum_u, ~unanimity, out=reset2)
+    reset2 = np.multiply(cum_u, ~unanimity)
     np.maximum.accumulate(reset2, axis=1, out=reset2)
     out["alignment_duration"] = cum_u - reset2
     out["higher_interval_leads"] = cascade
@@ -260,6 +249,40 @@ def _interactions_2d(K, ws, b, t) -> dict[str, np.ndarray]:
     return out
 
 
+def _grain_long(high, low, close, lengths, flat_idx, m, cfg: FeatureConfig,
+                avail=None) -> dict[str, np.ndarray]:
+    """The 43 columns of one grain as long-form arrays over the base cells
+    ``flat_idx``: the base grain itself for ``m == 1``, else the
+    m-resampled grain aligned onto the base grid (NaN for docs with no
+    complete window)."""
+    t = high.shape[1]
+    if m != 1:
+        res, lengths_m = _resample_hlc(high, low, close, lengths, m)
+        if res is None:
+            return {col: np.full(len(flat_idx), np.nan)
+                    for col in FEATURE_COLUMNS}
+        high, low, close = res
+    core = core_loop_batched(high, low, close, cfg.atr_period,
+                             cfg.adaptive_offset, copy_out=False)
+    core["close"] = np.asarray(close, dtype=np.float64)
+    feats = expand_batched(core, cfg)
+    if m == 1:
+        return {col: feats[col].ravel()[flat_idx] for col in FEATURE_COLUMNS}
+    tm = high.shape[1]                        # the resampled length
+    if avail is None:
+        gidx, nomatch = _align_gather_idx(flat_idx, lengths_m, t, tm)
+    else:
+        gidx, nomatch = _align_gather_idx_avail(avail, lengths, lengths_m,
+                                                m, tm)
+    out = {}
+    for col in FEATURE_COLUMNS:
+        vals = feats[col].ravel()[gidx]
+        if nomatch.any():
+            vals[nomatch] = np.nan
+        out[col] = vals
+    return out
+
+
 def single_interval_long(high: np.ndarray, low: np.ndarray,
                          close: np.ndarray, lengths: np.ndarray,
                          cfg: FeatureConfig) -> dict[str, np.ndarray]:
@@ -267,14 +290,8 @@ def single_interval_long(high: np.ndarray, low: np.ndarray,
     returning long-form 1-D float64 arrays (reference
     ``fit_transform_features`` single-interval branch,
     ``atr_adaptive_rsi.py:829-846``)."""
-    b, t = high.shape
-    ws = get_workspace(b * t)
-    flat_idx = _flat_explode_idx(lengths, t)
-    core = core_loop_batched(high, low, close, cfg.atr_period,
-                             cfg.adaptive_offset, copy_out=False)
-    core["close"] = ws.view("close", b, t)
-    feats = expand_batched(core, cfg)
-    return {col: feats[col].ravel()[flat_idx] for col in FEATURE_COLUMNS}
+    return _grain_long(high, low, close, lengths,
+                       _flat_explode_idx(lengths, high.shape[1]), 1, cfg)
 
 
 def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
@@ -290,66 +307,24 @@ def multi_interval_long(high: np.ndarray, low: np.ndarray, close: np.ndarray,
     positionally."""
     assert cfg.is_multi_interval
     b, t = high.shape
-    ws = get_workspace(b * t)
     flat_idx = _flat_explode_idx(lengths, t)
     out: dict[str, np.ndarray] = {}
-
-    # --- base grain ---
-    core = core_loop_batched(high, low, close, cfg.atr_period,
-                             cfg.adaptive_offset, copy_out=False)
-    core["close"] = ws.view("close", b, t)       # kernel's own close slab
-    feats = expand_batched(core, cfg)
     K: dict[tuple[str, str], np.ndarray] = {}
-    for col in FEATURE_COLUMNS:
-        out[f"{col}_base"] = feats[col].ravel()[flat_idx]
-    for col in INTERACTION_INPUTS:
-        slab = ws.view(f"mi_kb_{col}", b, t)
-        np.copyto(slab, feats[col])
-        K[("b", col)] = slab
-
-    # --- multiplier grains ---
-    for m, tag, g in ((cfg.multiplier_1, "mult1", "1"),
+    for m, tag, g in ((1, "base", "b"), (cfg.multiplier_1, "mult1", "1"),
                       (cfg.multiplier_2, "mult2", "2")):
-        res, lengths_m = _resample_hlc(high, low, close, lengths, m, ws)
-        if res is None:
-            for col in FEATURE_COLUMNS:
-                out[f"{col}_{tag}"] = np.full(len(flat_idx), np.nan)
-            for col in INTERACTION_INPUTS:
-                slab = ws.view(f"mi_k{g}_{col}", b, t)
-                slab[:] = np.nan
-                K[(g, col)] = slab
-            continue
-        hm, lm, cm = res
-        tm = hm.shape[1]
-        # resample slabs are clobbered by the next core call -> copy h/l/c
-        hm2 = ws.view("mi_rs_h2", b, tm); np.copyto(hm2, hm)
-        lm2 = ws.view("mi_rs_l2", b, tm); np.copyto(lm2, lm)
-        cm2 = ws.view("mi_rs_c2", b, tm); np.copyto(cm2, cm)
-        core_m = core_loop_batched(hm2, lm2, cm2, cfg.atr_period,
-                                   cfg.adaptive_offset, copy_out=False)
-        core_m["close"] = ws.view("close", b, tm)
-        feats_m = expand_batched(core_m, cfg)
-        if avail is None:
-            gidx, nomatch = _align_gather_idx(flat_idx, lengths_m, t, tm)
-        else:
-            gidx, nomatch = _align_gather_idx_avail(avail, lengths,
-                                                    lengths_m, m, tm)
+        cols = _grain_long(high, low, close, lengths, flat_idx, m, cfg,
+                           avail)
         for col in FEATURE_COLUMNS:
-            vals = feats_m[col].ravel()[gidx]
-            if nomatch.any():
-                vals[nomatch] = np.nan
-            out[f"{col}_{tag}"] = vals
+            out[f"{col}_{tag}"] = cols[col]
+        # real cells scattered onto the base grid; padding stays 0.0, so
+        # the interactions compute on defined values there (and only read
+        # earlier cells of a row, which are real wherever the row is)
         for col in INTERACTION_INPUTS:
-            slab = ws.view(f"mi_k{g}_{col}", b, t)
-            slab.ravel()[flat_idx] = out[f"{col}_{tag}"]
+            slab = np.zeros((b, t))
+            slab.ravel()[flat_idx] = cols[col]
             K[(g, col)] = slab
 
-    # NOTE: the interaction slabs for mult grains are only valid at the
-    # real cells (padding cells hold stale data), but interactions are
-    # materialized through flat_idx, and the shift/rolling patterns only
-    # read earlier cells of the same row, which are real wherever the
-    # output cell is real.
-    inter = _interactions_2d(K, ws, b, t)
+    inter = _interactions_2d(K)
     for col in INTERACTION_COLUMNS:
         out[col] = inter[col].ravel()[flat_idx]
 

@@ -47,9 +47,8 @@ _SIGNATURES = {
 
 def _ptr(a: np.ndarray | None, shape: tuple[int, ...]) -> int | None:
     """Address of a C-contiguous float64 slab of the expected shape (None
-    passes NULL: no carried state); the kernel's call sites pass
-    workspace slabs, so anything else is a bug to report, not to copy
-    around."""
+    passes NULL: no carried state); the kernel's call sites pass such
+    slabs, so anything else is a bug to report, not to copy around."""
     if a is None:
         return None
     if (a.dtype != np.float64 or not a.flags.c_contiguous

@@ -42,9 +42,7 @@ import numpy as np
 import pandas as pd
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
-from atr_adaptive_laguerre_spark.kernel.batched import (
-    core_loop_resumed, get_workspace,
-)
+from atr_adaptive_laguerre_spark.kernel.batched import core_loop_resumed
 from atr_adaptive_laguerre_spark.kernel.expander_batched import (
     _ewm_mean, expand_batched,
 )
@@ -144,17 +142,16 @@ class Entity43Stream:
         overridden = {"bars_in_regime", "bars_since_oversold",
                       "bars_since_overbought", "bars_since_extreme",
                       "extreme_regime_persistence", "tail_risk_score"}
-        out = {c: feats[c][0, h:].copy() for c in FEATURE_COLUMNS
+        out = {c: feats[c][0, h:] for c in FEATURE_COLUMNS
                if c not in overridden}
 
         rsi_all = slab["rsi"][0]
 
         # --- override 1: EWM velocity continued from carried state ---
         if h:
-            vel = np.empty((1, n))
-            _ewm_mean(feats["rsi_change_1"][:, h:], cfg.velocity_span, vel,
-                      get_workspace(), 1, y0=np.array([self.vel]))
-            out["rsi_velocity"] = vel[0]
+            out["rsi_velocity"] = _ewm_mean(
+                feats["rsi_change_1"][:, h:], cfg.velocity_span,
+                y0=np.array([self.vel]))[0]
         self.vel = float(out["rsi_velocity"][-1])
 
         # --- override 2: unbounded counters (carry across slabs) ---

@@ -56,7 +56,6 @@ import numpy as np
 import pandas as pd
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
-from atr_adaptive_laguerre_spark.kernel.batched import get_workspace
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
 from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
     INTERACTION_INPUTS, _interactions_2d,
@@ -195,10 +194,9 @@ def _block_interactions(Kb, K1, K2, istate) -> dict[str, np.ndarray]:
     new = np.column_stack([K[col] for K in (Kb, K1, K2)
                            for col in INTERACTION_INPUTS])
     slab = np.concatenate([istate["k_hist"], new])
-    h, t = len(istate["k_hist"]), len(slab)
-    K = {key: np.ascontiguousarray(slab[None, :, j])
-         for j, key in enumerate(_K_KEYS)}
-    inter = _interactions_2d(K, get_workspace(t), 1, t)
+    h = len(istate["k_hist"])
+    K = {key: slab[None, :, j] for j, key in enumerate(_K_KEYS)}
+    inter = _interactions_2d(K)
     out = {col: inter[col][0, h:] for col in INTERACTION_COLUMNS}
 
     rb, r1, r2 = (K[(g, "regime")][0] for g in "b12")

@@ -46,6 +46,18 @@ def test_enrich_rangebars_idempotent_and_subset(spark, corpus_parquet):
     docs = spark.read.parquet(corpus_parquet).limit(8)
     out = enrich_rangebars(docs, CFG)
     assert set(RANGEBAR_FEATURE_MAP.values()) <= set(out.columns)
+    # the worker ships only the 6 columns; their values equal the
+    # unprojected 43-column job's
+    from atr_adaptive_laguerre_spark.engine.features_job import features_long
+
+    keys = ["source", "doc_id", "offset"]
+    got = out.toPandas().sort_values(keys).reset_index(drop=True)
+    full = (features_long(docs, CFG).toPandas()
+            .sort_values(keys).reset_index(drop=True))
+    assert len(got) == len(full) > 0
+    for src, dst in RANGEBAR_FEATURE_MAP.items():
+        np.testing.assert_array_equal(got[dst].to_numpy(),
+                                      full[src].to_numpy(), err_msg=src)
     # idempotency: already-enriched input passes through unchanged
     again = enrich_rangebars(out, CFG)
     assert again is out

@@ -165,6 +165,27 @@ def test_expander_non_anticipative_prefix(seed, n):
                                       err_msg=col)
 
 
+def test_expander_result_owns_its_arrays():
+    """A second ``expand_batched`` call, on a different batch shape and
+    inputs, leaves every column of the first result unchanged — the
+    core's pass-through columns included, although the core outputs are
+    workspace views (``copy_out=False``)."""
+    def run(doc, n_docs, n):
+        h, l, c = (np.stack(m) for m in zip(
+            *(tokens_to_ohlcv(make_tokens(doc + i, n))
+              for i in range(n_docs))))
+        core = core_loop_batched(h, l, c, CFG.atr_period,
+                                 CFG.adaptive_offset, copy_out=False)
+        core["close"] = c
+        return expand_batched(core, CFG)
+
+    first = run(0, 3, 200)
+    want = {col: v.copy() for col, v in first.items()}
+    run(5, 2, 300)
+    for col in FEATURE_COLUMNS:
+        np.testing.assert_array_equal(first[col], want[col], err_msg=col)
+
+
 @pytest.mark.usefixtures("numpy_backend")
 class TestNumpyFallback:
     """The oracle and consistency tests above, on the NumPy fallback
@@ -177,3 +198,4 @@ class TestNumpyFallback:
     test_across_batch = staticmethod(
         test_expander_batched_consistent_across_batch)
     test_hypothesis = staticmethod(test_expander_matches_oracle_hypothesis)
+    test_owns_arrays = staticmethod(test_expander_result_owns_its_arrays)

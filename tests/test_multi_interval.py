@@ -1,18 +1,26 @@
 """Batched multi-interval pipeline == pandas oracle (169 and 121 cols)."""
 
+import warnings
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import make_tokens, tokens_to_ohlcv
-from atr_adaptive_laguerre_spark.kernel.batched import pad_sequences
+from atr_adaptive_laguerre_spark.engine.features_job import (
+    feature_columns_for,
+)
+from atr_adaptive_laguerre_spark.kernel.batched import (
+    _SLABS, get_workspace, pad_sequences,
+)
 from atr_adaptive_laguerre_spark.kernel.expander_ref import INT_COLUMNS
 from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
-    _flat_explode_idx, multi_interval_long,
+    INTERACTION_INPUTS, _flat_explode_idx, _interactions_2d,
+    multi_interval_long,
 )
 from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
-    multi_interval_columns, multi_interval_features,
+    INTERACTION_COLUMNS, multi_interval_columns, multi_interval_features,
 )
 
 CFG169 = FeatureConfig.multi_interval(multiplier_1=3, multiplier_2=12,
@@ -133,6 +141,81 @@ def test_multi_interval_config_space(atr_period, m1, dm, filt):
     _check_docs(seqs, cfg)
 
 
+def _random_interaction_inputs(rng, b, t):
+    K = {}
+    for g in "b12":
+        K[(g, "regime")] = rng.integers(0, 3, (b, t)).astype(np.float64)
+        K[(g, "rsi")] = rng.random((b, t))
+        K[(g, "rsi_change_1")] = rng.standard_normal((b, t))
+        for col in ("cross_below_overbought", "cross_above_oversold",
+                    "regime_changed"):
+            K[(g, col)] = (rng.random((b, t)) < 0.2).astype(np.float64)
+        K[(g, "bars_in_regime")] = rng.integers(0, 30, (b, t)).astype(
+            np.float64)
+    assert set(c for _, c in K) == set(INTERACTION_INPUTS)
+    return K
+
+
+def test_interactions_result_owns_its_arrays():
+    """A second ``_interactions_2d`` call, on a different shape and
+    inputs, leaves every column of the first result unchanged."""
+    rng = np.random.default_rng(3)
+    first = _interactions_2d(_random_interaction_inputs(rng, 3, 120))
+    assert set(first) == set(INTERACTION_COLUMNS)
+    want = {col: v.copy() for col, v in first.items()}
+    _interactions_2d(_random_interaction_inputs(rng, 2, 200))
+    for col in INTERACTION_COLUMNS:
+        np.testing.assert_array_equal(first[col], want[col], err_msg=col)
+
+
+def test_workspace_holds_only_core_slabs():
+    """After a 121-column chunk the per-process workspace holds exactly
+    the core kernel's slabs: the expander, resample and interactions
+    allocate their own arrays."""
+    seqs = [tokens_to_ohlcv(make_tokens(i, n))
+            for i, n in enumerate((40, 150, 299))]
+    hi, lens = pad_sequences([s[0] for s in seqs])
+    lo, _ = pad_sequences([s[1] for s in seqs])
+    cl, _ = pad_sequences([s[2] for s in seqs])
+    multi_interval_long(hi, lo, cl, lens, CFG121)
+    assert sorted(get_workspace()._flat) == sorted(_SLABS)
+
+
+@pytest.mark.parametrize("cfg", [
+    FeatureConfig(atr_period=14), CFG121,
+    FeatureConfig.multi_interval(multiplier_1=3, multiplier_2=12,
+                                 atr_period=14, availability=True),
+], ids=["43", "121", "121-avail"])
+def test_chunk_padding_is_inert(cfg):
+    """Whatever a chunk's padding cells hold (the jobs leave them
+    uninitialized), the kernel raises no RuntimeWarning on them and the
+    real cells' features do not change: padding of int32 extremes and
+    zeros, on a ragged chunk (docs shorter than either multiplier, one
+    of them the only length) and on a chunk too short to resample."""
+    from atr_adaptive_laguerre_spark.engine.features_job import (
+        _chunk_feature_cols,
+    )
+
+    i32 = np.iinfo(np.int32)
+    for lengths in ((2, 5, 11, 12, 40, 150, 300), (1, 2, 7)):
+        lens = np.array(lengths, dtype=np.int64)
+        results = []
+        for pads in ((i32.max,), (i32.min,), (0,), (i32.max, i32.min, 0)):
+            mat = np.resize(np.array(pads, dtype=np.int64),
+                            (len(lens), int(lens.max())))
+            for i, n in enumerate(lengths):
+                mat[i, :n] = make_tokens(i, n)
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", RuntimeWarning)
+                results.append(_chunk_feature_cols(mat, lens, cfg))
+        want = results[0]
+        assert list(want) == feature_columns_for(cfg)
+        for got in results[1:]:
+            assert list(got) == list(want)
+            for col, v in got.items():
+                np.testing.assert_array_equal(v, want[col], err_msg=col)
+
+
 @pytest.mark.usefixtures("numpy_backend")
 class TestNumpyFallback:
     """The oracle tests above, on the NumPy fallback loops."""
@@ -141,6 +224,7 @@ class TestNumpyFallback:
     test_long_and_short = staticmethod(
         test_multi_interval_long_and_short_docs)
     test_hypothesis = staticmethod(test_multi_interval_hypothesis)
+    test_workspace = staticmethod(test_workspace_holds_only_core_slabs)
 
 
 @given(st.lists(st.integers(0, 40), max_size=30), st.integers(0, 3))

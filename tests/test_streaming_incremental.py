@@ -188,7 +188,6 @@ def test_block_interactions_match_batch_kernel(blocks):
     """The streaming tier's 40 interactions, fed block by block from a
     fresh entity's carried state, equal one batch ``_interactions_2d``
     call over the whole series on every column."""
-    from atr_adaptive_laguerre_spark.kernel.batched import get_workspace
     from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
         INTERACTION_INPUTS, _interactions_2d,
     )
@@ -201,9 +200,8 @@ def test_block_interactions_match_batch_kernel(blocks):
 
     n = sum(blocks)
     K = _interaction_inputs(n, seed=7)
-    batch = _interactions_2d({k: v[None, :] for k, v in K.items()},
-                             get_workspace(n), 1, n)
-    want = {col: batch[col][0].copy() for col in INTERACTION_COLUMNS}
+    batch = _interactions_2d({k: v[None, :] for k, v in K.items()})
+    want = {col: batch[col][0] for col in INTERACTION_COLUMNS}
     # the inputs reach every carried pattern
     for col in ("cascade_crossing_up", "cascade_crossing_down",
                 "higher_crossed_first", "regime_change_cascade"):
