@@ -67,9 +67,10 @@ _NATIVE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__)))), "native")
 
 
-def _bigcache_preload() -> str | None:
-    """Path to the ``native/bigcache-<hash>.so`` retaining-allocator shim,
-    compiling it on first use when a C toolchain is present.  The name
+def _bigcache_preload(native_dir: str | None = None) -> str | None:
+    """Path to the ``native/bigcache-<hash>.so`` retaining-allocator shim
+    (in ``native_dir``, default this checkout's ``native/``), compiling
+    it on first use when a C toolchain is present.  The name
     pins source and flags, so an edit to ``bigcache.c`` never preloads a
     stale build.
 
@@ -84,21 +85,39 @@ def _bigcache_preload() -> str | None:
     logged warning when its compile failed; BIGCACHE_DISABLE=1 turns the
     loaded shim into a no-op.
     """
-    src = os.path.join(_NATIVE_DIR, "bigcache.c")
+    native_dir = native_dir or _NATIVE_DIR
+    src = os.path.join(native_dir, "bigcache.c")
     if not os.path.exists(src):
-        so = os.path.join(_NATIVE_DIR, "bigcache.so")
+        so = os.path.join(native_dir, "bigcache.so")
         return so if os.path.exists(so) else None
     with open(src, "rb") as f:
         source = f.read()
     flags = ("-O2", "-shared", "-fPIC")
     tag = hashlib.sha256(source + " ".join(flags).encode()).hexdigest()
-    so = os.path.join(_NATIVE_DIR, f"bigcache-{tag[:12]}.so")
+    so = os.path.join(native_dir, f"bigcache-{tag[:12]}.so")
     try:
         return build_shared(source, so, flags, ("-lpthread", "-ldl"))
     except BuildError as e:
         log.warning("bigcache allocator shim unavailable (%s); the "
                     "session runs without it", e)
         return None
+
+
+def worker_env(native_dir: str | None = None) -> dict[str, str]:
+    """The environment the Python workers must START under: ``MALLOC_ENV``
+    (values already in ``os.environ`` win) and, when the shim builds, an
+    ``LD_PRELOAD`` that puts it ahead of any existing preload.  glibc and
+    the loader read both only at process start, so a running process
+    cannot adopt them: ``build_session`` sets them before its JVM starts,
+    and a session whose JVM is already up (spark-submit) passes them as
+    ``spark.executorEnv.*``, which PySpark hands to the Python workers it
+    launches, local mode included."""
+    env = {k: os.environ.get(k, v) for k, v in MALLOC_ENV.items()}
+    so = _bigcache_preload(native_dir)
+    prev = os.environ.get("LD_PRELOAD", "")
+    if so is not None and so not in prev:
+        env["LD_PRELOAD"] = f"{so}:{prev}" if prev else so
+    return env
 
 
 def _mem_total_bytes() -> int | None:
@@ -137,12 +156,7 @@ def build_session(app: str = "atr-adaptive-laguerre-spark",
                   extra: dict[str, str] | None = None) -> SparkSession:
     # set before the JVM starts: local-mode Python workers inherit the
     # driver JVM's environment
-    for k, v in MALLOC_ENV.items():
-        os.environ.setdefault(k, v)
-    so = _bigcache_preload()
-    if so is not None and so not in os.environ.get("LD_PRELOAD", ""):
-        prev = os.environ.get("LD_PRELOAD")
-        os.environ["LD_PRELOAD"] = f"{so}:{prev}" if prev else so
+    os.environ.update(worker_env())
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus * 2, 8)

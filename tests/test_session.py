@@ -1,9 +1,13 @@
-"""``build_session``'s driver-memory choice: the effective value and the
-warning when it exceeds the host's RAM (no JVM is started here)."""
+"""``build_session``'s driver-memory choice (the effective value and the
+warning when it exceeds the host's RAM) and the allocator environment
+each session path hands its Python workers (no JVM is started here)."""
 
 from __future__ import annotations
 
+import importlib.util
 import logging
+import os
+import sys
 
 import pytest
 
@@ -49,3 +53,71 @@ def test_units_and_unparsed_values(value, warns, caplog):
     value that does not parse is passed on without a warning."""
     assert session._driver_memory({"spark.driver.memory": value}) == value
     assert len(_warnings(caplog)) == warns
+
+
+SHIM = "/opt/x/native/bigcache-0123456789ab.so"
+
+
+def test_worker_env_preloads_shim_and_keeps_caller_settings(monkeypatch):
+    monkeypatch.setattr(session, "_bigcache_preload", lambda d=None: SHIM)
+    monkeypatch.setenv("MALLOC_ARENA_MAX", "2")
+    monkeypatch.setenv("LD_PRELOAD", "libother.so")
+    env = session.worker_env()
+    assert env == {**session.MALLOC_ENV, "MALLOC_ARENA_MAX": "2",
+                   "LD_PRELOAD": f"{SHIM}:libother.so"}
+
+    monkeypatch.setenv("LD_PRELOAD", env["LD_PRELOAD"])
+    assert "LD_PRELOAD" not in session.worker_env()
+    monkeypatch.setattr(session, "_bigcache_preload", lambda d=None: None)
+    monkeypatch.delenv("LD_PRELOAD")
+    assert "LD_PRELOAD" not in session.worker_env()
+
+
+class _StopBeforeJvm(Exception):
+    pass
+
+
+class _Builder:
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def appName(self, _name):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        raise _StopBeforeJvm
+
+
+def test_submit_job_starts_workers_under_worker_env(monkeypatch):
+    """spark-submit starts the JVM before ``tools/submit_job.py`` runs, so
+    the script must pass the allocator environment to the Python workers
+    as ``spark.executorEnv.*``, with the shim from its checkout's
+    ``native/`` (the package itself may be imported from the zip)."""
+    from pyspark.sql import SparkSession
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "submit_job.py")
+    spec = importlib.util.spec_from_file_location("submit_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    dirs = []
+    monkeypatch.setattr(session, "_bigcache_preload",
+                        lambda d=None: dirs.append(d) or SHIM)
+    monkeypatch.delenv("LD_PRELOAD", raising=False)
+    builder = _Builder()
+    monkeypatch.setattr(SparkSession, "builder", builder)
+    monkeypatch.setattr(sys, "argv", ["submit_job.py", "--input", "in",
+                                      "--output", "out", "--manifest", "m"])
+    with pytest.raises(_StopBeforeJvm):
+        job.main()
+    assert dirs == [job.NATIVE_DIR]
+    assert os.path.exists(os.path.join(job.NATIVE_DIR, "bigcache.c"))
+    want = session.worker_env()
+    assert want["LD_PRELOAD"] == SHIM
+    assert builder.conf == {f"spark.executorEnv.{k}": v
+                            for k, v in want.items()}

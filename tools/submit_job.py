@@ -13,12 +13,24 @@ Package the library and submit:
         --multi-interval --n-buckets 64 --buckets-per-wave 8
 
 Re-submitting with the same --run-id resumes from the manifest.
+
+The Python workers start under the retaining allocator the kernel's
+fresh per-chunk arrays rely on: ``MALLOC_ENV`` and, when it builds, the
+``native/bigcache`` shim of this checkout, passed as
+``spark.executorEnv.*`` (see ``engine.session.worker_env``).  On a
+cluster the shim's path must exist on the executors too, or the loader
+skips it.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
+
+#: the checkout's ``native/`` (the package may be imported from the zip)
+NATIVE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "native")
 
 
 def main() -> None:
@@ -45,10 +57,13 @@ def main() -> None:
 
     from atr_adaptive_laguerre_spark.config import FeatureConfig
     from atr_adaptive_laguerre_spark.engine.manifest import run_resumable
+    from atr_adaptive_laguerre_spark.engine.session import worker_env
     from atr_adaptive_laguerre_spark.engine.sources import read_sequences
 
-    spark = SparkSession.builder.appName(
-        "atr-adaptive-laguerre-features").getOrCreate()
+    b = SparkSession.builder.appName("atr-adaptive-laguerre-features")
+    for k, v in worker_env(NATIVE_DIR).items():
+        b = b.config(f"spark.executorEnv.{k}", v)
+    spark = b.getOrCreate()
 
     if args.multi_interval:
         cfg = FeatureConfig.multi_interval(
