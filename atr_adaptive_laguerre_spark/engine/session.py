@@ -88,8 +88,7 @@ def _bigcache_preload(native_dir: str | None = None) -> str | None:
     native_dir = native_dir or _NATIVE_DIR
     src = os.path.join(native_dir, "bigcache.c")
     if not os.path.exists(src):
-        so = os.path.join(native_dir, "bigcache.so")
-        return so if os.path.exists(so) else None
+        return None
     with open(src, "rb") as f:
         source = f.read()
     flags = ("-O2", "-shared", "-fPIC")

@@ -45,17 +45,14 @@ _SLABS = (
 
 
 class Workspace:
-    """The core kernel's flat buffers, one per :data:`_SLABS` name plus the
-    per-batch state vectors, reshaped per chunk; one per process."""
+    """The core kernel's flat buffers, one per :data:`_SLABS` name,
+    reshaped per chunk; one per process."""
 
     def __init__(self, cells: int = DEFAULT_CELLS):
         self.cells = cells
         self._flat: dict[str, np.ndarray] = {}
         for n in _SLABS:
             self._flat[n] = np.empty(cells, dtype=np.float64)
-        # 8 per-batch state vectors; grown on demand (a chunk of very
-        # short docs can legally have more rows than cells//8)
-        self._vec = np.empty(8 * 65536, dtype=np.float64)
 
     def grow(self, cells: int) -> None:
         if cells > self.cells:
@@ -65,14 +62,6 @@ class Workspace:
 
     def view(self, name: str, b: int, t: int) -> np.ndarray:
         return self._flat[name][: b * t].reshape(b, t)
-
-    def vec(self, i: int, b: int) -> np.ndarray:
-        # NOTE: growth is safe mid-kernel only because every caller asks
-        # for a consistent b within one kernel invocation — the first
-        # vec() call of an invocation resizes, later ones reuse.
-        if self._vec.size < 8 * b:
-            self._vec = np.empty(8 * b, dtype=np.float64)
-        return self._vec[i * b: (i + 1) * b]
 
 
 _WS: Workspace | None = None
@@ -119,7 +108,7 @@ def _true_range(high, low, close, out, prev_close=None):
     return out
 
 
-def _atr_incremental(tr, p, out, ws, b, start=0, sums=None):
+def _atr_incremental(tr, p, out, start=0, sums=None):
     """C2 — ATR as the reference's *incremental* ring-buffer sum
     (``tr_sum = (tr_sum + tr) - old_tr``), lockstep across the batch so
     the float rounding matches the oracle exactly.  A resumed series
@@ -139,8 +128,7 @@ def _atr_incremental(tr, p, out, ws, b, start=0, sums=None):
         rec.atr_incremental(tr, p, out, start, sums)
         return out
     t = tr.shape[1]
-    tr_sum = ws.vec(0, b)
-    tr_sum[:] = 0.0 if sums is None else sums
+    tr_sum = np.zeros(tr.shape[0]) if sums is None else sums.copy()
     for i in range(start, t):
         if i < p:
             tr_sum += tr[:, i]
@@ -205,13 +193,9 @@ def _laguerre_cascade(close, gamma, ws, b, t, init=None):
     cT = np.ascontiguousarray(close.T)
     gT = np.ascontiguousarray(gamma.T)
     L0T, L1T, L2T, L3T = (np.empty((t, b)) for _ in range(4))
-    l0, l1, l2, l3 = (ws.vec(j, b) for j in range(4))
-    for j, lj in enumerate((l0, l1, l2, l3)):
-        lj[:] = 0.0 if init is None else init[:, j]
-    p0 = ws.vec(4, b)
-    p1 = ws.vec(5, b)
-    p2 = ws.vec(6, b)
-    tmp = ws.vec(7, b)
+    l0, l1, l2, l3 = (np.zeros(b) if init is None else init[:, j].copy()
+                      for j in range(4))
+    p0, p1, p2, tmp = (np.empty(b) for _ in range(4))
     for i in range(t):
         c = cT[i]
         g = gT[i]
@@ -304,8 +288,7 @@ def _core_stages(hw, lw, cw, tr, p, adaptive_offset, ws, h=0, sums=None,
     series carries its last ``h`` TRs, oldest first, in ``tr[:, :h]``."""
     b, t = cw.shape
     _true_range(hw, lw, cw, tr[:, h:], prev_close)
-    atr = _atr_incremental(tr, p, ws.view("atr", b, h + t), ws, b,
-                           h, sums)[:, h:]
+    atr = _atr_incremental(tr, p, ws.view("atr", b, h + t), h, sums)[:, h:]
     min_atr, max_atr = (m[:, h:] for m in _atr_minmax(tr, p, ws, b, h + t))
     coeff, gamma = _adaptive_gamma(atr, min_atr, max_atr, p,
                                    adaptive_offset, ws, b, t)

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from atr_adaptive_laguerre_spark.streaming.stateful import drain
+
 #: documents arriving on a stream carry an event-time column
 DOC_TS_SCHEMA = "doc_id string, text string, ts timestamp"
 
@@ -40,13 +42,8 @@ def stream_dedup_exact(spark: SparkSession, input_dir: str, output_dir: str,
     hashed = sdf.select("doc_id", "ts", F.md5(norm).alias("chash"))
     dedup = (hashed.withWatermark("ts", watermark)
              .dropDuplicatesWithinWatermark(["chash"]))
-    q = (dedup.writeStream.format("parquet")
-         .outputMode("append")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(dedup.writeStream.format("parquet").outputMode("append")
+          .option("path", output_dir), checkpoint_dir)
 
 
 #: crawl-increment stream schema (no event time needed — the index join
@@ -109,11 +106,7 @@ def stream_incremental_neardup(spark: SparkSession, input_dir: str,
              f"{index_dir}/shingles/batch={batch_id}"))
 
     sdf = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    q = (sdf.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def stream_dsir_select(spark: SparkSession, input_dir: str,
@@ -150,11 +143,7 @@ def stream_dsir_select(spark: SparkSession, input_dir: str,
             f"{output_dir}/batch={batch_id}")
 
     sdf = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    q = (sdf.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def stream_chunk_clean(spark: SparkSession, input_dir: str,
@@ -215,11 +204,7 @@ def stream_chunk_clean(spark: SparkSession, input_dir: str,
                 f"{index_dir}/batch={batch_id}")
 
     sdf = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    q = (sdf.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(process), checkpoint_dir)
 
 
 SAMPLE_DOC_SCHEMA = "doc_id long, source string, n_chars long"
@@ -307,8 +292,4 @@ def stream_sample_weighted(spark: SparkSession, input_dir: str,
         fs.delete(old, True)
 
     sdf = spark.readStream.schema(SAMPLE_DOC_SCHEMA).parquet(input_dir)
-    q = (sdf.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(process), checkpoint_dir)

@@ -48,8 +48,8 @@ from atr_adaptive_laguerre_spark.kernel.expander_batched import (
 )
 from atr_adaptive_laguerre_spark.kernel.expander_ref import FEATURE_COLUMNS
 from atr_adaptive_laguerre_spark.streaming.stateful import (
-    INPUT_SCHEMA, filter_new_bars, gather_group_chunks, new_core_state,
-    unpack_core_state,
+    CORE_STATE, INPUT_SCHEMA, LAST_OFFSET, ddl, drain, new_bars,
+    new_core_state, pack_core_state, unpack_core_state,
 )
 
 #: trailing bars kept per entity: 99 (vol window) + 19 (rstd's rsi window)
@@ -61,14 +61,14 @@ _SERIES = ("rsi", "adaptive_coeff", "gamma", "L0", "L1", "L2", "L3",
 OUTPUT43_SCHEMA = ("source string, doc_id string, offset long, "
                    + ", ".join(f"{c} double" for c in FEATURE_COLUMNS))
 
-STATE43_SCHEMA = (
-    "prev_close double, seen int, tr_buf array<double>, buf_head int, "
-    "buf_len int, tr_sum double, l0 double, l1 double, l2 double, "
-    "l3 double, last_offset long, vel double, "
-    + ", ".join(f"h_{s} array<double>" for s in _SERIES)
-    + ", c_bars_in double, c_bs_os double, c_bs_ob double")
+#: what :class:`Entity43Stream` carries beyond :data:`CORE_STATE`
+STATE43 = (("vel", "double"),
+           *((f"h_{s}", "array<double>") for s in _SERIES),
+           ("c_bars_in", "double"), ("c_bs_os", "double"),
+           ("c_bs_ob", "double"))
 
-
+#: checkpoint order: ``last_offset`` sits between the core and the rest
+STATE43_SCHEMA = ddl([*CORE_STATE, LAST_OFFSET, *STATE43])
 
 
 class Entity43Stream:
@@ -79,9 +79,9 @@ class Entity43Stream:
     one instance per grain.  Bit-exact batch parity is pinned by
     test_streaming.
 
-    ``from_tuple``/``to_tuple`` pack exactly the 25 fields of
-    STATE43_SCHEMA minus ``last_offset`` (a 24-tuple; offset tracking
-    belongs to the caller)."""
+    ``from_tuple``/``to_tuple`` pack :data:`CORE_STATE` then
+    :data:`STATE43`: STATE43_SCHEMA minus ``last_offset`` (offset
+    tracking belongs to the caller)."""
 
     __slots__ = ("cfg", "p", "off", "down", "up", "st", "vel", "hist",
                  "c_bars_in", "c_bs_os", "c_bs_ob")
@@ -96,25 +96,21 @@ class Entity43Stream:
         self.hist = {s: np.empty(0) for s in _SERIES}
         self.c_bars_in = self.c_bs_os = self.c_bs_ob = 0.0
 
-    # -- state packing (24 flat fields) ---------------------------------
+    # -- state packing --------------------------------------------------
 
     @classmethod
     def from_tuple(cls, cfg: FeatureConfig, tup) -> "Entity43Stream":
         self = cls(cfg)
         self.st = unpack_core_state(tup, self.p)
-        self.vel = tup[10]
-        self.hist = {s: np.asarray(tup[11 + i], dtype=np.float64)
-                     for i, s in enumerate(_SERIES)}
-        self.c_bars_in, self.c_bs_os, self.c_bs_ob = (
-            tup[21], tup[22], tup[23])
+        nc = len(CORE_STATE)
+        (self.vel, *hist, self.c_bars_in, self.c_bs_os,
+         self.c_bs_ob) = tup[nc:nc + len(STATE43)]
+        self.hist = {s: np.asarray(x, dtype=np.float64)
+                     for s, x in zip(_SERIES, hist)}
         return self
 
     def to_tuple(self) -> tuple:
-        st = self.st
-        return (st["prev_close"], st["seen"], st["tr_buf"],
-                st["buf_head"], st["buf_len"], st["tr_sum"],
-                st["l0"], st["l1"], st["l2"], st["l3"],
-                float(self.vel),
+        return (*pack_core_state(self.st), float(self.vel),
                 *[self.hist[s].tolist() for s in _SERIES],
                 float(self.c_bars_in), float(self.c_bs_os),
                 float(self.c_bs_ob))
@@ -215,21 +211,20 @@ class Entity43Stream:
 
 
 def make_update43_fn(cfg: FeatureConfig):
+    nc = len(CORE_STATE)            # last_offset's position in the state
+
     def fn(key, pdf_iter, state):
         source, doc_id = key
         if state.exists:
             tup = state.get
-            last_offset = tup[10]
-            ent = Entity43Stream.from_tuple(
-                cfg, tup[:10] + tup[11:])     # drop last_offset at [10]
+            last_offset = tup[nc]
+            ent = Entity43Stream.from_tuple(cfg, tup[:nc] + tup[nc + 1:])
         else:
             ent = Entity43Stream(cfg)
             last_offset = -1
 
-        for pdf in gather_group_chunks(pdf_iter):
-            pdf = filter_new_bars(pdf, last_offset)
-            if len(pdf) == 0:
-                continue
+        pdf = new_bars(pdf_iter, last_offset)
+        if pdf is not None:
             offs = pdf["offset"].to_numpy(dtype=np.int64)
             out = ent.advance(pdf["high"].to_numpy(dtype=np.float64),
                               pdf["low"].to_numpy(dtype=np.float64),
@@ -240,7 +235,7 @@ def make_update43_fn(cfg: FeatureConfig):
                                 **{c: out[c] for c in FEATURE_COLUMNS}})
 
         t = ent.to_tuple()
-        state.update(t[:10] + (int(last_offset),) + t[10:])
+        state.update(t[:nc] + (int(last_offset),) + t[nc:])
 
     return fn
 
@@ -258,9 +253,5 @@ def stream_features43(spark, input_dir: str, output_dir: str,
            .applyInPandasWithState(
                make_update43_fn(cfg), OUTPUT43_SCHEMA, STATE43_SCHEMA,
                "append", GroupStateTimeout.NoTimeout))
-    q = (out.writeStream.format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(out.writeStream.format("parquet").option("path", output_dir),
+          checkpoint_dir)

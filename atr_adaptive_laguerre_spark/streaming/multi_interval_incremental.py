@@ -64,10 +64,10 @@ from atr_adaptive_laguerre_spark.kernel.multi_interval_ref import (
     INTERACTION_COLUMNS, multi_interval_columns,
 )
 from atr_adaptive_laguerre_spark.streaming.expanded import (
-    _SERIES, Entity43Stream,
+    STATE43, Entity43Stream,
 )
 from atr_adaptive_laguerre_spark.streaming.stateful import (
-    filter_new_bars, gather_group_chunks,
+    CORE_STATE, LAST_OFFSET, ddl, drain, new_bars,
 )
 
 NF = len(FEATURE_COLUMNS)          # 43
@@ -81,6 +81,20 @@ AVAIL_INPUT_SCHEMA = ("source string, doc_id string, offset long, "
 _K_HIST = 10
 #: slab column order: INTERACTION_INPUTS of the base, mult1, mult2 grains
 _K_KEYS = tuple((g, col) for g in "b12" for col in INTERACTION_INPUTS)
+
+
+#: an :class:`Entity43Stream`'s packed fields (:data:`CORE_STATE` +
+#: :data:`STATE43`)
+_E43 = (*CORE_STATE, *STATE43)
+#: what a :class:`_Grain` carries beyond its stepper's :data:`_E43`
+GRAIN = (("rem_h", "array<double>"), ("rem_l", "array<double>"),
+         ("rem_c", "array<double>"), ("rem_av", "array<double>"),
+         ("wavail", "array<double>"), ("wvecs", "array<double>"),
+         ("discarded", "long"))
+#: what an :class:`Entity121Stream` carries beyond its three steppers
+ENTITY121 = (("p_off", "array<long>"), ("p_avail", "array<double>"),
+             ("p_base", "array<double>"), ("i_k_hist", "array<double>"),
+             ("i_c_bsa", "double"), ("i_c_ad", "double"))
 
 
 def _arr(x) -> np.ndarray:
@@ -168,16 +182,14 @@ class _Grain:
     @classmethod
     def from_tuple(cls, cfg: FeatureConfig, m: int, tup) -> "_Grain":
         self = cls(cfg, m)
-        self.ent = Entity43Stream.from_tuple(cfg, tup[:24])
-        self.rem_h, self.rem_l, self.rem_c, self.rem_av = (
-            _arr(tup[24]), _arr(tup[25]), _arr(tup[26]), _arr(tup[27]))
-        self.wavail = _arr(tup[28])
-        self.wvecs = _arr(tup[29]).reshape(-1, NF)
-        self.discarded = int(tup[30])
+        self.ent = Entity43Stream.from_tuple(cfg, tup)
+        n = len(_E43)
+        *arrs, discarded = tup[n:n + len(GRAIN)]
+        (self.rem_h, self.rem_l, self.rem_c, self.rem_av, self.wavail,
+         wvecs) = map(_arr, arrs)
+        self.wvecs = wvecs.reshape(-1, NF)
+        self.discarded = int(discarded)
         return self
-
-
-GRAIN_N_FIELDS = 31
 
 
 def _block_interactions(Kb, K1, K2, istate) -> dict[str, np.ndarray]:
@@ -293,49 +305,27 @@ class Entity121Stream:
     @classmethod
     def from_tuple(cls, cfg: FeatureConfig, tup) -> "Entity121Stream":
         self = cls(cfg)
-        self.base = Entity43Stream.from_tuple(cfg, tup[:24])
-        p = 24
-        self.g1 = _Grain.from_tuple(cfg, cfg.multiplier_1,
-                                    tup[p:p + GRAIN_N_FIELDS])
-        p += GRAIN_N_FIELDS
-        self.g2 = _Grain.from_tuple(cfg, cfg.multiplier_2,
-                                    tup[p:p + GRAIN_N_FIELDS])
-        p += GRAIN_N_FIELDS
-        self.p_off = np.asarray(tup[p], dtype=np.int64)
-        self.p_avail = _arr(tup[p + 1])
-        self.p_base = _arr(tup[p + 2]).reshape(-1, NF)
-        self.istate = {"k_hist": _arr(tup[p + 3]).reshape(-1, len(_K_KEYS)),
-                       "c_bsa": float(tup[p + 4]),
-                       "c_ad": float(tup[p + 5])}
+        n43 = len(_E43)
+        ng = n43 + len(GRAIN)           # one grain's packed fields
+        self.base = Entity43Stream.from_tuple(cfg, tup)
+        self.g1 = _Grain.from_tuple(cfg, cfg.multiplier_1, tup[n43:])
+        self.g2 = _Grain.from_tuple(cfg, cfg.multiplier_2, tup[n43 + ng:])
+        p = n43 + 2 * ng
+        p_off, p_avail, p_base, k_hist, c_bsa, c_ad = tup[p:p + len(ENTITY121)]
+        self.p_off = np.asarray(p_off, dtype=np.int64)
+        self.p_avail = _arr(p_avail)
+        self.p_base = _arr(p_base).reshape(-1, NF)
+        self.istate = {"k_hist": _arr(k_hist).reshape(-1, len(_K_KEYS)),
+                       "c_bsa": float(c_bsa), "c_ad": float(c_ad)}
         return self
 
 
-def _entity43_state_fields(prefix: str) -> str:
-    return (f"{prefix}prev_close double, {prefix}seen int, "
-            f"{prefix}tr_buf array<double>, {prefix}buf_head int, "
-            f"{prefix}buf_len int, {prefix}tr_sum double, "
-            f"{prefix}l0 double, {prefix}l1 double, {prefix}l2 double, "
-            f"{prefix}l3 double, {prefix}vel double, "
-            + ", ".join(f"{prefix}h_{s} array<double>" for s in _SERIES)
-            + f", {prefix}c_bars_in double, {prefix}c_bs_os double, "
-            f"{prefix}c_bs_ob double")
-
-
-def _grain_state_fields(prefix: str) -> str:
-    return (_entity43_state_fields(prefix)
-            + f", {prefix}rem_h array<double>, {prefix}rem_l array<double>, "
-            f"{prefix}rem_c array<double>, {prefix}rem_av array<double>, "
-            f"{prefix}wavail array<double>, {prefix}wvecs array<double>, "
-            f"{prefix}discarded long")
-
-
 def state121_inc_schema() -> str:
-    return (_entity43_state_fields("b_")
-            + ", " + _grain_state_fields("g1_")
-            + ", " + _grain_state_fields("g2_")
-            + ", p_off array<long>, p_avail array<double>, "
-            "p_base array<double>, i_k_hist array<double>, "
-            "i_c_bsa double, i_c_ad double, last_offset long")
+    """The base stepper's, both grains' and the entity's own fields
+    (prefixed ``b_``, ``g1_``, ``g2_``, none), then ``last_offset``."""
+    return ", ".join([ddl(_E43, "b_"), ddl([*_E43, *GRAIN], "g1_"),
+                      ddl([*_E43, *GRAIN], "g2_"),
+                      ddl([*ENTITY121, LAST_OFFSET])])
 
 
 def output121_schema(cfg: FeatureConfig) -> str:
@@ -364,13 +354,10 @@ def make_update121_inc_fn(cfg: FeatureConfig):
             ent = Entity121Stream(cfg)
             last_offset = -1
 
-        for pdf in gather_group_chunks(pdf_iter):
-            pdf = filter_new_bars(pdf, last_offset)
-            if len(pdf) == 0:
-                continue
+        pdf = new_bars(pdf_iter, last_offset)
+        if pdf is not None:
             offs = pdf["offset"].to_numpy(dtype=np.int64)
-            if offs[0] != last_offset + 1 or \
-                    (len(offs) > 1 and (np.diff(offs) != 1).any()):
+            if offs[0] != last_offset + 1 or (np.diff(offs) != 1).any():
                 raise ValueError(
                     f"offset gap for entity {doc_id!r}: got "
                     f"{offs[0]}..{offs[-1]} after {last_offset}")
@@ -380,12 +367,11 @@ def make_update121_inc_fn(cfg: FeatureConfig):
                               pdf["close"].to_numpy(dtype=np.float64),
                               pdf["avail"].to_numpy(dtype=np.float64))
             last_offset = int(offs[-1])
-            if res is None:
-                continue
-            out_offs, cols = res
-            yield pd.DataFrame({"source": source, "doc_id": doc_id,
-                                "offset": out_offs,
-                                **{c: cols[c] for c in feat_cols}})
+            if res is not None:
+                out_offs, cols = res
+                yield pd.DataFrame({"source": source, "doc_id": doc_id,
+                                    "offset": out_offs,
+                                    **{c: cols[c] for c in feat_cols}})
 
         state.update((*ent.to_tuple(), int(last_offset)))
 
@@ -406,9 +392,5 @@ def stream_features121_incremental(spark, input_dir: str, output_dir: str,
                make_update121_inc_fn(cfg), output121_schema(cfg),
                state121_inc_schema(), "append",
                GroupStateTimeout.NoTimeout))
-    q = (out.writeStream.format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(out.writeStream.format("parquet").option("path", output_dir),
+          checkpoint_dir)

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from atr_adaptive_laguerre_spark.streaming.stateful import drain
+
 #: vectors arriving on a stream
 VEC_SCHEMA = "vec_id long, embedding array<float>"
 
@@ -55,8 +57,4 @@ def stream_semantic_index_append(spark: SparkSession, input_dir: str,
          .parquet(f"{index_dir}/asgn_inc/batch={batch_id}"))
 
     sdf = spark.readStream.schema(VEC_SCHEMA).parquet(input_dir)
-    q = (sdf.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(process), checkpoint_dir)

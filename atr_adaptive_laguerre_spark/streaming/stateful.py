@@ -30,24 +30,22 @@ OUTPUT_SCHEMA = ("source string, doc_id string, offset long, "
                  "L0 double, L1 double, L2 double, L3 double, "
                  "min_atr double, max_atr double, atr double")
 
-STATE_SCHEMA = ("prev_close double, seen int, tr_buf array<double>, "
-                "buf_head int, buf_len int, tr_sum double, "
-                "l0 double, l1 double, l2 double, l3 double, "
-                "last_offset long")
+#: the per-entity core recurrence state every stepper carries, in
+#: checkpoint order, as (name, Spark type)
+CORE_STATE = (
+    ("prev_close", "double"), ("seen", "int"), ("tr_buf", "array<double>"),
+    ("buf_head", "int"), ("buf_len", "int"), ("tr_sum", "double"),
+    ("l0", "double"), ("l1", "double"), ("l2", "double"), ("l3", "double"))
+#: the replay guard's high-water mark, kept beside each stepper's state
+LAST_OFFSET = ("last_offset", "long")
 
 
-def filter_new_bars(pdf, last_offset: int):
-    """Chronological replay guard shared by every stateful update fn:
-    sort by offset (stable — first arrival wins among duplicates), drop
-    offsets already processed and within-batch duplicates."""
-    pdf = pdf.sort_values("offset", kind="stable")
-    offs_all = pdf["offset"].to_numpy(dtype=np.int64)
-    keep = offs_all > last_offset
-    if len(offs_all) > 1:
-        keep[1:] &= offs_all[1:] > offs_all[:-1]
-    if not keep.all():
-        pdf = pdf[keep]
-    return pdf
+def ddl(fields, prefix: str = "") -> str:
+    """Spark DDL for ``(name, type)`` fields, each name ``prefix``-ed."""
+    return ", ".join(f"{prefix}{name} {typ}" for name, typ in fields)
+
+
+STATE_SCHEMA = ddl([*CORE_STATE, LAST_OFFSET])
 
 
 def new_core_state(p: int) -> dict:
@@ -59,34 +57,59 @@ def new_core_state(p: int) -> dict:
 
 
 def unpack_core_state(tup, p: int) -> dict:
-    """Restore the 10 core fields from a checkpointed state tuple; the
-    ring-buffer length must match the config's atr_period (a mismatched
-    cfg would silently corrupt the recurrence)."""
-    (prev_close, seen, tr_buf, buf_head, buf_len, tr_sum,
-     l0, l1, l2, l3) = tup[:10]
-    if len(tr_buf) != p:
+    """Restore the :data:`CORE_STATE` fields that lead a checkpointed
+    state tuple; the ring-buffer length must match the config's
+    atr_period (a mismatched cfg would silently corrupt the recurrence)."""
+    st = {name: v for (name, _), v in zip(CORE_STATE, tup)}
+    st["tr_buf"] = list(st["tr_buf"])
+    if len(st["tr_buf"]) != p:
         raise ValueError(
-            f"checkpointed tr_buf has length {len(tr_buf)} but config "
+            f"checkpointed tr_buf has length {len(st['tr_buf'])} but config "
             f"atr_period={p}; state was written by a different config")
-    return {"prev_close": prev_close, "seen": seen, "tr_buf": list(tr_buf),
-            "buf_head": buf_head, "buf_len": buf_len, "tr_sum": tr_sum,
-            "l0": l0, "l1": l1, "l2": l2, "l3": l3}
+    return st
 
 
-def gather_group_chunks(pdf_iter):
-    """Concatenate ALL of a group's Arrow chunks for this micro-batch
-    before ordering.  Chunk arrival order is not offset-ordered across
-    chunks (a group spanning several input files or >1 Arrow batch can
-    deliver a later chunk with earlier offsets), so per-chunk
-    ``offset > last_offset`` filtering would misclassify out-of-order
-    arrivals as replays and silently drop interior bars.  Returns a
-    one-element list (or empty) so callers keep their loop shape."""
+def pack_core_state(st: dict) -> tuple:
+    """The :data:`CORE_STATE` fields of ``st``, in checkpoint order."""
+    return tuple(st[name] for name, _ in CORE_STATE)
+
+
+def new_bars(pdf_iter, last_offset: int) -> pd.DataFrame | None:
+    """A group's not-yet-seen bars of this micro-batch in offset order,
+    or None when there are none: the replay guard shared by every
+    stateful update fn.
+
+    All of the group's Arrow chunks are concatenated before ordering:
+    chunk arrival order is not offset-ordered (a group spanning several
+    input files or >1 Arrow batch can deliver a later chunk with earlier
+    offsets), so per-chunk ``offset > last_offset`` filtering would
+    misclassify out-of-order arrivals as replays and silently drop
+    interior bars.  The sort is stable, so the first arrival wins among
+    duplicate offsets; offsets already processed are dropped."""
     chunks = [p for p in pdf_iter if len(p)]
     if not chunks:
-        return []
-    if len(chunks) == 1:
-        return [chunks[0]]
-    return [pd.concat(chunks, ignore_index=True)]
+        return None
+    pdf = (chunks[0] if len(chunks) == 1
+           else pd.concat(chunks, ignore_index=True))
+    pdf = pdf.sort_values("offset", kind="stable")
+    offs = pdf["offset"].to_numpy(dtype=np.int64)
+    keep = offs > last_offset
+    keep[1:] &= offs[1:] > offs[:-1]
+    return pdf[keep] if keep.any() else None
+
+
+def drain(writer, checkpoint_dir: str, once: bool = False) -> None:
+    """Start ``writer`` (a ``DataStreamWriter``) checkpointed in
+    ``checkpoint_dir``, process everything available, and return once it
+    is done.  ``once`` triggers ONE micro-batch instead of availableNow:
+    a ProcessingTimeTimeout stream never terminates under availableNow
+    (armed timeouts keep scheduling micro-batches), while trigger-once
+    processes everything available in one batch, firing timeouts that
+    expired since the previous invocation, then stops."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer = (writer.trigger(once=True) if once
+              else writer.trigger(availableNow=True))
+    writer.start().awaitTermination()
 
 
 def make_update_fn(cfg: FeatureConfig, ttl_ms: int | None = None):
@@ -118,15 +141,13 @@ def make_update_fn(cfg: FeatureConfig, ttl_ms: int | None = None):
         if state.exists:
             tup = state.get
             st = unpack_core_state(tup, p)
-            last_offset = tup[10]
+            last_offset = tup[-1]
         else:
             st = new_core_state(p)
             last_offset = -1
 
-        for pdf in gather_group_chunks(pdf_iter):
-            pdf = filter_new_bars(pdf, last_offset)
-            if len(pdf) == 0:
-                continue
+        pdf = new_bars(pdf_iter, last_offset)
+        if pdf is not None:
             offs = pdf["offset"].to_numpy(dtype=np.int64)
             out = core_loop_resumed(
                 pdf["high"].to_numpy(dtype=np.float64),
@@ -136,10 +157,7 @@ def make_update_fn(cfg: FeatureConfig, ttl_ms: int | None = None):
             yield pd.DataFrame({"source": source, "doc_id": doc_id,
                                 "offset": offs, **out})
 
-        state.update((st["prev_close"], st["seen"], st["tr_buf"],
-                      st["buf_head"], st["buf_len"], st["tr_sum"],
-                      st["l0"], st["l1"], st["l2"], st["l3"],
-                      int(last_offset)))
+        state.update((*pack_core_state(st), int(last_offset)))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
 
@@ -167,19 +185,8 @@ def stream_rsi(spark, input_dir: str, output_dir: str,
            .applyInPandasWithState(
                make_update_fn(cfg, ttl_ms), OUTPUT_SCHEMA, STATE_SCHEMA,
                "append", timeout))
-    w = (out.writeStream.format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir))
-    if ttl_ms is not None:
-        # ProcessingTimeTimeout + availableNow never terminates (armed
-        # timeouts keep scheduling micro-batches); trigger-once processes
-        # everything available in ONE batch, firing timeouts that expired
-        # since the previous invocation, then stops.
-        w = w.trigger(once=True)
-    else:
-        w = w.trigger(availableNow=True)
-    q = w.start()
-    q.awaitTermination()
+    drain(out.writeStream.format("parquet").option("path", output_dir),
+          checkpoint_dir, once=ttl_ms is not None)
 
 
 TS_INPUT_SCHEMA = ("source string, doc_id string, ts timestamp, "
@@ -208,11 +215,5 @@ def stream_windowed_stats(spark, input_dir: str, output_dir: str,
            .select(F.col("w.start").alias("w_start"),
                    F.col("w.end").alias("w_end"),
                    "source", "n_bars", "avg_close", "max_close"))
-    q = (out.writeStream.format("parquet")
-         .outputMode("append")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
+    drain(out.writeStream.format("parquet").outputMode("append")
+          .option("path", output_dir), checkpoint_dir)

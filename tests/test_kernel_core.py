@@ -140,20 +140,9 @@ def test_non_anticipative_prefix_property(seed, n):
 
 
 def test_workspace_vec_grows_beyond_default():
-    """ADVICE r1: a chunk with more docs than the default vector width
-    (legal under the cell budget with 1-token docs) must not truncate the
-    kernel's state vectors."""
-    import numpy as np
-
-    from atr_adaptive_laguerre_spark.kernel.batched import (
-        Workspace, core_loop_batched,
-    )
-
-    ws = Workspace(cells=70_000)
-    v = ws.vec(7, 66_000)
-    assert v.shape == (66_000,)
-
-    # end-to-end: 70k one-token docs through the batched kernel
+    """A chunk with more docs than 65,536 (legal under the cell budget
+    with 1-token docs) must not truncate the kernel's per-row state
+    vectors: 70k one-token docs through the batched kernel."""
     b = 70_000
     high = np.full((b, 1), 101.0)
     low = np.full((b, 1), 99.0)
@@ -170,3 +159,5 @@ class TestNumpyFallback:
     test_exact = staticmethod(test_batched_matches_oracle_exact)
     test_single_row = staticmethod(test_batched_matches_oracle_single_row)
     test_hypothesis = staticmethod(test_batched_matches_oracle_hypothesis)
+    test_workspace_vec_grows_beyond_default = staticmethod(
+        test_workspace_vec_grows_beyond_default)

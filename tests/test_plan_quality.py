@@ -60,9 +60,11 @@ def test_features_job_prunes_input_columns(spark):
     from atr_adaptive_laguerre_spark.engine.features_job import features_long
 
     doc = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    from atr_adaptive_laguerre_spark.engine.tokens import tokenize_documents
+    from atr_adaptive_laguerre_spark.engine.tokens import (
+        tokenize_documents_portable,
+    )
 
-    tok = tokenize_documents(doc)
+    tok = tokenize_documents_portable(doc)
     plan = _plan(features_long(tok, FeatureConfig(atr_period=14)))
     rs = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "text" in rs and "doc_id" in rs, rs

@@ -137,6 +137,13 @@ def test_bigcache_compile_failure_warns(monkeypatch, tmp_path, caplog):
     assert sorted(os.listdir(tmp_path)) == ["bigcache.c"]
 
 
+def test_bigcache_without_source_ignores_unhashed_build(tmp_path):
+    """Without ``bigcache.c`` there is nothing to hash a build against, so
+    a plain ``bigcache.so`` left in the directory is never preloaded."""
+    (tmp_path / "bigcache.so").write_bytes(b"")
+    assert session._bigcache_preload(str(tmp_path)) is None
+
+
 def test_bigcache_rebuilds_after_source_edit(monkeypatch, tmp_path):
     """An edit to the shim's source builds and preloads a new library
     instead of reusing the one built from the old source."""
