@@ -34,11 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from atr_adaptive_laguerre_spark.operators.curation import (
     MIN_QUALITY, MIN_TOKENS, PACK_BUCKET_W, SEQ_LEN, SHUFFLE_BUCKET_HEX,
-    SHUFFLE_SHARDS,
+    SHUFFLE_SHARDS, doc_scores, is_canonical,
 )
-from atr_adaptive_laguerre_spark.operators.text import (
-    pii_scrub_cols, quality_cols, words_col,
-)
+from atr_adaptive_laguerre_spark.operators.text import pii_scrub_cols
 
 #: per-stage lineage row written after the job commits
 CORPUS_MANIFEST_SCHEMA = ("run_id string, stage string, n_docs_in long, "
@@ -51,12 +49,8 @@ def _gated(docs: DataFrame, min_tokens: int, min_quality: float,
     """Doc-grain keep decision — the exact `curation_report` gates
     (exact-dup canonical, token floor, quality floor, optional near-dup
     drop set) kept at doc grain instead of aggregated to a report."""
-    w = words_col()
-    scored = docs.select(
-        "doc_id", "source", "text",
-        F.size(w).cast("bigint").alias("n_tokens"),
-        quality_cols(w)[2].alias("quality_score"),
-        F.md5(F.concat_ws(" ", w)).alias("chash"))
+    scored = doc_scores(docs, "text").withColumn(
+        "n_tokens", F.col("token_count").cast("bigint"))
     keep = ((F.col("n_tokens") >= min_tokens)
             & (F.col("quality_score") >= min_quality))
     if near_dup_drops is not None:
@@ -64,10 +58,7 @@ def _gated(docs: DataFrame, min_tokens: int, min_quality: float,
               .withColumn("nd_drop", F.lit(1)))
         scored = scored.join(nd, "doc_id", "left")  # AQE sizes the join
         keep = keep & F.col("nd_drop").isNull()
-    cw = Window.partitionBy("chash")
-    return (scored
-            .withColumn("keep", (F.col("doc_id")
-                                 == F.min("doc_id").over(cw)) & keep)
+    return (scored.withColumn("keep", is_canonical() & keep)
             .filter("keep")
             .select("doc_id", "source", "text", "n_tokens"))
 

@@ -23,43 +23,11 @@ import re
 
 from pyspark.sql import SparkSession
 
-from atr_adaptive_laguerre_spark.native import BuildError, build_shared
+from atr_adaptive_laguerre_spark.native import (
+    MALLOC_ENV, BuildError, build_shared,
+)
 
 log = logging.getLogger(__name__)
-
-
-#: Allocator tuning for the driver JVM and the Python workers (both
-#: inherit this environment in local mode; ``spark.executorEnv.*``
-#: propagates it to cluster executors).  Page-fault handling collapses
-#: under many-core concurrency on virtualized hosts, so freed buffers
-#: must STAY MAPPED — that is what lets the kernel's expander,
-#: interactions and feature jobs allocate fresh arrays per chunk
-#: without re-faulting them:
-#:
-#: * ``MALLOC_TRIM_THRESHOLD_=-1`` — never give the main-arena heap
-#:   back to the OS.
-#: * ``MALLOC_MMAP_THRESHOLD_=32 MiB`` (glibc's hard cap) — blocks up
-#:   to 32 MiB come from the retained heap instead of per-block
-#:   mmap/munmap.  16 MiB (the r2 value) exactly matched the Arrow/
-#:   netty allocator's chunk size, so every JVM-side Arrow chunk was
-#:   still mmap'd and the receive path re-faulted the full funnel
-#:   volume (~1.2 M faults/run measured at sf0.1) every query run.
-#: * ``MALLOC_ARENA_MAX=1`` — glibc frees EMPTY NON-MAIN arena heaps
-#:   back to the OS regardless of the trim threshold, so the JVM's
-#:   multi-threaded allocations must be pinned to the main arena for
-#:   the retention settings to hold.  Measured: java faults/run
-#:   1.2 M -> ~0.3 M, python workers 0.43 M -> 0.25 M, with no
-#:   arena-lock contention visible in the relational suite.
-#: * ``ARROW_DEFAULT_MEMORY_POOL=system`` — pyarrow's bundled jemalloc
-#:   purges dirty pages after a decay interval (madvise DONTNEED), so
-#:   worker-side Arrow buffers re-faulted on every run; the system
-#:   (glibc) pool inherits the retention settings above.
-MALLOC_ENV = {
-    "MALLOC_TRIM_THRESHOLD_": "-1",
-    "MALLOC_MMAP_THRESHOLD_": "33554432",
-    "MALLOC_ARENA_MAX": "1",
-    "ARROW_DEFAULT_MEMORY_POOL": "system",
-}
 
 
 #: the allocator shim's source and its build

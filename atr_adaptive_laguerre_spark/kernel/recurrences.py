@@ -28,7 +28,9 @@ from importlib import resources
 
 import numpy as np
 
-from atr_adaptive_laguerre_spark.native import BuildError, build_shared
+from atr_adaptive_laguerre_spark.native import (
+    BuildError, build_shared, warn_without_malloc_env,
+)
 
 log = logging.getLogger(__name__)
 
@@ -123,8 +125,11 @@ _compiled: Compiled | None | bool = None      # False: tried, unavailable
 
 def compiled() -> Compiled | None:
     """The compiled recurrences, built and loaded on the first call in
-    this process; None when they are unavailable (warned once)."""
+    this process; None when they are unavailable (warned once).  The
+    first call also warns when the process started without the
+    retaining allocator's environment."""
     global _compiled
     if _compiled is None:
+        warn_without_malloc_env()
         _compiled = _load() or False
     return _compiled or None

@@ -14,15 +14,45 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from atr_adaptive_laguerre_spark.operators import _r6, _u6
 from atr_adaptive_laguerre_spark.operators.io import read_table
 from atr_adaptive_laguerre_spark.operators.text import (
-    _r6, _sw_sql, quality_cols, quality_sql, words_col,
+    _sw_sql, quality_cols, quality_sql, words_col,
 )
 
 MIN_TOKENS = 20
 #: median-ish cut on the synthetic corpus (q50 ~0.38) — keeps the
 #: decision non-degenerate in both directions at every sf
 MIN_QUALITY = 0.38
+
+
+def doc_scores(docs: DataFrame, *extra: str) -> DataFrame:
+    """Per-doc curation scores ``(doc_id, source, *extra, token_count,
+    quality_score, lang_guess, chash)``: token count, quality score and
+    the heuristic language guess over the normalized words, and the md5
+    content hash of the normalized text that the exact-dup keep groups
+    on.  Callers select or cast what they need; unused columns are
+    pruned from the plan."""
+    w = words_col()
+    stop_ratio, _ttr, quality = quality_cols(w)
+    has_cjk = F.length(F.regexp_replace(F.col("text"),
+                                        r"[^一-鿿]", "")) > 0
+    guess = (F.when(has_cjk, "cjk")
+             .when(stop_ratio >= 0.05, "en")
+             .otherwise("other"))
+    return docs.select(
+        "doc_id", "source", *extra,
+        F.size(w).alias("token_count"),
+        quality.alias("quality_score"),
+        guess.alias("lang_guess"),
+        F.md5(F.concat_ws(" ", w)).alias("chash"))
+
+
+def is_canonical():
+    """Exact-dup keep over :func:`doc_scores` rows: true on the lowest
+    doc_id of each content hash (one chash-keyed window)."""
+    return (F.col("doc_id")
+            == F.min("doc_id").over(Window.partitionBy("chash")))
 
 
 def curation_report(docs: DataFrame, min_tokens: int = MIN_TOKENS,
@@ -38,21 +68,7 @@ def curation_report(docs: DataFrame, min_tokens: int = MIN_TOKENS,
     The module-level defaults are calibrated to the synthetic corpus
     (median-ish quality cut); a production pipeline passes its own
     thresholds — or derives min_quality from a quantile of a sample."""
-    w = words_col()
-    n = F.size(w)
-    stop_ratio, _ttr, quality = quality_cols(w)
-    has_cjk = F.length(F.regexp_replace(F.col("text"),
-                                        r"[^一-鿿]", "")) > 0
-    guess = (F.when(has_cjk, "cjk")
-             .when(stop_ratio >= 0.05, "en")
-             .otherwise("other"))
-    norm = F.concat_ws(" ", w)
-    scored = docs.select(
-        "doc_id", "source",
-        n.alias("token_count"),
-        quality.alias("quality_score"),
-        guess.alias("lang_guess"),
-        F.md5(norm).alias("chash"))
+    scored = doc_scores(docs)
     keep = ((F.col("token_count") >= min_tokens)
             & (F.col("quality_score") >= min_quality))
     if near_dup_drops is not None:
@@ -69,10 +85,7 @@ def curation_report(docs: DataFrame, min_tokens: int = MIN_TOKENS,
               .withColumn("nd_drop", F.lit(1)))
         scored = scored.join(nd, "doc_id", "left")
         keep = keep & F.col("nd_drop").isNull()
-    cw = Window.partitionBy("chash")
-    flagged = scored.withColumn(
-        "keep",
-        ((F.col("doc_id") == F.min("doc_id").over(cw)) & keep).cast("int"))
+    flagged = scored.withColumn("keep", (is_canonical() & keep).cast("int"))
     return (flagged.groupBy("source", "lang_guess")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("keep").alias("n_kept"),
@@ -242,21 +255,7 @@ def curation_report_quantile(docs: DataFrame,
     a one-row threshold is nothing like the corpus-proportional
     drop-set broadcast removed by VERDICT r3 #2.)
     """
-    w = words_col()
-    n = F.size(w)
-    stop_ratio, _ttr, quality = quality_cols(w)
-    has_cjk = F.length(F.regexp_replace(F.col("text"),
-                                        r"[^一-鿿]", "")) > 0
-    guess = (F.when(has_cjk, "cjk")
-             .when(stop_ratio >= 0.05, "en")
-             .otherwise("other"))
-    norm = F.concat_ws(" ", w)
-    scored = docs.select(
-        "doc_id", "source",
-        n.alias("token_count"),
-        _r6(quality).alias("q6"),
-        guess.alias("lang_guess"),
-        F.md5(norm).alias("chash"))
+    scored = doc_scores(docs).withColumn("q6", _r6(F.col("quality_score")))
     hist = scored.groupBy("q6").agg(F.count(F.lit(1)).alias("cnt"))
     hw = Window.orderBy("q6")          # <= 10^6+1 rows by construction
     cum = hist.select(
@@ -270,10 +269,7 @@ def curation_report_quantile(docs: DataFrame,
     scored = scored.crossJoin(F.broadcast(thr))
     keep = ((F.col("token_count") >= min_tokens)
             & (F.col("q6") >= F.col("quality_thr")))
-    cw = Window.partitionBy("chash")
-    flagged = scored.withColumn(
-        "keep",
-        ((F.col("doc_id") == F.min("doc_id").over(cw)) & keep).cast("int"))
+    flagged = scored.withColumn("keep", (is_canonical() & keep).cast("int"))
     return (flagged.groupBy("source", "lang_guess", "quality_thr")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("keep").alias("n_kept"),
@@ -805,9 +801,7 @@ def q_corpus_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(words_col())).alias("tokens"))
-    sq6 = F.floor(F.sqrt(F.col("tokens").cast("double"))
-                  * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
-    per = per.withColumn("sq6", sq6)
+    per = per.withColumn("sq6", _u6(F.sqrt(F.col("tokens").cast("double"))))
     w = Window.partitionBy()       # O(#sources) rows by construction
     return (per.select(
         "source", "n_docs", "tokens",
@@ -867,9 +861,7 @@ def q_corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(words_col())).alias("tokens"))
-    per = per.withColumn(
-        "sq6", F.floor(F.sqrt(F.col("tokens").cast("double"))
-                       * F.lit(1000000.0) + F.lit(0.5)).cast("bigint"))
+    per = per.withColumn("sq6", _u6(F.sqrt(F.col("tokens").cast("double"))))
     w = Window.partitionBy()       # O(#sources) rows by construction
     budget = F.expr(f"sum(tokens) over () div {MIX_BUDGET_DEN}")
     rates = (per

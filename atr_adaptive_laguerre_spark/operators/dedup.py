@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from atr_adaptive_laguerre_spark.operators import _r6
+from atr_adaptive_laguerre_spark.operators.text import words_col
+
 NGRAM = 3
 MINHASH_K = 12
 LSH_BANDS = 4          # 4 bands x 3 rows
@@ -43,19 +46,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table(spark, sf_dir, "documents")
 
 
-def _r6(col):
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
-def _words():
-    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-
-
 def shingles_col(n: int = NGRAM):
     """Word n-gram shingles as space-joined strings (distinct).  Docs with
     fewer than n words yield an empty array (F.sequence would descend for
     a negative stop, so gate it)."""
-    w = _words()
+    w = words_col()
     idx = F.sequence(F.lit(0), F.size(w) - n)
     sh = F.transform(
         idx, lambda i: F.concat_ws(
@@ -68,7 +63,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by normalized-content hash; emit each doc with
     its canonical (minimum) doc_id and the duplicate-group size."""
     docs = _docs(spark, sf_dir)
-    norm = F.concat_ws(" ", _words())
+    norm = F.concat_ws(" ", words_col())
     h = docs.select("doc_id", F.md5(norm).alias("chash"))
     w = Window.partitionBy("chash")
     return (h.select("doc_id", "chash",
@@ -973,7 +968,7 @@ def _simhash_fps(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     q_dedup_simhash (16-bit legacy surface).  Single 60-bit hash stream,
     so bits must be <= 60."""
     wd = docs.select(
-        "doc_id", F.explode(F.array_distinct(_words())).alias("w"))
+        "doc_id", F.explode(F.array_distinct(words_col())).alias("w"))
     h = wd.select("doc_id", _hash60(F.col("w"), 0).alias("h"))
     votes = [
         F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1,
@@ -996,7 +991,7 @@ def _simhash_fps64(docs: DataFrame) -> DataFrame:
     power-of-two term far inside signed-bigint range on both engines and
     (b) make the 16-bit band extraction a shift on a small value."""
     wd = docs.select(
-        "doc_id", F.explode(F.array_distinct(_words())).alias("w"))
+        "doc_id", F.explode(F.array_distinct(words_col())).alias("w"))
     h = wd.select("doc_id", _hash60(F.col("w"), 0).alias("h0"),
                   _hash60(F.col("w"), 1).alias("h1"))
     votes = []
@@ -1126,7 +1121,7 @@ def chunks_col(width: int = CHUNK_W):
     """md5 hashes of consecutive non-overlapping ``width``-token chunks
     (full chunks only — a trailing remainder is not a comparable unit).
     Docs with < width words yield an empty array."""
-    w = _words()
+    w = words_col()
     n_full = F.floor(F.size(w) / width).cast("int")
     idx = F.sequence(F.lit(0), n_full - 1)
     ch = F.transform(
@@ -1215,7 +1210,7 @@ def chunk_texts_col(width: int = CHUNK_W):
     """Consecutive non-overlapping ``width``-token chunks as space-joined
     strings (the text twin of :func:`chunks_col` — same slicing, no
     hashing, so the kept chunks can be re-assembled into cleaned text)."""
-    w = _words()
+    w = words_col()
     n_full = F.floor(F.size(w) / width).cast("int")
     idx = F.sequence(F.lit(0), n_full - 1)
     ch = F.transform(
@@ -1252,7 +1247,7 @@ def chunk_clean_frame(docs: DataFrame, width: int = CHUNK_W,
     partition is that chunk's instance list (bounded by duplication —
     never a self-join), one doc_id groupBy to re-assemble kept chunks in
     position order.  All string/array work is JVM-side."""
-    base = docs.select("doc_id", _words().alias("wrds"),
+    base = docs.select("doc_id", words_col().alias("wrds"),
                        chunk_texts_col(width).alias("chs"))
     inst = (base.select("doc_id", F.posexplode("chs").alias("p", "chunk"))
             .withColumn("chash", F.md5("chunk")))
@@ -1576,7 +1571,7 @@ def cdc_chunk_report(docs: DataFrame, p: int = CDC_P) -> DataFrame:
     """Frame-level CDC chunk dedup report (see
     :func:`q_dedup_cdc_chunks`; split out so pipelines and the
     shift-robustness invariant test can run it on arbitrary frames)."""
-    pos = (docs.select("doc_id", F.posexplode(_words())
+    pos = (docs.select("doc_id", F.posexplode(words_col())
                        .alias("p", "word")))
     h = F.conv(F.substring(F.md5(F.concat(F.col("word"),
                                           F.lit(CDC_SALT))), 1, 15),
@@ -1679,7 +1674,7 @@ def substring_span_report(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Frame-level substring-span dedup report (see
     :func:`q_dedup_substring_spans`; split out so the planted-passage
     invariant test can run it on arbitrary frames)."""
-    w = _words()
+    w = words_col()
     base = docs.select("doc_id", F.size(w).cast("bigint").alias("n_words"))
     starts = F.when(
         F.size(w) >= n,
@@ -1784,7 +1779,7 @@ def q_dedup_substring_clean(spark: SparkSession, sf_dir: str,
 def substring_clean(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Frame-level substring-span removal (see
     :func:`q_dedup_substring_clean`)."""
-    w = _words()
+    w = words_col()
     base = docs.select("doc_id", F.size(w).cast("bigint").alias("n_words"))
     starts = F.when(
         F.size(w) >= n,

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from atr_adaptive_laguerre_spark.operators.similarity import _cosine, _r6
+from atr_adaptive_laguerre_spark.operators import _r6, _u6
+from atr_adaptive_laguerre_spark.operators.similarity import _cosine
 from atr_adaptive_laguerre_spark.operators.text import (
     BM25_B,
     BM25_K1,
@@ -93,8 +94,7 @@ def hybrid_search_rrf(docs: DataFrame, emb: DataFrame,
     # the sum needs no division by the seed count)
     qd = (seeds.select(F.posexplode("v").alias("dim", "x"))
           .groupBy("dim")
-          .agg(F.sum(F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5))
-                     .cast("bigint")).alias("qu")))
+          .agg(F.sum(_u6(F.col("x"))).alias("qu")))
     q = (qd.agg(F.array_sort(F.collect_list(F.struct("dim", "qu")))
                 .alias("s"))
          .select(F.transform("s", lambda t: t.qu.cast("double"))

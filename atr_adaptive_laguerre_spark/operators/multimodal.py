@@ -22,6 +22,8 @@ from collections.abc import Iterator
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from atr_adaptive_laguerre_spark.operators import _r6
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from atr_adaptive_laguerre_spark.operators.io import read_table
@@ -41,10 +43,6 @@ def _ascii_docs(docs: DataFrame) -> DataFrame:
     return docs.filter(
         F.octet_length(F.encode(F.col("text"), "UTF-8"))
         == F.length(F.col("text")))
-
-
-def _r6(col):
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 def with_media_column(docs: DataFrame) -> DataFrame:

@@ -1,22 +1,40 @@
 """Similarity search over the ``embeddings`` table (vec_id, embedding:
-array<float>, label).
+array<float>, label): every query here is JVM-side array math (no
+Python), ranked on r6-quantized keys with a deterministic tie-break.
 
-* brute-force cosine top-k — the exactness baseline: controlled cross
-  join + JVM-side higher-order dot product (``aggregate``/``zip_with``),
-  rank by quantized similarity with a deterministic tie-break;
-* LSH-bucketed ANN — random-hyperplane signatures from md5-derived
-  pseudo-hyperplanes (deterministic, engine-portable), bucket join, then
-  exact cosine only within buckets: the linear-cost scale path;
-* IVF top-k — coarse quantizer (per-label centroids as the trained
-  cells), one broadcast join assigns every corpus vector to its nearest
-  cell, queries probe the ``NPROBE`` nearest cells and run exact cosine
-  only inside them: the inverted-file scale path;
-* embedding-cosine near-dup — banded random-hyperplane LSH candidate
-  pairs verified by exact cosine >= threshold (the embedding analog of
-  MinHash+LSH->Jaccard dedup).
+* brute-force cosine top-k (``ann_topk_cosine``) — the exactness
+  baseline: broadcast queries x one corpus scan; ``hard_negative_mining``
+  is its label-filtered twin;
+* LSH (``ann_lsh_buckets``) — random-hyperplane signatures from
+  md5-derived pseudo-hyperplanes (deterministic, engine-portable);
+* IVF (``ann_ivf_topk``) — a coarse quantizer trained by Lloyd
+  iterations seeded from the first ``k`` vec_ids
+  (:func:`_kmeans_codebook`); one broadcast join assigns every vector
+  to its nearest cell and each query probes its ``nprobe`` nearest
+  cells, exact cosine only inside them (``embedding_kmeans`` exposes
+  the clustering itself; ``embedding_centroids`` summarizes labels);
+* PQ / IVFPQ (``ann_pq_topk``, ``ann_ivfpq_topk``,
+  ``ann_ivfpq_residual_topk``, ``ann_ivfpq_rerank``) — product
+  quantization with asymmetric distance (ADC) scoring, raw or
+  residual-encoded inside IVF cells, optionally refined by an exact
+  rerank.  Each IVFADC stage (encode, lookup table, ADC sum, rank,
+  rerank) is defined once below and shared by the inline queries and
+  the index-serving paths;
+* SQ (``ann_sq_topk``) — per-dimension 8-bit scalar quantization;
+* RP (``embedding_random_projection``, ``ann_rp_topk``) — sparse
+  Johnson-Lindenstrauss projection, and two-stage ANN through it;
+  ``embedding_covariance`` / ``embedding_standardize`` are the
+  whitening statistics;
+* semantic dedup and k-NN — banded-LSH cosine near-dup pairs and their
+  canonicalization, SemDeDup within trained cells, and the cell-local
+  (or multiprobe) k-NN graph;
+* persisted indexes — :func:`build_pq_index` / :func:`query_pq_index`
+  (IVF+PQ) and :func:`build_semantic_index` with its ``*_from_index``
+  consumers (the coarse-quantizer family): train once, serve many,
+  bit-identical to the inline queries.
 
-At 100 TB the brute-force variant broadcasts the (small) query set and
-scans the corpus once; the LSH/IVF variants replace the scan-per-query
+At 100 TB the brute-force variants broadcast the (small) query set and
+scan the corpus once; the LSH/IVF variants replace the scan-per-query
 with one shuffle on the bucket/cell key, and near-dup candidate
 generation stays linear (explode bands + one shuffle) instead of the
 all-pairs cross join.
@@ -25,6 +43,8 @@ all-pairs cross join.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from atr_adaptive_laguerre_spark.operators import _r6, _u6
 
 TOP_K = 5
 N_QUERIES = 20
@@ -37,8 +57,14 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table(spark, sf_dir, "embeddings")
 
 
-def _r6(col):
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, label, v, nrm)``: the embeddings as double arrays with
+    their norms, computed once per vector (unused columns are pruned
+    from each query's plan)."""
+    return (_emb(spark, sf_dir)
+            .select("vec_id", "label",
+                    F.col("embedding").cast("array<double>").alias("v"))
+            .withColumn("nrm", _norm(F.col("v"))))
 
 
 def _norm(v):
@@ -57,15 +83,23 @@ def _cosine(a, b, na=None, nb=None):
     return dot / (na * nb)
 
 
+def _query_side(vecs: DataFrame) -> DataFrame:
+    """``(query_id, qv, qn)`` for query vectors ``(vec_id, v)``."""
+    return vecs.select(F.col("vec_id").alias("query_id"),
+                       F.col("v").alias("qv"), _norm(F.col("v")).alias("qn"))
+
+
+def _sorted_list(key: str, val: str):
+    """Aggregate: the group's ``val`` values ordered by ``key``."""
+    return F.transform(F.array_sort(F.collect_list(F.struct(key, val))),
+                       lambda s: s[val])
+
+
 def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for the first 20 vectors (queries
     broadcast against the corpus scan)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
-    q = (emb.filter(F.col("vec_id") < N_QUERIES)
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                 F.col("nrm").alias("qn")))
+    emb = _vectors(spark, sf_dir)
+    q = _query_side(emb.filter(F.col("vec_id") < N_QUERIES))
     cand = emb.select(F.col("vec_id").alias("cand_id"),
                       F.col("v").alias("cv"), F.col("nrm").alias("cn"))
     sims = (F.broadcast(q).crossJoin(cand)
@@ -128,8 +162,7 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH: 8-bit signature per vector (bucket id);
     vectors sharing a bucket are ANN candidates.  Returns per-vector
     signatures plus the bucket population (candidate-set size)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     sig = sum((_plane_sign(F.col("v"), p) * F.lit(2 ** p)).cast("bigint")
               for p in range(LSH_PLANES)).alias("bucket")
     b = emb.select("vec_id", sig)
@@ -166,8 +199,7 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid norms + intra-label mean cosine to centroid —
     the aggregation side of embedding analytics (posexplode + groupBy,
     no UDF)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     dims = emb.select("label", "vec_id",
                       F.posexplode("v").alias("d", "x"))
     cent = (dims.groupBy("label", "d").agg(F.avg("x").alias("c"))
@@ -230,22 +262,10 @@ def _kmeans_codebook(emb: DataFrame, k: int = KMEANS_K,
             .select(F.col("vec_id").alias("cell"), F.col("v").alias("cv"),
                     F.col("nrm").alias("cn")))
     for _ in range(n_iter):
-        sim = (emb.select("vec_id", "v", "nrm")
-               .crossJoin(F.broadcast(cent))
-               .select("vec_id", "v", "cell",
-                       _r6(_cosine(F.col("v"), F.col("cv"),
-                                   F.col("nrm"), F.col("cn")))
-                       .alias("acos")))
-        wa = Window.partitionBy("vec_id").orderBy(F.col("acos").desc(),
-                                                  F.col("cell").asc())
-        assigned = (sim.withColumn("rn", F.row_number().over(wa))
-                    .filter(F.col("rn") == 1).select("vec_id", "v", "cell"))
-        dims = assigned.select("cell", F.posexplode("v").alias("d", "x"))
+        dims = _assign_cells(emb, cent).select(
+            "cell", F.posexplode("v").alias("d", "x"))
         cent = (dims.groupBy("cell", "d").agg(_r6(F.avg("x")).alias("c"))
-                .groupBy("cell")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("d", "c"))),
-                    lambda s: s.c).alias("cv"))
+                .groupBy("cell").agg(_sorted_list("d", "c").alias("cv"))
                 .select("cell", "cv", _norm(F.col("cv")).alias("cn"))
                 .localCheckpoint(eager=True))
     return cent
@@ -323,18 +343,13 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str,
     catalog entry pins the defaults for the oracle twin.  Production
     serves from the persisted artifact instead
     (:func:`build_semantic_index` / :func:`ann_ivf_from_index`)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
+    emb = _vectors(spark, sf_dir)
     cent = _kmeans_codebook(emb, k=k)
     # inverted lists: nearest cell per corpus vector
     assigned = _assign_cells(emb, cent)
     # probe sets: NPROBE nearest cells per query vector
-    q = (emb.filter(F.col("vec_id") < IVF_N_QUERIES)
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                 F.col("nrm").alias("qn")))
-    probes = _ivf_probes(cent, q, nprobe)
-    return _ivf_exact_topk(probes, assigned, TOP_K)
+    q = _query_side(emb.filter(F.col("vec_id") < IVF_N_QUERIES))
+    return _ivf_exact_topk(_ivf_probes(cent, q, nprobe), assigned, TOP_K)
 
 
 _COS_SQL = ("FLOOR((list_sum(list_transform(range(1, length({a}) + 1), "
@@ -423,9 +438,7 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-keyed window — linear at any corpus size.  Production serves
     from the persisted artifact instead (:func:`build_semantic_index` /
     :func:`kmeans_from_index`)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     cent = _kmeans_codebook(emb)
     return _kmeans_clusters(_assign_cells(emb, cent))
 
@@ -476,14 +489,14 @@ def _l2(a, b):
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _pq_subvectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, m, sv): each vector split into ``PQ_M`` contiguous
+def _pq_subvectors(emb: DataFrame, keys=("vec_id",)) -> DataFrame:
+    """(*keys, m, sv): each vector ``v`` split into ``PQ_M`` contiguous
     ``PQ_DS``-dim sub-vectors — one explode, JVM ``slice``."""
     return emb.select(
-        "vec_id",
+        *keys,
         F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
         F.col("v").alias("fv")).select(
-        "vec_id", "m",
+        *keys, "m",
         F.slice(F.col("fv"), F.col("m") * PQ_DS + 1, F.lit(PQ_DS))
         .alias("sv"))
 
@@ -510,23 +523,68 @@ def _pq_codebook(sub: DataFrame, ks: int = PQ_KS,
           .select("m", F.col("vec_id").alias("code"),
                   F.col("sv").alias("cv")))
     for _ in range(n_iter):
-        dist = (sub.join(F.broadcast(cb), "m")
-                .select("vec_id", "m", "sv", "code",
-                        _r6(_l2(F.col("sv"), F.col("cv"))).alias("dist")))
-        wa = Window.partitionBy("vec_id", "m").orderBy(
-            F.col("dist").asc(), F.col("code").asc())
-        asg = (dist.withColumn("rn", F.row_number().over(wa))
-               .filter(F.col("rn") == 1).select("vec_id", "m", "sv", "code"))
-        upd = (asg.select("m", "code", F.posexplode("sv").alias("d", "x"))
+        upd = (_pq_assign(sub, cb)
+               .select("m", "code", F.posexplode("sv").alias("d", "x"))
                .groupBy("m", "code", "d").agg(_r6(F.avg("x")).alias("c"))
-               .groupBy("m", "code")
-               .agg(F.transform(
-                   F.array_sort(F.collect_list(F.struct("d", "c"))),
-                   lambda s: s.c).alias("nv")))
+               .groupBy("m", "code").agg(_sorted_list("d", "c").alias("nv")))
         cb = (cb.join(upd, ["m", "code"], "left")
               .select("m", "code", F.coalesce("nv", "cv").alias("cv"))
               .localCheckpoint(eager=True))
     return cb
+
+
+def _pq_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, m, sv, code): the nearest code per (vector, subspace) —
+    one broadcast-codebook join + a (vec, m) argmin window over the
+    r6-quantized squared L2, ties to the lowest code.  The assignment
+    step of :func:`_pq_codebook`'s training and of :func:`_pq_encode`."""
+    dist = (sub.join(F.broadcast(cb), "m")
+            .select("vec_id", "m", "sv", "code",
+                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("dist")))
+    wa = Window.partitionBy("vec_id", "m").orderBy(
+        F.col("dist").asc(), F.col("code").asc())
+    return (dist.withColumn("rn", F.row_number().over(wa))
+            .filter(F.col("rn") == 1).select("vec_id", "m", "sv", "code"))
+
+
+def _pq_encode(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, codes): each vector's ``PQ_M`` codes in subspace order."""
+    return (_pq_assign(sub, cb).groupBy("vec_id")
+            .agg(_sorted_list("m", "code").alias("codes")))
+
+
+def _pq_lut(qsub: DataFrame, cb: DataFrame,
+            keys=("query_id",)) -> DataFrame:
+    """(*keys, lut): the ADC lookup table per query subvector set
+    ``qsub`` (*keys, m, sv): ``lut[m][code] = d(q_m, c_{m,code})``,
+    r6-quantized.  queries x codebook, both broadcastable."""
+    lutr = (qsub.join(F.broadcast(cb), "m")
+            .select(*keys, "m", "code",
+                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("pd")))
+    return (lutr.groupBy(*keys, "m")
+            .agg(_sorted_list("code", "pd").alias("lm"))
+            .groupBy(*keys).agg(_sorted_list("m", "lm").alias("lut")))
+
+
+def _adc():
+    """ADC distance of a row carrying a candidate's ``codes`` and its
+    query's ``lut``: the LUT entries its codes index, summed, r6."""
+    return _r6(F.aggregate(
+        F.zip_with("codes", "lut",
+                   lambda c, l: F.element_at(l, (c + 1).cast("int"))),
+        F.lit(0.0), lambda acc, v: acc + v))
+
+
+def _pq_ranked(scored: DataFrame, top_k: int) -> DataFrame:
+    """Per-query top-``top_k`` of ADC-scored candidates (query_id,
+    cand_id, [cell,] pq_dist): rank by pq_dist, ties on cand_id."""
+    wr = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(),
+                                                F.col("cand_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(wr))
+            .filter(F.col("rank") <= top_k)
+            .select("query_id", "rank",
+                    *[c for c in scored.columns if c != "query_id"])
+            .orderBy("query_id", "rank"))
 
 
 def pq_topk(emb: DataFrame, n_queries: int = PQ_N_QUERIES,
@@ -548,53 +606,18 @@ def pq_topk(emb: DataFrame, n_queries: int = PQ_N_QUERIES,
     (:func:`q_ann_ivf_topk`); ADC is the in-cell scorer."""
     sub = _pq_subvectors(emb)
     cb = _pq_codebook(sub)
-    # encode: nearest code per (vector, subspace) -> codes array
-    dist = (sub.join(F.broadcast(cb), "m")
-            .select("vec_id", "m", "code",
-                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("dist")))
-    wa = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("dist").asc(), F.col("code").asc())
-    codes = (dist.withColumn("rn", F.row_number().over(wa))
-             .filter(F.col("rn") == 1)
-             .groupBy("vec_id")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("m", "code"))),
-                 lambda s: s.code).alias("codes")))
-    # per-query ADC lookup table: lut[m][code] = d(q_m, c_{m,code})
-    lutr = (sub.filter(F.col("vec_id") < n_queries)
-            .join(F.broadcast(cb), "m")
-            .select(F.col("vec_id").alias("query_id"), "m", "code",
-                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("pd")))
-    lut = (lutr.groupBy("query_id", "m")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("code", "pd"))),
-               lambda s: s.pd).alias("lm"))
-           .groupBy("query_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lm"))),
-               lambda s: s.lm).alias("lut")))
-    scored = (codes.crossJoin(F.broadcast(lut))
+    lut = _pq_lut(sub.filter(F.col("vec_id") < n_queries)
+                  .withColumnRenamed("vec_id", "query_id"), cb)
+    scored = (_pq_encode(sub, cb).crossJoin(F.broadcast(lut))
               .filter(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("cand_id"),
-                      _r6(F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, l: F.element_at(
-                                         l, (c + 1).cast("int"))),
-                          F.lit(0.0), lambda acc, v: acc + v))
-                      .alias("pq_dist")))
-    wr = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(),
-                                                F.col("cand_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= top_k)
-            .select("query_id", "rank", "cand_id", "pq_dist")
-            .orderBy("query_id", "rank"))
+                      _adc().alias("pq_dist")))
+    return _pq_ranked(scored, top_k)
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing PQ/ADC top-k (see :func:`pq_topk`)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return pq_topk(emb)
+    return pq_topk(_vectors(spark, sf_dir))
 
 
 _PQL2_SQL = ("FLOOR(list_sum(list_transform(range(1, {ds} + 1), "
@@ -688,80 +711,67 @@ ORDER BY query_id, rank
 """
 
 
-def _ivfpq_scored(spark: SparkSession, sf_dir: str,
-                  nprobe: int, k: int) -> "tuple[DataFrame, DataFrame]":
-    """Shared IVF+PQ candidate-scoring pipeline: returns the
-    ADC-scored candidate frame (query_id, cand_id, cell, pq_dist) and
-    the normalized embedding frame (for exact rerank)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))
+def _ivfpq_index(emb: DataFrame, k: int = KMEANS_K
+                 ) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """Train and encode the IVF+PQ index over ``emb`` (vec_id, v, nrm):
+    the coarse centroids, the PQ codebooks and the inverted lists
+    (vec_id, cell, codes) — the three artifacts :func:`build_pq_index`
+    persists and the inline queries build afresh."""
     cent = _kmeans_codebook(emb, k=k)
     sub = _pq_subvectors(emb)
     cb = _pq_codebook(sub)
-    # corpus side: coarse cell + PQ codes per vector (inverted lists)
-    asgn_sim = (emb.select("vec_id", "v", "nrm")
-                .crossJoin(F.broadcast(cent))
-                .select("vec_id", "cell",
-                        _r6(_cosine(F.col("v"), F.col("cv"),
-                                    F.col("nrm"), F.col("cn")))
-                        .alias("acos")))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("acos").desc(),
-                                              F.col("cell").asc())
-    cells = (asgn_sim.withColumn("arank", F.row_number().over(wa))
-             .filter(F.col("arank") == 1).select("vec_id", "cell"))
-    pdist = (sub.join(F.broadcast(cb), "m")
-             .select("vec_id", "m", "code",
-                     _r6(_l2(F.col("sv"), F.col("cv"))).alias("dist")))
-    wc = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("dist").asc(), F.col("code").asc())
-    codes = (pdist.withColumn("rn", F.row_number().over(wc))
-             .filter(F.col("rn") == 1)
-             .groupBy("vec_id")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("m", "code"))),
-                 lambda s: s.code).alias("codes")))
     # both sides arrive hash-partitioned on vec_id from their windows;
     # a shuffled hash join skips SMJ's per-partition sorts
-    inv = cells.join(codes.hint("shuffle_hash"), "vec_id")
-    # query side: NPROBE nearest cells + per-subspace ADC lookup table
-    q = (emb.filter(F.col("vec_id") < IVF_N_QUERIES)
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                 F.col("nrm").alias("qn")))
-    probe_sim = (F.broadcast(q).crossJoin(F.broadcast(cent))
-                 .select("query_id", "cell",
-                         _r6(_cosine(F.col("qv"), F.col("cv"),
-                                     F.col("qn"), F.col("cn")))
-                         .alias("pcos")))
-    wp = Window.partitionBy("query_id").orderBy(F.col("pcos").desc(),
-                                                F.col("cell").asc())
-    probes = (probe_sim.withColumn("prank", F.row_number().over(wp))
-              .filter(F.col("prank") <= nprobe)
-              .select("query_id", "cell"))
-    lutr = (sub.filter(F.col("vec_id") < IVF_N_QUERIES)
-            .join(F.broadcast(cb), "m")
-            .select(F.col("vec_id").alias("query_id"), "m", "code",
-                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("pd")))
-    lut = (lutr.groupBy("query_id", "m")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("code", "pd"))),
-               lambda s: s.pd).alias("lm"))
-           .groupBy("query_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lm"))),
-               lambda s: s.lm).alias("lut")))
-    # probe join on cell, then ADC scoring against the broadcast LUTs
-    scored = (F.broadcast(probes).join(inv, "cell")
-              .filter(F.col("query_id") != F.col("vec_id"))
-              .join(F.broadcast(lut), "query_id")
-              .select("query_id", F.col("vec_id").alias("cand_id"), "cell",
-                      _r6(F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, l: F.element_at(
-                                         l, (c + 1).cast("int"))),
-                          F.lit(0.0), lambda acc, v: acc + v))
-                      .alias("pq_dist")))
-    return scored, emb
+    inv = (_assign_cells(emb, cent).select("vec_id", "cell")
+           .join(_pq_encode(sub, cb).hint("shuffle_hash"), "vec_id"))
+    return cent, cb, inv
+
+
+def _ivfpq_scored(probes: DataFrame, inv: DataFrame, cb: DataFrame,
+                  queries: DataFrame) -> DataFrame:
+    """ADC-scored candidates (query_id, cand_id, cell, pq_dist): the
+    probed cells' inverted lists joined on cell, scored against the
+    LUTs of ``queries`` (vec_id, v).  Probes and LUTs broadcast."""
+    lut = _pq_lut(_pq_subvectors(queries)
+                  .withColumnRenamed("vec_id", "query_id"), cb)
+    return (F.broadcast(probes.select("query_id", "cell")).join(inv, "cell")
+            .filter(F.col("query_id") != F.col("vec_id"))
+            .join(F.broadcast(lut), "query_id")
+            .select("query_id", F.col("vec_id").alias("cand_id"), "cell",
+                    _adc().alias("pq_dist")))
+
+
+def _ivfpq_inline(spark: SparkSession, sf_dir: str, nprobe: int,
+                  k: int) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """(scored, corpus, queries): the first ``IVF_N_QUERIES`` vectors
+    probing a freshly built index over the corpus."""
+    emb = _vectors(spark, sf_dir)
+    cent, cb, inv = _ivfpq_index(emb, k)
+    queries = emb.filter(F.col("vec_id") < IVF_N_QUERIES)
+    probes = _ivf_probes(cent, _query_side(queries), nprobe)
+    return _ivfpq_scored(probes, inv, cb, queries), emb, queries
+
+
+def _exact_rerank(short: DataFrame, emb: DataFrame, queries: DataFrame,
+                  top_k: int) -> DataFrame:
+    """Exact-cosine rerank of an ADC shortlist (query_id, cand_id,
+    pq_dist) to the final top-``top_k``: only shortlisted rows fetch
+    their vectors from ``emb`` (vec_id, v), via a broadcast join
+    against one corpus scan; ``queries`` carries (vec_id, v)."""
+    cand = emb.select(F.col("vec_id").alias("cand_id"),
+                      F.col("v").alias("cv"), _norm(F.col("v")).alias("cn"))
+    exact = (cand.join(F.broadcast(short), "cand_id")
+             .join(F.broadcast(_query_side(queries)), "query_id")
+             .select("query_id", "cand_id", "pq_dist",
+                     _r6(_cosine(F.col("qv"), F.col("cv"),
+                                 F.col("qn"), F.col("cn")))
+                     .alias("cos_sim")))
+    wf = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
+                                                F.col("cand_id").asc())
+    return (exact.withColumn("rank", F.row_number().over(wf))
+            .filter(F.col("rank") <= top_k)
+            .select("query_id", "rank", "cand_id", "cos_sim", "pq_dist")
+            .orderBy("query_id", "rank"))
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str,
@@ -778,13 +788,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str,
     Recall/latency curve vs nprobe: BENCH/ann_recall.json — at this
     PQ compression the codebook distortion, not cell misses, caps
     recall, which is what :func:`q_ann_ivfpq_rerank` fixes."""
-    scored, _ = _ivfpq_scored(spark, sf_dir, nprobe, k)
-    wr = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(),
-                                                F.col("cand_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "cand_id", "cell", "pq_dist")
-            .orderBy("query_id", "rank"))
+    return _pq_ranked(_ivfpq_inline(spark, sf_dir, nprobe, k)[0], TOP_K)
 
 
 RERANK_R = 25
@@ -809,29 +813,10 @@ def q_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str,
     vector fetch is a broadcast join against the corpus scan — the
     corpus's full vectors stream past once; only shortlisted rows
     compute the exact cosine."""
-    scored, emb = _ivfpq_scored(spark, sf_dir, nprobe, k)
-    wr = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(),
-                                                F.col("cand_id").asc())
-    short = (scored.withColumn("prank", F.row_number().over(wr))
-             .filter(F.col("prank") <= r_cand)
+    scored, emb, queries = _ivfpq_inline(spark, sf_dir, nprobe, k)
+    short = (_pq_ranked(scored, r_cand)
              .select("query_id", "cand_id", "pq_dist"))
-    qv = (emb.filter(F.col("vec_id") < IVF_N_QUERIES)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("v").alias("qv"), F.col("nrm").alias("qn")))
-    exact = (emb.join(F.broadcast(short), emb["vec_id"] == short["cand_id"])
-             .select("query_id", "cand_id", "pq_dist",
-                     F.col("v").alias("cv"), F.col("nrm").alias("cn"))
-             .join(F.broadcast(qv), "query_id")
-             .select("query_id", "cand_id", "pq_dist",
-                     _r6(_cosine(F.col("qv"), F.col("cv"),
-                                 F.col("qn"), F.col("cn")))
-                     .alias("cos_sim")))
-    wf = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                                F.col("cand_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "cand_id", "cos_sim", "pq_dist")
-            .orderBy("query_id", "rank"))
+    return _exact_rerank(short, emb, queries, TOP_K)
 
 
 _IVFPQ_CTES = f"""
@@ -938,34 +923,10 @@ def build_pq_index(emb: DataFrame, index_dir: str) -> None:
       native expression of "read only the probed lists", enforced at
       the file-listing level, no bucket metadata needed.
     """
-    emb = emb.withColumn("nrm", _norm(F.col("v")))
-    cent = _kmeans_codebook(emb)
-    sub = _pq_subvectors(emb)
-    cb = _pq_codebook(sub)
-    asgn = (emb.select("vec_id", "v", "nrm")
-            .crossJoin(F.broadcast(cent))
-            .select("vec_id", "cell",
-                    _r6(_cosine(F.col("v"), F.col("cv"),
-                                F.col("nrm"), F.col("cn"))).alias("acos")))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("acos").desc(),
-                                              F.col("cell").asc())
-    cells = (asgn.withColumn("rn", F.row_number().over(wa))
-             .filter(F.col("rn") == 1).select("vec_id", "cell"))
-    pdist = (sub.join(F.broadcast(cb), "m")
-             .select("vec_id", "m", "code",
-                     _r6(_l2(F.col("sv"), F.col("cv"))).alias("dist")))
-    wc = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("dist").asc(), F.col("code").asc())
-    codes = (pdist.withColumn("rn", F.row_number().over(wc))
-             .filter(F.col("rn") == 1)
-             .groupBy("vec_id")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("m", "code"))),
-                 lambda s: s.code).alias("codes")))
+    cent, cb, inv = _ivfpq_index(emb.withColumn("nrm", _norm(F.col("v"))))
     cent.write.mode("overwrite").parquet(f"{index_dir}/cells")
     cb.write.mode("overwrite").parquet(f"{index_dir}/codebook")
-    (cells.join(codes.hint("shuffle_hash"), "vec_id")
-     .write.mode("overwrite").partitionBy("cell")
+    (inv.write.mode("overwrite").partitionBy("cell")
      .parquet(f"{index_dir}/inv"))
 
 
@@ -981,52 +942,12 @@ def query_pq_index(spark: SparkSession, index_dir: str,
     IVF+PQ query — bit-identical on the same corpus (tested)."""
     cent = spark.read.parquet(f"{index_dir}/cells")
     cb = spark.read.parquet(f"{index_dir}/codebook")
-    q = (queries.withColumn("qn", _norm(F.col("v")))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("v").alias("qv"), "qn"))
-    probe_sim = (F.broadcast(q).crossJoin(F.broadcast(cent))
-                 .select("query_id", "cell",
-                         _r6(_cosine(F.col("qv"), F.col("cv"),
-                                     F.col("qn"), F.col("cn")))
-                         .alias("pcos")))
-    wp = Window.partitionBy("query_id").orderBy(F.col("pcos").desc(),
-                                                F.col("cell").asc())
-    probes = (probe_sim.withColumn("prank", F.row_number().over(wp))
-              .filter(F.col("prank") <= nprobe)
-              .select("query_id", "cell"))
+    probes = _ivf_probes(cent, _query_side(queries), nprobe)
     probed_cells = [r["cell"] for r in
                     probes.select("cell").distinct().collect()]
-    qsub = _pq_subvectors(queries.select(
-        F.col("vec_id"), F.col("v")))
-    lutr = (qsub.join(F.broadcast(cb), "m")
-            .select(F.col("vec_id").alias("query_id"), "m", "code",
-                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("pd")))
-    lut = (lutr.groupBy("query_id", "m")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("code", "pd"))),
-               lambda s: s.pd).alias("lm"))
-           .groupBy("query_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lm"))),
-               lambda s: s.lm).alias("lut")))
     inv = (spark.read.parquet(f"{index_dir}/inv")
            .filter(F.col("cell").isin(probed_cells)))
-    scored = (F.broadcast(probes).join(inv, "cell")
-              .filter(F.col("query_id") != F.col("vec_id"))
-              .join(F.broadcast(lut), "query_id")
-              .select("query_id", F.col("vec_id").alias("cand_id"), "cell",
-                      _r6(F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, l: F.element_at(
-                                         l, (c + 1).cast("int"))),
-                          F.lit(0.0), lambda acc, v: acc + v))
-                      .alias("pq_dist")))
-    wr = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(),
-                                                F.col("cand_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= top_k)
-            .select("query_id", "rank", "cand_id", "cell", "pq_dist")
-            .orderBy("query_id", "rank"))
+    return _pq_ranked(_ivfpq_scored(probes, inv, cb, queries), top_k)
 
 
 def query_pq_index_rerank(spark: SparkSession, index_dir: str,
@@ -1047,25 +968,7 @@ def query_pq_index_rerank(spark: SparkSession, index_dir: str,
     short = (query_pq_index(spark, index_dir, queries,
                             top_k=r_cand, nprobe=nprobe)
              .select("query_id", "cand_id", "pq_dist"))
-    embn = emb.withColumn("nrm", _norm(F.col("v")))
-    qv = (queries.select(F.col("vec_id").alias("query_id"),
-                         F.col("v").alias("qv"))
-          .withColumn("qn", _norm(F.col("qv"))))
-    exact = (embn.join(F.broadcast(short),
-                       embn["vec_id"] == short["cand_id"])
-             .select("query_id", "cand_id", "pq_dist",
-                     F.col("v").alias("cv"), F.col("nrm").alias("cn"))
-             .join(F.broadcast(qv), "query_id")
-             .select("query_id", "cand_id", "pq_dist",
-                     _r6(_cosine(F.col("qv"), F.col("cv"),
-                                 F.col("qn"), F.col("cn")))
-                     .alias("cos_sim")))
-    wf = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                                F.col("cand_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= top_k)
-            .select("query_id", "rank", "cand_id", "cos_sim", "pq_dist")
-            .orderBy("query_id", "rank"))
+    return _exact_rerank(short, emb, queries, top_k)
 
 
 DUP_BANDS = 2
@@ -1118,9 +1021,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the embedding analog of
     MinHash-LSH -> exact-Jaccard dedup; see
     :func:`verified_cosine_pairs`)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
+    emb = _vectors(spark, sf_dir)
     return verified_cosine_pairs(emb).orderBy("vec_a", "vec_b")
 
 
@@ -1175,9 +1076,7 @@ def q_dedup_embedding_canonicalize(spark: SparkSession,
         connected_components,
     )
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))
+    emb = _vectors(spark, sf_dir)
     pairs = verified_cosine_pairs(emb).select("vec_a", "vec_b")
     comp = connected_components(pairs, a="vec_a", b="vec_b")
     w = Window.partitionBy("comp")
@@ -1247,8 +1146,7 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the sum, so accumulation is exact integer arithmetic in
     both engines; the final covariance is a short chain of identical
     correctly-rounded ops on identical integers."""
-    emb = _emb(spark, sf_dir).select(
-        F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     # ONE corpus scan: each row expands to its upper-triangle product
     # structs plus 2d marker structs ((d, -1) and (-1, d)) carrying the
     # raw components, so the first-moment sums ride the SAME shuffle +
@@ -1334,14 +1232,11 @@ def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT per TERM before the cross-partition SUM (the CLAUDE.md
     accumulation-order invariant); mean/var/σ then derive from those
     exact integers through an identical scalar chain in both engines."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     comp = emb.select("vec_id", F.posexplode("v").alias("d", "x"))
-    u6 = lambda c: F.floor(c * F.lit(1000000.0)  # noqa: E731
-                           + F.lit(0.5)).cast("bigint")
     stats = (comp.groupBy("d")
-             .agg(F.sum(u6(F.col("x"))).alias("sx"),
-                  F.sum(u6(F.col("x") * F.col("x"))).alias("sxx"),
+             .agg(F.sum(_u6(F.col("x"))).alias("sx"),
+                  F.sum(_u6(F.col("x") * F.col("x"))).alias("sxx"),
                   F.count(F.lit(1)).alias("n")))
     mu = F.col("sx").cast("double") / 1000000.0 / F.col("n")
     var = (F.col("sxx").cast("double") / 1000000.0 / F.col("n")
@@ -1449,8 +1344,7 @@ def q_embedding_random_projection(spark: SparkSession, sf_dir: str,
     correctly rounded in numpy, the JVM, and DuckDB alike)."""
     import math
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     s_micro = _rp_s_micro("v", k)
     scale = F.lit(math.sqrt(3.0 / k))
     return (emb.select("vec_id", F.posexplode(s_micro).alias("k", "s"))
@@ -1515,8 +1409,7 @@ def q_ann_rp_topk(spark: SparkSession, sf_dir: str,
     are Σ(Δmicro)² BIGINTs, ties broken by cand_id — so the shortlist
     membership is engine-identical with no float quantization at all;
     stage 2 reuses the established r6-quantized cosine."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     proj = emb.select("vec_id", _rp_s_micro("v", k).alias("s"))
     q = (proj.filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"), F.col("s").alias("qs")))
@@ -1533,12 +1426,9 @@ def q_ann_rp_topk(spark: SparkSession, sf_dir: str,
              .withColumn("prank", F.row_number().over(w1))
              .filter(F.col("prank") <= shortlist)
              .select("query_id", "cand_id"))
-    full = emb.withColumn("nrm", _norm(F.col("v")))
-    qv = full.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"))
-    cv = full.select(F.col("vec_id").alias("cand_id"),
-                     F.col("v").alias("cv"), F.col("nrm").alias("cn"))
+    qv = _query_side(emb.filter(F.col("vec_id") < N_QUERIES))
+    cv = emb.select(F.col("vec_id").alias("cand_id"),
+                    F.col("v").alias("cv"), F.col("nrm").alias("cn"))
     rer = (F.broadcast(short).join(cv, "cand_id")
            .join(F.broadcast(qv), "query_id")
            .select("query_id", "cand_id",
@@ -1662,9 +1552,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str,
     k=KMEANS_K for the oracle twin).  Production serves from the
     persisted artifact instead (:func:`build_semantic_index` /
     :func:`dedup_semantic_from_index`)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
+    emb = _vectors(spark, sf_dir)
     cent = _kmeans_codebook(emb, k=k)
     return _semantic_flags(_assign_cells(emb, cent))
 
@@ -1759,9 +1647,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str,
     knob as ``dedup_semantic`` (balanced at k ~ sqrt(N)).  Production
     serves from the persisted artifact instead
     (:func:`build_semantic_index` / :func:`knn_graph_from_index`)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
+    emb = _vectors(spark, sf_dir)
     cent = _kmeans_codebook(emb, k=k)
     return _knn_edges(_assign_cells(emb, cent))
 
@@ -1859,46 +1745,31 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str,
     subtraction are codegen array ops on the scan.  Residuals subtract
     r6-quantized centroid components, so the cross-engine float
     contract is inherited from the codebook."""
-    raw = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("rv0"))
-    raw = raw.withColumn("n0", _norm(F.col("rv0")))
+    raw = _vectors(spark, sf_dir)
     emb = raw.select(
-        "vec_id",
-        F.transform("rv0", lambda x: x / F.col("n0")).alias("v"))
+        "vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("v"))
     emb = emb.withColumn("nrm", _norm(F.col("v")))
     cent = _kmeans_codebook(emb, k=k)
+    cv = F.broadcast(cent.select("cell", "cv"))
     # L2 assignment: the cell that MINIMIZES the residual norm
-    ldist = (emb.select("vec_id", "v")
-             .crossJoin(F.broadcast(cent.select("cell", "cv")))
+    ldist = (emb.select("vec_id", "v").crossJoin(cv)
              .select("vec_id", "v", "cell",
                      _r6(_l2(F.col("v"), F.col("cv"))).alias("ldist")))
     wl = Window.partitionBy("vec_id").orderBy(F.col("ldist").asc(),
                                               F.col("cell").asc())
     asgn = (ldist.withColumn("lrank", F.row_number().over(wl))
             .filter(F.col("lrank") == 1).select("vec_id", "v", "cell"))
-    resid = (asgn.join(F.broadcast(cent.select("cell", "cv")), "cell")
+    resid = (asgn.join(cv, "cell")
              .select("vec_id", "cell",
                      F.zip_with("v", "cv", lambda x, c: x - c).alias("v")))
-    rsub = _pq_subvectors(resid.select("vec_id", "v"))
+    rsub = _pq_subvectors(resid)
     rcb = _pq_codebook(rsub)
-    pdist = (rsub.join(F.broadcast(rcb), "m")
-             .select("vec_id", "m", "code",
-                     _r6(_l2(F.col("sv"), F.col("cv"))).alias("dist")))
-    wc = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("dist").asc(), F.col("code").asc())
-    codes = (pdist.withColumn("rn", F.row_number().over(wc))
-             .filter(F.col("rn") == 1)
-             .groupBy("vec_id")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("m", "code"))),
-                 lambda s: s.code).alias("codes")))
     inv = (resid.select("vec_id", "cell")
-           .join(codes.hint("shuffle_hash"), "vec_id"))
+           .join(_pq_encode(rsub, rcb).hint("shuffle_hash"), "vec_id"))
     q = (emb.filter(F.col("vec_id") < IVF_N_QUERIES)
          .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")))
     # L2 probes: nprobe cells with the smallest query residual
-    pdist_q = (F.broadcast(q)
-               .crossJoin(F.broadcast(cent.select("cell", "cv")))
+    pdist_q = (F.broadcast(q).crossJoin(cv)
                .select("query_id", "qv", "cell",
                        _r6(_l2(F.col("qv"), F.col("cv"))).alias("ldist")))
     wp = Window.partitionBy("query_id").orderBy(F.col("ldist").asc(),
@@ -1907,43 +1778,17 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str,
               .filter(F.col("prank") <= nprobe)
               .select("query_id", "qv", "cell"))
     # per-(query, probed cell) residual -> per-cell ADC lookup tables
-    qres = (probes.join(F.broadcast(cent.select("cell", "cv")), "cell")
+    qres = (probes.join(cv, "cell")
             .select("query_id", "cell",
-                    F.zip_with("qv", "cv", lambda x, c: x - c).alias("rv")))
-    qrsub = (qres.select(
-        "query_id", "cell",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        F.col("rv"))
-        .select("query_id", "cell", "m",
-                F.slice(F.col("rv"), F.col("m") * PQ_DS + 1,
-                        F.lit(PQ_DS)).alias("sv")))
-    lutr = (qrsub.join(F.broadcast(rcb), "m")
-            .select("query_id", "cell", "m", "code",
-                    _r6(_l2(F.col("sv"), F.col("cv"))).alias("pd")))
-    lut = (lutr.groupBy("query_id", "cell", "m")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("code", "pd"))),
-               lambda s: s.pd).alias("lm"))
-           .groupBy("query_id", "cell")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lm"))),
-               lambda s: s.lm).alias("lut")))
-    scored = (F.broadcast(probes.select("query_id", "cell")).join(inv, "cell")
+                    F.zip_with("qv", "cv", lambda x, c: x - c).alias("v")))
+    keys = ("query_id", "cell")
+    lut = _pq_lut(_pq_subvectors(qres, keys), rcb, keys)
+    scored = (F.broadcast(probes.select(*keys)).join(inv, "cell")
               .filter(F.col("query_id") != F.col("vec_id"))
-              .join(F.broadcast(lut), ["query_id", "cell"])
+              .join(F.broadcast(lut), list(keys))
               .select("query_id", F.col("vec_id").alias("cand_id"), "cell",
-                      _r6(F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, l: F.element_at(
-                                         l, (c + 1).cast("int"))),
-                          F.lit(0.0), lambda acc, v: acc + v))
-                      .alias("pq_dist")))
-    wr = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(),
-                                                F.col("cand_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "cand_id", "cell", "pq_dist")
-            .orderBy("query_id", "rank"))
+                      _adc().alias("pq_dist")))
+    return _pq_ranked(scored, TOP_K)
 
 
 _RESID_SUB_SQL = (f"SELECT vec_id, m, "
@@ -2063,18 +1908,13 @@ def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same broadcast-queries nested-loop as exact top-k.  Min/max
     aggregates are order-independent (exact), so no quantization is
     needed for cross-engine agreement."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _vectors(spark, sf_dir)
     dims = emb.select(F.posexplode("v").alias("d", "x"))
     stats = (dims.groupBy("d")
              .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
              .groupBy()
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("d", "mn"))),
-                 lambda s: s.mn).alias("mns"),
-                 F.transform(
-                 F.array_sort(F.collect_list(F.struct("d", "mx"))),
-                 lambda s: s.mx).alias("mxs")))
+             .agg(_sorted_list("d", "mn").alias("mns"),
+                  _sorted_list("d", "mx").alias("mxs")))
     idx = F.sequence(F.lit(1), F.size("v"))
     code_at = lambda i: F.when(                      # noqa: E731
         F.element_at("mxs", i) > F.element_at("mns", i),
@@ -2096,10 +1936,7 @@ def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(F.sequence(F.lit(1), F.size("codes")), recon_at)
         .alias("rv"))
         .withColumn("rn", _norm(F.col("rv"))))
-    q = (emb.filter(F.col("vec_id") < PQ_N_QUERIES)
-         .withColumn("qn", _norm(F.col("v")))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("v").alias("qv"), "qn"))
+    q = _query_side(emb.filter(F.col("vec_id") < PQ_N_QUERIES))
     scored = (recon.crossJoin(F.broadcast(q))
               .filter(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("cand_id"),
@@ -2177,9 +2014,7 @@ def q_knn_graph_multiprobe(spark: SparkSession, sf_dir: str,
     and each (vector, neighbor) pair appears exactly once because a
     neighbor lives in exactly one cell.  Rank keys r6-quantized; ties
     break on neighbor_id."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
+    emb = _vectors(spark, sf_dir)
     cent = _kmeans_codebook(emb, k=k)
     assigned = _assign_cells(emb, cent)
     # probe sets: every corpus vector's nprobe nearest cells (rank 1 ==
@@ -2354,10 +2189,7 @@ def ann_ivf_from_index(spark: SparkSession, index_dir: str,
     ``queries`` carries ``(vec_id, v)``.  Bit-identical to
     ``q_ann_ivf_topk`` on the same corpus (tested)."""
     cent, asgn = _read_semantic_index(spark, index_dir)
-    q = (queries.withColumn("qn", _norm(F.col("v")))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("v").alias("qv"), "qn"))
-    probes = _ivf_probes(cent, q, nprobe)
+    probes = _ivf_probes(cent, _query_side(queries), nprobe)
     probed_cells = [r["cell"] for r in
                     probes.select("cell").distinct().collect()]
     pruned = asgn.filter(F.col("cell").isin(probed_cells))
@@ -2387,9 +2219,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact label-filtered rerank only over the probed lists — the
     exact form here is also the recall oracle for that composition.
     Rank keys r6-quantized; ties break on cand_id."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
-    emb = emb.withColumn("nrm", _norm(F.col("v")))   # once per vector
+    emb = _vectors(spark, sf_dir)
     q = (emb.filter(F.col("vec_id") < HN_N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("label").alias("query_label"),

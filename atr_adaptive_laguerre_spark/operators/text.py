@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from atr_adaptive_laguerre_spark.operators import _r6, _u6
+
 #: tiny English stopword list (top function words; includes the synthetic
 #: corpus's fillers) — heuristic lang/quality scoring only
 EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is",
@@ -20,10 +22,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from atr_adaptive_laguerre_spark.operators.io import read_table
 
     return read_table(spark, sf_dir, "documents")
-
-
-def _r6(col):
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 def words_col():
@@ -1256,9 +1254,8 @@ def bm25_scored(docs: DataFrame,
                   / (F.col("tf") + k1 * (F.lit(1.0) - b
                                          + b * (F.col("dl")
                                                 / F.col("avgdl"))))))
-    u6 = F.floor(contrib * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
     return (tf.join(F.broadcast(idf), "term").join(dl, "doc_id")
-            .select("doc_id", u6.alias("c_u"))
+            .select("doc_id", _u6(contrib).alias("c_u"))
             .groupBy("doc_id")
             .agg((F.sum("c_u") / F.lit(1000000.0)).alias("score")))
 

@@ -19,16 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from atr_adaptive_laguerre_spark.operators import _r6
+
 ATR_P = 14
 PCT_W = 20
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _r6(col):
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 def q_atr_adaptive_sql(spark: SparkSession, sf_dir: str) -> DataFrame:

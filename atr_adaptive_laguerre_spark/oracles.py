@@ -55,7 +55,7 @@ def _d(x: float) -> str:
     return f"{x!r}::DOUBLE"
 
 
-def _r6(expr: str) -> str:
+def _sql_r6(expr: str) -> str:
     """The cross-engine quantizer: floor(x*1e6 + 0.5)/1e6."""
     return f"FLOOR(({expr}) * 1000000 + 0.5) / 1000000"
 
@@ -660,7 +660,7 @@ def oracle_features_121(availability: bool = False, cfg=None) -> str:
     (quantized to 1e-6).  ``cfg`` emits the SQL for a non-default
     FeatureConfig (second-config gate)."""
     # the aligned CTE already emits feature-named {col}_{grain} columns
-    cols = ",\n       ".join(f"{_r6(c)} AS {c}"
+    cols = ",\n       ".join(f"{_sql_r6(c)} AS {c}"
                              for c in multi_interval_columns(True))
     return f"""
 WITH RECURSIVE {_multi_interval_ctes(availability, cfg)}
@@ -678,7 +678,7 @@ def oracle_features_43(cfg=None) -> str:
     outs = []
     for c in FEATURE_COLUMNS:
         src = {"gamma_value": "gamma", "rsi_velocity": "vel"}.get(c, c)
-        outs.append(f"{_r6(src)} AS {c}")
+        outs.append(f"{_sql_r6(src)} AS {c}")
     cols = ",\n       ".join(outs)
     return f"""
 WITH RECURSIVE {bars_cte()},
@@ -693,7 +693,7 @@ ORDER BY doc_id, "offset"
 def oracle_core_rsi(cfg=None) -> str:
     """Twin of ``queries.q_core_rsi_features`` (quantized to 1e-6)."""
     kw = _cfg_kw(cfg)
-    cols = ",\n       ".join(f"{_r6(c)} AS {c}" for c in CORE_OUT_COLS)
+    cols = ",\n       ".join(f"{_sql_r6(c)} AS {c}" for c in CORE_OUT_COLS)
     return f"""
 WITH RECURSIVE {bars_cte()},
 {core_cte('core', 'bars', **kw['core'])}
@@ -724,7 +724,7 @@ def oracle_feature_ic_sweep(forward_k: int = 5, cfg=None) -> str:
     only because the Spark query's explicit config coincided with the
     module-default constants)."""
     cols = multi_interval_columns(True)
-    qcols = ",\n       ".join(f"{_r6(c)} AS {c}" for c in cols)
+    qcols = ",\n       ".join(f"{_sql_r6(c)} AS {c}" for c in cols)
     in_list = ", ".join(cols)
     return f"""
 WITH RECURSIVE {_multi_interval_ctes(False, cfg)},
@@ -742,7 +742,7 @@ fw AS (
   WINDOW w AS (PARTITION BY source, doc_id ORDER BY i)
 ),
 base AS (
-  SELECT f.*, {_r6('fw.fwd')} AS fwd
+  SELECT f.*, {_sql_r6('fw.fwd')} AS fwd
   FROM feat f JOIN fw ON fw.source = f.source
    AND fw.doc_id = f.doc_id AND fw.i = f.i
   WHERE fw.fwd IS NOT NULL
@@ -783,7 +783,7 @@ def oracle_rangebar_enrich() -> str:
     exp, final = expander_ctes("core", "e", "i")
     name_map = {"gamma_value": "gamma", "rsi_velocity": "vel"}
     cols = ",\n       ".join(
-        f"{_r6(name_map.get(src, src))} AS {dst}"
+        f"{_sql_r6(name_map.get(src, src))} AS {dst}"
         for src, dst in RANGEBAR_FEATURE_MAP.items())
     return f"""
 WITH RECURSIVE {bars_cte()},

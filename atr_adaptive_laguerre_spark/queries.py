@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
+from atr_adaptive_laguerre_spark.operators import _r6, _u6
 
 #: the ONE config the IC-sweep query and its DuckDB twin both run with
 #: (ADVICE r3: define it once so the pair cannot drift)
@@ -39,24 +40,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     sits between scan and first exchange (shingling, tokenization,
     regex — the operator library's 1.7x suite win); there it stays."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _r6(col):
-    """Quantize a double to 6 decimals with *identical IEEE ops* in both
-    engines: floor(x*1e6 + 0.5)/1e6.  Unlike round(), whose decimal-tie
-    handling differs between Spark and DuckDB, this sequence is plain
-    binary float math and therefore bit-identical across engines.
-    (SQL twin: FLOOR(x * 1000000 + 0.5) / 1000000.)"""
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
-def _u6(col):
-    """Micro-units as BIGINT: floor(x*1e6 + 0.5).  Quantizing each term
-    BEFORE a cross-partition SUM makes the total an exact integer sum —
-    identical in any partial-aggregation / shuffle-fetch order, so the
-    result is stable across engines AND across partitionings.  (SQL
-    twin: CAST(FLOOR(x * 1000000 + 0.5) AS BIGINT).)"""
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
 
 
 def _us(col):

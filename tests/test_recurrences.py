@@ -2,8 +2,9 @@
 
 The compiled loops must give the same bits as the NumPy loops they
 replace, on every column the kernel emits; a process that cannot build
-them must say so once and run the NumPy loops; and concurrent builds of
-one library must install it atomically.
+them must say so once and run the NumPy loops; a process that started
+without the retaining allocator's environment must say so once; and
+concurrent builds of one library must install it atomically.
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ import ctypes
 import logging
 import os
 import shutil
+import subprocess
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -122,6 +125,26 @@ def test_unavailable_recurrences_warn_once_and_fall_back(
         np.testing.assert_array_equal(got[k][0], want[k], err_msg=k)
     assert len([r for r in caplog.records
                 if r.name == recurrences.__name__]) == 1
+
+
+def _first_kernel_call_stderr(env: dict[str, str]) -> str:
+    """stderr of a fresh interpreter, started under exactly ``env`` (plus
+    PATH and the repo on PYTHONPATH), that makes its first kernel call."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", "from atr_adaptive_laguerre_spark.kernel "
+         "import recurrences; recurrences.compiled()"],
+        env={**env, "PATH": os.environ["PATH"], "PYTHONPATH": root},
+        capture_output=True, text=True, timeout=120, check=True)
+    return out.stderr
+
+
+def test_kernel_warns_once_when_started_without_malloc_env():
+    bare = _first_kernel_call_stderr({})
+    assert bare.count("started without") == 1, bare
+    assert all(k in bare for k in session.MALLOC_ENV), bare
+    tuned = _first_kernel_call_stderr(session.worker_env())
+    assert "started without" not in tuned, tuned
 
 
 def test_bigcache_compile_failure_warns(monkeypatch, tmp_path, caplog):
