@@ -23,9 +23,11 @@ chunk, so batches stay valid however long the consumer holds them
 
 Long-form output declares ``offset``, ``token`` and every feature column
 NOT NULL, in the Spark schema and in the Arrow schema of each emitted
-batch: Spark's row projection then skips the per-value null test, and a
-stray null still fails the task (Arrow's null-checked ``get``) instead
-of being written.  ``source`` and ``doc_id`` pass through nullable.
+batch: Spark's row projection then skips the per-value null test.  The
+JVM reads these batches without Arrow's null-checked ``get``
+(``engine.session.ARROW_JAVA_OPTIONS``), so :func:`_long_batch` fails
+the task on a stray null, naming its column, instead of emitting it.
+``source`` and ``doc_id`` pass through nullable.
 
 Every job calls the same lockstep kernel
 (:mod:`atr_adaptive_laguerre_spark.kernel.batched`) through the same
@@ -185,7 +187,9 @@ def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
     """One long-form RecordBatch for a kernel chunk: the doc keys repeated
     per token, the offsets, the tokens passed through, then ``cols[c]``
     for each of ``value_cols`` wrapped zero-copy.  Its Arrow schema
-    carries the same nullability as :func:`_long_schema`."""
+    carries the same nullability as :func:`_long_schema`; a null in a NOT
+    NULL column raises ``ValueError`` (an O(1) ``null_count`` per array:
+    NumPy-built arrays carry no validity buffer).  NaN is a value."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -197,6 +201,10 @@ def _long_batch(src_col, did_col, idx, lens, chunk_flat, cols, value_cols):
         pa.array(chunk_flat.astype(np.int32, copy=False)),
     ]
     arrays += [pa.array(cols[c]) for c in value_cols]
+    for name, a in zip(["offset", "token", *value_cols], arrays[2:]):
+        if a.null_count:
+            raise ValueError(f"{a.null_count} null(s) in NOT NULL column "
+                             f"{name!r} of a long-form batch")
     schema = pa.schema(
         [pa.field("source", src_col.type), pa.field("doc_id", did_col.type),
          pa.field("offset", pa.int32(), nullable=False),

@@ -29,7 +29,8 @@ from importlib import resources
 import numpy as np
 
 from atr_adaptive_laguerre_spark.native import (
-    BuildError, build_shared, warn_without_malloc_env,
+    BuildError, build_shared, skip_unchanged_zip_rereads,
+    warn_without_malloc_env,
 )
 
 log = logging.getLogger(__name__)
@@ -127,9 +128,11 @@ def compiled() -> Compiled | None:
     """The compiled recurrences, built and loaded on the first call in
     this process; None when they are unavailable (warned once).  The
     first call also warns when the process started without the
-    retaining allocator's environment."""
+    retaining allocator's environment, and stops ``zipimport`` from
+    re-reading unchanged archives at each task's start."""
     global _compiled
     if _compiled is None:
         warn_without_malloc_env()
+        skip_unchanged_zip_rereads()
         _compiled = _load() or False
     return _compiled or None

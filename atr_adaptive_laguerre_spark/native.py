@@ -8,6 +8,19 @@ source and flags.  Several Python workers can import the kernel and
 build at once, so a build compiles into a temporary file in the target
 directory and ``os.replace``-s it into place: a reader sees either no
 library or a complete one, never a half-written file.
+
+It also holds what every process that runs the kernel does on its first
+kernel call (``kernel.recurrences.compiled``):
+
+* :func:`warn_without_malloc_env` logs when the process started without
+  the retaining allocator (``MALLOC_ENV`` or the ``bigcache`` shim).
+* :func:`skip_unchanged_zip_rereads` makes ``zipimport`` re-read an
+  archive's directory only when the archive changed.  PySpark's worker
+  calls ``importlib.invalidate_caches()`` at the start of every task,
+  and on CPython 3.11 each ``zipimporter`` then re-reads its archive's
+  whole central directory: ``pyspark.zip`` (1,328 entries), the py4j
+  zip and the spark-core jar (5,359 entries) that Spark puts on the
+  worker's path, 0.10-0.12 s of CPU per task before the first chunk.
 """
 
 from __future__ import annotations
@@ -17,6 +30,7 @@ import os
 import shutil
 import subprocess
 import tempfile
+import zipimport
 from collections.abc import Sequence
 
 log = logging.getLogger(__name__)
@@ -56,25 +70,65 @@ MALLOC_ENV = {
 }
 
 
+def _read_proc_self(name: str) -> bytes | None:
+    """``/proc/self/<name>``; None where it cannot be read."""
+    try:
+        with open(f"/proc/self/{name}", "rb") as f:
+            return f.read()
+    except OSError:
+        return None
+
+
 def warn_without_malloc_env() -> None:
     """Log one warning when this process STARTED without the
-    ``MALLOC_ENV`` keys (``engine.session.worker_env`` starts it under
-    them).  glibc reads them only at start, so setting them later does
-    nothing; ``/proc/self/environ`` holds that start-time environment.
-    Without them the kernel's fresh per-chunk arrays are trimmed and
-    re-faulted on every call (measured ~25% slower per 121-column
-    chunk).  Says nothing where ``/proc/self/environ`` is unreadable."""
-    try:
-        with open("/proc/self/environ", "rb") as f:
-            started = {kv.split(b"=", 1)[0] for kv in f.read().split(b"\0")}
-    except OSError:
+    ``MALLOC_ENV`` keys, and one when the ``bigcache`` allocator shim is
+    not mapped into it (``engine.session.worker_env`` starts it under
+    both).  glibc reads the keys, and the loader ``LD_PRELOAD``, only at
+    start, so setting them later does nothing; ``/proc/self/environ``
+    holds that start-time environment and ``/proc/self/maps`` the loaded
+    libraries.  Without them the kernel's fresh per-chunk arrays are
+    trimmed and re-faulted on every call (measured ~25% slower per
+    121-column chunk).  Says nothing where a file is unreadable."""
+    environ = _read_proc_self("environ")
+    if environ is not None:
+        started = {kv.split(b"=", 1)[0] for kv in environ.split(b"\0")}
+        missing = [k for k in MALLOC_ENV if k.encode() not in started]
+        if missing:
+            log.warning("this process started without %s; the kernel's "
+                        "fresh arrays are re-faulted on every call (~25%% "
+                        "slower). Start it under engine.session.worker_env()",
+                        ", ".join(missing))
+    maps = _read_proc_self("maps")
+    if maps is not None and b"/bigcache-" not in maps:
+        log.warning("the bigcache allocator shim is not mapped into this "
+                    "process; large fresh arrays come from glibc. Start it "
+                    "under engine.session.worker_env()")
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """Make each ``zipimporter`` re-read its archive's directory on
+    ``invalidate_caches`` only when the archive's ``(st_mtime_ns,
+    st_size)`` changed since that importer last read it (see the module
+    docstring).  A rewritten or replaced archive is still re-read on the
+    next invalidate, and a missing one takes the original path.  Installs
+    once per process; later calls do nothing."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "skips_unchanged", False):
         return
-    missing = [k for k in MALLOC_ENV if k.encode() not in started]
-    if missing:
-        log.warning("this process started without %s; the kernel's fresh "
-                    "arrays are re-faulted on every call (~25%% slower). "
-                    "Start it under engine.session.worker_env()",
-                    ", ".join(missing))
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            self.__dict__.pop("_read_stamp", None)
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        if self.__dict__.get("_read_stamp") != stamp:
+            reread(self)
+            self._read_stamp = stamp
+
+    invalidate_caches.skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 class BuildError(RuntimeError):

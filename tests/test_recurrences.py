@@ -3,8 +3,9 @@
 The compiled loops must give the same bits as the NumPy loops they
 replace, on every column the kernel emits; a process that cannot build
 them must say so once and run the NumPy loops; a process that started
-without the retaining allocator's environment must say so once; and
-concurrent builds of one library must install it atomically.
+without the retaining allocator's environment, or without its shim
+mapped, must say so once; and concurrent builds of one library must
+install it atomically.
 """
 
 from __future__ import annotations
@@ -145,6 +146,19 @@ def test_kernel_warns_once_when_started_without_malloc_env():
     assert all(k in bare for k in session.MALLOC_ENV), bare
     tuned = _first_kernel_call_stderr(session.worker_env())
     assert "started without" not in tuned, tuned
+
+
+def test_kernel_warns_once_when_the_shim_is_not_mapped(monkeypatch):
+    # a session built earlier in this process already preloads the shim,
+    # and worker_env() then leaves LD_PRELOAD to the inherited environment
+    monkeypatch.delenv("LD_PRELOAD", raising=False)
+    env = session.worker_env()
+    if "LD_PRELOAD" not in env:
+        pytest.skip("the bigcache shim does not build on this host")
+    bare = _first_kernel_call_stderr({})
+    assert bare.count("shim is not mapped") == 1, bare
+    tuned = _first_kernel_call_stderr(env)
+    assert "shim is not mapped" not in tuned, tuned
 
 
 def test_bigcache_compile_failure_warns(monkeypatch, tmp_path, caplog):

@@ -1,6 +1,7 @@
 """``build_session``'s driver-memory choice (the effective value and the
-warning when it exceeds the host's RAM) and the allocator environment
-each session path hands its Python workers (no JVM is started here)."""
+warning when it exceeds the host's RAM), the allocator environment each
+session path hands its Python workers, and the Arrow Java options each
+path merges into the caller's JVM options (no JVM is started here)."""
 
 from __future__ import annotations
 
@@ -84,6 +85,9 @@ class _Builder:
     def appName(self, _name):
         return self
 
+    def master(self, _master):
+        return self
+
     def config(self, k, v):
         self.conf[k] = v
         return self
@@ -92,11 +96,47 @@ class _Builder:
         raise _StopBeforeJvm
 
 
+FLAGS = ("-Darrow.enable_unsafe_memory_access=true "
+         "-Darrow.enable_null_check_for_get=false")
+
+
+def test_build_session_merges_arrow_options_with_callers(monkeypatch):
+    """``extra`` is applied last, so a caller's ``extraJavaOptions`` (as
+    perfbench passes ``-Djava.io.tmpdir``) must be merged with the Arrow
+    options, not replace them or be replaced."""
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(session, "worker_env", lambda: {})
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: None)
+    builder = _Builder()
+    monkeypatch.setattr(SparkSession, "builder", builder)
+    with pytest.raises(_StopBeforeJvm):
+        session.build_session(master="local[1]", extra={
+            "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/t",
+            "spark.ui.enabled": "true"})
+    assert builder.conf["spark.driver.extraJavaOptions"] == (
+        f"-Djava.io.tmpdir=/t {FLAGS}")
+    assert builder.conf["spark.executor.extraJavaOptions"] == FLAGS
+    assert builder.conf["spark.ui.enabled"] == "true"
+
+
+class _Conf:
+    """``SparkConf`` as spark-submit loads it, with a caller's
+    ``--conf spark.executor.extraJavaOptions``."""
+
+    def get(self, key, default=None):
+        return {"spark.executor.extraJavaOptions": "-Dcaller=1"}.get(
+            key, default)
+
+
 def test_submit_job_starts_workers_under_worker_env(monkeypatch):
     """spark-submit starts the JVM before ``tools/submit_job.py`` runs, so
     the script must pass the allocator environment to the Python workers
     as ``spark.executorEnv.*``, with the shim from its checkout's
-    ``native/`` (the package itself may be imported from the zip)."""
+    ``native/`` (the package itself may be imported from the zip), and
+    the Arrow options to the executors after the caller's own."""
+    import pyspark
+    from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
     path = os.path.join(os.path.dirname(os.path.dirname(
@@ -111,6 +151,8 @@ def test_submit_job_starts_workers_under_worker_env(monkeypatch):
     monkeypatch.delenv("LD_PRELOAD", raising=False)
     builder = _Builder()
     monkeypatch.setattr(SparkSession, "builder", builder)
+    monkeypatch.setattr(pyspark, "SparkConf", _Conf)
+    monkeypatch.setattr(SparkContext, "_ensure_initialized", lambda: None)
     monkeypatch.setattr(sys, "argv", ["submit_job.py", "--input", "in",
                                       "--output", "out", "--manifest", "m"])
     with pytest.raises(_StopBeforeJvm):
@@ -119,5 +161,6 @@ def test_submit_job_starts_workers_under_worker_env(monkeypatch):
     assert os.path.exists(os.path.join(job.NATIVE_DIR, "bigcache.c"))
     want = session.worker_env()
     assert want["LD_PRELOAD"] == SHIM
-    assert builder.conf == {f"spark.executorEnv.{k}": v
-                            for k, v in want.items()}
+    assert builder.conf == {
+        **{f"spark.executorEnv.{k}": v for k, v in want.items()},
+        "spark.executor.extraJavaOptions": f"-Dcaller=1 {FLAGS}"}

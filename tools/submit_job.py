@@ -4,6 +4,8 @@ Package the library and submit:
 
     python tools/make_pyfiles.py                       # -> dist/atr_adaptive_laguerre_spark.zip
     spark-submit --master local[32] \\
+        --driver-java-options "-Darrow.enable_unsafe_memory_access=true \\
+                               -Darrow.enable_null_check_for_get=false" \\
         --py-files dist/atr_adaptive_laguerre_spark.zip \\
         tools/submit_job.py \\
         --input /path/tokens.parquet \\
@@ -20,6 +22,14 @@ fresh per-chunk arrays rely on: ``MALLOC_ENV`` and, when it builds, the
 ``spark.executorEnv.*`` (see ``engine.session.worker_env``).  On a
 cluster the shim's path must exist on the executors too, or the loader
 skips it.
+
+The JVMs read the Python workers' Arrow batches without Arrow Java's
+per-value bounds and null checks (``engine.session.ARROW_JAVA_OPTIONS``).
+spark-submit starts the driver JVM before this script runs, so the driver
+(which is also the executor under ``local[N]``) takes them from
+``--driver-java-options`` as above; the script appends them to
+``spark.executor.extraJavaOptions`` for cluster executors, keeping any
+value passed with ``--conf``.
 """
 
 from __future__ import annotations
@@ -53,16 +63,24 @@ def main() -> None:
     ap.add_argument("--buckets-per-wave", type=int, default=4)
     args = ap.parse_args()
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
     from atr_adaptive_laguerre_spark.config import FeatureConfig
     from atr_adaptive_laguerre_spark.engine.manifest import run_resumable
-    from atr_adaptive_laguerre_spark.engine.session import worker_env
+    from atr_adaptive_laguerre_spark.engine.session import (
+        java_options, worker_env,
+    )
     from atr_adaptive_laguerre_spark.engine.sources import read_sequences
 
     b = SparkSession.builder.appName("atr-adaptive-laguerre-features")
     for k, v in worker_env(NATIVE_DIR).items():
         b = b.config(f"spark.executorEnv.{k}", v)
+    # connect to spark-submit's JVM first: without it SparkConf() is an
+    # empty Python dict that misses the caller's --conf values
+    SparkContext._ensure_initialized()
+    key = "spark.executor.extraJavaOptions"
+    b = b.config(key, java_options(SparkConf().get(key, None)))
     spark = b.getOrCreate()
 
     if args.multi_interval:
