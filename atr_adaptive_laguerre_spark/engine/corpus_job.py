@@ -32,6 +32,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from atr_adaptive_laguerre_spark.engine.manifest import (
+    canonicalize_with_manifest, committed_keys, overwrite_partitions,
+    read_partitions,
+)
 from atr_adaptive_laguerre_spark.operators.curation import (
     MIN_QUALITY, MIN_TOKENS, PACK_BUCKET_W, SEQ_LEN, SHUFFLE_BUCKET_HEX,
     SHUFFLE_SHARDS, doc_scores, is_canonical,
@@ -109,26 +113,6 @@ def _with_pack_offsets(shuffled: DataFrame, seq_len: int) -> DataFrame:
             .drop("pbkt", "local_off", "boff"))
 
 
-def _committed_stages(spark: SparkSession, manifest_dir: str,
-                      run_id: str) -> set[str]:
-    """Stage names already committed for this run (empty on a fresh
-    manifest — only PATH_NOT_FOUND is swallowed, anything else is a
-    real error, mirroring `manifest.completed_buckets`)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (spark.read.parquet(f"{manifest_dir}/stages")
-                .filter(F.col("run_id") == run_id)
-                .select("stage").distinct().collect())
-    except AnalysisException as e:
-        get_cls = (getattr(e, "getCondition", None)
-                   or getattr(e, "getErrorClass", lambda: None))
-        if (get_cls() or "") == "PATH_NOT_FOUND":
-            return set()
-        raise
-    return {r["stage"] for r in rows}
-
-
 def _append_stage(spark: SparkSession, manifest_dir: str, run_id: str,
                   stage: str, n_in: int, n_out: int, n_tok: int,
                   wall: float) -> None:
@@ -165,16 +149,13 @@ def prepare_corpus_resumable(spark: SparkSession, docs: DataFrame,
     Re-invoking with the same ``run_id`` resumes after the last
     committed stage; ``max_waves`` lets tests simulate interruption."""
     t0 = time.time()
-    done = _committed_stages(spark, manifest_dir, run_id)
+    done = committed_keys(spark, f"{manifest_dir}/stages", run_id, "stage")
     resumed = bool(done)
 
     if "staging_commit" not in done:
         n_in = docs.count()
         nd = None
         if near_dup:
-            from atr_adaptive_laguerre_spark.engine.manifest import (
-                canonicalize_with_manifest,
-            )
             from atr_adaptive_laguerre_spark.operators.dedup import (
                 verified_jaccard_pairs,
             )
@@ -208,25 +189,18 @@ def prepare_corpus_resumable(spark: SparkSession, docs: DataFrame,
     if max_waves is not None:
         waves = waves[:max_waves]
 
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(conf, "static")
     for wave in waves:
         ts = time.time()
-        part = annotated.filter(
-            F.col("shard").isin([int(s) for s in wave]))
-        spark.conf.set(conf, "dynamic")
-        try:
-            (part.write.mode("overwrite").partitionBy("shard")
-                 .parquet(output_dir))
-        finally:
-            spark.conf.set(conf, prev_mode)
+        overwrite_partitions(
+            annotated.filter(F.col("shard").isin([int(s) for s in wave])),
+            output_dir, "shard")
         wall = time.time() - ts
-        stats = {r["shard"]: r for r in
-                 (spark.read.parquet(output_dir)
-                  .filter(F.col("shard").isin([int(s) for s in wave]))
-                  .groupBy("shard")
-                  .agg(F.count(F.lit(1)).alias("n"),
-                       F.sum("n_tokens").alias("tok")).collect())}
+        wave_out = read_partitions(spark, output_dir, "shard", wave)
+        stats = {} if wave_out is None else {
+            r["shard"]: r for r in
+            (wave_out.groupBy("shard")
+             .agg(F.count(F.lit(1)).alias("n"),
+                  F.sum("n_tokens").alias("tok")).collect())}
         for s in wave:
             r = stats.get(s)
             _append_stage(spark, manifest_dir, run_id, f"shard:{s}",
@@ -298,10 +272,6 @@ def prepare_corpus(spark: SparkSession, docs: DataFrame, output_dir: str,
         ts = time.time()
         pairs = verified_jaccard_pairs(docs)
         if manifest_dir is not None:
-            from atr_adaptive_laguerre_spark.engine.manifest import (
-                canonicalize_with_manifest,
-            )
-
             comp = canonicalize_with_manifest(
                 spark, pairs, f"{manifest_dir}/components",
                 run_id=run_id)

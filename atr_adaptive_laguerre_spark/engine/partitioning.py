@@ -75,7 +75,7 @@ def tiered_repartition(df: DataFrame, num_partitions: int,
     ``max(T(largest giant), T(normal mass)/cores)`` — this layout
     reaches it.  The ``count()`` is bounded driver-side bookkeeping
     (number of giants only).  Measured evidence: BENCH/BASELINE.md skew
-    section + tools/bench_skew.py.
+    section.
 
     Isolation mechanism (ADVICE r3): each giant ENTITY gets an explicit
     dense rank id and the tier range-partitions on that id — sampled

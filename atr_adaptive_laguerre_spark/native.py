@@ -106,26 +106,33 @@ def warn_without_malloc_env() -> None:
 
 
 def skip_unchanged_zip_rereads() -> None:
-    """Make each ``zipimporter`` re-read its archive's directory on
-    ``invalidate_caches`` only when the archive's ``(st_mtime_ns,
-    st_size)`` changed since that importer last read it (see the module
-    docstring).  A rewritten or replaced archive is still re-read on the
-    next invalidate, and a missing one takes the original path.  Installs
-    once per process; later calls do nothing."""
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive's ``(st_mtime_ns, st_size)`` changed
+    since its directory was last read (see the module docstring).  The
+    stamp is kept per archive, so of the several importers that share
+    one archive (one per package directory on ``sys.path``) only the
+    first re-reads; the others take that read from
+    ``zipimport._zip_directory_cache``.  A rewritten or replaced archive
+    is still re-read on the next invalidate, and a missing one takes the
+    original path.  Installs once per process; later calls do nothing."""
     reread = zipimport.zipimporter.invalidate_caches
     if getattr(reread, "skips_unchanged", False):
         return
+    stamps: dict[str, tuple[int, int]] = {}
 
     def invalidate_caches(self):
         try:
             st = os.stat(self.archive)
         except OSError:
-            self.__dict__.pop("_read_stamp", None)
+            stamps.pop(self.archive, None)
             return reread(self)
         stamp = (st.st_mtime_ns, st.st_size)
-        if self.__dict__.get("_read_stamp") != stamp:
-            reread(self)
-            self._read_stamp = stamp
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        stamps[self.archive] = stamp
 
     invalidate_caches.skips_unchanged = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches

@@ -112,20 +112,30 @@ def test_crash_between_output_and_manifest_is_idempotent(
 def test_completed_buckets_missing_vs_broken(spark, tmp_path):
     """ADVICE r2: only the missing-path case means 'first run' (empty
     set); a genuinely broken manifest read must raise, not silently
-    disable resume and recompute every wave."""
+    disable resume and recompute every wave.  Checked for the feature
+    job's bucket manifest and for the corpus job's stage manifest
+    (``<manifest_dir>/stages``), which share the probe."""
     import pytest
 
-    from atr_adaptive_laguerre_spark.engine.manifest import completed_buckets
+    from atr_adaptive_laguerre_spark.engine.manifest import (
+        committed_keys, completed_buckets,
+    )
 
-    missing = str(tmp_path / "no_such_manifest")
-    assert completed_buckets(spark, missing, "rid") == set()
+    probes = {
+        "buckets": lambda root: completed_buckets(spark, root, "rid"),
+        "stages": lambda root: committed_keys(spark, f"{root}/stages",
+                                              "rid", "stage"),
+    }
+    for name, probe in probes.items():
+        assert probe(str(tmp_path / f"no_such_{name}")) == set()
 
-    broken = tmp_path / "broken_manifest"
-    broken.mkdir()
-    (broken / "part-00000.parquet").write_bytes(b"this is not parquet")
-    with pytest.raises(Exception) as ei:
-        completed_buckets(spark, str(broken), "rid")
-    assert "PATH_NOT_FOUND" not in str(ei.value)
+        broken = tmp_path / f"broken_{name}"
+        data = broken / "stages" if name == "stages" else broken
+        data.mkdir(parents=True)
+        (data / "part-00000.parquet").write_bytes(b"this is not parquet")
+        with pytest.raises(Exception) as ei:
+            probe(str(broken))
+        assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
 def test_resumable_with_column_projection(spark, corpus_parquet, tmp_path):

@@ -1,7 +1,8 @@
 """``native.skip_unchanged_zip_rereads``: ``zipimport`` re-reads an
 archive's directory on ``invalidate_caches`` only when the archive
-changed, and the Python workers, which invalidate at every task's start,
-run with it from their second task on.
+changed, once for all the importers that share it, and the Python
+workers, which invalidate at every task's start, run with it from their
+second task on.
 """
 
 from __future__ import annotations
@@ -98,12 +99,30 @@ def test_deleted_zip_takes_the_original_path(tmp_path, reads):
     assert imp.find_spec("zr_gone") is not None
 
 
+def test_importers_of_one_archive_share_its_read(tmp_path, reads):
+    path = str(tmp_path / "pkg.zip")
+    _write_zip(path, zr_pkg="X = 1\n")
+    imps = [zipimport.zipimporter(path) for _ in range(3)]
+    reads.clear()
+    for imp in imps:
+        imp.invalidate_caches()
+    assert reads == [path]
+    assert all(imp._files is zipimport._zip_directory_cache[path]
+               for imp in imps)
+
+    _write_zip(path, zr_pkg="X = 1\n", zr_more="X = 2\n")
+    for imp in imps:
+        imp.invalidate_caches()
+    assert reads == [path, path]
+    assert all(imp.find_spec("zr_more") is not None for imp in imps)
+
+
 def test_reused_workers_skip_the_reread_after_their_first_task(spark):
     """More tasks than cores, so each Python worker runs several.  A
     worker's first kernel call installs the lazy invalidation, so every
-    later task of that worker starts with it, and from its third task on
-    (the second stamps each importer) no archive directory is re-read
-    between one task and the next."""
+    later task of that worker starts with it: its second task reads each
+    archive's directory at most once, however many importers share the
+    archive, and no later task reads one at all."""
 
     def probe(_):
         import time
@@ -124,19 +143,22 @@ def test_reused_workers_skip_the_reread_after_their_first_task(spark):
             counted.calls = 0
             zi._read_directory = counted
         recurrences.compiled()
-        importers = sum(isinstance(f, zi.zipimporter)
-                        for f in sys.path_importer_cache.values())
+        importers = [f for f in sys.path_importer_cache.values()
+                     if isinstance(f, zi.zipimporter)]
         yield (os.getpid(), time.monotonic_ns(), installed,
-               zi._read_directory.calls, importers)
+               zi._read_directory.calls, len(importers),
+               len({f.archive for f in importers}))
 
     rows = spark.sparkContext.parallelize(range(16), 16) \
         .mapPartitions(probe).collect()
     by_worker: dict[int, list] = {}
-    for pid, t, installed, calls, importers in sorted(rows,
-                                                      key=lambda r: r[1]):
-        by_worker.setdefault(pid, []).append((installed, calls, importers))
+    for pid, _, *task in sorted(rows, key=lambda r: r[1]):
+        by_worker.setdefault(pid, []).append(task)
     assert max(len(tasks) for tasks in by_worker.values()) >= 3
     for tasks in by_worker.values():
-        assert all(installed for installed, _, _ in tasks[1:]), tasks
-        assert len({calls for _, calls, _ in tasks[2:]}) <= 1, tasks
-        assert all(importers > 0 for _, _, importers in tasks), tasks
+        assert all(installed for installed, *_ in tasks[1:]), tasks
+        assert all(importers > 0 for _, _, importers, _ in tasks), tasks
+        if len(tasks) > 1:
+            (_, first, _, _), (_, second, _, archives) = tasks[:2]
+            assert second - first <= archives, tasks
+        assert len({calls for _, calls, _, _ in tasks[1:]}) <= 1, tasks
