@@ -7,13 +7,23 @@ curated training-corpus write with per-stage manifest lineage, the same
 observability story the feature job tells (`manifest.run_resumable`)
 applied to the data side.
 
-Composition contract: every gate reuses the exact expressions of its
-standalone catalog operator (`curation_report`'s keep decision,
-`dedup.connected_components` over `verified_jaccard_pairs`,
-`pii_scrub_cols`, the `corpus_shuffle` / `sequence_packing` two-level
-scans), so the composed output is testable against the independent
-operators — `tests/test_corpus_job.py` asserts the written corpus
-matches the standalone report counts and orderings row for row.
+Composition contract: every stage calls the one definition its
+standalone catalog operator uses (``operators/curation.py``):
+
+* gate — ``_keep_flags`` over ``doc_scores`` (`curation_report`'s keep
+  decision), filtered to the kept docs;
+* near-dup drop — ``_near_dup_drops`` of `dedup.connected_components`
+  over `verified_jaccard_pairs` (`corpus_curation_neardup`);
+* decontaminate — `decontaminate_frame` (``_n_hits``, as
+  `decontaminate`);
+* DSIR cut — `dsir_scores` and ``_cum_hist`` (the histogram of
+  `curation_report_quantile`, in descending order);
+* PII scrub — `pii_scrub_cols`;
+* shuffle and packing — ``_with_shuffle_pos`` (`corpus_shuffle`) and
+  ``_with_tok_offset`` (`sequence_packing`, in shuffle order).
+
+`tests/test_corpus_job.py` asserts the written corpus matches the
+standalone report counts and the catalog shuffle order.
 
 Scale shape: one linear pass scores and gates (two shuffles: the chash
 dedup window + nothing else at doc grain); the near-dup arm adds the
@@ -30,15 +40,16 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from atr_adaptive_laguerre_spark.engine.manifest import (
     canonicalize_with_manifest, committed_keys, overwrite_partitions,
     read_partitions,
 )
 from atr_adaptive_laguerre_spark.operators.curation import (
-    MIN_QUALITY, MIN_TOKENS, PACK_BUCKET_W, SEQ_LEN, SHUFFLE_BUCKET_HEX,
-    SHUFFLE_SHARDS, doc_scores, is_canonical,
+    MIN_QUALITY, MIN_TOKENS, SEQ_LEN, SHUFFLE_SHARDS, _cum_hist,
+    _keep_flags, _near_dup_drops, _with_shuffle_pos, _with_tok_offset,
+    doc_scores,
 )
 from atr_adaptive_laguerre_spark.operators.text import pii_scrub_cols
 
@@ -50,75 +61,40 @@ CORPUS_MANIFEST_SCHEMA = ("run_id string, stage string, n_docs_in long, "
 
 def _gated(docs: DataFrame, min_tokens: int, min_quality: float,
            near_dup_drops: DataFrame | None) -> DataFrame:
-    """Doc-grain keep decision — the exact `curation_report` gates
-    (exact-dup canonical, token floor, quality floor, optional near-dup
-    drop set) kept at doc grain instead of aggregated to a report."""
-    scored = doc_scores(docs, "text").withColumn(
-        "n_tokens", F.col("token_count").cast("bigint"))
-    keep = ((F.col("n_tokens") >= min_tokens)
-            & (F.col("quality_score") >= min_quality))
-    if near_dup_drops is not None:
-        nd = (near_dup_drops.select("doc_id").distinct()
-              .withColumn("nd_drop", F.lit(1)))
-        scored = scored.join(nd, "doc_id", "left")  # AQE sizes the join
-        keep = keep & F.col("nd_drop").isNull()
-    return (scored.withColumn("keep", is_canonical() & keep)
-            .filter("keep")
-            .select("doc_id", "source", "text", "n_tokens"))
+    """The kept docs of `curation_report`'s keep decision."""
+    return (_keep_flags(doc_scores(docs, "text"), min_tokens,
+                        F.col("quality_score") >= min_quality,
+                        near_dup_drops)
+            .filter(F.col("keep") == 1)
+            .select("doc_id", "source", "text",
+                    F.col("token_count").cast("bigint").alias("n_tokens")))
 
 
-def _with_shuffle_pos(kept: DataFrame) -> DataFrame:
-    """`corpus_shuffle`'s bucketed two-level global ranking over the
-    kept set."""
-    key = F.md5(F.concat(F.col("doc_id").cast("string"),
-                         F.lit(":shuffle")))
-    d = kept.withColumn("k", key).withColumn(
-        "bkt", F.substring("k", 1, SHUFFLE_BUCKET_HEX))
-    wl = Window.partitionBy("bkt").orderBy("k", "doc_id")
-    d = d.withColumn("rn", F.row_number().over(wl).cast("bigint"))
-    wb = (Window.orderBy("bkt")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    off = (d.groupBy("bkt").agg(F.count(F.lit(1)).alias("n"))
-           .withColumn("off", F.coalesce(F.sum("n").over(wb), F.lit(0)))
-           .select("bkt", "off"))
-    return (d.join(off, "bkt")
-            .withColumn("shuffle_pos",
-                        (F.col("off") + F.col("rn") - 1).cast("bigint"))
-            .withColumn("shard",
-                        F.col("shuffle_pos") % SHUFFLE_SHARDS)
-            .drop("k", "bkt", "rn", "off"))
+def _scrubbed(kept: DataFrame) -> DataFrame:
+    """PII-redacted text and the per-doc match count."""
+    return (pii_scrub_cols(kept)
+            .select("doc_id", "source", "n_tokens",
+                    F.col("redacted").alias("text"),
+                    (F.col("n_email") + F.col("n_phone")
+                     + F.col("n_ip")).alias("n_pii")))
 
 
-def _with_pack_offsets(shuffled: DataFrame, seq_len: int) -> DataFrame:
-    """`sequence_packing`'s two-level prefix sum, ordered by the
-    SHUFFLE position (training order), not doc_id."""
-    d = shuffled.withColumn(
-        "pbkt", F.expr(f"shuffle_pos div {PACK_BUCKET_W}"))
-    wl = (Window.partitionBy("pbkt").orderBy("shuffle_pos")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    d = d.withColumn(
-        "local_off", F.coalesce(F.sum("n_tokens").over(wl), F.lit(0)))
-    wb = (Window.orderBy("pbkt")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    tot = (d.groupBy("pbkt").agg(F.sum("n_tokens").alias("t"))
-           .withColumn("boff", F.coalesce(F.sum("t").over(wb), F.lit(0)))
-           .select("pbkt", "boff"))
-    return (d.join(tot, "pbkt")
-            .withColumn("tok_offset",
-                        (F.col("boff") + F.col("local_off"))
-                        .cast("bigint"))
+def _annotated(d: DataFrame, seq_len: int) -> DataFrame:
+    """`corpus_shuffle`'s positions and shards, then `sequence_packing`'s
+    token offsets in SHUFFLE order (training order), not doc_id."""
+    return (_with_tok_offset(_with_shuffle_pos(d), "shuffle_pos")
             .withColumn("first_seq",
-                        F.expr(f"tok_offset div {seq_len}")
-                        .cast("bigint"))
-            .drop("pbkt", "local_off", "boff"))
+                        F.expr(f"tok_offset div {seq_len}").cast("bigint")))
 
 
-def _append_stage(spark: SparkSession, manifest_dir: str, run_id: str,
-                  stage: str, n_in: int, n_out: int, n_tok: int,
-                  wall: float) -> None:
-    row = [(run_id, stage, int(n_in), int(n_out), int(n_tok),
-            float(wall), float(time.time()))]
-    (spark.createDataFrame(row, CORPUS_MANIFEST_SCHEMA)
+def _append_stages(spark: SparkSession, manifest_dir: str, run_id: str,
+                   stages: list[tuple[str, int, int, int, float]]) -> None:
+    """One manifest append for the (stage, n_in, n_out, n_tok, wall)
+    rows."""
+    now = time.time()
+    rows = [(run_id, s, int(i), int(o), int(t), float(w), float(now))
+            for s, i, o, t, w in stages]
+    (spark.createDataFrame(rows, CORPUS_MANIFEST_SCHEMA)
      .write.mode("append").parquet(f"{manifest_dir}/stages"))
 
 
@@ -160,26 +136,18 @@ def prepare_corpus_resumable(spark: SparkSession, docs: DataFrame,
                 verified_jaccard_pairs,
             )
 
-            comp = canonicalize_with_manifest(
+            nd = _near_dup_drops(canonicalize_with_manifest(
                 spark, verified_jaccard_pairs(docs),
-                f"{manifest_dir}/components", run_id=run_id)
-            nd = (comp.filter(F.col("id") != F.col("comp"))
-                  .select(F.col("id").alias("doc_id")))
+                f"{manifest_dir}/components", run_id=run_id))
         ts = time.time()
-        kept = _gated(docs, min_tokens, min_quality, nd)
-        scrubbed = (pii_scrub_cols(kept)
-                    .select("doc_id", "source", "n_tokens",
-                            F.col("redacted").alias("text"),
-                            (F.col("n_email") + F.col("n_phone")
-                             + F.col("n_ip")).alias("n_pii")))
-        scrubbed.write.mode("overwrite").parquet(staging_dir)
+        staged = _scrubbed(_gated(docs, min_tokens, min_quality, nd))
+        staged.write.mode("overwrite").parquet(staging_dir)
         n_staged = spark.read.parquet(staging_dir).count()
-        _append_stage(spark, manifest_dir, run_id, "staging_commit",
-                      n_in, n_staged, 0, time.time() - ts)
+        _append_stages(spark, manifest_dir, run_id, [
+            ("staging_commit", n_in, n_staged, 0, time.time() - ts)])
         done.add("staging_commit")
 
-    staged = spark.read.parquet(staging_dir)
-    annotated = _with_pack_offsets(_with_shuffle_pos(staged), seq_len)
+    annotated = _annotated(spark.read.parquet(staging_dir), seq_len)
 
     done_shards = {int(s.split(":", 1)[1]) for s in done
                    if s.startswith("shard:")}
@@ -197,16 +165,13 @@ def prepare_corpus_resumable(spark: SparkSession, docs: DataFrame,
         wall = time.time() - ts
         wave_out = read_partitions(spark, output_dir, "shard", wave)
         stats = {} if wave_out is None else {
-            r["shard"]: r for r in
+            r["shard"]: (r["n"], r["tok"] or 0) for r in
             (wave_out.groupBy("shard")
              .agg(F.count(F.lit(1)).alias("n"),
                   F.sum("n_tokens").alias("tok")).collect())}
-        for s in wave:
-            r = stats.get(s)
-            _append_stage(spark, manifest_dir, run_id, f"shard:{s}",
-                          0, int(r["n"]) if r else 0,
-                          int(r["tok"]) if r and r["tok"] else 0,
-                          wall / max(len(wave), 1))
+        _append_stages(spark, manifest_dir, run_id, [
+            (f"shard:{s}", 0, *stats.get(s, (0, 0)), wall / len(wave))
+            for s in wave])
         done_shards.update(int(s) for s in wave)
 
     return {"run_id": run_id,
@@ -277,8 +242,7 @@ def prepare_corpus(spark: SparkSession, docs: DataFrame, output_dir: str,
                 run_id=run_id)
         else:
             comp = connected_components(pairs)
-        nd = (comp.filter(F.col("id") != F.col("comp"))
-              .select(F.col("id").alias("doc_id")))
+        nd = _near_dup_drops(comp)
         stages.append(("near_dup_components", n_in, int(nd.count()),
                        0, time.time() - ts))
 
@@ -338,15 +302,9 @@ def prepare_corpus(spark: SparkSession, docs: DataFrame, output_dir: str,
         aq = (F.floor(F.col("s_micro").cast("double") / F.col("n_grams")
                       / 100.0 + 0.5).cast("bigint"))
         scored = sc.select("doc_id", aq.alias("aq4"))
-        hist = scored.groupBy("aq4").agg(F.count(F.lit(1)).alias("cnt"))
-        hw = Window.orderBy(F.desc("aq4"))
-        cum = hist.select(
-            "aq4",
-            F.sum("cnt").over(hw.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("cum"),
-            F.sum("cnt").over(Window.partitionBy()).alias("n_total"))
         k = F.ceil(F.lit(dsir_frac) * F.col("n_total")).cast("bigint")
-        thr = (cum.filter(F.col("cum") >= k)
+        thr = (_cum_hist(scored, "aq4", descending=True)
+               .filter(F.col("cum") >= k)
                .agg(F.max("aq4").alias("dsir_thr")))
         keep_ids = (scored.crossJoin(F.broadcast(thr))
                     .filter(F.col("aq4") >= F.col("dsir_thr"))
@@ -356,14 +314,8 @@ def prepare_corpus(spark: SparkSession, docs: DataFrame, output_dir: str,
         stages.append(("dsir_select", n_pre, int(kept.count()),
                        0, time.time() - ts))
         ts = time.time()
-    scrubbed = (pii_scrub_cols(kept)
-                .select("doc_id", "source", "n_tokens",
-                        F.col("redacted").alias("text"),
-                        (F.col("n_email") + F.col("n_phone")
-                         + F.col("n_ip")).alias("n_pii")))
-    out = _with_pack_offsets(_with_shuffle_pos(scrubbed), seq_len)
-    (out.write.mode("overwrite").partitionBy("shard")
-        .parquet(output_dir))
+    (_annotated(_scrubbed(kept), seq_len)
+     .write.mode("overwrite").partitionBy("shard").parquet(output_dir))
     wall_write = time.time() - ts
 
     agg = spark.read.parquet(output_dir).agg(
@@ -373,11 +325,7 @@ def prepare_corpus(spark: SparkSession, docs: DataFrame, output_dir: str,
                    int(agg["tok"] or 0), wall_write))
 
     if manifest_dir is not None:
-        now = time.time()
-        rows = [(run_id, s, int(i), int(o), int(t), float(w), float(now))
-                for s, i, o, t, w in stages]
-        (spark.createDataFrame(rows, CORPUS_MANIFEST_SCHEMA)
-         .write.mode("append").parquet(f"{manifest_dir}/stages"))
+        _append_stages(spark, manifest_dir, run_id, stages)
 
     return {"run_id": run_id, "n_docs_in": n_in,
             "n_docs_out": int(agg["n"]),

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from atr_adaptive_laguerre_spark.operators.text import words_col
 from atr_adaptive_laguerre_spark.streaming.stateful import drain
 
 #: documents arriving on a stream carry an event-time column
@@ -37,9 +38,8 @@ def stream_dedup_exact(spark: SparkSession, input_dir: str, output_dir: str,
     to the batch operator's single exchange.
     """
     sdf = spark.readStream.schema(DOC_TS_SCHEMA).parquet(input_dir)
-    norm = F.concat_ws(
-        " ", F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
-    hashed = sdf.select("doc_id", "ts", F.md5(norm).alias("chash"))
+    chash = F.md5(F.concat_ws(" ", words_col()))  # doc_scores' chash
+    hashed = sdf.select("doc_id", "ts", chash.alias("chash"))
     dedup = (hashed.withWatermark("ts", watermark)
              .dropDuplicatesWithinWatermark(["chash"]))
     drain(dedup.writeStream.format("parquet").outputMode("append")
@@ -77,19 +77,14 @@ def stream_incremental_neardup(spark: SparkSession, input_dir: str,
     increment is small relative to the corpus, and doing full LSH
     inside every micro-batch would re-create the batch operator.
     """
-    from pyspark.sql import Window
-
+    from atr_adaptive_laguerre_spark.operators.curation import is_canonical
     from atr_adaptive_laguerre_spark.operators.dedup import (
         band_signatures, incremental_dedup_report, shingles_col,
     )
 
     def process(batch, batch_id: int) -> None:
-        norm = F.concat_ws(
-            " ", F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
-        w = Window.partitionBy("chash")
-        b = (batch.withColumn("chash", F.md5(norm))
-             .withColumn("keep",
-                         F.col("doc_id") == F.min("doc_id").over(w))
+        b = (batch.withColumn("chash", F.md5(F.concat_ws(" ", words_col())))
+             .withColumn("keep", is_canonical())
              .filter("keep").select("doc_id", "text"))
         sp = batch.sparkSession
         bands = sp.read.parquet(f"{index_dir}/bands").drop("batch")

@@ -55,6 +55,22 @@ def test_shuffle_and_pack_structure(prepared):
     assert (out["shard"] == out["shuffle_pos"] % SHUFFLE_SHARDS).all()
 
 
+def test_shuffle_order_is_catalog_order_on_kept_docs(spark, prepared):
+    """The job's training order is `corpus_shuffle`'s permutation
+    restricted to the kept docs: the shuffle is a pure function of
+    doc_id, so any subset keeps its relative order."""
+    from atr_adaptive_laguerre_spark.operators.curation import (
+        q_corpus_shuffle,
+    )
+
+    _, out, _ = prepared
+    cat = q_corpus_shuffle(spark, SF).toPandas()
+    want = (cat[cat["doc_id"].isin(out["doc_id"])]
+            .sort_values("shuffle_pos")["doc_id"].tolist())
+    assert len(want) == len(out)
+    assert out["doc_id"].tolist() == want
+
+
 def test_scrubbed_and_manifest(spark, prepared):
     """Output text is the redacted column (no PII in the synthetic
     corpus, so texts survive verbatim but n_pii exists and is 0), and

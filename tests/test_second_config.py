@@ -14,6 +14,9 @@ a config that changes EVERY tunable the reference exposes:
 fixed — they are literals in the reference, expander_batched.py:266-276.)
 """
 
+import os
+import sys
+
 import duckdb
 import pytest
 
@@ -24,6 +27,10 @@ from atr_adaptive_laguerre_spark.engine.tokens import (
     tokenize_documents_portable,
 )
 from atr_adaptive_laguerre_spark.queries import _quantized
+
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from check_correctness import value_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,10 +53,6 @@ def duck():
 
 
 def _compare(spark, duck, spark_df, oracle_sql):
-    import sys
-    sys.path.insert(0, "/root/repo/tools")
-    from check_correctness import value_hash
-
     spdf = spark_df.toPandas()
     opdf = duck.execute(oracle_sql).fetchdf()
     assert len(spdf) == len(opdf)
