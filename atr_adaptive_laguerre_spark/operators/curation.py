@@ -21,6 +21,9 @@ twins in ``ORACLES``) and the stages they call:
   ``_with_tok_offset``, both the ``_exclusive_prefix_sum`` scan.
 * ``dsir_select`` — ``dsir_scores`` (``_md5_u32`` gram buckets).
 
+The three curation-report oracles share ``_scored_ctes`` (the SQL twin
+of ``doc_scores``) and ``_retention_sql`` (of ``_retention``).
+
 Every expression is JVM-side; every single-partition window runs over a
 bounded frame (quantized values, buckets, sources or a top-N).
 """
@@ -36,7 +39,8 @@ from atr_adaptive_laguerre_spark.operators.dedup import (
 )
 from atr_adaptive_laguerre_spark.operators.io import read_table
 from atr_adaptive_laguerre_spark.operators.text import (
-    SURPRISAL_CTE, _ngram_col, _surprisal_agg, _sw_sql, quality_cols,
+    QUALITY_POS_SOURCE as BENCHMARK_SOURCE, SURPRISAL_CTE, _lang_guess_sql,
+    _ngram_col, _surprisal_agg, _sw_sql, lang_guess, quality_cols,
     quality_sql, words_col,
 )
 
@@ -55,16 +59,11 @@ def doc_scores(docs: DataFrame, *extra: str) -> DataFrame:
     pruned from the plan."""
     w = words_col()
     stop_ratio, _ttr, quality = quality_cols(w)
-    has_cjk = F.length(F.regexp_replace(F.col("text"),
-                                        r"[^一-鿿]", "")) > 0
-    guess = (F.when(has_cjk, "cjk")
-             .when(stop_ratio >= 0.05, "en")
-             .otherwise("other"))
     return docs.select(
         "doc_id", "source", *extra,
         F.size(w).alias("token_count"),
         quality.alias("quality_score"),
-        guess.alias("lang_guess"),
+        lang_guess(stop_ratio).alias("lang_guess"),
         F.md5(F.concat_ws(" ", w)).alias("chash"))
 
 
@@ -147,14 +146,16 @@ def curation_report(docs: DataFrame, min_tokens: int = MIN_TOKENS,
         F.col("quality_score") >= min_quality, near_dup_drops))
 
 
-def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalog entry: :func:`curation_report` at the module defaults."""
-    docs = read_table(spark, sf_dir, "documents")
-    return curation_report(docs)
-
-
-ORACLE_CORPUS_CURATION = f"""
-WITH w AS (
+def _scored_ctes(q6: bool = False) -> str:
+    """The ``w`` → ``scored`` CTE pair, SQL twin of :func:`doc_scores`:
+    token count, quality score (as its r6-quantized ``q6`` when ``q6``),
+    language guess and content hash."""
+    quality = (f"FLOOR(({quality_sql()}) * 1000000 + 0.5) / 1000000 AS q6"
+               if q6 else f"{quality_sql()}\n           AS quality_score")
+    sr = (f"length(list_filter(words,\n{' ' * 21}"
+          f"x -> list_contains({_sw_sql()}, x)))::DOUBLE\n"
+          f"{' ' * 19}/ length(words)")
+    return f"""w AS (
   SELECT doc_id, source,
          regexp_split_to_array(trim(lower(text)), '\\s+') AS words,
          length(regexp_replace(text, '[^一-鿿]', '', 'g')) > 0 AS has_cjk
@@ -162,32 +163,43 @@ WITH w AS (
 ), scored AS (
   SELECT doc_id, source,
          length(words) AS token_count,
-         {quality_sql()}
-           AS quality_score,
-         CASE WHEN has_cjk THEN 'cjk'
-              WHEN length(list_filter(words,
-                     x -> list_contains({_sw_sql()}, x)))::DOUBLE
-                   / length(words) >= 0.05 THEN 'en'
-              ELSE 'other' END AS lang_guess,
+         {quality},
+         {_lang_guess_sql(sr, " " * 14)},
          md5(array_to_string(words, ' ')) AS chash
   FROM w
-), flagged AS (
-  SELECT source, lang_guess, token_count,
-         CAST(doc_id = MIN(doc_id) OVER (PARTITION BY chash)
-              AND token_count >= {MIN_TOKENS}
-              AND quality_score >= {MIN_QUALITY} AS INT) AS keep
-  FROM scored
-)
-SELECT source, lang_guess,
+)"""
+
+
+def _retention_sql(*keys: str) -> str:
+    """SQL twin of :func:`_retention` over the ``flagged`` CTE."""
+    by = ", ".join(("source", "lang_guess") + keys)
+    return f"""SELECT {by},
        COUNT(*) AS n_docs,
        SUM(keep)::BIGINT AS n_kept,
        SUM(keep * token_count)::BIGINT AS tokens_kept,
        FLOOR((SUM(keep)::DOUBLE / COUNT(*)) * 1000000 + 0.5) / 1000000
          AS kept_ratio
 FROM flagged
-GROUP BY source, lang_guess
+GROUP BY {by}
 ORDER BY source, lang_guess
 """
+
+
+def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Catalog entry: :func:`curation_report` at the module defaults."""
+    docs = read_table(spark, sf_dir, "documents")
+    return curation_report(docs)
+
+
+ORACLE_CORPUS_CURATION = f"""
+WITH {_scored_ctes()}, flagged AS (
+  SELECT source, lang_guess, token_count,
+         CAST(doc_id = MIN(doc_id) OVER (PARTITION BY chash)
+              AND token_count >= {MIN_TOKENS}
+              AND quality_score >= {MIN_QUALITY} AS INT) AS keep
+  FROM scored
+)
+{_retention_sql()}"""
 
 
 def q_corpus_curation_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,24 +230,7 @@ reach AS (
 nd AS (
   SELECT id AS doc_id FROM reach GROUP BY id HAVING id != MIN(r)
 ),
-w AS (
-  SELECT doc_id, source,
-         regexp_split_to_array(trim(lower(text)), '\\s+') AS words,
-         length(regexp_replace(text, '[^一-鿿]', '', 'g')) > 0 AS has_cjk
-  FROM documents
-), scored AS (
-  SELECT doc_id, source,
-         length(words) AS token_count,
-         {quality_sql()}
-           AS quality_score,
-         CASE WHEN has_cjk THEN 'cjk'
-              WHEN length(list_filter(words,
-                     x -> list_contains({_sw_sql()}, x)))::DOUBLE
-                   / length(words) >= 0.05 THEN 'en'
-              ELSE 'other' END AS lang_guess,
-         md5(array_to_string(words, ' ')) AS chash
-  FROM w
-), flagged AS (
+{_scored_ctes()}, flagged AS (
   SELECT s.source, s.lang_guess, s.token_count,
          CAST(s.doc_id = MIN(s.doc_id) OVER (PARTITION BY chash)
               AND nd.doc_id IS NULL
@@ -243,16 +238,7 @@ w AS (
               AND s.quality_score >= {MIN_QUALITY} AS INT) AS keep
   FROM scored s LEFT JOIN nd ON nd.doc_id = s.doc_id
 )
-SELECT source, lang_guess,
-       COUNT(*) AS n_docs,
-       SUM(keep)::BIGINT AS n_kept,
-       SUM(keep * token_count)::BIGINT AS tokens_kept,
-       FLOOR((SUM(keep)::DOUBLE / COUNT(*)) * 1000000 + 0.5) / 1000000
-         AS kept_ratio
-FROM flagged
-GROUP BY source, lang_guess
-ORDER BY source, lang_guess
-"""
+{_retention_sql()}"""
 
 
 #: catalog query's quantile — deliberately NOT the median so the gate
@@ -294,23 +280,7 @@ def q_corpus_curation_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_CORPUS_CURATION_QUANTILE = f"""
-WITH w AS (
-  SELECT doc_id, source,
-         regexp_split_to_array(trim(lower(text)), '\\s+') AS words,
-         length(regexp_replace(text, '[^一-鿿]', '', 'g')) > 0 AS has_cjk
-  FROM documents
-), scored AS (
-  SELECT doc_id, source,
-         length(words) AS token_count,
-         FLOOR(({quality_sql()}) * 1000000 + 0.5) / 1000000 AS q6,
-         CASE WHEN has_cjk THEN 'cjk'
-              WHEN length(list_filter(words,
-                     x -> list_contains({_sw_sql()}, x)))::DOUBLE
-                   / length(words) >= 0.05 THEN 'en'
-              ELSE 'other' END AS lang_guess,
-         md5(array_to_string(words, ' ')) AS chash
-  FROM w
-), hist AS (
+WITH {_scored_ctes(q6=True)}, hist AS (
   SELECT q6, COUNT(*) AS cnt FROM scored GROUP BY q6
 ), cum AS (
   SELECT q6,
@@ -329,16 +299,7 @@ WITH w AS (
               AND s.q6 >= t.quality_thr AS INT) AS keep
   FROM scored s CROSS JOIN thr t
 )
-SELECT source, lang_guess, quality_thr,
-       COUNT(*) AS n_docs,
-       SUM(keep)::BIGINT AS n_kept,
-       SUM(keep * token_count)::BIGINT AS tokens_kept,
-       FLOOR((SUM(keep)::DOUBLE / COUNT(*)) * 1000000 + 0.5) / 1000000
-         AS kept_ratio
-FROM flagged
-GROUP BY source, lang_guess, quality_thr
-ORDER BY source, lang_guess
-"""
+{_retention_sql("quality_thr")}"""
 
 
 TRAIN_FRACTION = 0.9
@@ -618,7 +579,6 @@ ORDER BY rank
 
 
 CONTAM_NGRAM = 8
-BENCHMARK_SOURCE = "src0"
 
 
 def _bench_hits(train: DataFrame, bench: DataFrame) -> DataFrame:

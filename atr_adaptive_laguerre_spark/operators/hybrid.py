@@ -24,6 +24,9 @@ sum of micro-quantized components (order-free); cosine is `_r6`-quantized
 before ranking; RRF contributions are exact integer divisions
 ``1000000 div (k + rank)`` summed as BIGINTs.  All rank ties break on
 doc_id.
+
+The sparse side is ``text.bm25_scored``; the DuckDB twin starts from
+its SQL twin ``text.BM25_CTE``.
 """
 
 from __future__ import annotations
@@ -31,11 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from atr_adaptive_laguerre_spark.operators import _r6, _u6
+from atr_adaptive_laguerre_spark.operators.io import read_table
 from atr_adaptive_laguerre_spark.operators.similarity import _cosine
 from atr_adaptive_laguerre_spark.operators.text import (
-    BM25_B,
-    BM25_K1,
+    BM25_CTE,
     BM25_QUERY,
+    _docs,
     bm25_scored,
 )
 
@@ -47,18 +51,6 @@ HYBRID_R = 50
 HYBRID_TOPN = 20
 #: BM25 top documents whose embeddings form the dense PRF query
 PRF_SEEDS = 5
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from atr_adaptive_laguerre_spark.operators.io import read_table
-
-    return read_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from atr_adaptive_laguerre_spark.operators.io import read_table
-
-    return read_table(spark, sf_dir, "embeddings")
 
 
 def hybrid_search_rrf(docs: DataFrame, emb: DataFrame,
@@ -129,43 +121,11 @@ def hybrid_search_rrf(docs: DataFrame, emb: DataFrame,
 
 def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid BM25 + dense-cosine retrieval fused by reciprocal rank."""
-    return hybrid_search_rrf(_docs(spark, sf_dir), _emb(spark, sf_dir))
+    return hybrid_search_rrf(_docs(spark, sf_dir),
+                             read_table(spark, sf_dir, "embeddings"))
 
 
-_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
-
-ORACLE_HYBRID_SEARCH_RRF = f"""
-WITH w AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
-                        '\\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, COUNT(*)::BIGINT AS tf FROM w
-  WHERE term IN ({_TERMS_SQL}) GROUP BY doc_id, term
-), dl AS (
-  SELECT doc_id,
-         length(regexp_split_to_array(trim(lower(text)), '\\s+'))::BIGINT
-           AS dl
-  FROM documents
-), nstats AS (
-  SELECT COUNT(*)::BIGINT AS n_docs,
-         FLOOR(AVG(dl) * 1000000 + 0.5) / 1000000 AS avgdl
-  FROM dl
-), idf AS (
-  SELECT term, avgdl,
-         FLOOR(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-               * 1000000 + 0.5) / 1000000 AS idf
-  FROM (SELECT term, COUNT(*)::BIGINT AS df FROM tf GROUP BY term), nstats
-), scored AS (
-  SELECT tf.doc_id,
-         SUM(CAST(FLOOR(idf.idf
-               * ((tf.tf * ({BM25_K1} + 1.0))
-                  / (tf.tf + {BM25_K1} * (1.0 - {BM25_B}
-                                          + {BM25_B} * (dl.dl / idf.avgdl))))
-               * 1000000 + 0.5) AS BIGINT)) / 1000000.0 AS score
-  FROM tf JOIN idf USING (term) JOIN dl ON tf.doc_id = dl.doc_id
-  GROUP BY tf.doc_id
-), sparse AS (
+ORACLE_HYBRID_SEARCH_RRF = BM25_CTE + f""", sparse AS (
   SELECT doc_id, rank_s FROM (
     SELECT doc_id,
            ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rank_s

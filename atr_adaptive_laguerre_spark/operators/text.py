@@ -1,5 +1,25 @@
 """Text-analysis operators over the ``documents`` table.
 
+Each stage has one definition, and one DuckDB twin where an oracle
+needs it.  The 16 queries (``QUERIES``; twins in ``ORACLES``) and the
+stages they call (twins in brackets):
+
+* ``text_stats`` — ``quality_cols`` [``quality_sql``]; ``lang_id`` —
+  its stop ratio → ``lang_guess`` [``_lang_guess_sql``].  Curation's
+  scores and their twin use all four.
+* ``doc_fingerprint``, ``token_counts``, ``tfidf_topk``,
+  ``doc_chunk_overlap`` — ``words_col`` [``_WORDS_CTE``];
+  ``text_repetition``, ``corpus_ngram_topk`` — ``_ngram_col``.
+* ``lm_bigram_surprisal`` — ``_surprisal_agg`` [``SURPRISAL_CTE``];
+  ``quality_classifier`` — ``nb_classifier_scores``; ``pii_scrub`` —
+  ``pii_scrub_cols`` [``_pii_oracle_exprs``].
+* ``bpe_pair_stats`` — ``_vocab`` [``_wc_sql``]; ``bpe_train_merges``
+  — ``_bpe_rounds`` [``_bpe_train_ctes``], which ``bpe_train`` also
+  collects; ``bpe_encode``, ``bpe_train_encode`` — ``_bpe_report``
+  [``_bpe_report_sql``] under ``BPE_MERGES`` or ``bpe_train``'s merges.
+* ``bm25_search`` — ``bm25_scored`` [``BM25_CTE``], also the sparse
+  side of ``hybrid``.
+
 All JVM-side expressions (split / transform / filter / aggregate higher-
 order functions) — no Python in the hot path.  Cross-engine determinism:
 words come from ``\\s+`` splitting of trimmed text, hashes are md5 (both
@@ -8,9 +28,12 @@ engines agree bit-for-bit on md5 of the same UTF-8 string).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from atr_adaptive_laguerre_spark.operators import _r6, _u6
+from atr_adaptive_laguerre_spark.operators.io import read_table
 
 #: tiny English stopword list (top function words; includes the synthetic
 #: corpus's fillers) — heuristic lang/quality scoring only
@@ -19,13 +42,18 @@ EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is",
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from atr_adaptive_laguerre_spark.operators.io import read_table
-
     return read_table(spark, sf_dir, "documents")
 
 
 def words_col():
     return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+
+
+#: the per-doc ``w (doc_id, words)`` CTE: SQL twin of :func:`words_col`
+_WORDS_CTE = """w AS (
+  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS words
+  FROM documents
+)"""
 
 
 def quality_cols(w=None):
@@ -42,6 +70,18 @@ def quality_cols(w=None):
     quality = (F.least(n.cast("double") / 100.0, F.lit(1.0)) * 0.4
                + stop_ratio * 0.3 + ttr * 0.3)
     return stop_ratio, ttr, quality
+
+
+def lang_guess(stop_ratio):
+    """Heuristic language guess 'cjk' / 'en' / 'other': any CJK
+    character in ``text``, else an English stopword ratio of at least
+    0.05 (``stop_ratio``, from :func:`quality_cols`).  Shared by
+    q_lang_id and the curation scores."""
+    has_cjk = F.length(F.regexp_replace(F.col("text"),
+                                        r"[^一-鿿]", "")) > 0
+    return (F.when(has_cjk, "cjk")
+            .when(stop_ratio >= 0.05, "en")
+            .otherwise("other"))
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,6 +111,15 @@ def _sw_sql() -> str:
     return "[" + ", ".join(f"'{s}'" for s in EN_STOPWORDS) + "]"
 
 
+def _lang_guess_sql(sr: str, pad: str) -> str:
+    """DuckDB twin of :func:`lang_guess` as a ``lang_guess`` column over
+    a ``has_cjk`` flag and the stop-ratio expression ``sr``; ``pad``
+    indents the continuation lines."""
+    return (f"CASE WHEN has_cjk THEN 'cjk'\n"
+            f"{pad}WHEN {sr} >= 0.05 THEN 'en'\n"
+            f"{pad}ELSE 'other' END AS lang_guess")
+
+
 def quality_sql() -> str:
     """DuckDB twin of :func:`quality_cols`'s quality score over a
     ``words`` list column — the ONE definition both the text_stats and
@@ -85,10 +134,7 @@ def quality_sql() -> str:
 
 
 ORACLE_TEXT_STATS = f"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS words
-  FROM documents
-)
+WITH {_WORDS_CTE}
 SELECT doc_id,
        length(words) AS token_count,
        length(list_distinct(words)) AS distinct_tokens,
@@ -112,18 +158,10 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares one vocabulary across langs, so this validates the computation,
     not real-world accuracy.)"""
     docs = _docs(spark, sf_dir)
-    w = words_col()
-    sw_list = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    stop_ratio = (F.size(F.filter(w, lambda x: F.array_contains(sw_list, x)))
-                  .cast("double") / F.size(w))
-    has_cjk = F.length(F.regexp_replace(F.col("text"),
-                                        r"[^一-鿿]", "")) > 0
-    guess = (F.when(has_cjk, "cjk")
-             .when(stop_ratio >= 0.05, "en")
-             .otherwise("other"))
+    stop_ratio = quality_cols()[0]
     return (docs.select("doc_id", "lang",
                         _r6(stop_ratio).alias("en_stopword_ratio"),
-                        guess.alias("lang_guess"))
+                        lang_guess(stop_ratio).alias("lang_guess"))
             .orderBy("doc_id"))
 
 
@@ -142,9 +180,7 @@ WITH w AS (
 )
 SELECT doc_id, lang,
        FLOOR(sr * 1000000 + 0.5) / 1000000 AS en_stopword_ratio,
-       CASE WHEN has_cjk THEN 'cjk'
-            WHEN sr >= 0.05 THEN 'en'
-            ELSE 'other' END AS lang_guess
+       {_lang_guess_sql("sr", " " * 12)}
 FROM r
 ORDER BY doc_id
 """
@@ -318,11 +354,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id"))
 
 
-ORACLE_TEXT_REPETITION = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS words
-  FROM documents
-), g AS (
+ORACLE_TEXT_REPETITION = f"""
+WITH {_WORDS_CTE}, g AS (
   SELECT doc_id, 1 AS k, unnest(words) AS g FROM w
   UNION ALL
   SELECT doc_id, 2 AS k,
@@ -392,10 +425,7 @@ def q_corpus_ngram_topk(spark: SparkSession, sf_dir: str,
 
 
 ORACLE_CORPUS_NGRAM_TOPK = f"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS words
-  FROM documents
-), g AS (
+WITH {_WORDS_CTE}, g AS (
   SELECT doc_id,
          words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS ngram
   FROM w, UNNEST(range(0, len(words) - 2)) AS t(i)
@@ -440,7 +470,6 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = tf.join(idf, "term").select(
         "doc_id", "term", "tf",
         _r6(F.col("tf") * F.col("idf")).alias("score"))
-    from pyspark.sql import Window
     win = (Window.partitionBy("doc_id")
            .orderBy(F.desc("score"), F.asc("term")))
     return (scored.withColumn("rnk", F.row_number().over(win))
@@ -494,10 +523,9 @@ def _surprisal_agg(docs: DataFrame) -> DataFrame:
     vocab = (docs.select(F.explode(w).alias("t"))
              .agg(F.count_distinct("t").alias("v")))
     model = (ctx.join(c1, "w1").crossJoin(vocab)
-             .select("bg", F.floor(
+             .select("bg", _u6(
                  F.log((F.col("c12") + 1).cast("double")
-                       / (F.col("c1") + F.col("v")))
-                 * 1000000.0 + 0.5).cast("bigint").alias("lp_micro")))
+                       / (F.col("c1") + F.col("v")))).alias("lp_micro")))
     return (cdoc.join(model, "bg")
             .groupBy("doc_id")
             .agg(F.sum(F.col("c") * -F.col("lp_micro")).alias("s_micro"),
@@ -540,11 +568,8 @@ def q_lm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: shared bigram-LM CTE chain through the per-doc ``agg`` frame — the
 #: SQL twin of :func:`_surprisal_agg`
-SURPRISAL_CTE = """
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS words
-  FROM documents
-), b AS (
+SURPRISAL_CTE = f"""
+WITH {_WORDS_CTE}, b AS (
   SELECT doc_id,
          unnest([array_to_string(words[i:i+1], ' ')
                  for i in range(1, length(words))]) AS bg
@@ -590,6 +615,27 @@ ORDER BY d.doc_id
 BPE_TOP_K = 20
 
 
+def _vocab(docs: DataFrame, min_len: int) -> DataFrame:
+    """(w, c): every distinct word of at least ``min_len`` characters
+    and its corpus count — the one corpus-scale shuffle of the BPE
+    stages (a token-keyed groupBy; map-side combine does the heavy
+    lifting, so it is vocab-linear)."""
+    return (docs.select(F.explode(words_col()).alias("w"))
+            .filter(F.length("w") >= min_len)
+            .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
+
+
+def _wc_sql(min_len: int) -> str:
+    """The ``wc`` CTE: SQL twin of :func:`_vocab`."""
+    return f"""wc AS (
+  SELECT w, COUNT(*)::BIGINT AS c FROM (
+    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
+    FROM documents
+  ) WHERE length(w) >= {min_len}
+  GROUP BY w
+)"""
+
+
 def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-training statistics — the first iteration of BPE
     (Sennrich et al. 2016): count every adjacent character pair inside
@@ -598,19 +644,14 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent pairs (ties broken by pair string, so the ranking is
     total and engine-independent).
 
-    Scale shape: the corpus collapses to DISTINCT words first (one
-    token-keyed groupBy — vocab-linear, map-side combine does the
-    heavy lifting), char-pair expansion runs over the vocabulary only
+    Scale shape: the corpus collapses to DISTINCT words first
+    (:func:`_vocab`), char-pair expansion runs over the vocabulary only
     (JVM ``transform`` over ``sequence``, no Python), and the final
     pair space is bounded by charset² (corpus-size-independent), so
     the top-k window is O(|charset|²) rows on one partition — a
-    constant.  At a second/third merge iteration the tokenization
-    changes per merge; that loop is a driver-side recursion over this
-    same aggregate (same adjudication as the IVF Lloyd iterations)."""
-    docs = _docs(spark, sf_dir)
-    wc = (docs.select(F.explode(words_col()).alias("w"))
-          .filter(F.length("w") >= 2)
-          .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
+    constant.  The later merge iterations, where the tokenization
+    changes per merge, are the rounds of :func:`q_bpe_train_merges`."""
+    wc = _vocab(_docs(spark, sf_dir), 2)
     pairs = wc.select(
         "c", F.explode(F.expr(
             "transform(sequence(1, length(w) - 1), "
@@ -625,13 +666,7 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_BPE_PAIR_STATS = f"""
-WITH wc AS (
-  SELECT w, COUNT(*)::BIGINT AS c FROM (
-    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE length(w) >= 2
-  GROUP BY w
-), pairs AS (
+WITH {_wc_sql(2)}, pairs AS (
   SELECT unnest(list_transform(range(1, length(w)),
                                i -> substr(w, i::INT, 2))) AS pair,
          c
@@ -647,74 +682,71 @@ ORDER BY rank
 """
 
 
+def _bpe_rounds(docs: DataFrame, n: int) -> DataFrame:
+    """(rank, pair, merged, cnt), unordered: ``n`` rounds of the
+    iterative BPE loop (Sennrich et al. 2016, alg. 1) over the
+    ``<sym>``-wrapped STRING representation, so DuckDB can replay it
+    exactly.  Per round, count adjacent-symbol pairs over the
+    (distinct-word, frequency) vocabulary, pick the most frequent (ties
+    by the wrapped pair string — a total order even when two different
+    splits concatenate to the same text, e.g. ``<ab><c>`` vs
+    ``<a><bc>``), fuse it everywhere with ONE leftmost-nonoverlapping
+    ``replace`` (BPE's merge-apply semantics in both engines — the
+    :func:`bpe_encode_col` contract), and repeat on the rewritten
+    vocabulary.  A row holds the learned pair (wrapped), the fused
+    symbol and its count at selection time; once no word has two
+    symbols left the later rounds are empty.
+
+    Collect-free: each round's argmax is a 1-row broadcast frame feeding
+    the next round's ``replace`` (same driver-holds-nothing shape as the
+    IVF Lloyd loop); ``localCheckpoint`` truncates the per-round plan.
+    Scale shape: after :func:`_vocab`, each round is a vocab-linear pair
+    explode + one pair-keyed aggregate over an O(symbols²)-bounded key
+    space + a vocab-linear codegen rewrite."""
+    sym = (_vocab(docs, 1)
+           .select("c", F.regexp_replace("w", "(.)", "<$1>").alias("s"))
+           .localCheckpoint(eager=True))
+    rounds = []
+    for r in range(1, n + 1):
+        sy = sym.select(
+            "c", F.expr("regexp_extract_all(s, '<[^>]*>', 0)").alias("sy"))
+        prs = sy.select("c", F.explode(F.expr(
+            # sequence(1, 0) DESCENDS in Spark — guard 1-symbol words
+            "IF(size(sy) < 2, cast(array() as array<string>), "
+            "transform(sequence(1, size(sy) - 1), "
+            "i -> concat(sy[i - 1], sy[i])))")).alias("pair"))
+        best = (prs.groupBy("pair").agg(F.sum("c").alias("cnt"))
+                .orderBy(F.col("cnt").desc(), F.col("pair").asc())
+                .limit(1)
+                .select(F.lit(r).cast("bigint").alias("rank"), "pair",
+                        F.replace(F.col("pair"), F.lit("><"), F.lit(""))
+                        .alias("merged"),
+                        F.col("cnt").cast("bigint").alias("cnt"))
+                .localCheckpoint(eager=True))
+        rounds.append(best)
+        sym = (sym.crossJoin(F.broadcast(best.select("pair", "merged")))
+               .select("c", F.replace(F.col("s"), F.col("pair"),
+                                      F.col("merged")).alias("s"))
+               .localCheckpoint(eager=True))
+    return reduce(DataFrame.unionByName, rounds)
+
+
 def bpe_train(docs: DataFrame,
               n_merges: int = 8) -> "list[tuple[str, str]]":
     """Train ``n_merges`` BPE merges on the corpus (Sennrich et al.
-    2016, algorithm 1): start from character symbols, repeatedly count
-    adjacent symbol pairs over the (distinct-word, frequency)
-    vocabulary and merge the most frequent pair (ties by the wrapped
-    pair string ``<a><b>`` — the same total, engine-independent order
-    the oracle-gated :func:`q_bpe_train_merges` pins, split-AWARE:
-    two different splits concatenating to the same text are distinct
-    pairs).  Returns ``(a, b)`` tuples, directly consumable by
-    :func:`bpe_encode_col` — train once, encode everywhere.
+    2016, algorithm 1): the :func:`_bpe_rounds`, each learned pair
+    split back into its ``(a, b)`` symbols, directly consumable by
+    :func:`bpe_encode_col` — train once, encode everywhere.  Fewer than
+    ``n_merges`` come back once no word has two symbols left.
 
-    Distribution: the corpus collapses to the vocabulary ONCE (the only
-    corpus-scale shuffle); each iteration is a vocab-linear pair count
-    plus a vocab-linear merge rewrite, both pure JVM expressions — the
-    merge itself is an ``aggregate`` fold that rebuilds each word's
-    symbol array left-to-right (BPE's leftmost-first merge semantics).
-    The driver loop holds only the learned pair per round (same
-    adjudication as the IVF Lloyd iterations: O(iterations) tiny
-    driver state, never corpus data).  ``localCheckpoint`` truncates
-    the per-round plan the way the components loop does."""
-    wc = (docs.select(F.explode(words_col()).alias("w"))
-          .filter(F.length("w") >= 1)
-          .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
-    sym = wc.select(
-        "c", F.expr("transform(sequence(1, length(w)), "
-                    "i -> substring(w, i, 1))").alias("s"))
-    sym = sym.localCheckpoint()
-    merges: "list[tuple[str, str]]" = []
-    for _ in range(n_merges):
-        best = (sym.select(
-            "c", F.explode(F.expr(
-                # sequence(1, 0) DESCENDS in Spark — guard 1-symbol
-                # words with an explicit empty array
-                "IF(size(s) < 2, "
-                "cast(array() as array<struct<a:string,b:string>>), "
-                "transform(sequence(1, size(s) - 1), "
-                "i -> struct(s[i - 1] as a, s[i] as b)))")).alias("p"))
-            .groupBy("p").agg(F.sum("c").alias("cnt"))
-            .orderBy(F.col("cnt").desc(),
-                     F.concat(F.lit("<"), F.col("p.a"), F.lit("><"),
-                              F.col("p.b"), F.lit(">")))
-            .limit(1).collect())
-        if not best:
-            break
-        a, b = best[0]["p"]["a"], best[0]["p"]["b"]
-        merges.append((a, b))
-        a_lit = a.replace("\\", "\\\\").replace("'", "\\'")
-        b_lit = b.replace("\\", "\\\\").replace("'", "\\'")
-        # left-to-right fold: pend holds the previous symbol; when
-        # (pend, x) IS the learned (a, b) pair they fuse, otherwise
-        # pend is emitted and x becomes the new pend
-        merged = F.expr(
-            "aggregate(slice(s, 2, size(s) - 1), "
-            "struct(cast(array() as array<string>) as out, s[0] as pend), "
-            f"(acc, x) -> IF(acc.pend = '{a_lit}' AND x = '{b_lit}', "
-            "struct(concat(acc.out, array(concat(acc.pend, x))) as out, "
-            "cast(null as string) as pend), "
-            "IF(acc.pend is null, "
-            "struct(acc.out as out, x as pend), "
-            "struct(concat(acc.out, array(acc.pend)) as out, "
-            "x as pend))), "
-            "acc -> IF(acc.pend is null, acc.out, "
-            "concat(acc.out, array(acc.pend))))")
-        sym = (sym.select("c", F.when(F.size("s") >= 2, merged)
-                          .otherwise(F.col("s")).alias("s"))
-               .localCheckpoint())
-    return merges
+    The corpus must contain no literal ``<`` or ``>``: both the trainer
+    and :func:`bpe_encode_col` delimit symbols with them.  (True for
+    the tokenized-word corpus; a production encoder escapes them
+    first.)"""
+    if n_merges < 1:
+        return []
+    rows = _bpe_rounds(docs, n_merges).orderBy("rank").collect()
+    return [tuple(r["pair"][1:-1].split("><")) for r in rows]
 
 
 #: Canonical ordered merge list for the catalog ``bpe_encode`` query —
@@ -738,9 +770,8 @@ def bpe_encode_col(col, merges: "list[tuple[str, str]]" = BPE_MERGES):
     BPE's leftmost-first merge application — and DuckDB's ``replace``
     has the same semantics, so the twin is bit-identical.  Merges never
     cross whitespace (spaces are not wrapped, breaking ``><``
-    adjacency).  Assumes the corpus contains no literal ``<``/``>``
-    (true for the tokenized-word corpus; a production encoder escapes
-    them first).
+    adjacency).  Same no-``<``/``>`` corpus contract as
+    :func:`bpe_train`.
 
     Scale shape: a chain of ``len(merges)`` whole-stage-codegen string
     replaces — one corpus scan, zero shuffles, no Python."""
@@ -750,41 +781,46 @@ def bpe_encode_col(col, merges: "list[tuple[str, str]]" = BPE_MERGES):
     return enc
 
 
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODE over the corpus (the apply side of :func:`bpe_train`):
-    per doc, the token count after applying ``BPE_MERGES``, the
-    compression vs raw characters, and an md5 fingerprint of the full
-    encoded symbol stream (pins every token boundary, not just counts)."""
-    docs = _docs(spark, sf_dir)
-    enc = bpe_encode_col(F.col("text"))
-    raw = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s", "")
+def _bpe_report(docs: DataFrame,
+                merges: "list[tuple[str, str]]") -> DataFrame:
+    """Per-doc encode report under ``merges``: the non-space character
+    count, the token count, the compression between them, and an md5
+    fingerprint of the full encoded symbol stream (pins every token
+    boundary, not just counts)."""
+    enc = bpe_encode_col(F.col("text"), merges)
+    n_chars = F.length(
+        F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s", ""))
+    n_tokens = F.length(enc) - F.length(F.replace(enc, F.lit("<")))
     return (docs.select(
         "doc_id",
-        F.length(raw).cast("bigint").alias("n_chars"),
-        (F.length(enc) - F.length(F.replace(enc, F.lit("<"))))
-        .cast("bigint").alias("n_tokens"),
-        _r6(F.length(raw).cast("double")
-            / F.nullif((F.length(enc)
-                        - F.length(F.replace(enc, F.lit("<"))))
-                       .cast("double"), F.lit(0.0)))
+        n_chars.cast("bigint").alias("n_chars"),
+        n_tokens.cast("bigint").alias("n_tokens"),
+        _r6(n_chars.cast("double")
+            / F.nullif(n_tokens.cast("double"), F.lit(0.0)))
         .alias("compression"),
         F.md5(enc).alias("tokens_md5"))
         .orderBy("doc_id"))
 
 
-def _bpe_replace_sql() -> str:
-    expr = ("regexp_replace(trim(lower(text)), '(\\S)', '<\\1>', 'g')")
-    for a, b in BPE_MERGES:
-        expr = f"replace({expr}, '<{a}><{b}>', '<{a}{b}>')"
+def _bpe_replace_sql(pairs) -> str:
+    """DuckDB twin of :func:`bpe_encode_col`: the ``<c>``-wrapped text
+    under one ``replace`` per ``(pair, merged)`` SQL expression pair."""
+    expr = "regexp_replace(trim(lower(text)), '(\\S)', '<\\1>', 'g')"
+    for pair, merged in pairs:
+        expr = f"replace({expr}, {pair}, {merged})"
     return expr
 
 
-ORACLE_BPE_ENCODE = f"""
-WITH enc AS (
+def _bpe_report_sql(replace: str, ctes: str = "") -> str:
+    """SQL twin of :func:`_bpe_report` for the encoded-text expression
+    ``replace``, after the CTE list ``ctes`` (with its trailing
+    separator) when it needs one."""
+    return f"""
+WITH {ctes}enc AS (
   SELECT doc_id,
          length(regexp_replace(trim(lower(text)), '\\s', '', 'g'))
            AS n_chars,
-         {_bpe_replace_sql()} AS e
+         {replace} AS e
   FROM documents
 )
 SELECT doc_id,
@@ -799,82 +835,36 @@ ORDER BY doc_id
 """
 
 
+def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE ENCODE over the corpus (the apply side of :func:`bpe_train`):
+    the :func:`_bpe_report` under the fixed ``BPE_MERGES``."""
+    return _bpe_report(_docs(spark, sf_dir), BPE_MERGES)
+
+
+ORACLE_BPE_ENCODE = _bpe_report_sql(_bpe_replace_sql(
+    (f"'<{a}><{b}>'", f"'<{a}{b}>'") for a, b in BPE_MERGES))
+
+
 #: merge rounds pinned for the oracle-gated trainer catalog query
 BPE_TRAIN_ROUNDS = 6
 
 
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str,
                        n_merges: int = BPE_TRAIN_ROUNDS) -> DataFrame:
-    """BPE TRAINING as an oracle-gated catalog query (the iterative
-    Sennrich et al. 2016 alg. 1 loop that :func:`bpe_train` runs on
-    symbol arrays, re-expressed over the ``<sym>``-wrapped STRING
-    representation so DuckDB can replay it exactly): per merge round,
-    count adjacent-symbol pairs over the (distinct-word, frequency)
-    vocabulary, pick the most frequent (ties by the wrapped pair string
-    — a total order even when two different splits concatenate to the
-    same text, e.g. ``<ab><c>`` vs ``<a><bc>``), fuse it everywhere
-    with ONE leftmost-nonoverlapping ``replace`` (BPE's merge-apply
-    semantics in both engines — the :func:`bpe_encode_col` contract),
-    and repeat on the rewritten vocabulary.  Output: one row per round
-    — rank, the learned pair (wrapped), the fused symbol, and its count
-    at selection time.
-
-    Collect-free: each round's argmax is a 1-row broadcast frame feeding
-    the next round's ``replace`` (same driver-holds-nothing shape as the
-    IVF Lloyd loop); ``localCheckpoint`` truncates the per-round plan.
-    Scale shape: the corpus collapses to the vocabulary ONCE (the only
-    corpus-scale shuffle); each round is a vocab-linear pair explode +
-    one pair-keyed aggregate over an O(symbols²)-bounded key space + a
-    vocab-linear codegen rewrite.  Assumes no literal ``<``/``>`` in
-    the corpus (bpe_encode_col's documented contract)."""
-    from functools import reduce
-
-    docs = _docs(spark, sf_dir)
-    wc = (docs.select(F.explode(words_col()).alias("w"))
-          .filter(F.length("w") >= 1)
-          .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
-    sym = (wc.select("c", F.regexp_replace("w", "(.)", "<$1>").alias("s"))
-           .localCheckpoint(eager=True))
-    rounds = []
-    for r in range(1, n_merges + 1):
-        sy = sym.select(
-            "c", F.expr("regexp_extract_all(s, '<[^>]*>', 0)").alias("sy"))
-        prs = sy.select("c", F.explode(F.expr(
-            # sequence(1, 0) DESCENDS in Spark — guard 1-symbol words
-            "IF(size(sy) < 2, cast(array() as array<string>), "
-            "transform(sequence(1, size(sy) - 1), "
-            "i -> concat(sy[i - 1], sy[i])))")).alias("pair"))
-        best = (prs.groupBy("pair").agg(F.sum("c").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), F.col("pair").asc())
-                .limit(1)
-                .select(F.lit(r).cast("bigint").alias("rank"), "pair",
-                        F.replace(F.col("pair"), F.lit("><"), F.lit(""))
-                        .alias("merged"),
-                        F.col("cnt").cast("bigint").alias("cnt"))
-                .localCheckpoint(eager=True))
-        rounds.append(best)
-        sym = (sym.crossJoin(F.broadcast(best.select("pair", "merged")))
-               .select("c", F.replace(F.col("s"), F.col("pair"),
-                                      F.col("merged")).alias("s"))
-               .localCheckpoint(eager=True))
-    return (reduce(lambda a, b: a.unionByName(b), rounds)
-            .orderBy("rank"))
+    """BPE TRAINING as an oracle-gated catalog query: the
+    :func:`_bpe_rounds` table in rank order, one row per merge round.
+    Same no-``<``/``>`` corpus contract as :func:`bpe_train`."""
+    return _bpe_rounds(_docs(spark, sf_dir), n_merges).orderBy("rank")
 
 
 def _bpe_train_ctes(n: int = BPE_TRAIN_ROUNDS) -> str:
-    """Unrolled merge rounds (twin of :func:`q_bpe_train_merges`):
-    round r counts wrapped adjacent pairs over s{r-1}, b{r} is the
-    argmax (ties by pair string), s{r} applies it with DuckDB's
+    """Unrolled merge rounds (twin of :func:`_bpe_rounds`): round r
+    counts wrapped adjacent pairs over s{r-1}, b{r} is the argmax (ties
+    by pair string), s{r} applies it with DuckDB's
     leftmost-nonoverlapping ``replace`` — the same semantics Spark's
     ``replace`` has, which is what makes the learned sequence
     bit-identical."""
-    parts = ["""wc AS (
-  SELECT w, COUNT(*)::BIGINT AS c FROM (
-    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-    FROM documents
-  ) WHERE length(w) >= 1
-  GROUP BY w
-), s0 AS (
+    parts = [f"""{_wc_sql(1)}, s0 AS (
   SELECT regexp_replace(w, '(.)', '<\\1>', 'g') AS s, c FROM wc
 )"""]
     for r in range(1, n + 1):
@@ -909,11 +899,11 @@ def q_bpe_train_encode(spark: SparkSession, sf_dir: str,
                        n_merges: int = BPE_TRAIN_ROUNDS) -> DataFrame:
     """The COMPOSED trained-tokenizer pipeline as one oracle-gated
     query: learn ``n_merges`` BPE merges on the corpus
-    (:func:`q_bpe_train_merges` — vocabulary-grain pair counting, the
-    only corpus-scale shuffle) and encode the corpus with the LEARNED
-    table (:func:`bpe_encode_col` — a whole-stage-codegen replace
-    chain, zero shuffles).  Same output contract as ``bpe_encode``
-    but under merges the corpus itself chose — train once, encode
+    (:func:`bpe_train` — vocabulary-grain pair counting, the only
+    corpus-scale shuffle) and report the corpus encoded with the
+    LEARNED table (:func:`_bpe_report` — a whole-stage-codegen replace
+    chain, zero shuffles).  Same output contract as ``bpe_encode`` but
+    under merges the corpus itself chose — train once, encode
     everywhere, end to end.
 
     Driver state: the learned table itself (n_merges rows — the same
@@ -921,54 +911,15 @@ def q_bpe_train_encode(spark: SparkSession, sf_dir: str,
     DuckDB twin replays the identical rounds via the trainer's
     unrolled CTEs and applies them with nested scalar-subquery
     replaces, so every learned boundary is hash-pinned cross-engine."""
-    merges = [(r["pair"][1:-1].split("><")[0],
-               r["pair"][1:-1].split("><")[1])
-              for r in q_bpe_train_merges(spark, sf_dir,
-                                          n_merges).collect()]
     docs = _docs(spark, sf_dir)
-    enc = bpe_encode_col(F.col("text"), merges)
-    raw = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s", "")
-    return (docs.select(
-        "doc_id",
-        F.length(raw).cast("bigint").alias("n_chars"),
-        (F.length(enc) - F.length(F.replace(enc, F.lit("<"))))
-        .cast("bigint").alias("n_tokens"),
-        _r6(F.length(raw).cast("double")
-            / F.nullif((F.length(enc)
-                        - F.length(F.replace(enc, F.lit("<"))))
-                       .cast("double"), F.lit(0.0)))
-        .alias("compression"),
-        F.md5(enc).alias("tokens_md5"))
-        .orderBy("doc_id"))
+    return _bpe_report(docs, bpe_train(docs, n_merges))
 
 
-def _bpe_learned_replace_sql(n: int = BPE_TRAIN_ROUNDS) -> str:
-    expr = "regexp_replace(trim(lower(text)), '(\\S)', '<\\1>', 'g')"
-    for r in range(1, n + 1):
-        expr = (f"replace({expr}, (SELECT pair FROM b{r}), "
-                f"(SELECT merged FROM b{r}))")
-    return expr
-
-
-ORACLE_BPE_TRAIN_ENCODE = f"""
-WITH {_bpe_train_ctes()},
-enc AS (
-  SELECT doc_id,
-         length(regexp_replace(trim(lower(text)), '\\s', '', 'g'))
-           AS n_chars,
-         {_bpe_learned_replace_sql()} AS e
-  FROM documents
-)
-SELECT doc_id,
-       n_chars::BIGINT AS n_chars,
-       (length(e) - length(replace(e, '<', '')))::BIGINT AS n_tokens,
-       FLOOR(n_chars::DOUBLE
-             / nullif(length(e) - length(replace(e, '<', '')), 0)
-             * 1000000 + 0.5) / 1000000 AS compression,
-       md5(e) AS tokens_md5
-FROM enc
-ORDER BY doc_id
-"""
+ORACLE_BPE_TRAIN_ENCODE = _bpe_report_sql(
+    _bpe_replace_sql((f"(SELECT pair FROM b{r})",
+                      f"(SELECT merged FROM b{r})")
+                     for r in range(1, BPE_TRAIN_ROUNDS + 1)),
+    _bpe_train_ctes() + ",\n")
 
 
 #: PII patterns — written to behave identically under Java regex
@@ -1042,8 +993,8 @@ def _pii_oracle_exprs(text: str = "text") -> tuple[str, str, str, str]:
 ORACLE_PII_SCRUB = """
 WITH d AS (
   SELECT source,
-         {e} AS n_email, {p} AS n_phone, {i} AS n_ip,
-         (length(text) - length({r}))::BIGINT AS chars_delta
+         {0} AS n_email, {1} AS n_phone, {2} AS n_ip,
+         (length(text) - length({3}))::BIGINT AS chars_delta
   FROM documents
 )
 SELECT source, COUNT(*)::BIGINT AS n_docs,
@@ -1056,14 +1007,12 @@ SELECT source, COUNT(*)::BIGINT AS n_docs,
 FROM d
 GROUP BY source
 ORDER BY source
-""".format(e=_pii_oracle_exprs()[0], p=_pii_oracle_exprs()[1],
-           i=_pii_oracle_exprs()[2], r=_pii_oracle_exprs()[3])
+""".format(*_pii_oracle_exprs())
 
 
-#: positive ("high-quality reference") class for the NB quality
-#: classifier — same corpus slice `contamination_check` treats as the
-#: benchmark set (curation.BENCHMARK_SOURCE; redefined here to avoid a
-#: circular import: curation already imports this module's CTEs)
+#: the trusted source: positive ("high-quality reference") class of the
+#: NB quality classifier, and the benchmark set of curation's
+#: contamination check (``curation.BENCHMARK_SOURCE``)
 QUALITY_POS_SOURCE = "src0"
 
 
@@ -1099,16 +1048,16 @@ def nb_classifier_scores(docs: DataFrame) -> DataFrame:
                      F.sum("cneg").alias("nneg"),
                      F.count(F.lit(1)).alias("v"))
     model = (cls.crossJoin(totals)
-             .select("t", F.floor(
-                 (F.log((F.col("cpos") + 1).cast("double")
-                        / (F.col("npos") + F.col("v")).cast("double"))
-                  - F.log((F.col("cneg") + 1).cast("double")
-                          / (F.col("nneg") + F.col("v")).cast("double")))
-                 * 1000000.0 + 0.5).cast("bigint").alias("llr_micro")))
-    prior = lab.agg(F.floor(
-        (F.log(F.sum("pos").cast("double"))
-         - F.log((F.count(F.lit(1)) - F.sum("pos")).cast("double")))
-        * 1000000.0 + 0.5).cast("bigint").alias("prior_micro"))
+             .select("t", _u6(
+                 F.log((F.col("cpos") + 1).cast("double")
+                       / (F.col("npos") + F.col("v")).cast("double"))
+                 - F.log((F.col("cneg") + 1).cast("double")
+                         / (F.col("nneg") + F.col("v")).cast("double")))
+                 .alias("llr_micro")))
+    prior = lab.agg(_u6(
+        F.log(F.sum("pos").cast("double"))
+        - F.log((F.count(F.lit(1)) - F.sum("pos")).cast("double")))
+        .alias("prior_micro"))
     sc = (cdoc.join(model, "t")
           .groupBy("doc_id")
           .agg(F.sum(F.col("c") * F.col("llr_micro")).alias("s_micro"),
@@ -1260,16 +1209,16 @@ def bm25_scored(docs: DataFrame,
             .agg((F.sum("c_u") / F.lit(1000000.0)).alias("score")))
 
 
-_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
-
-ORACLE_BM25_SEARCH = f"""
+#: BM25 CTE chain through the per-doc ``scored`` frame — the SQL twin of
+#: :func:`bm25_scored`, shared by the retrieval and hybrid oracles
+BM25_CTE = f"""
 WITH w AS (
   SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)),
                         '\\s+')) AS term
   FROM documents
 ), tf AS (
   SELECT doc_id, term, COUNT(*)::BIGINT AS tf FROM w
-  WHERE term IN ({_BM25_TERMS_SQL}) GROUP BY doc_id, term
+  WHERE term IN ({", ".join(f"'{t}'" for t in BM25_QUERY)}) GROUP BY doc_id, term
 ), dl AS (
   SELECT doc_id,
          length(regexp_split_to_array(trim(lower(text)), '\\s+'))::BIGINT
@@ -1293,7 +1242,9 @@ WITH w AS (
                * 1000000 + 0.5) AS BIGINT)) / 1000000.0 AS score
   FROM tf JOIN idf USING (term) JOIN dl ON tf.doc_id = dl.doc_id
   GROUP BY tf.doc_id
-)
+)"""
+
+ORACLE_BM25_SEARCH = BM25_CTE + f"""
 SELECT ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rank,
        doc_id, score
 FROM scored
@@ -1347,10 +1298,7 @@ def q_doc_chunk_overlap(spark: SparkSession, sf_dir: str,
 
 
 ORACLE_DOC_CHUNK_OVERLAP = f"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS words
-  FROM documents
-), c AS (
+WITH {_WORDS_CTE}, c AS (
   SELECT doc_id, words,
          unnest(range(0, CASE WHEN length(words) <= {CHUNK_W} THEN 1
                               ELSE CEIL((length(words) - {CHUNK_W})::DOUBLE

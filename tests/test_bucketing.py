@@ -2,9 +2,8 @@
 shuffle-free joins and aggregations on the bucket key afterwards."""
 
 import pytest
+from conftest import SF_DIR as SF
 from pyspark.sql import functions as F
-
-SF = "/root/testdata/sf0.001"
 
 
 def _plan(df) -> str:

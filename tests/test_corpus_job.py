@@ -5,8 +5,7 @@ deterministic."""
 import numpy as np
 import pandas as pd
 import pytest
-
-SF = "/root/testdata/sf0.001"
+from conftest import SF_DIR as SF
 
 
 @pytest.fixture(scope="module")

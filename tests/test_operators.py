@@ -6,8 +6,7 @@ the driver's own gate); these tests pin cheap structural invariants.
 
 import numpy as np
 import pytest
-
-SF = "/root/testdata/sf0.001"
+from conftest import SF_DIR as SF
 
 
 def test_byte_features_and_media_decode():
@@ -1373,8 +1372,7 @@ def test_pq_index_build_query_matches_inline(spark, tmp_path):
         IVF_N_QUERIES, build_pq_index, q_ann_ivfpq_topk, query_pq_index,
     )
 
-    sf = "/root/testdata/sf0.001"
-    emb = (spark.read.parquet(f"{sf}/embeddings.parquet")
+    emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
            .select("vec_id",
                    F.col("embedding").cast("array<double>").alias("v")))
     idx = str(tmp_path / "pq_index")
@@ -1382,7 +1380,7 @@ def test_pq_index_build_query_matches_inline(spark, tmp_path):
 
     queries = emb.filter(F.col("vec_id") < IVF_N_QUERIES)
     served = query_pq_index(spark, idx, queries)
-    inline = q_ann_ivfpq_topk(spark, sf)
+    inline = q_ann_ivfpq_topk(spark, SF)
     sp = served.toPandas().reset_index(drop=True)
     ip = inline.toPandas().reset_index(drop=True)
     assert sp.equals(ip), (sp.head(), ip.head())
@@ -1792,8 +1790,7 @@ def test_pq_index_rerank_matches_inline(spark, tmp_path):
         query_pq_index_rerank,
     )
 
-    sf = "/root/testdata/sf0.001"
-    emb = (spark.read.parquet(f"{sf}/embeddings.parquet")
+    emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
            .select("vec_id",
                    F.col("embedding").cast("array<double>").alias("v")))
     idx = str(tmp_path / "pq_index")
@@ -1801,7 +1798,7 @@ def test_pq_index_rerank_matches_inline(spark, tmp_path):
 
     queries = emb.filter(F.col("vec_id") < IVF_N_QUERIES)
     served = query_pq_index_rerank(spark, idx, queries, emb)
-    inline = q_ann_ivfpq_rerank(spark, sf)
+    inline = q_ann_ivfpq_rerank(spark, SF)
     sp = served.toPandas().reset_index(drop=True)
     ip = inline.toPandas().reset_index(drop=True)
     assert sp.equals(ip), (sp.head(), ip.head())
@@ -1976,20 +1973,19 @@ def test_semantic_index_serving_matches_inline(spark, tmp_path):
         q_ann_ivf_topk, q_dedup_semantic, q_embedding_kmeans, q_knn_graph,
     )
 
-    sf = "/root/testdata/sf0.001"
-    emb = (spark.read.parquet(f"{sf}/embeddings.parquet")
+    emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
            .select("vec_id",
                    F.col("embedding").cast("array<double>").alias("v")))
     idx = str(tmp_path / "semantic_index")
     build_semantic_index(emb, idx)
 
     for served, inline in [
-        (dedup_semantic_from_index(spark, idx), q_dedup_semantic(spark, sf)),
-        (knn_graph_from_index(spark, idx), q_knn_graph(spark, sf)),
-        (kmeans_from_index(spark, idx), q_embedding_kmeans(spark, sf)),
+        (dedup_semantic_from_index(spark, idx), q_dedup_semantic(spark, SF)),
+        (knn_graph_from_index(spark, idx), q_knn_graph(spark, SF)),
+        (kmeans_from_index(spark, idx), q_embedding_kmeans(spark, SF)),
         (ann_ivf_from_index(
             spark, idx, emb.filter(F.col("vec_id") < IVF_N_QUERIES)),
-         q_ann_ivf_topk(spark, sf)),
+         q_ann_ivf_topk(spark, SF)),
     ]:
         sp = served.toPandas().reset_index(drop=True)
         ip = inline.toPandas().reset_index(drop=True)
@@ -2017,11 +2013,10 @@ def test_bpe_train_merges_query_matches_python(spark):
         BPE_TRAIN_ROUNDS, q_bpe_train_merges,
     )
 
-    sf = "/root/testdata/sf0.001"
-    out = q_bpe_train_merges(spark, sf).toPandas()
+    out = q_bpe_train_merges(spark, SF).toPandas()
     assert list(out["rank"]) == list(range(1, BPE_TRAIN_ROUNDS + 1))
 
-    docs = pq.read_table(f"{sf}/documents.parquet",
+    docs = pq.read_table(f"{SF}/documents.parquet",
                          columns=["text"]).to_pandas()
     vocab: dict = {}
     for t in docs["text"]:
@@ -2066,17 +2061,16 @@ def test_knn_multiprobe_recall_dominates_same_cell(spark):
         KMEANS_K, q_knn_graph, q_knn_graph_multiprobe,
     )
 
-    sf = "/root/testdata/sf0.001"
-    same = (q_knn_graph(spark, sf).filter("rank = 1")
+    same = (q_knn_graph(spark, SF).filter("rank = 1")
             .toPandas().set_index("vec_id")["cos_sim"])
-    multi = (q_knn_graph_multiprobe(spark, sf).filter("rank = 1")
+    multi = (q_knn_graph_multiprobe(spark, SF).filter("rank = 1")
              .toPandas().set_index("vec_id")["cos_sim"])
     joined = same.to_frame("s").join(multi.to_frame("m"), how="inner")
     assert len(joined) > 0
     assert (joined["m"] >= joined["s"]).all()
 
     # nprobe = k probes every cell -> exact corpus-wide top-K
-    full = q_knn_graph_multiprobe(spark, sf, nprobe=KMEANS_K).toPandas()
+    full = q_knn_graph_multiprobe(spark, SF, nprobe=KMEANS_K).toPandas()
     by_vec = full[full["rank"] == 1].set_index("vec_id")
     assert (by_vec["cos_sim"] >= joined["m"].reindex(by_vec.index)
             .fillna(-2.0)).all()
@@ -2157,9 +2151,8 @@ def test_sq_topk_recall_near_exact(spark):
         q_ann_sq_topk, q_ann_topk_cosine,
     )
 
-    sf = "/root/testdata/sf0.001"
-    sq = q_ann_sq_topk(spark, sf).toPandas()
-    exact = q_ann_topk_cosine(spark, sf).toPandas()
+    sq = q_ann_sq_topk(spark, SF).toPandas()
+    exact = q_ann_topk_cosine(spark, SF).toPandas()
     exact = exact[exact["query_id"].isin(sq["query_id"].unique())]
 
     hits = 0
@@ -2195,8 +2188,7 @@ def test_ivfpq_residual_encoding_beats_raw(spark):
         q_ann_ivfpq_topk, q_ann_topk_cosine,
     )
 
-    sf = "/root/testdata/sf0.001"
-    raw = _emb(spark, sf).select(
+    raw = _emb(spark, SF).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("rv0"))
     raw = raw.withColumn("n0", _norm(F.col("rv0")))
     emb = raw.select(
@@ -2242,7 +2234,7 @@ def test_ivfpq_residual_encoding_beats_raw(spark):
     # recall vs the exact COSINE top-5 (scale-invariant, so the raw
     # corpus's cosine truth is the normalized corpus's too), probing
     # every cell: isolates ADC encoding quality from cell misses
-    exact = q_ann_topk_cosine(spark, sf).toPandas()
+    exact = q_ann_topk_cosine(spark, SF).toPandas()
     exact = exact[exact["query_id"] < IVF_N_QUERIES]
 
     def recall(df):
@@ -2254,9 +2246,9 @@ def test_ivfpq_residual_encoding_beats_raw(spark):
             total += len(want)
         return hits / total
 
-    r_raw = recall(q_ann_ivfpq_topk(spark, sf, nprobe=KMEANS_K).toPandas())
+    r_raw = recall(q_ann_ivfpq_topk(spark, SF, nprobe=KMEANS_K).toPandas())
     r_res = recall(q_ann_ivfpq_residual_topk(
-        spark, sf, nprobe=KMEANS_K).toPandas())
+        spark, SF, nprobe=KMEANS_K).toPandas())
     assert r_res >= r_raw, (r_res, r_raw)
 
 

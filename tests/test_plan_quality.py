@@ -3,8 +3,7 @@ first ones that pass (filter/column pushdown into scans, broadcast joins
 for dims, no stray shuffles/sorts in the narrow paths)."""
 
 import pytest
-
-SF = "/root/testdata/sf0.001"
+from conftest import SF_DIR as SF
 
 
 def _plan(df) -> str:
@@ -59,7 +58,7 @@ def test_features_job_prunes_input_columns(spark):
     from atr_adaptive_laguerre_spark.config import FeatureConfig
     from atr_adaptive_laguerre_spark.engine.features_job import features_long
 
-    doc = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    doc = spark.read.parquet(f"{SF}/documents.parquet")
     from atr_adaptive_laguerre_spark.engine.tokens import (
         tokenize_documents_portable,
     )

@@ -19,6 +19,7 @@ import sys
 
 import duckdb
 import pytest
+from conftest import SF_DIR as SF
 
 from atr_adaptive_laguerre_spark import oracles
 from atr_adaptive_laguerre_spark.config import FeatureConfig
@@ -31,8 +32,6 @@ from atr_adaptive_laguerre_spark.queries import _quantized
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 from check_correctness import value_hash  # noqa: E402
-
-SF = "/root/testdata/sf0.001"
 
 CFG_121 = FeatureConfig.multi_interval(
     multiplier_1=2, multiplier_2=8, atr_period=10,

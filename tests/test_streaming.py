@@ -6,6 +6,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import SF_DIR
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import make_tokens, tokens_to_ohlcv
@@ -725,8 +726,7 @@ def test_stream_semantic_index_append_grows_served_corpus(spark, tmp_path):
         stream_semantic_index_append,
     )
 
-    sf = "/root/testdata/sf0.001"
-    raw = spark.read.parquet(f"{sf}/embeddings.parquet")
+    raw = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     emb = raw.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     idx = str(tmp_path / "semantic_index")
@@ -787,7 +787,7 @@ def test_jsonl_stream_ingest_matches_batch(spark, tmp_path):
         read_jsonl, read_jsonl_stream, read_table, write_jsonl,
     )
 
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = read_table(spark, SF_DIR, "documents")
     src = tmp_path / "stream_src"
     write_jsonl(docs.limit(200), str(src))
     good = ('{"doc_id": 9000001, "text": "late shard", "lang": "en", '
@@ -832,8 +832,7 @@ def test_stream_sample_weighted_matches_batch(spark, tmp_path):
         stream_sample_weighted,
     )
 
-    sfd = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sfd}/documents.parquet") \
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "source", "n_chars")
     inp = tmp_path / "in"
     inp.mkdir()
@@ -865,7 +864,7 @@ def test_stream_sample_weighted_matches_batch(spark, tmp_path):
     got = (spark.read.parquet(sample_dir).toPandas()
            .sort_values(["key_q", "doc_id"],
                         ascending=[False, True]).reset_index(drop=True))
-    want = (q_corpus_sample_weighted(spark, sfd).toPandas()
+    want = (q_corpus_sample_weighted(spark, SF_DIR).toPandas()
             .sort_values("rank").reset_index(drop=True))
     assert list(got["doc_id"]) == list(want["doc_id"])
     assert list(got["key_q"]) == list(want["key_q"])
@@ -889,8 +888,7 @@ def test_stream_sample_weighted_crash_window_recovers(spark, tmp_path):
         stream_sample_weighted,
     )
 
-    sfd = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sfd}/documents.parquet") \
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "source", "n_chars")
     inp = tmp_path / "in"
     inp.mkdir()
@@ -917,7 +915,7 @@ def test_stream_sample_weighted_crash_window_recovers(spark, tmp_path):
     got = (spark.read.parquet(sample_dir).toPandas()
            .sort_values(["key_q", "doc_id"],
                         ascending=[False, True]).reset_index(drop=True))
-    want = (q_corpus_sample_weighted(spark, sfd).toPandas()
+    want = (q_corpus_sample_weighted(spark, SF_DIR).toPandas()
             .sort_values("rank").reset_index(drop=True))
     assert list(got["doc_id"]) == list(want["doc_id"])
     assert list(got["key_q"]) == list(want["key_q"])
